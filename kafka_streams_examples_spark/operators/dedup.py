@@ -560,8 +560,9 @@ def signlsh_dots(vec, planes: int, dim: int, salt: str = "slsh"):
     # repr() of a non-finite double ('inf'/'nan') is not a parseable SQL
     # literal; today's md5-derived weights are bounded in [-1, 1], but a
     # future weight source must fail loudly at build, not at parse
-    assert all(math.isfinite(x) for row in W for x in row), \
-        "signlsh weights must be finite to serialize as SQL literals"
+    if not all(math.isfinite(x) for row in W for x in row):
+        raise ValueError(
+            "signlsh weights must be finite to serialize as SQL literals")
     w_lit = F.expr("array(" + ",".join(
         "array(" + ",".join(f"{x!r}D" for x in row) + ")"
         for row in W) + ")")

@@ -539,6 +539,10 @@ def _kmeans_fit(corpus: DataFrame, k: int, iters: int,
         cents = new_cents
         if ckpt_each_iter or routed:
             cents = cents.localCheckpoint(eager=False)
+    if iters == 0 and (ckpt_each_iter or routed):
+        # the loop checkpoints each iteration's cents; only the
+        # never-iterated seed codebook still needs its own barrier here
+        cents = cents.localCheckpoint(eager=False)
     return cents, asg_fn(cents)
 
 
@@ -674,19 +678,6 @@ def pq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
     return _exact_rerank(short, queries, corpus, k, id_col, vec_col)
 
 
-# Materialize the encoded-codes table in _pq_fit_encode. Both serving
-# consumers (pq ADC, ivfpq candidate join) read codes exactly ONCE, so
-# the checkpoint was a pure extra materialization job: skipping it
-# merges the encode pass into the serving job with no duplicated work.
-# r15 interleaved A/B (ABAB, min-of-4, sf0.1): pq_knn 4.02 -> 3.46s
-# (faster in every paired rep), knn_ivfpq a wash (5.84 vs 5.98) — so
-# False. At 100 TB a deployment that queries many batches should write
-# codes to parquet once instead (build_ivf_index's shape); within one
-# composed query the encode still runs exactly once either way. Flag
-# kept so the A/B (tools/r15/ab_codes_ckpt.py) stays reproducible.
-_CKPT_CODES = False
-
-
 def _pq_fit_encode(corpus: DataFrame, m: int, codebook: int, iters: int,
                    dim: int, id_col: str, vec_col: str
                    ) -> tuple[DataFrame, list[DataFrame]]:
@@ -760,8 +751,9 @@ def _pq_fit_encode(corpus: DataFrame, m: int, codebook: int, iters: int,
              .groupBy("vec_id")
              .agg(*[F.max(F.when(F.col("s") == s, F.col("cid"))).alias(f"k{s}")
                     for s in range(m)]))
-    if _CKPT_CODES:
-        codes = codes.localCheckpoint(eager=False)
+    # codes stays un-checkpointed: both consumers (pq ADC, ivfpq candidate
+    # join) read it exactly once, so a checkpoint is a pure extra job
+    # (r15 A/B, sf0.1: pq_knn 4.02 -> 3.46s without it, ivfpq a wash)
     cents_list = [cents.filter(F.col("s") == s).select("cid", "cent")
                   for s in range(m)]
     return codes, cents_list

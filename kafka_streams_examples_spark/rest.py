@@ -18,10 +18,14 @@ A thin stdlib-only HTTP facade over the StateStore query surface
 Design note: the reference needs host discovery + remote forwarding (Q6)
 because state is partitioned across app instances; here every store is a
 Spark table, so any instance can answer any key and Q6 is structurally
-unnecessary. The long-poll loop re-reads the store each poll, so a store
-swapped in by a streaming upsert (KTableMaterializer) becomes visible
-mid-poll — the reference's outstanding-requests map collapses to polling
-the materialized table.
+unnecessary. Every store call lists the state files again
+(serving.DiskStateStore reads the live layout), so the long-poll loop sees
+buckets swapped in by a streaming upsert (KTableMaterializer) mid-poll —
+the reference's outstanding-requests map collapses to polling the
+materialized table.
+
+Malformed input is the caller's error: a path too short for its route is a
+404 and a non-integer ``k`` or ``timeout`` is a 400.
 
 No third-party web framework: ThreadingHTTPServer + JSON, test-driven the
 same way the reference drives its REST service in
@@ -66,23 +70,20 @@ class InteractiveQueryService:
                 try:
                     url = urlparse(self.path)
                     parts = [unquote(p) for p in url.path.strip("/").split("/")]
+                    q = parse_qs(url.query)
                     if parts[0] == "state":
                         self._send(*svc._state(parts[1:]))
-                    elif parts[0] == "search":
-                        if len(parts) < 3:
-                            self._send(404, b'{"error": "no such route"}')
-                            return
-                        q = parse_qs(url.query)
+                    elif parts[0] in ("search", "orders") and len(parts) == 3:
+                        arg, default, route = (
+                            ("k", "5", svc._search) if parts[0] == "search"
+                            else ("timeout", "1000", svc._long_poll))
                         try:
-                            k = int(q.get("k", ["5"])[0])
+                            n = int(q.get(arg, [default])[0])
                         except ValueError:
-                            self._send(400, b'{"error": "k must be an int"}')
+                            self._send(400, json.dumps(
+                                {"error": f"{arg} must be an int"}).encode())
                             return
-                        self._send(*svc._search(parts[1], parts[2], k))
-                    elif parts[0] == "orders":
-                        q = parse_qs(url.query)
-                        timeout_ms = int(q.get("timeout", ["1000"])[0])
-                        self._send(*svc._long_poll(parts[1], parts[2], timeout_ms))
+                        self._send(*route(parts[1], parts[2], n))
                     else:
                         self._send(404, b'{"error": "no such route"}')
                 except Exception as ex:  # surface handler bugs as 500s
@@ -96,19 +97,22 @@ class InteractiveQueryService:
     # -- route implementations ------------------------------------------
 
     def _state(self, parts: list[str]) -> tuple[int, bytes]:
-        kind, store_name = parts[0], parts[1]
+        if len(parts) < 3:
+            return 404, b'{"error": "no such state route"}'
+        kind, store_name, arg = parts[:3]
         store = self.stores.get(store_name)
         if store is None:
             return 404, b'{"error": "no such store"}'
-        if kind == "keyvalue":                              # Q1
-            return 200, _rows_json(store.get(parts[2]))
-        if kind == "keyvalues" and parts[2] == "all":       # Q2
+        n = len(parts)
+        if kind == "keyvalue" and n == 3:                       # Q1
+            return 200, _rows_json(store.get(arg))
+        if kind == "keyvalues" and arg == "all" and n == 3:     # Q2
             return 200, _rows_json(store.all().collect())
-        if kind == "keyvalues" and parts[2] == "range":     # Q3
+        if kind == "keyvalues" and arg == "range" and n == 5:   # Q3
             return 200, _rows_json(store.range(parts[3], parts[4]).collect())
-        if kind == "windowed":                              # Q4
+        if kind == "windowed" and n == 5:                       # Q4
             return 200, _rows_json(
-                store.fetch_window(parts[2], parts[3], parts[4]).collect())
+                store.fetch_window(arg, parts[3], parts[4]).collect())
         return 404, b'{"error": "no such state route"}'
 
     def _search(self, index_name: str, text: str,

@@ -8,6 +8,11 @@ the whole read path is Spark SQL — no store-location protocol needed.
 StateStore wraps a materialized DataFrame with the store API the
 reference's REST layer exposes (WordCountInteractiveQueriesRestService.java:83-172):
 get / all / range / windowed fetch / session fetch.
+
+DiskStateStore is the one reader over the bucketed layout (state.py). It
+lists the state files again on every call, never at construction, so
+buckets swapped in by an upsert after the store was built are read as
+they are now, not as they were.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# write_buckets/swap_buckets/bucket_of: traced perfbench patches them here (ROADMAP 5)
 from .state import (
     BUCKET_COL, bucket_expr, bucket_of, read_state, swap_buckets, write_buckets,
 )
@@ -59,8 +65,12 @@ class DiskStateStore(StateStore):
                  n_buckets: int = 32):
         self.spark = spark
         self.path = path
+        self.key_col = key_col
         self.n_buckets = n_buckets
-        super().__init__(read_state(spark, path).drop(BUCKET_COL), key_col)
+
+    @property
+    def df(self) -> DataFrame:  # all() and range() scan this
+        return read_state(self.spark, self.path).drop(BUCKET_COL)
 
     @classmethod
     def materialize(cls, df: DataFrame, path: str, key_col: str,

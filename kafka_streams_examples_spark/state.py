@@ -18,10 +18,13 @@ Why buckets, not a flat table:
   partition column, so Spark's partition pruning reads exactly one bucket
   directory; files inside each bucket are written sorted by key, so parquet
   row-group stats prune further within the bucket.
-- **Atomic-enough swap** — the merged buckets are fully materialized into a
-  sibling ``.tmp`` directory first, then swapped in with directory renames
-  (metadata ops, no second data write). On an object store this would be a
-  commit-protocol/manifest swap instead.
+- **Rename swap, not atomic** — the merged buckets are fully materialized
+  into a sibling ``.tmp`` directory first, then swapped in per bucket with
+  ``rmtree(dst)`` followed by ``rename(src, dst)`` (metadata ops, no second
+  data write). Between the two calls the bucket is missing: a reader that
+  lists the layout in that gap misses its files, and a crash there loses
+  the bucket. ROADMAP item 2 replaces this with versioned buckets behind
+  an atomic manifest.
 
 Bucket count is a fixed layout property (like Kafka topic partition count):
 pick it for the target state size (state_bytes / n_buckets ~ a few hundred

@@ -36,7 +36,12 @@ def near_dup_index(corpus: DataFrame, num_hashes: int = 8, bands: int = 4,
     projection is derived from this profile inside `stream_near_dup`;
     at 100 TB the profile is written ONCE and the narrow banding —
     8 B ids + band values — is what gets partitioned by band_val and
-    probed."""
+    probed.
+
+    The result is a lazy plan. Materialize it (checkpoint, persist or
+    write it to parquet) before probing: `stream_near_dup` reads it in
+    two joins per micro-batch, so an inline index reruns the whole corpus
+    profile twice per batch."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import minhash_doc_profile
@@ -79,7 +84,12 @@ def stream_near_dup(new_docs: DataFrame, index: DataFrame,
     Output: (new_id, corpus_id, jac) with jac = |∩| / (|a| + |b| − |∩|)
     rounded via the portable formula, filtered at ``threshold`` — the
     same values `incremental_minhash_pairs` produces batch-side
-    (equivalence is unit-tested)."""
+    (equivalence is unit-tested).
+
+    ``index`` must be materialized (checkpoint, persist or parquet) before
+    the stream starts: both joins read it every micro-batch, and an
+    un-materialized `near_dup_index` plan would rebuild the corpus profile
+    twice per batch."""
     from pyspark.sql import functions as F
 
     from ..functions import stable_round

@@ -10,7 +10,8 @@ a Delta/Iceberg ``MERGE INTO`` produces (rewrite matched files only); here
 the bucket directories are the file-group boundary and promotion is a
 directory rename, not a second data write.
 
-The state table doubles as the interactive-query surface (§2.7): point
+This class only writes. The state table is read through
+``serving.DiskStateStore``, the one reader over the layout (§2.7): point
 reads prune to one bucket directory (partition pruning) and then to few row
 groups (files are key-sorted); range/scan reads are plain Spark SQL.
 """
@@ -23,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ktable import latest_per_key
-from ..state import (
+# write_buckets/swap_buckets/bucket_of: traced perfbench patches them here (ROADMAP 5)
+from ..state import (  # noqa: F401
     BUCKET_COL, bucket_expr, bucket_of, has_state, read_state, swap_buckets,
     write_buckets,
 )
@@ -64,24 +66,3 @@ class KTableMaterializer:
         # with directory renames; untouched buckets are never read or written
         write_buckets(merged, self.path + ".tmp", self.keys)
         swap_buckets(self.path + ".tmp", self.path, touched)
-
-    # ---- interactive query surface (§2.7 Q1-Q3) ----
-
-    def state(self) -> DataFrame:
-        return read_state(self.spark, self.path).drop(BUCKET_COL)
-
-    def get(self, **key_values) -> list:
-        df = read_state(self.spark, self.path)
-        if set(key_values) >= set(self.keys):
-            # full key given -> prune to its single bucket directory
-            b = bucket_of(self.spark, [key_values[k] for k in self.keys],
-                          self.n_buckets)
-            df = df.filter(F.col(BUCKET_COL) == b)
-        for k, v in key_values.items():
-            df = df.filter(F.col(k) == v)
-        return df.drop(BUCKET_COL).collect()
-
-    def range(self, key: str, lo, hi) -> DataFrame:
-        # no bucket pruning possible (hash layout), but key-sorted files give
-        # row-group pruning on the range predicate
-        return self.state().filter(F.col(key).between(lo, hi))

@@ -25,6 +25,19 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 
+def _in_order(pdfs: Iterable[pd.DataFrame], by: list[str]) -> pd.DataFrame:
+    """All of a key's rows in this micro-batch, stably sorted on ``by``.
+
+    Arrow hands a key's rows over in chunks of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``; an order-dependent
+    fold must sort across every chunk, never within each, or its output
+    depends on how the rows were chunked. One chunk (the default case) is
+    sorted as is, without a concat."""
+    chunks = list(pdfs)
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    return pdf.sort_values(by, kind="stable")
+
+
 def running_counts(events: DataFrame, key_col: str = "word") -> DataFrame:
     """T1: ever-incrementing per-key count, one output row per batch+key
     (update-mode conflation — the reference emits per record with cache
@@ -64,21 +77,20 @@ def reservations(orders: DataFrame, stock_for_key, key_col: str = "product",
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         reserved = state.get[0] if state.exists else 0.0
         stock = float(stock_for_key(key[0]))
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            results = []
-            # conditional accumulation (reserved grows only on PASS) is a
-            # true sequential recurrence — no cumsum form — so the loop
-            # stays, but over a raw numpy array, not pandas rows
-            for qty in pdf[qty_col].to_numpy(dtype=float):
-                if reserved + qty <= stock:
-                    reserved += qty
-                    results.append("PASS")
-                else:
-                    results.append("FAIL")
-            yield pd.DataFrame({key_col: pdf[key_col], "order_id": pdf["order_id"],
-                                "result": results})
+        pdf = _in_order(pdfs, [ts_col])
+        results = []
+        # conditional accumulation (reserved grows only on PASS) is a
+        # true sequential recurrence — no cumsum form — so the loop
+        # stays, but over a raw numpy array, not pandas rows
+        for qty in pdf[qty_col].to_numpy(dtype=float):
+            if reserved + qty <= stock:
+                reserved += qty
+                results.append("PASS")
+            else:
+                results.append("FAIL")
         state.update((reserved,))
+        yield pd.DataFrame({key_col: pdf[key_col], "order_id": pdf["order_id"],
+                            "result": results})
 
     return (orders.groupBy(key_col)
             .applyInPandasWithState(fn, out_schema, state_schema, "update",
@@ -338,22 +350,21 @@ def ordered_concat(events: DataFrame, key_col: str = "user_id",
         ts_a = np.asarray(ts_l, dtype=np.int64)
         tie_a = np.asarray(tie_l, dtype=np.int64)
         val_a = np.asarray(val_l, dtype=object)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            ts_new = pdf[ts_col].to_numpy("datetime64[ns]").astype("int64") // 1000
-            tie_new = pdf[tie_col].to_numpy(dtype=np.int64)
-            val_new = pdf[val_col].to_numpy(dtype=object)
-            if late_us is not None:
-                hi = max(int(ts_a.max()) if len(ts_a) else np.iinfo(np.int64).min,
-                         int(ts_new.max()))
-                keep = ts_new >= hi - late_us
-                ts_new, tie_new, val_new = ts_new[keep], tie_new[keep], val_new[keep]
-            ts_a = np.concatenate([ts_a, ts_new])
-            tie_a = np.concatenate([tie_a, tie_new])
-            val_a = np.concatenate([val_a, val_new])
-        # event-time fold order: primary ts, secondary tie (lexsort keys
-        # are listed least-significant first)
+        pdf = _in_order(pdfs, [ts_col, tie_col])
+        ts_new = pdf[ts_col].to_numpy("datetime64[ns]").astype("int64") // 1000
+        tie_new = pdf[tie_col].to_numpy(dtype=np.int64)
+        val_new = pdf[val_col].to_numpy(dtype=object)
+        if late_us is not None:
+            # the cut is against the max over the state and the WHOLE batch
+            hi = max(int(ts_a.max()) if len(ts_a) else np.iinfo(np.int64).min,
+                     int(ts_new.max()))
+            keep = ts_new >= hi - late_us
+            ts_new, tie_new, val_new = ts_new[keep], tie_new[keep], val_new[keep]
+        ts_a = np.concatenate([ts_a, ts_new])
+        tie_a = np.concatenate([tie_a, tie_new])
+        val_a = np.concatenate([val_a, val_new])
+        # merge the sorted batch into the sorted state: primary ts,
+        # secondary tie (lexsort keys are listed least-significant first)
         order = np.lexsort((tie_a, ts_a))
         ts_a, tie_a, val_a = ts_a[order], tie_a[order], val_a[order]
         state.update((ts_a.tolist(), tie_a.tolist(), val_a.tolist()))
@@ -391,40 +402,35 @@ def fraud_check(orders: DataFrame, limit: float, session_gap_seconds: int = 1800
 
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         last_us, total = state.get if state.exists else (None, 0.0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            n = len(pdf)
-            if n == 0:
-                continue
-            # vectorized session fold: break flags split the batch into
-            # session segments; a per-segment np.cumsum accumulates
-            # left-to-right exactly like the sequential += it replaces
-            # (bit-identical floats), with the carried-over session total
-            # seeding the first segment only if no break precedes it
-            # int64 ns // 1000 floors (datetime64[us] casts truncate toward
-            # zero, which differs for pre-1970 sub-microsecond timestamps)
-            ts_us = pdf[ts_col].to_numpy("datetime64[ns]").astype("int64") // 1000
-            vals = pdf[val_col].to_numpy(dtype=float)
-            brk = np.empty(n, dtype=bool)
-            brk[0] = last_us is not None and ts_us[0] - last_us > gap_us
-            brk[1:] = (ts_us[1:] - ts_us[:-1]) > gap_us
-            totals = np.empty(n, dtype=float)
-            bounds = [0, *np.nonzero(brk[1:])[0] + 1, n] if n > 1 else [0, n]
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                if a == 0 and not brk[0]:
-                    # seed the cumsum with the carried session total so the
-                    # accumulation order is exactly (carry + v0) + v1 + ...
-                    totals[a:b] = np.cumsum(
-                        np.concatenate(([total], vals[a:b])))[1:]
-                else:
-                    totals[a:b] = np.cumsum(vals[a:b])
-            verdicts = np.where(totals > limit, "FAIL", "PASS")
-            total = float(totals[-1])
-            last_us = int(ts_us[-1])
-            yield pd.DataFrame({key_col: [key[0]] * n,
-                                id_col: pdf[id_col].to_numpy(),
-                                val_col: vals, "verdict": verdicts})
-        state.update((last_us, total))
+        pdf = _in_order(pdfs, [ts_col])
+        n = len(pdf)
+        # vectorized session fold: break flags split the batch into
+        # session segments; a per-segment np.cumsum accumulates
+        # left-to-right exactly like the sequential += it replaces
+        # (bit-identical floats), with the carried-over session total
+        # seeding the first segment only if no break precedes it
+        # int64 ns // 1000 floors (datetime64[us] casts truncate toward
+        # zero, which differs for pre-1970 sub-microsecond timestamps)
+        ts_us = pdf[ts_col].to_numpy("datetime64[ns]").astype("int64") // 1000
+        vals = pdf[val_col].to_numpy(dtype=float)
+        brk = np.empty(n, dtype=bool)
+        brk[0] = last_us is not None and ts_us[0] - last_us > gap_us
+        brk[1:] = (ts_us[1:] - ts_us[:-1]) > gap_us
+        totals = np.empty(n, dtype=float)
+        bounds = [0, *np.nonzero(brk[1:])[0] + 1, n]
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            if a == 0 and not brk[0]:
+                # seed the cumsum with the carried session total so the
+                # accumulation order is exactly (carry + v0) + v1 + ...
+                totals[a:b] = np.cumsum(
+                    np.concatenate(([total], vals[a:b])))[1:]
+            else:
+                totals[a:b] = np.cumsum(vals[a:b])
+        state.update((int(ts_us[-1]), float(totals[-1])))
+        yield pd.DataFrame({key_col: [key[0]] * n,
+                            id_col: pdf[id_col].to_numpy(),
+                            val_col: vals,
+                            "verdict": np.where(totals > limit, "FAIL", "PASS")})
 
     return (orders.groupBy(key_col)
             .applyInPandasWithState(fn, out_schema, state_schema, "update",
@@ -462,32 +468,30 @@ def pack_sequences_stream(docs: DataFrame, budget: int = 256,
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         off = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            # null n_tokens (e.g. null text upstream) arrives as NaN and
-            # would crash the int64 cast; the batch operator's n > 0
-            # filter drops the same rows, so drop them here too
-            pdf = pdf.dropna(subset=[n_col]).sort_values(id_col)
-            n = pdf[n_col].to_numpy("int64")
-            ids = pdf[id_col].to_numpy("int64")[n > 0]
-            n = n[n > 0]
-            if len(n) == 0:
-                continue
-            starts = off + np.concatenate(([0], np.cumsum(n)[:-1]))
-            off = int(starts[-1] + n[-1])
-            first = starts // B
-            cnt = (starts + n - 1) // B - first + 1
-            doc_idx = np.repeat(np.arange(len(n)), cnt)
-            seq_local = (np.arange(cnt.sum())
-                         - np.repeat(np.concatenate(([0], np.cumsum(cnt)[:-1])), cnt))
-            seq = first[doc_idx] + seq_local
-            lo = np.maximum(starts[doc_idx], seq * B)
-            hi = np.minimum(starts[doc_idx] + n[doc_idx], (seq + 1) * B)
-            yield pd.DataFrame({
-                source_col: key[0], id_col: ids[doc_idx],
-                "seq_id": seq, "seq_off": lo - seq * B,
-                "tok_from": lo - starts[doc_idx],
-                "tok_to": hi - starts[doc_idx]})
-        state.update((int(off),))
+        # null n_tokens (e.g. null text upstream) arrives as NaN and
+        # would crash the int64 cast; the batch operator's n > 0
+        # filter drops the same rows, so drop them here too
+        pdf = _in_order(pdfs, [id_col]).dropna(subset=[n_col])
+        n = pdf[n_col].to_numpy("int64")
+        ids = pdf[id_col].to_numpy("int64")[n > 0]
+        n = n[n > 0]
+        if len(n) == 0:
+            return
+        starts = off + np.concatenate(([0], np.cumsum(n)[:-1]))
+        first = starts // B
+        cnt = (starts + n - 1) // B - first + 1
+        doc_idx = np.repeat(np.arange(len(n)), cnt)
+        seq_local = (np.arange(cnt.sum())
+                     - np.repeat(np.concatenate(([0], np.cumsum(cnt)[:-1])), cnt))
+        seq = first[doc_idx] + seq_local
+        lo = np.maximum(starts[doc_idx], seq * B)
+        hi = np.minimum(starts[doc_idx] + n[doc_idx], (seq + 1) * B)
+        state.update((int(starts[-1] + n[-1]),))
+        yield pd.DataFrame({
+            source_col: key[0], id_col: ids[doc_idx],
+            "seq_id": seq, "seq_off": lo - seq * B,
+            "tok_from": lo - starts[doc_idx],
+            "tok_to": hi - starts[doc_idx]})
 
     return (docs.groupBy(source_col)
             .applyInPandasWithState(fn, out_schema, state_schema, "append",

@@ -93,6 +93,20 @@ def test_simhash_hamming_pairs_pigeonhole_recall(spark, sf_dir):
     assert got == truth  # exact recall AND precision, distances included
 
 
+def test_signlsh_dots_rejects_non_finite_weights(monkeypatch):
+    """A non-finite weight has no SQL literal form: building the dot
+    products must raise ValueError (which, unlike assert, survives
+    ``python -O``) before any expression is parsed."""
+    import pytest
+
+    from kafka_streams_examples_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "signlsh_weights",
+                        lambda planes, dim, salt="slsh": [[0.5, float("inf")]])
+    with pytest.raises(ValueError, match="finite"):
+        dedup.signlsh_dots("v", planes=1, dim=2)
+
+
 def test_signlsh_salted_repetitions_raise_recall(spark, sf_dir):
     """Sign-LSH recall is probabilistic per table; unioning independently
     salted repetitions must only ADD pairs (monotone recall), and
@@ -693,6 +707,19 @@ def test_ivfpq_single_cell_equals_centered_pq(spark, sf_dir):
                              coarse_iters=1, m=4, codebook=8,
                              pq_iters=1).collect()]
     assert sorted(single_cell) == sorted(full)
+
+
+def test_kmeans_fit_checkpoints_seed_codebook_without_iterations(spark,
+                                                                  sf_dir):
+    """ivfpq_knn relies on ckpt_each_iter for a checkpointed codebook;
+    with zero iterations the seed codebook must get that barrier too, or
+    every downstream broadcast re-runs the seed pipeline."""
+    from kafka_streams_examples_spark.operators.similarity import _kmeans_fit
+
+    emb = table(spark, sf_dir, "embeddings")
+    cents, _ = _kmeans_fit(emb, 4, 0, ckpt_each_iter=True)
+    assert "LogicalRDD" in cents._jdf.queryExecution().logical().toString()
+    assert cents.count() == 4
 
 
 def test_ivfpq_candidates_confined_to_probed_cells(spark, sf_dir):

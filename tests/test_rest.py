@@ -44,10 +44,19 @@ def test_rest_point_scan_range(service):
 
 
 def test_rest_missing_store_and_key(service):
+    """Unknown stores and malformed input are the caller's error (404 for
+    a path too short for its route, 400 for a non-integer timeout), never
+    a 500 carrying the handler's exception text."""
     port = service.port
-    with pytest.raises(urllib.error.HTTPError) as ei:
-        _get(port, "/state/keyvalue/nope/k")
-    assert ei.value.code == 404
+    for path, code in [("/state/keyvalue/nope/k", 404),
+                       ("/state/keyvalue/word-count", 404),
+                       ("/state/keyvalues/word-count/range/a", 404),
+                       ("/state", 404),
+                       ("/orders/word-count", 404),
+                       ("/orders/word-count/kafka?timeout=abc", 400)]:
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(port, path)
+        assert ei.value.code == code, path
     status, rows = _get(port, "/state/keyvalue/word-count/nothere")
     assert status == 200 and rows == []
 

@@ -8,7 +8,9 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import io
+import json
 import os
+import urllib.request
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -49,6 +51,7 @@ def test_partial_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     spark.createDataFrame(rows1, schema).coalesce(1) \
          .write.mode("append").parquet(str(src))
     mat = KTableMaterializer(spark, str(state), ["user"], "ts", n_buckets=8)
+    store = DiskStateStore(spark, str(state), "user", n_buckets=8)
     stream = spark.readStream.schema(schema).parquet(str(src))
     q = stream.writeStream.outputMode("append").foreachBatch(mat).start()
     q.processAllAvailable()
@@ -68,7 +71,7 @@ def test_partial_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         if b != touched:
             assert after[b] == before[b], f"untouched bucket {b} was rewritten"
 
-    got = {r["user"]: r["region"] for r in mat.state().collect()}
+    got = {r["user"]: r["region"] for r in store.all().collect()}
     assert got["u7"] == "new"
     assert all(v == "old" for k, v in got.items() if k != "u7")
     assert len(got) == 64
@@ -82,6 +85,7 @@ def test_tombstone_deletes_key_in_its_bucket_only(spark, tmp_path):
          .write.mode("append").parquet(str(src))
     mat = KTableMaterializer(spark, str(state), ["user"], "ts",
                              tombstone_col="region", n_buckets=4)
+    store = DiskStateStore(spark, str(state), "user", n_buckets=4)
     stream = spark.readStream.schema(schema).parquet(str(src))
     q = stream.writeStream.outputMode("append").foreachBatch(mat).start()
     q.processAllAvailable()
@@ -93,7 +97,7 @@ def test_tombstone_deletes_key_in_its_bucket_only(spark, tmp_path):
     q.stop()
     after = _bucket_digests(str(state))
     touched = f"{BUCKET_COL}={bucket_of(spark, ['u3'], 4)}"
-    users = {r["user"] for r in mat.state().collect()}
+    users = {r["user"] for r in store.all().collect()}
     assert "u3" not in users and len(users) == 15
     for b in before:
         if b != touched:
@@ -141,44 +145,67 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     so the contract is row identity, not byte identity)."""
     state = tmp_path / "state"
     mat = KTableMaterializer(spark, str(state), ["user"], "ts", n_buckets=4)
+    store = DiskStateStore(spark, str(state), "user", n_buckets=4)
     batch = spark.createDataFrame(
         [("u1", "a", ts("2024-01-01 10:00:00")),
          ("u2", "b", ts("2024-01-01 10:00:00"))],
         "user string, region string, ts timestamp")
     mat(batch, 0)
-    first = sorted(map(tuple, mat.state().collect()))
+    first = sorted(map(tuple, store.all().collect()))
     mat(batch, 0)   # redelivery of the same epoch
-    assert sorted(map(tuple, mat.state().collect())) == first
-    got = {r["user"]: r["region"] for r in mat.state().collect()}
+    assert sorted(map(tuple, store.all().collect())) == first
+    got = {r["user"]: r["region"] for r in store.all().collect()}
     assert got == {"u1": "a", "u2": "b"}
 
 
 def test_materialize_and_streaming_upsert_share_layout(spark, tmp_path):
     """DiskStateStore.materialize and KTableMaterializer must agree on the
     bucket layout: a store bootstrapped via materialize() can be maintained
-    incrementally by the streaming upsert at the same path."""
+    incrementally by the streaming upsert at the same path. The store is
+    built BEFORE the upsert, and every one of its queries (and the REST
+    routes over it) must read the layout as it is after the swap, not
+    the file listing of construction time."""
+    from kafka_streams_examples_spark.rest import InteractiveQueryService
+
     path = str(tmp_path / "st")
     base = spark.createDataFrame(
         [(i, f"v{i}", ts("2024-01-01 10:00:00")) for i in range(20)],
         "k long, v string, ts timestamp")
-    DiskStateStore.materialize(base, path, "k", n_buckets=4)
+    store = DiskStateStore.materialize(base, path, "k", n_buckets=4)
+    assert store.get(3)[0]["v"] == "v3"
     mat = KTableMaterializer(spark, path, ["k"], "ts", n_buckets=4)
     upd = spark.createDataFrame([(3, "NEW", ts("2024-01-01 11:00:00"))],
                                 "k long, v string, ts timestamp")
     mat(upd, 1)
-    got = {r["k"]: r["v"] for r in mat.state().collect()}
+    got = {r["k"]: r["v"] for r in store.all().collect()}
     assert got[3] == "NEW" and len(got) == 20
     assert all(v == f"v{k}" for k, v in got.items() if k != 3)
-    store = DiskStateStore(spark, path, "k", n_buckets=4)
+    assert {r["k"]: r["v"] for r in store.range(2, 4).collect()} == \
+        {2: "v2", 3: "NEW", 4: "v4"}
     assert store.get(3)[0]["v"] == "NEW"
+
+    svc = InteractiveQueryService().start()
+    try:
+        svc.register("kv", store)
+        url = f"http://127.0.0.1:{svc.port}/state/keyvalues/kv"
+        with urllib.request.urlopen(url + "/all") as r:
+            rows = json.loads(r.read())
+        assert {row["k"]: row["v"] for row in rows} == got
+        with urllib.request.urlopen(url + "/range/2/4") as r:
+            rows = json.loads(r.read())
+        assert {row["k"]: row["v"] for row in rows} == \
+            {2: "v2", 3: "NEW", 4: "v4"}
+    finally:
+        svc.stop()
 
 
 def test_composite_key_upsert_and_lookup(spark, tmp_path):
-    """Multi-column keys: bucket fn hashes all key columns; get() with the
-    full composite key still prunes to one bucket."""
+    """Multi-column keys: the bucket fn hashes all key columns, and the
+    upsert keeps one row per full composite key."""
     state = tmp_path / "state"
     mat = KTableMaterializer(spark, str(state), ["region", "user"], "ts",
                              n_buckets=4)
+    store = DiskStateStore(spark, str(state), "user", n_buckets=4)
     b1 = spark.createDataFrame(
         [("eu", "u1", 1.0, ts("2024-01-01 10:00:00")),
          ("us", "u1", 2.0, ts("2024-01-01 10:00:00")),
@@ -189,11 +216,9 @@ def test_composite_key_upsert_and_lookup(spark, tmp_path):
         [("eu", "u1", 9.0, ts("2024-01-01 11:00:00"))],
         "region string, user string, v double, ts timestamp")
     mat(b2, 1)
-    got = {(r["region"], r["user"]): r["v"] for r in mat.state().collect()}
+    # same user, different region -> independent rows
+    got = {(r["region"], r["user"]): r["v"] for r in store.all().collect()}
     assert got == {("eu", "u1"): 9.0, ("us", "u1"): 2.0, ("eu", "u2"): 3.0}
-    # same user, different region -> independent rows; bucket-pruned get
-    assert mat.get(region="eu", user="u1")[0]["v"] == 9.0
-    assert mat.get(region="us", user="u1")[0]["v"] == 2.0
 
 
 def test_disk_store_range_and_all(spark, tmp_path, sf_dir):

@@ -3,7 +3,9 @@ reservation invariants."""
 
 from __future__ import annotations
 
-from datetime import datetime
+import contextlib
+import random
+from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
@@ -15,6 +17,25 @@ from kafka_streams_examples_spark.streaming.stateful import (
 
 def ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
+
+
+@contextlib.contextmanager
+def arrow_chunks(spark, n: int = 5):
+    """Cap Arrow batches at n rows, so a key with more than n rows in one
+    micro-batch reaches its fold in several chunks."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def shuffled(rows: list, seed: int = 7) -> list:
+    rows = list(rows)
+    random.Random(seed).shuffle(rows)
+    return rows
 
 
 def test_running_counts_accumulate_across_batches(spark, tmp_path):
@@ -44,19 +65,34 @@ def test_reservations_sequential_capacity(spark, tmp_path):
             ("widget", "o2", 30.0, ts("2024-01-01 10:01:00")),
             ("widget", "o3", 30.0, ts("2024-01-01 10:02:00")),   # over capacity
             ("gadget", "o4", 5.0, ts("2024-01-01 10:00:00"))]
-    spark.createDataFrame(
-        rows, "product string, order_id string, quantity double, ts timestamp") \
-        .coalesce(1).write.parquet(str(src))
-    stream = spark.readStream.schema(
-        "product string, order_id string, quantity double, ts timestamp") \
-        .parquet(str(src))
-    out = reservations(stream, stock_for_key=lambda k: 100.0)
-    name, q = run_to_memory(out, mode="update")
-    try:
-        got = {r["order_id"]: r["result"] for r in spark.table(name).collect()}
-    finally:
-        q.stop()
-    assert got == {"o1": "PASS", "o2": "PASS", "o3": "FAIL", "o4": "PASS"}
+    # 60 "bolt" orders in shuffled arrival order, one micro-batch: with
+    # 5-row Arrow chunks the fold must still reserve in event-time order
+    rng = random.Random(3)
+    bolts = [("bolt", f"b{i}", float(rng.randint(1, 9)),
+              ts("2024-01-01 09:00:00") + timedelta(minutes=i))
+             for i in range(60)]
+    reserved, want_bolts = 0.0, {}
+    for _, oid, qty, _ in bolts:            # sequential reference fold
+        ok = reserved + qty <= 100.0
+        reserved += qty if ok else 0.0
+        want_bolts[oid] = "PASS" if ok else "FAIL"
+    with arrow_chunks(spark):
+        spark.createDataFrame(
+            rows + shuffled(bolts),
+            "product string, order_id string, quantity double, ts timestamp") \
+            .coalesce(1).write.parquet(str(src))
+        stream = spark.readStream.schema(
+            "product string, order_id string, quantity double, ts timestamp") \
+            .parquet(str(src))
+        out = reservations(stream, stock_for_key=lambda k: 100.0)
+        name, q = run_to_memory(out, mode="update")
+        try:
+            got = {r["order_id"]: r["result"]
+                   for r in spark.table(name).collect()}
+        finally:
+            q.stop()
+    assert got == {"o1": "PASS", "o2": "PASS", "o3": "FAIL", "o4": "PASS",
+                   **want_bolts}
 
 
 def test_join_wait_immediate_and_buffered(spark, tmp_path):
@@ -255,31 +291,42 @@ def test_ordered_concat_lateness_policy(spark, tmp_path):
     # W7 analog: with lateness_seconds set, a record older than the key's
     # max event time minus the bound is dropped; in-bound stragglers are
     # still spliced into event-time position.
+    # The cut is against the max over the key's WHOLE batch: user 8's 12
+    # shuffled rows arrive in one micro-batch as 5-row Arrow chunks, and
+    # an early chunk's own max must not decide what it keeps (seed 191
+    # puts the four kept rows last, so no early chunk holds the max).
     src = tmp_path / "ev"
-    spark.createDataFrame(
-        [(1, ts("2024-01-01 10:00:00"), 7, "a"),
-         (2, ts("2024-01-01 10:30:00"), 7, "b")],
-        "event_id long, ts timestamp, user_id long, event_type string") \
-        .coalesce(1).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string") \
-        .parquet(str(src))
-    name, q = run_to_memory(ordered_concat(stream, lateness_seconds=3600),
-                            mode="update")
-    try:
-        # straggler at 10:10 (within 1h of 10:30) -> spliced between a and b;
-        # 08:00 (beyond the bound) -> dropped
+    user8 = [(100 + i, ts("2024-01-01 08:00:00") + timedelta(minutes=20 * i),
+              8, f"e{i}") for i in range(12)]
+    hi = max(r[1] for r in user8)
+    want8 = " ".join(r[3] for r in sorted(user8, key=lambda r: (r[1], r[0]))
+                     if r[1] >= hi - timedelta(hours=1))
+    with arrow_chunks(spark):
         spark.createDataFrame(
-            [(3, ts("2024-01-01 10:10:00"), 7, "c"),
-             (4, ts("2024-01-01 08:00:00"), 7, "x")],
+            [(1, ts("2024-01-01 10:00:00"), 7, "a"),
+             (2, ts("2024-01-01 10:30:00"), 7, "b")] + shuffled(user8, 191),
             "event_id long, ts timestamp, user_id long, event_type string") \
             .coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        rows = spark.table(name).collect()
-    finally:
-        q.stop()
-    final = max((r["type_seq"] for r in rows), key=len)
+        stream = spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string") \
+            .parquet(str(src))
+        name, q = run_to_memory(ordered_concat(stream, lateness_seconds=3600),
+                                mode="update")
+        try:
+            # straggler at 10:10 (within 1h of 10:30) -> spliced between a
+            # and b; 08:00 (beyond the bound) -> dropped
+            spark.createDataFrame(
+                [(3, ts("2024-01-01 10:10:00"), 7, "c"),
+                 (4, ts("2024-01-01 08:00:00"), 7, "x")],
+                "event_id long, ts timestamp, user_id long, event_type string") \
+                .coalesce(1).write.mode("append").parquet(str(src))
+            q.processAllAvailable()
+            rows = spark.table(name).collect()
+        finally:
+            q.stop()
+    final = max((r["type_seq"] for r in rows if r["user_id"] == 7), key=len)
     assert final == "a c b"
+    assert [r["type_seq"] for r in rows if r["user_id"] == 8] == [want8]
 
 
 def test_reservation_batch_invariants(spark, sf_dir):
@@ -310,23 +357,41 @@ def test_fraud_check_session_semantics(spark, tmp_path):
     batch1 = [("c1", "o1", 600.0, ts("2024-01-01 10:00:00")),
               ("c1", "o2", 500.0, ts("2024-01-01 10:10:00")),   # 1100 > 1000 -> FAIL
               ("c2", "o3", 100.0, ts("2024-01-01 10:00:00"))]
-    spark.createDataFrame(batch1, schema).coalesce(1) \
-         .write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    name, q = run_to_memory(fraud_check(stream, limit=1000.0), mode="update")
-    try:
-        # batch 2: c1 again after a >30min gap -> new session, passes; and a
-        # follow-up inside the same session that accumulates on restored state
-        batch2 = [("c1", "o4", 900.0, ts("2024-01-01 11:00:00")),
-                  ("c1", "o5", 200.0, ts("2024-01-01 11:05:00"))]  # 1100 -> FAIL
-        spark.createDataFrame(batch2, schema).coalesce(1) \
+    # 60 shuffled orders of c3 in batch 1, folded from 5-row Arrow chunks;
+    # gaps of 5-45 min open new sessions along the way
+    rng = random.Random(11)
+    t, c3 = ts("2024-01-01 06:00:00"), []
+    for i in range(60):
+        t += timedelta(minutes=rng.choice([5, 10, 20, 45]))
+        c3.append(("c3", f"x{i}", float(rng.randint(50, 400)), t))
+    last, total, want_c3 = None, 0.0, {}
+    for _, oid, v, t in c3:                 # sequential reference fold
+        new_session = last is not None and (t - last).total_seconds() > 1800
+        total = v if new_session else total + v
+        last = t
+        want_c3[oid] = "FAIL" if total > 1000.0 else "PASS"
+    assert set(want_c3.values()) == {"PASS", "FAIL"}
+    with arrow_chunks(spark):
+        spark.createDataFrame(batch1 + shuffled(c3), schema).coalesce(1) \
              .write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        got = {r["order_id"]: r["verdict"] for r in spark.table(name).collect()}
-    finally:
-        q.stop()
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        name, q = run_to_memory(fraud_check(stream, limit=1000.0),
+                                mode="update")
+        try:
+            # batch 2: c1 again after a >30min gap -> new session, passes;
+            # and a follow-up inside the same session that accumulates on
+            # restored state
+            batch2 = [("c1", "o4", 900.0, ts("2024-01-01 11:00:00")),
+                      ("c1", "o5", 200.0, ts("2024-01-01 11:05:00"))]  # 1100 -> FAIL
+            spark.createDataFrame(batch2, schema).coalesce(1) \
+                 .write.mode("append").parquet(str(src))
+            q.processAllAvailable()
+            got = {r["order_id"]: r["verdict"]
+                   for r in spark.table(name).collect()}
+        finally:
+            q.stop()
     assert got == {"o1": "PASS", "o2": "FAIL", "o3": "PASS",
-                   "o4": "PASS", "o5": "FAIL"}
+                   "o4": "PASS", "o5": "FAIL", **want_c3}
 
 
 def test_ordered_concat_recovers_from_checkpoint(spark, tmp_path):
@@ -370,7 +435,9 @@ def test_pack_sequences_stream_matches_batch_per_source(spark, sf_dir, tmp_path)
     """Streaming per-source packing over an in-id-order 3-batch replay
     must equal the batch packing applied per source: state (the running
     token offset) has to survive micro-batch boundaries, including
-    documents whose spans straddle a batch edge."""
+    documents whose spans straddle a batch edge. Rows are shuffled
+    within each batch and reach the fold in 5-row Arrow chunks, so the
+    id order must come from one sort over the whole batch."""
     import glob
     import shutil
     import time
@@ -389,23 +456,26 @@ def test_pack_sequences_stream_matches_batch_per_source(spark, sf_dir, tmp_path)
     src.mkdir()
     bounds = [(0, 170), (170, 340), (340, 1 << 60)]
     for i, (lo, hi) in enumerate(bounds):
-        part = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        part = (docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+                .orderBy(F.hash("doc_id")))
         tmp = tmp_path / f"w{i}"
         part.coalesce(1).write.parquet(str(tmp))
         shutil.copy(glob.glob(str(tmp / "part-*.parquet"))[0],
                     str(src / f"{i:04d}.parquet"))
         time.sleep(1.1)  # distinct mod times -> deterministic batch order
 
-    stream = (spark.readStream.schema("doc_id long, source string, n_tokens long")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    name, q = run_to_memory(pack_sequences_stream(stream, budget=B),
-                            mode="append")
-    try:
-        got = {(r["source"], r["doc_id"], r["seq_id"], r["seq_off"],
-                r["tok_from"], r["tok_to"])
-               for r in spark.table(name).collect()}
-    finally:
-        q.stop()
+    with arrow_chunks(spark):
+        stream = (spark.readStream
+                  .schema("doc_id long, source string, n_tokens long")
+                  .option("maxFilesPerTrigger", 1).parquet(str(src)))
+        name, q = run_to_memory(pack_sequences_stream(stream, budget=B),
+                                mode="append")
+        try:
+            got = {(r["source"], r["doc_id"], r["seq_id"], r["seq_off"],
+                    r["tok_from"], r["tok_to"])
+                   for r in spark.table(name).collect()}
+        finally:
+            q.stop()
 
     want = set()
     rows = docs.collect()

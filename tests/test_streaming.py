@@ -107,6 +107,7 @@ def test_streaming_interval_join(spark):
 
 
 def test_ktable_materializer_upsert(spark, tmp_path):
+    from kafka_streams_examples_spark.serving import DiskStateStore
     from kafka_streams_examples_spark.streaming.ktable import KTableMaterializer
 
     src = tmp_path / "src"
@@ -126,9 +127,10 @@ def test_ktable_materializer_upsert(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(str(src))
     q.processAllAvailable()
     q.stop()
-    got = {r["user"]: r["region"] for r in mat.state().collect()}
+    store = DiskStateStore(spark, str(state), "user")
+    got = {r["user"]: r["region"] for r in store.all().collect()}
     assert got == {"alice": "asia", "bob": "americas"}
-    assert mat.get(user="bob")[0]["region"] == "americas"
+    assert store.get("bob")[0]["region"] == "americas"
 
 
 def test_streaming_music_charts_matches_batch(spark, sf_dir):
@@ -163,6 +165,7 @@ def test_music_charts_stream_to_store_to_serving(spark, sf_dir, tmp_path):
     state store (only updated keys flow per batch) -> read-time top-5
     charts served FROM the store — must equal the batch oracle query."""
     from kafka_streams_examples_spark.registry import QUERIES
+    from kafka_streams_examples_spark.serving import DiskStateStore
     from kafka_streams_examples_spark.streaming.ktable import KTableMaterializer
     from kafka_streams_examples_spark.streaming.pipelines import (
         streaming_music_charts, top5_from_counts,
@@ -190,7 +193,8 @@ def test_music_charts_stream_to_store_to_serving(spark, sf_dir, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    served = top5_from_counts(mat.state().drop("__v")).collect()
+    store = DiskStateStore(spark, str(state), "song_id", n_buckets=8)
+    served = top5_from_counts(store.all().drop("__v")).collect()
     want = QUERIES["music_charts"].spark(spark, sf_dir).collect()
     assert sorted(map(tuple, served)) == sorted(map(tuple, want))
 
@@ -226,6 +230,7 @@ def test_ktable_checkpoint_restart_recovers(spark, tmp_path):
     """§2.8 exactly-once-style recovery: stop the query, append more data,
     restart from the SAME checkpoint — already-processed files are not
     reprocessed and state converges to latest-per-key."""
+    from kafka_streams_examples_spark.serving import DiskStateStore
     from kafka_streams_examples_spark.streaming.ktable import KTableMaterializer
 
     src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ckpt"
@@ -250,7 +255,8 @@ def test_ktable_checkpoint_restart_recovers(spark, tmp_path):
     q = start()
     q.processAllAvailable()
     q.stop()
-    got = {r["user"]: r["region"] for r in mat.state().collect()}
+    store = DiskStateStore(spark, str(state), "user")
+    got = {r["user"]: r["region"] for r in store.all().collect()}
     assert got == {"alice": "asia", "bob": "americas"}
 
 
@@ -557,6 +563,7 @@ def test_application_reset_reprocesses_from_scratch(spark, tmp_path):
     reprocessing safe."""
     import shutil
 
+    from kafka_streams_examples_spark.serving import DiskStateStore
     from kafka_streams_examples_spark.streaming.ktable import KTableMaterializer
 
     src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ckpt"
@@ -575,7 +582,8 @@ def test_application_reset_reprocesses_from_scratch(spark, tmp_path):
              .foreachBatch(mat).start())
         q.processAllAvailable()
         q.stop()
-        return {r["user"]: r["region"] for r in mat.state().collect()}
+        store = DiskStateStore(spark, str(state), "user")
+        return {r["user"]: r["region"] for r in store.all().collect()}
 
     first = run_once()
     assert first == {"alice": "asia", "bob": "americas"}
