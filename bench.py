@@ -246,8 +246,9 @@ def stream_cases(spark, sf_dir: str) -> dict:
                             .alias("r_ts")),
                 "key"),
             "append", n_events, "jvm"),
-        # applyInPandasWithState path: per-customer sequential session
-        # spend (the vectorized segment-cumsum fold in streaming/stateful)
+        # applyInPandasWithState path: sequential session spend per
+        # customer, folded one hash bucket of customers per Python call
+        # (streaming/stateful.py:fraud_fold)
         "fraud_check": (
             lambda: fraud_check(
                 ev().select(F.col("user_id").cast("string").alias("customer"),

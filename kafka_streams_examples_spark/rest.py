@@ -35,10 +35,13 @@ WordCountInteractiveQueriesExampleTest.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
+
+log = logging.getLogger(__name__)
 
 
 def _rows_json(rows) -> bytes:
@@ -67,9 +70,11 @@ class InteractiveQueryService:
                 self.wfile.write(body)
 
             def do_GET(self):  # noqa: N802 (http.server contract)
+                route = None
                 try:
                     url = urlparse(self.path)
                     parts = [unquote(p) for p in url.path.strip("/").split("/")]
+                    route = "/".join(parts[:2] if parts[0] == "state" else parts[:1])
                     q = parse_qs(url.query)
                     if parts[0] == "state":
                         self._send(*svc._state(parts[1:]))
@@ -87,6 +92,8 @@ class InteractiveQueryService:
                     else:
                         self._send(404, b'{"error": "no such route"}')
                 except Exception as ex:  # surface handler bugs as 500s
+                    log.exception("GET route %s failed for path %s",
+                                  route, self.path)
                     self._send(500, json.dumps({"error": str(ex)}).encode())
 
         self.server = ThreadingHTTPServer((host, port), Handler)

@@ -273,3 +273,56 @@ def test_pack_sequences_matches_naive(spark, data):
                 want.add((i, j, lo - j * budget, lo - off, hi - off))
             off += n
     assert got == want
+
+
+orders = st.lists(
+    st.tuples(st.sampled_from([f"c{i}" for i in range(9)]),
+              # equal timestamps, gaps of exactly and just over 30 minutes
+              st.sampled_from([0, 900, 1800, 1801, 2700, 3600, 3601, 7200]),
+              st.sampled_from([0.1, 0.2, 0.3, 1e-9, 150.0, 333.3])),
+    min_size=1, max_size=60)
+
+
+@settings(max_examples=200, deadline=None)
+@given(orders, st.data())
+def test_fraud_fold_matches_per_customer_fold(rows, data):
+    """Folding buckets of several customers at once (3 buckets, 9
+    customers), over any split into micro-batches and Arrow chunks, gives
+    the verdicts and final state of a sequential per-customer fold that
+    takes each micro-batch's rows in (ts, arrival) order."""
+    import pandas as pd
+
+    from kafka_streams_examples_spark.streaming.stateful import (
+        _in_order, fraud_fold,
+    )
+
+    limit, gap_us = 500.0, 1_800_000_000
+    rows = [(c, f"o{i}", v, s * 1_000_000) for i, (c, s, v) in enumerate(rows)]
+    cuts = sorted(data.draw(st.sets(st.integers(1, len(rows)), max_size=4)))
+    batches = [rows[a:b] for a, b in zip([0, *cuts], [*cuts, len(rows)]) if a < b]
+    chunk = data.draw(st.integers(1, 8))
+
+    want, want_state = {}, {}
+    for batch in batches:
+        for c, oid, v, t in sorted(batch, key=lambda r: (r[0], r[3])):
+            last, total = want_state.get(c, (None, 0.0))
+            total = v if last is not None and t - last > gap_us else total + v
+            want_state[c] = (t, total)
+            want[oid] = "FAIL" if total > limit else "PASS"
+
+    got, states = {}, {}
+    for batch in batches:
+        pdf = pd.DataFrame(batch, columns=["customer", "order_id",
+                                           "order_value", "ts_us"])
+        pdf["ts"] = pd.to_datetime(pdf["ts_us"], unit="us")
+        for b, rows_b in pdf.groupby(pdf["customer"].str[1:].astype(int) % 3):
+            chunks = [rows_b.iloc[i:i + chunk]
+                      for i in range(0, len(rows_b), chunk)]
+            out, new = fraud_fold(_in_order(chunks, ["customer", "ts"]),
+                                  states.get(b, ([], [], [])), limit, gap_us)
+            states[b] = tuple(a.tolist() for a in new)
+            got.update(zip(out["order_id"], out["verdict"]))
+    got_state = {c: (t, total) for cs, ts_, tot in states.values()
+                 for c, t, total in zip(cs, ts_, tot)}
+    assert got == want
+    assert got_state == want_state

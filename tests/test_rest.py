@@ -61,6 +61,25 @@ def test_rest_missing_store_and_key(service):
     assert status == 200 and rows == []
 
 
+def test_rest_handler_error_is_logged_with_route(service, caplog):
+    """A store that raises gives the caller a 500 and leaves a server-side
+    log record naming the route and the path, with the traceback."""
+    class Broken:
+        def get(self, key):
+            raise RuntimeError("disk gone")
+
+    service.register("broken", Broken())
+    with caplog.at_level("ERROR", logger="kafka_streams_examples_spark.rest"):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _get(service.port, "/state/keyvalue/broken/k1")
+    assert ei.value.code == 500
+    [rec] = [r for r in caplog.records
+             if r.name == "kafka_streams_examples_spark.rest"]
+    assert "state/keyvalue" in rec.getMessage()
+    assert "/state/keyvalue/broken/k1" in rec.getMessage()
+    assert rec.exc_info and "disk gone" in str(rec.exc_info[1])
+
+
 def test_rest_long_poll_read_your_writes(service, spark):
     """Q7: a GET for a not-yet-materialized key blocks until the store
     catches up (the streaming upsert swap), then returns it — the

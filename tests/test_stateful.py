@@ -349,6 +349,20 @@ def test_reservation_batch_invariants(spark, sf_dir):
     assert out.filter(F.col("result") == "FAIL").count() > 0
 
 
+def fraud_reference(orders: list, limit: float = 1000.0,
+                    gap_s: int = 1800) -> dict:
+    """Plain-Python sequential fold per customer over (customer, order_id,
+    value, ts) rows already in event-time order: order_id -> verdict."""
+    state, want = {}, {}
+    for cust, oid, v, t in orders:
+        last, total = state.get(cust, (None, 0.0))
+        new_session = last is not None and (t - last).total_seconds() > gap_s
+        total = v if new_session else total + v
+        state[cust] = (t, total)
+        want[oid] = "FAIL" if total > limit else "PASS"
+    return want
+
+
 def test_fraud_check_session_semantics(spark, tmp_path):
     from kafka_streams_examples_spark.streaming.stateful import fraud_check
 
@@ -364,16 +378,26 @@ def test_fraud_check_session_semantics(spark, tmp_path):
     for i in range(60):
         t += timedelta(minutes=rng.choice([5, 10, 20, 45]))
         c3.append(("c3", f"x{i}", float(rng.randint(50, 400)), t))
-    last, total, want_c3 = None, 0.0, {}
-    for _, oid, v, t in c3:                 # sequential reference fold
-        new_session = last is not None and (t - last).total_seconds() > 1800
-        total = v if new_session else total + v
-        last = t
-        want_c3[oid] = "FAIL" if total > 1000.0 else "PASS"
+    want_c3 = fraud_reference(c3)
     assert set(want_c3.values()) == {"PASS", "FAIL"}
+    # 240 more customers, so each hash bucket folds several of them; each
+    # one's orders are split between the two batches, and a session may
+    # continue across the split or break there
+    many1, many2 = [], []
+    for c in range(240):
+        t = ts("2024-01-01 08:00:00") + timedelta(minutes=rng.randint(0, 59))
+        rows = []
+        for i in range(rng.randint(1, 8)):
+            t += timedelta(minutes=rng.choice([5, 10, 20, 45]))
+            rows.append((f"m{c}", f"m{c}_{i}", float(rng.randint(50, 400)), t))
+        cut = rng.randint(0, len(rows))
+        many1 += rows[:cut]
+        many2 += rows[cut:]
+    want_many = fraud_reference(many1 + many2)
+    assert set(want_many.values()) == {"PASS", "FAIL"}
     with arrow_chunks(spark):
-        spark.createDataFrame(batch1 + shuffled(c3), schema).coalesce(1) \
-             .write.mode("append").parquet(str(src))
+        spark.createDataFrame(batch1 + shuffled(c3 + many1), schema) \
+             .coalesce(1).write.mode("append").parquet(str(src))
         stream = spark.readStream.schema(schema).parquet(str(src))
         name, q = run_to_memory(fraud_check(stream, limit=1000.0),
                                 mode="update")
@@ -383,15 +407,63 @@ def test_fraud_check_session_semantics(spark, tmp_path):
             # restored state
             batch2 = [("c1", "o4", 900.0, ts("2024-01-01 11:00:00")),
                       ("c1", "o5", 200.0, ts("2024-01-01 11:05:00"))]  # 1100 -> FAIL
-            spark.createDataFrame(batch2, schema).coalesce(1) \
-                 .write.mode("append").parquet(str(src))
+            spark.createDataFrame(batch2 + shuffled(many2, seed=8), schema) \
+                 .coalesce(1).write.mode("append").parquet(str(src))
             q.processAllAvailable()
             got = {r["order_id"]: r["verdict"]
                    for r in spark.table(name).collect()}
+            state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
         finally:
             q.stop()
     assert got == {"o1": "PASS", "o2": "FAIL", "o3": "PASS",
-                   "o4": "PASS", "o5": "FAIL", **want_c3}
+                   "o4": "PASS", "o5": "FAIL", **want_c3, **want_many}
+    # one state row per hash bucket, not one per customer (243 here)
+    assert state_rows <= 32
+
+
+def test_fraud_check_recovers_from_checkpoint(spark, tmp_path):
+    """Stop the query after batch 1 and restart it on the same checkpoint:
+    a session that continues across the restart carries its total, and a
+    customer missing from batch 2 keeps their state until batch 3, though
+    batch 2 rewrites the state of the hash bucket they share with c1."""
+    from kafka_streams_examples_spark.state import bucket_expr
+    from kafka_streams_examples_spark.streaming.stateful import (
+        FRAUD_BUCKETS, fraud_check,
+    )
+
+    src, ckpt = tmp_path / "orders", tmp_path / "ckpt"
+    schema = "customer string, order_id string, order_value double, ts timestamp"
+    bucket = dict(spark.createDataFrame([(f"c{i}",) for i in range(1, 300)],
+                                        "customer string")
+                  .select("customer", bucket_expr(["customer"], FRAUD_BUCKETS))
+                  .collect())
+    mate = next(c for c, b in bucket.items() if c != "c1" and b == bucket["c1"])
+
+    def run(rows: list) -> dict:
+        spark.createDataFrame(rows, schema).coalesce(1) \
+             .write.mode("append").parquet(str(src))
+        sink: list = []
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        q = (fraud_check(stream, limit=1000.0)
+             .writeStream.outputMode("update")
+             .option("checkpointLocation", str(ckpt))
+             .foreachBatch(lambda df, _id: sink.extend(df.collect()))
+             .start())
+        q.processAllAvailable()
+        q.stop()
+        return {r["order_id"]: r["verdict"] for r in sink}
+
+    assert run([("c1", "o1", 600.0, ts("2024-01-01 10:00:00")),
+                (mate, "o2", 700.0, ts("2024-01-01 10:00:00"))]) == \
+        {"o1": "PASS", "o2": "PASS"}
+    # c1's session continues across the restart: 600 + 500 > 1000
+    assert run([("c1", "o3", 500.0, ts("2024-01-01 10:20:00"))]) == \
+        {"o3": "FAIL"}
+    # the mate was absent from batch 2 and still carries 700 (+400 > 1000);
+    # c1's order after a >30 min gap opens a new session
+    assert run([(mate, "o4", 400.0, ts("2024-01-01 10:25:00")),
+                ("c1", "o5", 100.0, ts("2024-01-01 11:00:00"))]) == \
+        {"o4": "FAIL", "o5": "PASS"}
 
 
 def test_ordered_concat_recovers_from_checkpoint(spark, tmp_path):
