@@ -102,8 +102,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     per_session[key] = out
     return out
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views for spark.sql queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -15,29 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def tumbling_start(ts: Column, unit: str) -> Column:
-    """Tumbling window start via date_trunc — unit in {'minute','hour','day'}.
-
-    Reference: TimeWindows.ofSizeWithNoGrace (TopArticlesLambdaExample.java:192-196).
-    """
-    return F.date_trunc(unit, ts)
-
-
-def hopping_starts(ts: Column, size_seconds: int, advance_seconds: int) -> Column:
-    """All hopping-window starts containing ts, as an array<timestamp>.
-
-    Reference: 5-min/1-min hopping windows (PageViewRegionLambdaExample.java:183).
-    Explode the result to assign each row to size/advance overlapping
-    windows — the same row-multiplication Spark's streaming `window()` does.
-    """
-    n = size_seconds // advance_seconds
-    epoch = ts.cast("long")
-    bucket = (epoch - (epoch % advance_seconds))
-    return F.array([
-        F.timestamp_seconds(bucket - k * advance_seconds) for k in range(n)
-    ])
-
-
 def with_session_id(df: DataFrame,
                     keys: Sequence[str],
                     gap_seconds: int,

@@ -21,8 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # write_buckets/swap_buckets/bucket_of: traced perfbench patches them here (ROADMAP 5)
-from .state import (
-    BUCKET_COL, bucket_expr, bucket_of, read_state, swap_buckets, write_buckets,
+from .state import (  # noqa: F401
+    BUCKET_COL, N_BUCKETS, bucket_expr, bucket_of, read_state, swap_buckets,
+    write_buckets,
 )
 
 
@@ -54,36 +55,38 @@ class DiskStateStore(StateStore):
 
     The reference's RocksDB store gives O(log n) point lookups; a flat
     parquet table gives O(|state|) scans. This store recovers the lookup
-    asymptotics Spark-natively: ``get`` filters on the bucket partition
-    column (partition pruning reads ONE of n_buckets directories) and the
-    key column (row-group stats prune within the bucket because files are
-    written key-sorted). ``materialize`` writes any DataFrame into that
-    layout; KTableMaterializer maintains the same layout incrementally.
+    asymptotics Spark-natively: ``get`` casts the key to the key column's
+    type and filters on ``bucket_expr`` of that literal, which Catalyst
+    folds into a literal bucket id, so partition pruning reads ONE of
+    ``N_BUCKETS`` directories with no job to compute the bucket. A key
+    that does not cast to the column's type matches nothing. The key
+    filter then prunes row groups within the bucket (files are written
+    key-sorted). ``materialize`` writes any DataFrame into that layout;
+    KTableMaterializer maintains the same layout incrementally.
     """
 
-    def __init__(self, spark: SparkSession, path: str, key_col: str,
-                 n_buckets: int = 32):
+    def __init__(self, spark: SparkSession, path: str, key_col: str):
         self.spark = spark
         self.path = path
         self.key_col = key_col
-        self.n_buckets = n_buckets
 
     @property
     def df(self) -> DataFrame:  # all() and range() scan this
         return read_state(self.spark, self.path).drop(BUCKET_COL)
 
     @classmethod
-    def materialize(cls, df: DataFrame, path: str, key_col: str,
-                    n_buckets: int = 32) -> "DiskStateStore":
-        bucketed = df.withColumn(BUCKET_COL, bucket_expr([key_col], n_buckets))
-        write_buckets(bucketed, path + ".tmp", [key_col])
-        swap_buckets(path + ".tmp", path, list(range(n_buckets)))
-        return cls(df.sparkSession, path, key_col, n_buckets)
+    def materialize(cls, df: DataFrame, path: str,
+                    key_col: str) -> "DiskStateStore":
+        write_buckets(df.withColumn(BUCKET_COL, bucket_expr([key_col])),
+                      path, [key_col])
+        swap_buckets(path, range(N_BUCKETS))
+        return cls(df.sparkSession, path, key_col)
 
     def _pruned(self, key) -> DataFrame:
-        b = bucket_of(self.spark, [key], self.n_buckets)
-        return (read_state(self.spark, self.path)
-                .filter((F.col(BUCKET_COL) == b) & (F.col(self.key_col) == key))
+        state = read_state(self.spark, self.path)
+        k = F.lit(key).try_cast(state.schema[self.key_col].dataType)
+        return (state.filter((F.col(BUCKET_COL) == bucket_expr([k]))
+                             & (F.col(self.key_col) == k))
                 .drop(BUCKET_COL))
 
     def get(self, key):  # Q1 — bucket-pruned point lookup

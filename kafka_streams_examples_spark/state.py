@@ -3,7 +3,9 @@
 One layout shared by the streaming KTable materializer (write path) and the
 interactive-query serving layer (read path): state lives under
 ``path/__b=N/`` hive-style bucket directories, where ``N = pmod(hash(keys),
-n_buckets)``.
+N_BUCKETS)``. This module owns every decision about the layout: the bucket
+count, the bucket hash and the staging directory. Callers name only the
+live path and the key columns.
 
 Why buckets, not a flat table:
 
@@ -14,21 +16,29 @@ Why buckets, not a flat table:
   ``MERGE INTO`` (reference changelog compaction:
   interactivequeries/WordCountInteractiveQueriesRestService.java:83-143 is
   the read contract this layout serves).
-- **Point-lookup pruning** — ``store.get(key)`` filters on the bucket
-  partition column, so Spark's partition pruning reads exactly one bucket
-  directory; files inside each bucket are written sorted by key, so parquet
-  row-group stats prune further within the bucket.
+- **Point-lookup pruning** — ``store.get(key)`` filters on
+  ``BUCKET_COL == bucket_expr([k])`` with ``k`` the key as a literal cast
+  to the key column's type. Catalyst folds that expression into a literal
+  bucket id in the scan's PartitionFilters, so partition pruning reads
+  exactly one bucket directory without a Spark job to compute the bucket,
+  and the key hashes exactly as the stored column does. Files inside each
+  bucket are written sorted by key, so parquet row-group stats prune
+  further within the bucket.
 - **Rename swap, not atomic** — the merged buckets are fully materialized
   into a sibling ``.tmp`` directory first, then swapped in per bucket with
   ``rmtree(dst)`` followed by ``rename(src, dst)`` (metadata ops, no second
   data write). Between the two calls the bucket is missing: a reader that
   lists the layout in that gap misses its files, and a crash there loses
   the bucket. ROADMAP item 2 replaces this with versioned buckets behind
-  an atomic manifest.
+  an atomic manifest, a change to ``write_buckets`` and ``swap_buckets``
+  alone.
 
-Bucket count is a fixed layout property (like Kafka topic partition count):
-pick it for the target state size (state_bytes / n_buckets ~ a few hundred
-MB per bucket) and keep it stable for the table's lifetime.
+The bucket count is the constant ``N_BUCKETS``, not a parameter: like a
+Kafka topic's partition count it is a property of the stored data (and of
+``fraud_check``'s state key space), so it must not change over a table's
+lifetime. ``bucket_of`` computes a bucket with a one-row Spark job; the
+engine no longer calls it, and it is kept for tests and for the traced
+benchmark, which wraps it by name.
 """
 
 from __future__ import annotations
@@ -41,39 +51,47 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "__b"
+#: buckets per state table (state_bytes / N_BUCKETS should stay a few
+#: hundred MB per bucket)
+N_BUCKETS = 32
 
 
-def bucket_expr(keys: Sequence[str], n_buckets: int) -> Column:
-    """Bucket id for a row: pmod(hash(keys...), n_buckets)."""
-    return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+def _staging(path: str) -> str:
+    return path + ".tmp"
 
 
-def bucket_of(spark: SparkSession, key_values: Sequence, n_buckets: int) -> int:
-    """Bucket id for literal key values — MUST agree with bucket_expr, so it
-    evaluates Spark's own Murmur3 hash on a 1-row plan (constant-folded;
-    no data scan) instead of reimplementing the hash in Python."""
-    lits = [F.lit(v) for v in key_values]
+def bucket_expr(keys: Sequence[str | Column]) -> Column:
+    """Bucket id for a row: pmod(hash(keys...), N_BUCKETS). Keys are column
+    names or Columns; a literal Column folds to a constant bucket id."""
+    return F.pmod(F.hash(*keys), F.lit(N_BUCKETS))
+
+
+def bucket_of(spark: SparkSession, key_values: Sequence) -> int:
+    """Bucket id for literal key values, hashed as their Python literal
+    types, on a one-row Spark job."""
     return spark.range(1).select(
-        F.pmod(F.hash(*lits), F.lit(n_buckets)).alias("b")).first()["b"]
+        bucket_expr([F.lit(v) for v in key_values]).alias("b")).first()["b"]
 
 
-def write_buckets(df: DataFrame, tmp_path: str, keys: Sequence[str]) -> None:
-    """Write a DataFrame that already carries BUCKET_COL to a hive-partitioned
-    directory: one shuffle on the bucket id (rows of a bucket colocate ->
-    one file per bucket per task), rows sorted by key within each file so
-    parquet row-group stats serve point/range lookups."""
+def write_buckets(df: DataFrame, path: str, keys: Sequence[str]) -> None:
+    """Stage a DataFrame that already carries BUCKET_COL for the state dir
+    ``path``, hive-partitioned: one shuffle on the bucket id (rows of a
+    bucket colocate -> one file per bucket per task), rows sorted by key
+    within each file so parquet row-group stats serve point/range lookups."""
     (df.repartition(F.col(BUCKET_COL))
        .sortWithinPartitions(*keys)
-       .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp_path))
+       .write.mode("overwrite").partitionBy(BUCKET_COL)
+       .parquet(_staging(path)))
 
 
-def swap_buckets(tmp_path: str, path: str, buckets: Sequence[int]) -> None:
-    """Move the given bucket dirs from tmp into the live state dir.
+def swap_buckets(path: str, buckets: Sequence[int]) -> None:
+    """Move the given staged bucket dirs into the live state dir ``path``.
 
-    Rename-based: the data was materialized once (into tmp); promoting it is
-    a metadata operation per bucket. A bucket listed in `buckets` but absent
-    from tmp means every key in it was tombstoned — its live dir is removed.
+    Rename-based: the data was materialized once (staged); promoting it is
+    a metadata operation per bucket. A bucket listed in `buckets` but not
+    staged means every key in it was tombstoned — its live dir is removed.
     """
+    tmp_path = _staging(path)
     os.makedirs(path, exist_ok=True)
     for b in buckets:
         src = os.path.join(tmp_path, f"{BUCKET_COL}={b}")

@@ -155,8 +155,3 @@ def await_rows(spark: SparkSession, name: str, predicate,
         rows = spark.table(name).collect()
     return rows
 
-
-def run_foreach_batch(df: DataFrame, fn, mode: str = "update") -> object:
-    q = df.writeStream.outputMode(mode).foreachBatch(fn).start()
-    q.processAllAvailable()
-    return q

@@ -194,8 +194,7 @@ def streaming_corpus_filter(docs: DataFrame, min_tokens: int = 10,
 
 
 def music_charts_service(spark, plays: DataFrame, songs: DataFrame,
-                         state_dir: str, n_buckets: int = 8,
-                         min_quantity: float = 5.0):
+                         state_dir: str, min_quantity: float = 5.0):
     """Flagship 1 composed end-to-end (KafkaMusicExample.java:281-378 +
     335-375 TopFiveSongs): the streaming play-count half (update mode)
     feeds the bucketed KTable materializer, and the two-level top-5
@@ -214,7 +213,7 @@ def music_charts_service(spark, plays: DataFrame, songs: DataFrame,
 
     counts = streaming_music_charts(plays, songs, min_quantity)
     mat = KTableMaterializer(spark, state_dir, ["genre", "song_id"],
-                             ts_col="__v", n_buckets=n_buckets)
+                             ts_col="__v")
 
     def sink(batch: DataFrame, epoch: int) -> None:
         # update-mode batches carry only keys whose count changed; the
@@ -224,7 +223,7 @@ def music_charts_service(spark, plays: DataFrame, songs: DataFrame,
     q = (counts.writeStream.outputMode("update").foreachBatch(sink).start())
 
     # charts() only scans the store, so the composite key is never looked up
-    store = DiskStateStore(spark, state_dir, "song_id", n_buckets)
+    store = DiskStateStore(spark, state_dir, "song_id")
 
     def charts() -> DataFrame:
         return top5_from_counts(store.all().drop("__v"))

@@ -12,9 +12,10 @@ exactly the per-partition ordering guarantee Kafka Streams tasks give.
 Most group by the key itself and keep O(1) state per key (a counter /
 reservation level / small buffer), so state-store size grows with key
 cardinality only, not event volume. fraud_check groups by a hash bucket
-of the key instead, because each group costs a Python call: a bucket's
-state row holds O(1) per customer in parallel arrays, the same total in
-FRAUD_BUCKETS rows. ordered_concat keeps O(events) per key.
+of the key instead (``state.bucket_expr``, ``state.N_BUCKETS`` buckets),
+because each group costs a Python call: a bucket's state row holds O(1)
+per customer in parallel arrays, the same total in N_BUCKETS rows.
+ordered_concat keeps O(events) per key.
 """
 
 from __future__ import annotations
@@ -383,13 +384,6 @@ def ordered_concat(events: DataFrame, key_col: str = "user_id",
                                     GroupStateTimeout.NoTimeout))
 
 
-#: fraud_check folds customers in this many hash buckets, one state row and
-#: one Python call per bucket (the state layout's default bucket count). Not
-#: a parameter: it is the state key space, so changing it needs a fresh
-#: checkpoint.
-FRAUD_BUCKETS = 32
-
-
 def fraud_fold(pdf: pd.DataFrame, state, limit: float, gap_us: int,
                key_col: str = "customer", val_col: str = "order_value",
                id_col: str = "order_id",
@@ -461,18 +455,20 @@ def fraud_check(orders: DataFrame, limit: float, session_gap_seconds: int = 1800
     resets the total. Emits one verdict per order; the order of output
     rows within a micro-batch is not part of the contract.
 
-    Customers are grouped by ``pmod(hash(customer), FRAUD_BUCKETS)``, not
-    one group per customer: ``applyInPandasWithState`` costs about 2 ms
-    per group even for an empty fold, so an 8,000-row micro-batch with
-    ~4,360 customers spent 2.9-3.3 s on group overhead alone at 4
-    partitions (4-core host). Each bucket's call folds all of its
-    customers at once with :func:`fraud_fold`, and its state is three
+    Customers are grouped by their state-layout bucket,
+    ``state.bucket_expr([customer])`` over ``state.N_BUCKETS`` (32)
+    buckets, not one group per customer: ``applyInPandasWithState`` costs
+    about 2 ms per group even for an empty fold, so an 8,000-row
+    micro-batch with ~4,360 customers spent 2.9-3.3 s on group overhead
+    alone at 4 partitions (4-core host). Each bucket's call folds all of
+    its customers at once with :func:`fraud_fold`, and its state is three
     parallel arrays (customer, last_us, total), like ``ordered_concat``'s.
-    The bucket count is a constant because it is the state key space: a
+    The bucket count is the layout's constant, not a parameter, because it
+    is the state key space: changing it needs a fresh checkpoint. A
     checkpoint written by the per-customer layout (key ``customer``, value
-    ``(last_us, total)``) does not resume under this one: the restarted
-    query fails on its first batch with
-    ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE`` and needs a fresh checkpoint.
+    ``(last_us, total)``) does not resume under this one either: the
+    restarted query fails on its first batch with
+    ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``.
     """
     out_schema = T.StructType([
         T.StructField(key_col, T.StringType()),
@@ -495,7 +491,7 @@ def fraud_check(orders: DataFrame, limit: float, session_gap_seconds: int = 1800
         state.update(tuple(a.tolist() for a in new_state))
         yield out
 
-    return (orders.withColumn(BUCKET_COL, bucket_expr([key_col], FRAUD_BUCKETS))
+    return (orders.withColumn(BUCKET_COL, bucket_expr([key_col]))
             .groupBy(BUCKET_COL)
             .applyInPandasWithState(fn, out_schema, state_schema, "update",
                                     GroupStateTimeout.NoTimeout))

@@ -10,6 +10,7 @@ import hashlib
 import io
 import json
 import os
+import re
 import urllib.request
 from datetime import datetime
 
@@ -50,13 +51,13 @@ def test_partial_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     rows1 = [(f"u{i}", "old", ts("2024-01-01 10:00:00")) for i in range(64)]
     spark.createDataFrame(rows1, schema).coalesce(1) \
          .write.mode("append").parquet(str(src))
-    mat = KTableMaterializer(spark, str(state), ["user"], "ts", n_buckets=8)
-    store = DiskStateStore(spark, str(state), "user", n_buckets=8)
+    mat = KTableMaterializer(spark, str(state), ["user"], "ts")
+    store = DiskStateStore(spark, str(state), "user")
     stream = spark.readStream.schema(schema).parquet(str(src))
     q = stream.writeStream.outputMode("append").foreachBatch(mat).start()
     q.processAllAvailable()
     before = _bucket_digests(str(state))
-    assert len(before) > 1, "64 keys over 8 buckets must span several dirs"
+    assert len(before) > 1, "64 keys over 32 buckets must span several dirs"
 
     # batch 2: one key moves
     spark.createDataFrame([("u7", "new", ts("2024-01-01 11:00:00"))], schema) \
@@ -65,7 +66,7 @@ def test_partial_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     q.stop()
 
     after = _bucket_digests(str(state))
-    touched = f"{BUCKET_COL}={bucket_of(spark, ['u7'], 8)}"
+    touched = f"{BUCKET_COL}={bucket_of(spark, ['u7'])}"
     assert after[touched] != before[touched]
     for b in before:
         if b != touched:
@@ -84,8 +85,8 @@ def test_tombstone_deletes_key_in_its_bucket_only(spark, tmp_path):
     spark.createDataFrame(rows, schema).coalesce(1) \
          .write.mode("append").parquet(str(src))
     mat = KTableMaterializer(spark, str(state), ["user"], "ts",
-                             tombstone_col="region", n_buckets=4)
-    store = DiskStateStore(spark, str(state), "user", n_buckets=4)
+                             tombstone_col="region")
+    store = DiskStateStore(spark, str(state), "user")
     stream = spark.readStream.schema(schema).parquet(str(src))
     q = stream.writeStream.outputMode("append").foreachBatch(mat).start()
     q.processAllAvailable()
@@ -94,14 +95,29 @@ def test_tombstone_deletes_key_in_its_bucket_only(spark, tmp_path):
     spark.createDataFrame([("u3", None, ts("2024-01-01 11:00:00"))], schema) \
          .coalesce(1).write.mode("append").parquet(str(src))
     q.processAllAvailable()
-    q.stop()
     after = _bucket_digests(str(state))
-    touched = f"{BUCKET_COL}={bucket_of(spark, ['u3'], 4)}"
+    touched = f"{BUCKET_COL}={bucket_of(spark, ['u3'])}"
     users = {r["user"] for r in store.all().collect()}
     assert "u3" not in users and len(users) == 15
     for b in before:
         if b != touched:
             assert after.get(b) == before[b]
+
+    # one batch on existing state, ranked together with it: u5 has an older
+    # tombstone and a newer value (survives with the value), u6 an older
+    # value and a newer tombstone (deleted)
+    spark.createDataFrame(
+        [("u5", None, ts("2024-01-01 12:00:00")),
+         ("u5", "new", ts("2024-01-01 12:05:00")),
+         ("u6", "new", ts("2024-01-01 12:00:00")),
+         ("u6", None, ts("2024-01-01 12:05:00"))], schema) \
+         .coalesce(1).write.mode("append").parquet(str(src))
+    q.processAllAvailable()
+    q.stop()
+    got = {r["user"]: r["region"] for r in store.all().collect()}
+    assert got["u5"] == "new"
+    assert "u6" not in got and "u3" not in got and len(got) == 14
+    assert store.get("u5")[0]["region"] == "new" and store.get("u6") == []
 
 
 def _explain_str(df) -> str:
@@ -111,30 +127,60 @@ def _explain_str(df) -> str:
     return buf.getvalue()
 
 
+def _has_literal_bucket_filter(plan: str) -> bool:
+    part = plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
+    return re.search(rf"\({BUCKET_COL}#\d+ = \d+\)", part) is not None
+
+
 def test_point_lookup_prunes_to_one_bucket(spark, tmp_path, sf_dir):
     """Q1 get(key): the scan must carry a PartitionFilter on the bucket
-    column (reads 1 of n_buckets dirs) and a PushedFilter on the key
-    (row-group pruning inside the bucket — files are key-sorted)."""
+    column holding a literal bucket id (reads 1 of N_BUCKETS dirs, with no
+    job to compute the bucket) and a PushedFilter on the key (row-group
+    pruning inside the bucket — files are key-sorted)."""
     from kafka_streams_examples_spark.catalog import table
+    from kafka_streams_examples_spark.rest import InteractiveQueryService
 
     counts = (table(spark, sf_dir, "events")
               .groupBy("user_id").agg(F.count("*").alias("n")))
     store = DiskStateStore.materialize(counts, str(tmp_path / "st"),
-                                       "user_id", n_buckets=8)
+                                       "user_id")
     key = counts.first()["user_id"]
     want = counts.filter(F.col("user_id") == key).first()["n"]
     got = store.get(key)
     assert len(got) == 1 and got[0]["n"] == want
 
     plan = _explain_str(store._pruned(key))
-    assert "PartitionFilters" in plan and BUCKET_COL in plan.split(
-        "PartitionFilters", 1)[1].split("\n", 1)[0]
+    assert _has_literal_bucket_filter(plan), plan
     pushed = plan.split("PushedFilters", 1)[1].split("\n", 1)[0]
     assert "user_id" in pushed
 
-    # pruning is real: exactly one of the 8 bucket dirs matches the filter
+    # pruning is real: the layout has many bucket dirs, the filter one
     dirs = [e for e in os.listdir(tmp_path / "st") if e.startswith(BUCKET_COL)]
     assert len(dirs) > 1
+
+    # a bigint key (the music_charts song_id shape): a Python int and a
+    # REST path string must both hash as the column's type, not their own
+    songs = spark.range(50).select(F.col("id").alias("song_id"),
+                                   (F.col("id") * 10).alias("plays"))
+    big = DiskStateStore.materialize(songs, str(tmp_path / "big"), "song_id")
+    for k in range(50):
+        assert [r["plays"] for r in big.get(k)] == [10 * k], k
+    assert _has_literal_bucket_filter(_explain_str(big._pruned("7")))
+
+    svc = InteractiveQueryService().start()
+    try:
+        svc.register("big", big)
+        url = f"http://127.0.0.1:{svc.port}/state/keyvalue/big/"
+        for k in range(50):
+            with urllib.request.urlopen(url + str(k)) as r:
+                assert [row["plays"] for row in json.loads(r.read())] == \
+                    [10 * k], k
+        # absent and non-numeric keys both answer 200 []
+        for k in ("50", "abc"):
+            with urllib.request.urlopen(url + k) as r:
+                assert r.status == 200 and json.loads(r.read()) == [], k
+    finally:
+        svc.stop()
 
 
 def test_replayed_batch_is_idempotent(spark, tmp_path):
@@ -144,8 +190,8 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     (key, ts, tiebreak); rewritten parquet files carry fresh write UUIDs,
     so the contract is row identity, not byte identity)."""
     state = tmp_path / "state"
-    mat = KTableMaterializer(spark, str(state), ["user"], "ts", n_buckets=4)
-    store = DiskStateStore(spark, str(state), "user", n_buckets=4)
+    mat = KTableMaterializer(spark, str(state), ["user"], "ts")
+    store = DiskStateStore(spark, str(state), "user")
     batch = spark.createDataFrame(
         [("u1", "a", ts("2024-01-01 10:00:00")),
          ("u2", "b", ts("2024-01-01 10:00:00"))],
@@ -171,9 +217,9 @@ def test_materialize_and_streaming_upsert_share_layout(spark, tmp_path):
     base = spark.createDataFrame(
         [(i, f"v{i}", ts("2024-01-01 10:00:00")) for i in range(20)],
         "k long, v string, ts timestamp")
-    store = DiskStateStore.materialize(base, path, "k", n_buckets=4)
+    store = DiskStateStore.materialize(base, path, "k")
     assert store.get(3)[0]["v"] == "v3"
-    mat = KTableMaterializer(spark, path, ["k"], "ts", n_buckets=4)
+    mat = KTableMaterializer(spark, path, ["k"], "ts")
     upd = spark.createDataFrame([(3, "NEW", ts("2024-01-01 11:00:00"))],
                                 "k long, v string, ts timestamp")
     mat(upd, 1)
@@ -203,9 +249,8 @@ def test_composite_key_upsert_and_lookup(spark, tmp_path):
     """Multi-column keys: the bucket fn hashes all key columns, and the
     upsert keeps one row per full composite key."""
     state = tmp_path / "state"
-    mat = KTableMaterializer(spark, str(state), ["region", "user"], "ts",
-                             n_buckets=4)
-    store = DiskStateStore(spark, str(state), "user", n_buckets=4)
+    mat = KTableMaterializer(spark, str(state), ["region", "user"], "ts")
+    store = DiskStateStore(spark, str(state), "user")
     b1 = spark.createDataFrame(
         [("eu", "u1", 1.0, ts("2024-01-01 10:00:00")),
          ("us", "u1", 2.0, ts("2024-01-01 10:00:00")),
@@ -227,8 +272,44 @@ def test_disk_store_range_and_all(spark, tmp_path, sf_dir):
     counts = (table(spark, sf_dir, "events")
               .groupBy("user_id").agg(F.count("*").alias("n")))
     store = DiskStateStore.materialize(counts, str(tmp_path / "st2"),
-                                       "user_id", n_buckets=4)
+                                       "user_id")
     assert store.all().count() == counts.count()
     lo, hi = 10, 50
     want = counts.filter(F.col("user_id").between(lo, hi)).count()
     assert store.range(lo, hi).count() == want
+
+
+def test_layout_calls_go_through_module_globals(spark, tmp_path, monkeypatch):
+    """The traced benchmark wraps ``write_buckets``, ``swap_buckets`` and
+    ``bucket_of`` by name in ``serving`` and ``streaming.ktable``: the
+    store and the materializer must call the first two through those
+    module globals, and both modules must keep ``bucket_of``."""
+    from kafka_streams_examples_spark import serving
+    from kafka_streams_examples_spark.streaming import ktable
+
+    fired = []
+
+    def recorder(name, real):
+        def rec(*args, **kwargs):
+            fired.append(name)
+            return real(*args, **kwargs)
+        return rec
+
+    for mod in (serving, ktable):
+        assert callable(getattr(mod, "bucket_of"))
+        for fn in ("write_buckets", "swap_buckets"):
+            monkeypatch.setattr(mod, fn,
+                                recorder(f"{mod.__name__}.{fn}",
+                                         getattr(mod, fn)))
+    path = str(tmp_path / "st")
+    schema = "k string, v string, ts timestamp"
+    store = DiskStateStore.materialize(
+        spark.createDataFrame([("a", "old", ts("2024-01-01 10:00:00"))],
+                              schema), path, "k")
+    KTableMaterializer(spark, path, ["k"], "ts")(
+        spark.createDataFrame([("a", "new", ts("2024-01-01 11:00:00"))],
+                              schema), 0)
+    assert sorted(fired) == sorted(
+        f"{mod.__name__}.{fn}" for mod in (serving, ktable)
+        for fn in ("write_buckets", "swap_buckets"))
+    assert store.get("a")[0]["v"] == "new"

@@ -427,15 +427,13 @@ def test_fraud_check_recovers_from_checkpoint(spark, tmp_path):
     customer missing from batch 2 keeps their state until batch 3, though
     batch 2 rewrites the state of the hash bucket they share with c1."""
     from kafka_streams_examples_spark.state import bucket_expr
-    from kafka_streams_examples_spark.streaming.stateful import (
-        FRAUD_BUCKETS, fraud_check,
-    )
+    from kafka_streams_examples_spark.streaming.stateful import fraud_check
 
     src, ckpt = tmp_path / "orders", tmp_path / "ckpt"
     schema = "customer string, order_id string, order_value double, ts timestamp"
     bucket = dict(spark.createDataFrame([(f"c{i}",) for i in range(1, 300)],
                                         "customer string")
-                  .select("customer", bucket_expr(["customer"], FRAUD_BUCKETS))
+                  .select("customer", bucket_expr(["customer"]))
                   .collect())
     mate = next(c for c, b in bucket.items() if c != "c1" and b == bucket["c1"])
 

@@ -182,7 +182,7 @@ def test_music_charts_stream_to_store_to_serving(spark, sf_dir, tmp_path):
 
     state = tmp_path / "charts_state"
     mat = KTableMaterializer(spark, str(state), ["genre", "song_id"],
-                             ts_col="__v", n_buckets=8)
+                             ts_col="__v")
 
     def sink(batch, epoch):
         # update-mode batches carry only keys whose count changed; the
@@ -193,7 +193,7 @@ def test_music_charts_stream_to_store_to_serving(spark, sf_dir, tmp_path):
     q.processAllAvailable()
     q.stop()
 
-    store = DiskStateStore(spark, str(state), "song_id", n_buckets=8)
+    store = DiskStateStore(spark, str(state), "song_id")
     served = top5_from_counts(store.all().drop("__v")).collect()
     want = QUERIES["music_charts"].spark(spark, sf_dir).collect()
     assert sorted(map(tuple, served)) == sorted(map(tuple, want))
