@@ -175,7 +175,7 @@ STREAMING_PIPELINES = ("wordcount", "windowed_counts", "session_counts",
 
 def stream_cases(spark, sf_dir: str) -> dict:
     """Build the streaming-bench pipeline table:
-    {name: (build_fn, output_mode, rows_in, cost_class)}.
+    {name: (build_fn, output_mode, rows_in)}.
 
     Shared by stream_bench (in-harness numbers in BENCH_SELF_r{N}.json)
     and tools/stream_ab.py (isolated numbers in STREAM_AB_r{N}.json) so
@@ -217,24 +217,17 @@ def stream_cases(spark, sf_dir: str) -> dict:
                   .localCheckpoint(eager=False))
     _snd_index.count()
 
-    # Cost class per pipeline (BENCH_r07 postmortem / verdict #1): "jvm"
-    # pipelines are state-commit-bound — size shuffle partitions to state
-    # (~50k rows/part); "python" pipelines run their per-key fold in
-    # applyInPandasWithState workers, where partition count IS Python
-    # parallelism — size to ~5k rows/worker. pack_sequences is
-    # applyInPandasWithState too but numpy-vectorized over ~5 source
-    # keys, so extra partitions are empty commit overhead — jvm class.
     cases = {
         "wordcount": (
             lambda: streaming_wordcount(stream_table(spark, sf_dir, "documents")),
-            "complete", n_tokens, "jvm"),
+            "complete", n_tokens),
         "windowed_counts": (lambda: windowed_counts(ev()), "append",
-                            n_events, "jvm"),
+                            n_events),
         "session_counts": (lambda: session_counts(ev()), "append",
-                           n_events, "jvm"),
+                           n_events),
         "dedup_ttl": (
             lambda: dedup_stream(ev().select("event_id", "ts"), ["event_id"]),
-            "append", n_events, "jvm"),
+            "append", n_events),
         # self-join on the unique event id (1:1 match) so the stream-stream
         # join machinery is timed without a fan-out-dependent output size
         "interval_join": (
@@ -245,7 +238,7 @@ def stream_cases(spark, sf_dir: str) -> dict:
                             (F.col("ts") + F.expr("INTERVAL 30 SECONDS"))
                             .alias("r_ts")),
                 "key"),
-            "append", n_events, "jvm"),
+            "append", n_events),
         # applyInPandasWithState path: sequential session spend per
         # customer, folded one hash bucket of customers per Python call
         # (streaming/stateful.py:fraud_fold)
@@ -256,13 +249,13 @@ def stream_cases(spark, sf_dir: str) -> dict:
                             F.col("value").alias("order_value"),
                             F.col("ts")),
                 limit=1000.0),
-            "update", n_events, "python"),
+            "update", n_events),
         # event-time-ordered per-key fold (A3 streaming analog): state grows
         # with events/key, so this times the sort-merge-state path
         "ordered_concat": (
             lambda: ordered_concat(
                 ev().select("event_id", "ts", "user_id", "event_type")),
-            "update", n_events, "python"),
+            "update", n_events),
         # per-source token-tape packing (one long of state per source;
         # numpy span explode): work unit = the packed token
         "pack_sequences": (
@@ -273,7 +266,7 @@ def stream_cases(spark, sf_dir: str) -> dict:
                                     lambda x: x != ""))
                      .cast("long").alias("n_tokens")),
                 budget=256),
-            "append", n_tokens, "jvm"),
+            "append", n_tokens),
         # stream-static near-dup probe (streaming half of the batch
         # incremental_dedup query): arriving docs compute scan-side
         # minhash profiles and LSH-probe a batch-built corpus band
@@ -286,7 +279,7 @@ def stream_cases(spark, sf_dir: str) -> dict:
                 stream_table(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") % 10 == 7),
                 _snd_index, threshold=0.2),
-            "append", n_new_docs, "jvm"),
+            "append", n_new_docs),
         # ingest-time Gopher quality gate: STATELESS scan-side rule
         # battery (pure Column exprs, no state store, append mode) —
         # times the decode+filter throughput a raw-corpus intake runs
@@ -294,7 +287,7 @@ def stream_cases(spark, sf_dir: str) -> dict:
         "gopher_gate": (
             lambda: streaming_gopher_gate(
                 stream_table(spark, sf_dir, "documents")),
-            "append", n_docs, "jvm"),
+            "append", n_docs),
     }
     assert set(cases) == set(STREAMING_PIPELINES), "update STREAMING_PIPELINES"
     return cases
@@ -307,33 +300,29 @@ def stream_bench(spark, sf_dir: str, only: list[str] | None = None,
     stream-stream join) and report rows/sec — the commit-interval
     throughput analog (WordCountLambdaExample.java:170-174).
 
-    `only` restricts to a pipeline subset (the sf10 decade run times one
-    representative per cost class instead of all 8); `n_samples` trades
-    sampling robustness for wall time (default 3; 2 at sf10 where one
-    sample is minutes)."""
-    from kafka_streams_examples_spark.streaming.core import (
-        run_to_memory, shuffle_sized,
-    )
+    Every pipeline runs at the session's shuffle width (session.get_spark
+    owns it), recorded per row as `shuffle_partitions`. `only` restricts
+    to a pipeline subset; `n_samples` trades sampling robustness for wall
+    time (default 3; 2 at sf10 where one sample is minutes)."""
+    from kafka_streams_examples_spark.streaming.core import run_to_memory
 
     cases = stream_cases(spark, sf_dir)
     if only:
         cases = {n: cases[n] for n in only}
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     out: dict[str, dict] = {}
-    for name, (build, mode, rows_in, cost_class) in cases.items():
+    for name, (build, mode, rows_in) in cases.items():
         # min-of-3 (was min-of-2 through r7): micro-batch trigger
         # scheduling makes single streaming runs swing 3-6x run-to-run
         # — r8 measured fraud_check 75k vs 45k rows/s on back-to-back
         # idle-box min-of-2 runs; a third sample costs ~1s per pipeline
         # and strips most of the remaining swing
         samples = []
-        # shuffle partitions sized per cost class (see `cases` comment);
-        # the sized value is captured per-query at start, restored after
-        with shuffle_sized(spark, rows_in, cost_class=cost_class) as sz:
-            for _ in range(n_samples):
-                t0 = time.time()
-                _, q = run_to_memory(build(), mode=mode)
-                samples.append(round(time.time() - t0, 3))
-                q.stop()
+        for _ in range(n_samples):
+            t0 = time.time()
+            _, q = run_to_memory(build(), mode=mode)
+            samples.append(round(time.time() - t0, 3))
+            q.stop()
         best = min(samples)
         # all three samples recorded: BENCH r8 caught one process where
         # the applyInPandasWithState pipelines ran 3x slow on EVERY
@@ -344,8 +333,7 @@ def stream_bench(spark, sf_dir: str, only: list[str] | None = None,
                      "rows_per_sec": round(rows_in / best, 1),
                      "rows_in": rows_in,
                      "samples_sec": samples,
-                     "shuffle_partitions": sz.parts,
-                     "cost_class": cost_class}
+                     "shuffle_partitions": parts}
     return out
 
 
@@ -436,7 +424,7 @@ def main() -> None:
     # volume (and again at run end, below) — see disk_probe
     disk_start = disk_probe()
 
-    spark = get_spark("bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("bench", cpus=cpus)
 
     # Load-honesty telemetry (BENCH_r05 postmortem: a loaded box inflated
     # recorded numbers 1.2-2.3x and read as a phantom regression). Three

@@ -14,7 +14,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=4, shuffle_partitions=4)
+    s = get_spark("tests", cpus=4)
     yield s
 
 

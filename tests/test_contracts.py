@@ -264,28 +264,6 @@ def test_bench_round_number_tracks_artifacts(monkeypatch):
     assert bench.round_number() >= 7
 
 
-def test_sized_shuffle_partitions_policy():
-    # jvm class: ~50k state rows/partition, floor 2 (real exchange), cap
-    # cores; python class (applyInPandasWithState): ~6.25k rows/worker —
-    # partition count is Python parallelism there (BENCH_r07 verdict #1:
-    # the uniform jvm sizing cut fraud_check/ordered_concat 2-3x)
-    from kafka_streams_examples_spark.streaming.core import (
-        sized_shuffle_partitions,
-    )
-    assert sized_shuffle_partitions(0, 32) == 2
-    assert sized_shuffle_partitions(200_000, 32) == 4      # sf0.1 events
-    assert sized_shuffle_partitions(2_000_000, 32) == 32   # sf1: hits cap
-    assert sized_shuffle_partitions(2_000_000, 8) == 8     # cap = cores
-    assert sized_shuffle_partitions(50_001, 32) == 2
-    # python cost class: sf0.1's 100k events -> 16 workers (the measured
-    # optimum band, STREAM_AB_r08.json); still floored and capped
-    assert sized_shuffle_partitions(100_000, 32, cost_class="python") == 16
-    assert sized_shuffle_partitions(5_000, 32, cost_class="python") == 2
-    assert sized_shuffle_partitions(2_000_000, 32, cost_class="python") == 32
-    # jvm class unchanged by the new parameter
-    assert sized_shuffle_partitions(100_000, 32, cost_class="jvm") == 2
-
-
 def test_noise_gauge_flags_uniform_inflation():
     """The gauge compares multi-second bench timings against the newest
     SCALE artifact: clean run -> median_ratio ~1 / inflated False; a

@@ -51,6 +51,21 @@ def test_streaming_windowed_counts_append(spark, sf_dir):
     assert n_stream is not None and 0 < n_stream <= total
 
 
+def test_streaming_width_is_session_width(spark, sf_dir):
+    """A stateful streaming query runs one state store per shuffle
+    partition, and that width is the session's: session.get_spark is its
+    only owner (AQE, which would coalesce batch stages, is off in
+    streaming)."""
+    ev = stream_table(spark, sf_dir, "events")
+    _, q = run_to_memory(windowed_counts(ev), mode="append")
+    try:
+        ops = q.lastProgress["stateOperators"]
+    finally:
+        q.stop()
+    assert ops[0]["numStateStoreInstances"] == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def test_streaming_session_counts(spark, sf_dir):
     ev = stream_table(spark, sf_dir, "events")
     name, q = run_to_memory(session_counts(ev), mode="append")
@@ -747,44 +762,20 @@ def test_stream_near_dup_equals_batch_incremental(spark, sf_dir):
     assert len(rows) == len({(r.new_id, r.corpus_id) for r in rows})
 
 
-def test_python_stateful_pipelines_keep_python_cost_class(spark, sf_dir):
+def test_bench_streaming_runs_at_session_width(spark, sf_dir):
     """Regression net for the r7 streaming collapse (fraud_check 78k→25k
-    rows/s): the bench's Python-stateful pipelines MUST size their
-    shuffle partitions with cost_class="python" — the partition count IS
-    the applyInPandasWithState worker parallelism there. A uniform-sizing
-    refactor that drops cost_class from the bench case table (or from
-    sized_shuffle_partitions) re-runs the pandas folds on ~2 workers at
-    sf0.1 and silently loses 3x throughput; this test pins both the
-    declared classes and the sizing arithmetic, then runs one pipeline
-    end-to-end and asserts the recorded partition count is the
-    python-class value."""
+    rows/s, when the bench ran the pandas folds on 2 partitions): the
+    shuffle width is the applyInPandasWithState worker parallelism, so a
+    Python fold must never run on fewer partitions than the session has
+    cores. The bench records the width each pipeline ran at; it is the
+    session's, which get_spark floors at the core count."""
     import bench
-    from kafka_streams_examples_spark.streaming.core import (
-        sized_shuffle_partitions,
-    )
-
-    # the r7 failure signature, as arithmetic: at sf0.1's 100k events a
-    # jvm-sized stream gets 2 partitions; python-sized gets the swept
-    # optimum 16 (STREAM_AB_r08.json: throughput knee at 12-16)
-    assert sized_shuffle_partitions(100_000, 32, cost_class="jvm") == 2
-    assert sized_shuffle_partitions(100_000, 32, cost_class="python") == 16
-
-    cases = bench.stream_cases(spark, sf_dir)
-    declared = {n: c[3] for n, c in cases.items()}
-    assert declared["fraud_check"] == "python"
-    assert declared["ordered_concat"] == "python"
-    # pack_sequences is applyInPandasWithState too but numpy-vectorized
-    # over ~5 keys — deliberately jvm (empty-commit overhead dominates)
-    assert declared["pack_sequences"] == "jvm"
 
     out = bench.stream_bench(spark, sf_dir, only=["fraud_check"],
                              n_samples=1)
-    rows_in = cases["fraud_check"][2]
-    want = sized_shuffle_partitions(
-        rows_in, int(spark.sparkContext.defaultParallelism),
-        cost_class="python")
-    assert out["fraud_check"]["shuffle_partitions"] == want
-    assert out["fraud_check"]["cost_class"] == "python"
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out["fraud_check"]["shuffle_partitions"] == width
+    assert width >= spark.sparkContext.defaultParallelism
 
 
 def test_streaming_bpe_encode_equals_batch(spark, sf_dir):

@@ -33,7 +33,7 @@ FEATURES = [
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("explain-all", cpus=8, shuffle_partitions=8)
+    spark = get_spark("explain-all", cpus=8)
     lines = [
         "# PLANS — physical-plan evidence per registry query",
         "",

@@ -198,7 +198,7 @@ def main(out_path: str = "SCALE_r05.json", only: list[str] | None = None,
     import bench
     idle_wait = bench.wait_for_idle()   # same gate as bench.py (r8)
     disk_start = bench.disk_probe()     # storage regime (r14, same as bench.py)
-    spark = get_spark("scale-curve", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("scale-curve", cpus=cpus)
     QUERIES["tpch_q1"].spark(spark, sfs[0][1]).count()          # warmup
     # warm the canary's own noop-write path too: r10's canaries read
     # spread 2.4-3.2 purely from the FIRST sample paying JIT/codegen

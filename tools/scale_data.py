@@ -112,8 +112,7 @@ def _replica(df: DataFrame, name: str, k: int,
 
 
 def main(dest: str = ".scale/sf1", replicas: int = REPLICAS) -> None:
-    spark = get_spark("scale-data", cpus=os.cpu_count() or 8,
-                      shuffle_partitions=32)
+    spark = get_spark("scale-data", cpus=os.cpu_count() or 8)
     os.makedirs(dest, exist_ok=True)
     for name in ["region", "nation", "customer", "supplier", "part",
                  "orders", "lineitem", "events", "documents", "embeddings"]:

@@ -9,7 +9,7 @@ output, alongside the in-harness numbers in BENCH_SELF_r{N}.json.
 
 Usage:
     python tools/stream_ab.py fraud_check ordered_concat [--parts 2,8,16,20,32]
-    python tools/stream_ab.py --all          # policy partition count only
+    python tools/stream_ab.py --all          # session width only
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     bench.wait_for_idle()
-    spark = get_spark("stream_ab", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("stream_ab", cpus=cpus)
 
     # same closure factory as the in-harness bench — the pipelines the
     # A/B times are IDENTICAL to the ones BENCH_SELF records
@@ -50,12 +50,8 @@ def main() -> None:
 
     results: dict[str, dict] = {}
     for name in names:
-        build, mode, rows_in, cost_class = cases[name]
-        from kafka_streams_examples_spark.streaming.core import (
-            sized_shuffle_partitions,
-        )
-        policy = sized_shuffle_partitions(rows_in, cpus, cost_class=cost_class)
-        for parts in (parts_list or [policy]):
+        build, mode, rows_in = cases[name]
+        for parts in (parts_list or [int(saved)]):
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
             best = float("inf")
             for _ in range(2):
@@ -66,7 +62,7 @@ def main() -> None:
             row = {"wall_sec": round(best, 3),
                    "rows_per_sec": round(rows_in / best, 1),
                    "rows_in": rows_in, "shuffle_partitions": parts,
-                   "cost_class": cost_class, "policy_partitions": policy}
+                   "session_partitions": int(saved)}
             results.setdefault(name, {"runs": []})["runs"].append(row)
             print(json.dumps({"pipeline": name, **row}))
     spark.conf.set("spark.sql.shuffle.partitions", saved)
