@@ -300,10 +300,11 @@ def stream_bench(spark, sf_dir: str, only: list[str] | None = None,
     stream-stream join) and report rows/sec — the commit-interval
     throughput analog (WordCountLambdaExample.java:170-174).
 
-    Every pipeline runs at the session's shuffle width (session.get_spark
-    owns it), recorded per row as `shuffle_partitions`. `only` restricts
-    to a pipeline subset; `n_samples` trades sampling robustness for wall
-    time (default 3; 2 at sf10 where one sample is minutes)."""
+    Every pipeline runs at the session's streaming width (session.get_spark
+    owns it: 1, so one state store per stateful operator and the Python
+    folds on one worker), recorded per row as `shuffle_partitions`. `only`
+    restricts to a pipeline subset; `n_samples` trades sampling robustness
+    for wall time (default 3; 2 at sf10 where one sample is minutes)."""
     from kafka_streams_examples_spark.streaming.core import run_to_memory
 
     cases = stream_cases(spark, sf_dir)

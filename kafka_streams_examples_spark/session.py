@@ -5,17 +5,29 @@ on a real multi-executor cluster at 100 TB scale:
 
 - AQE on (runtime coalescing, skew-join splitting) — at scale the static
   shuffle-partition count is always wrong for some stage; AQE fixes it.
-- ``spark.sql.shuffle.partitions = max(cpus, 4)``, set here and nowhere
-  else: no engine module, bench or tool resizes it per query. Batch stages
-  start from this width and AQE coalesces them. Streaming queries run AQE
-  off, so this width is exactly their number of shuffle partitions and of
-  state-store instances per stateful operator; Spark fixes it at query
-  start and records it in the checkpoint's offset log, so a restarted
-  query keeps the width it started with. The floor of 4 gives a 1- or
-  2-core session (e.g. a ``local[1]`` baseline) the same plan as a 4-core
-  one — the same exchanges and state stores — so a narrower host changes
-  parallelism, not the plan being measured. On a cluster you'd size to
-  ~2-3x total cores and let AQE coalesce.
+- Two widths from one session, both set here and nowhere else: no engine
+  module, bench or tool resizes them per query.
+
+  - **Streaming: ``spark.sql.shuffle.partitions = 1``.** Streaming queries
+    run AQE off, so this width is exactly their number of shuffle
+    partitions and of state-store instances per stateful operator: one
+    store per operator, as a Kafka Streams app runs one task (and so one
+    store) per input-topic partition, and the file-source stand-in for a
+    topic has one partition. Every store commits every micro-batch however
+    few rows it holds, so at low rates the store count, not the data, sets
+    the per-batch cost. On a cluster you would set this to the topic's
+    partition count. The plan is the same at any core count. Spark fixes
+    the width at query start and records it in the checkpoint's offset
+    log, so a restarted query keeps the width it started with (a
+    checkpoint written at 4 resumes at 4).
+  - **Batch: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum =
+    max(cpus, 4)``.** With AQE on, Spark plans every batch exchange at this
+    number instead of ``shuffle.partitions`` and coalesces from there;
+    Spark 4.1 runs the body of a ``foreachBatch`` sink AQE on too, so the
+    KTable upserts plan here. The floor of 4 gives a 1- or 2-core session (e.g. a ``local[1]`` baseline)
+    the same batch plan as a 4-core one — the same exchanges — so a
+    narrower host changes parallelism, not the plan being measured. On a
+    cluster you'd size it to ~2-3x total cores and let AQE coalesce.
 - UTC session timezone — event-time semantics must not depend on the
   submitting host (also required for DuckDB-oracle comparison).
 - Arrow enabled — every Pandas-UDF boundary is Arrow-batched.
@@ -42,9 +54,11 @@ def get_spark(app_name: str = "kafka-streams-examples-spark",
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
+        .config("spark.sql.shuffle.partitions", "1")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+                str(max(cpus, 4)))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -4,6 +4,7 @@ batch/oracle results where meaningful."""
 
 from __future__ import annotations
 
+import re
 from datetime import datetime
 
 import pytest
@@ -52,18 +53,71 @@ def test_streaming_windowed_counts_append(spark, sf_dir):
 
 
 def test_streaming_width_is_session_width(spark, sf_dir):
-    """A stateful streaming query runs one state store per shuffle
-    partition, and that width is the session's: session.get_spark is its
-    only owner (AQE, which would coalesce batch stages, is off in
-    streaming)."""
+    """One session, two widths (session.get_spark owns both). A stateful
+    streaming query runs AQE off, so it gets one shuffle partition and one
+    state store per operator, as a Kafka Streams app runs one task per
+    input-topic partition; a batch exchange on the same session runs AQE
+    on and plans at the batch width, max(cpus, 4), before coalescing."""
     ev = stream_table(spark, sf_dir, "events")
     _, q = run_to_memory(windowed_counts(ev), mode="append")
     try:
         ops = q.lastProgress["stateOperators"]
     finally:
         q.stop()
-    assert ops[0]["numStateStoreInstances"] == int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
+    assert ops[0]["numStateStoreInstances"] == 1
+
+    batch = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    batch.collect()
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    widths = {int(n) for n in re.findall(r"hashpartitioning\(.*?, (\d+)\)", plan)}
+    assert widths == {max(spark.sparkContext.defaultParallelism, 4)}
+
+
+def test_restart_keeps_checkpoint_width(spark, tmp_path):
+    """Spark fixes a stateful query's width at its first start and records
+    it in the checkpoint's offset log: a checkpoint written at 4 state
+    stores (as existing fraud_check checkpoints were) resumes at 4 under
+    the session's streaming width of 1, and its output equals an
+    uninterrupted run."""
+    src = tmp_path / "src"
+    schema = "k string, v long"
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+             .write.mode("append").parquet(str(src))
+
+    def run(checkpoint):
+        out = {}
+
+        def sink(batch, _epoch):
+            out.clear()
+            out.update({r["k"]: (r["n"], r["s"]) for r in batch.collect()})
+
+        q = (spark.readStream.schema(schema).parquet(str(src))
+             .groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"))
+             .writeStream.outputMode("complete")
+             .option("checkpointLocation", checkpoint)
+             .foreachBatch(sink).start())
+        try:
+            q.processAllAvailable()
+            stores = q.lastProgress["stateOperators"][0]["numStateStoreInstances"]
+        finally:
+            q.stop()
+        return stores, out
+
+    write([(f"k{i % 13}", i) for i in range(60)])
+    key = "spark.sql.shuffle.partitions"
+    session_width = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        assert run(str(tmp_path / "ckpt"))[0] == 4
+    finally:
+        spark.conf.set(key, session_width)
+    write([(f"k{i % 17}", i) for i in range(60, 100)])
+    stores, resumed = run(str(tmp_path / "ckpt"))
+    assert stores == 4
+    _, uninterrupted = run(str(tmp_path / "fresh"))
+    assert resumed == uninterrupted and len(uninterrupted) == 17
 
 
 def test_streaming_session_counts(spark, sf_dir):
@@ -122,30 +176,45 @@ def test_streaming_interval_join(spark):
 
 
 def test_ktable_materializer_upsert(spark, tmp_path):
+    """KTableMaterializer as a real foreachBatch sink: the store is the
+    latest row per key over every batch, and each touched bucket holds
+    exactly one parquet file (``write_buckets`` colocates a bucket in one
+    task), whatever width the sink's batch work plans at."""
+    from kafka_streams_examples_spark.operators.ktable import latest_per_key
     from kafka_streams_examples_spark.serving import DiskStateStore
     from kafka_streams_examples_spark.streaming.ktable import KTableMaterializer
 
     src = tmp_path / "src"
     state = tmp_path / "state"
+    schema = "user string, region string, ts timestamp"
     rows1 = [("alice", "europe", ts("2024-01-01 10:00:00")),
              ("bob", "americas", ts("2024-01-01 10:00:00"))]
-    spark.createDataFrame(rows1, "user string, region string, ts timestamp") \
+    rows1 += [(f"u{i}", f"r{i % 5}", ts("2024-01-01 09:00:00"))
+              for i in range(60)]
+    spark.createDataFrame(rows1, schema) \
          .coalesce(1).write.mode("append").parquet(str(src))
     mat = KTableMaterializer(spark, str(state), ["user"], "ts")
-    stream = spark.readStream.schema("user string, region string, ts timestamp") \
-                  .parquet(str(src))
+    stream = spark.readStream.schema(schema).parquet(str(src))
     q = stream.writeStream.outputMode("append").foreachBatch(mat).start()
     q.processAllAvailable()
-    # second batch: alice moves
+    # second batch: alice moves, and a sixth of the u* keys with her
     rows2 = [("alice", "asia", ts("2024-01-01 11:00:00"))]
-    spark.createDataFrame(rows2, "user string, region string, ts timestamp") \
+    rows2 += [(f"u{i}", "asia", ts("2024-01-01 11:00:00"))
+              for i in range(0, 60, 6)]
+    spark.createDataFrame(rows2, schema) \
          .coalesce(1).write.mode("append").parquet(str(src))
     q.processAllAvailable()
     q.stop()
     store = DiskStateStore(spark, str(state), "user")
     got = {r["user"]: r["region"] for r in store.all().collect()}
-    assert got == {"alice": "asia", "bob": "americas"}
+    assert got["alice"] == "asia" and got["bob"] == "americas"
     assert store.get("bob")[0]["region"] == "americas"
+    want = latest_per_key(spark.createDataFrame(rows1 + rows2, schema),
+                          ["user"], "ts")
+    assert got == {r["user"]: r["region"] for r in want.collect()}
+    buckets = [b for b in state.iterdir() if b.name.startswith("__b=")]
+    assert len(buckets) > 1
+    assert all(len(list(b.glob("*.parquet"))) == 1 for b in buckets)
 
 
 def test_streaming_music_charts_matches_batch(spark, sf_dir):
@@ -763,19 +832,16 @@ def test_stream_near_dup_equals_batch_incremental(spark, sf_dir):
 
 
 def test_bench_streaming_runs_at_session_width(spark, sf_dir):
-    """Regression net for the r7 streaming collapse (fraud_check 78k→25k
-    rows/s, when the bench ran the pandas folds on 2 partitions): the
-    shuffle width is the applyInPandasWithState worker parallelism, so a
-    Python fold must never run on fewer partitions than the session has
-    cores. The bench records the width each pipeline ran at; it is the
-    session's, which get_spark floors at the core count."""
+    """bench.stream_bench times each pipeline at the session's streaming
+    width (session.get_spark owns it; 1, one state store per operator) and
+    records that width per row, so a bulk-replay number always says the
+    width it was taken at."""
     import bench
 
     out = bench.stream_bench(spark, sf_dir, only=["fraud_check"],
                              n_samples=1)
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert out["fraud_check"]["shuffle_partitions"] == width
-    assert width >= spark.sparkContext.defaultParallelism
+    assert out["fraud_check"]["shuffle_partitions"] == width == 1
 
 
 def test_streaming_bpe_encode_equals_batch(spark, sf_dir):

@@ -7,9 +7,14 @@ and the claims contradicted BENCH_r07.json. This tool is the fix — every
 isolated number a round's notes cite comes from this file's committed
 output, alongside the in-harness numbers in BENCH_SELF_r{N}.json.
 
+The session's streaming width is 1 (session.get_spark: one state store
+per stateful operator). `--parts` overrides `spark.sql.shuffle.partitions`
+at runtime, which moves only the streaming queries: batch exchanges plan
+at AQE's initial partition number, `max(cpus, 4)`.
+
 Usage:
-    python tools/stream_ab.py fraud_check ordered_concat [--parts 2,8,16,20,32]
-    python tools/stream_ab.py --all          # session width only
+    python tools/stream_ab.py fraud_check ordered_concat [--parts 1,2,4]
+    python tools/stream_ab.py --all          # session streaming width only
 """
 
 from __future__ import annotations

@@ -11,11 +11,12 @@ Usage:
 fixture (tools/scale_data.py; 10x events/tokens through the same state
 machinery) and reports the throughput ratio — the streaming analog of the
 batch scale curve. A fixed-cost-bound pipeline (query startup, state-store
-open/commit across 2 * shuffle_partitions store instances) shows ratio >> 1
-at 10x input because the constant amortizes; a pipeline whose state
-machinery scales super-linearly shows ratio << 1. No pipeline sets
-maxFilesPerTrigger, so each multi-file sf1 table replays as ONE
-micro-batch: the ratio measures bulk replay, not a multi-batch stream.
+open/commit: one store per stateful operator at the session's streaming
+width of 1) shows ratio >> 1 at 10x input because the constant amortizes;
+a pipeline whose state machinery scales super-linearly shows ratio << 1.
+No pipeline sets maxFilesPerTrigger, so each multi-file sf1 table replays
+as ONE micro-batch: the ratio measures bulk replay, not a multi-batch
+stream.
 """
 
 from __future__ import annotations
