@@ -24,18 +24,43 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
-def _normalize_ntz(df: DataFrame, schema) -> DataFrame:
-    # The driver's vanilla session keeps Spark 4's default
-    # spark.sql.parquet.inferTimestampNTZ.enabled=true, so parquet
-    # timestamps (written without UTC adjustment) surface as TIMESTAMP_NTZ,
-    # which time functions like unix_micros() reject. The engine's contract
-    # is instant semantics in a UTC session, so the cast is value-exact.
-    # The NTZ column set comes from the (cached) schema object — reading
-    # df.dtypes here would be another per-call JVM round trip.
-    ntz = [f.name for f in schema.fields
-           if f.dataType.typeName() == "timestamp_ntz"]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+def read_stored(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The batch scan of table ``name`` as stored, before :func:`normalize`.
+
+    events.ts is parquet TIMESTAMP(NANOS). Depending on session confs
+    Spark reads it either as int64 nanos (legacy.parquet.nanosAsLong,
+    honored only when set before the first parquet read) or natively as
+    TIMESTAMP_NTZ with nanos truncated to micros, so the conf is set here,
+    before the read."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def normalize(df: DataFrame, name: str, schema) -> DataFrame:
+    """Give a batch or streaming scan of table ``name``, whose stored
+    schema is ``schema``, the engine's column types.
+
+    An int64-nanos events.ts ends at a plain TIMESTAMP truncated exactly
+    like DuckDB's TIMESTAMP_NS -> TIMESTAMP coercion; the int64 `div`
+    stays in int64 — a double cast would lose precision above 2^53.
+
+    The driver's vanilla session keeps Spark 4's default
+    spark.sql.parquet.inferTimestampNTZ.enabled=true, so parquet
+    timestamps (written without UTC adjustment) surface as TIMESTAMP_NTZ,
+    which time functions like unix_micros() and withWatermark reject. The
+    engine's contract is instant semantics in a UTC session, so the cast
+    is value-exact. The column types come from the (cached) schema
+    object — reading df.dtypes here would be another per-call JVM round
+    trip."""
+    if name == "events" and any(f.name == "ts" and f.dataType.typeName() == "long"
+                                for f in schema.fields):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    for f in schema.fields:
+        if f.dataType.typeName() == "timestamp_ntz":
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
 
 
@@ -72,8 +97,6 @@ _TABLE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     per_session = _TABLE_CACHE.get(spark)
     if per_session is None:
         per_session = _TABLE_CACHE[spark] = {}
@@ -81,24 +104,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = per_session.get(key)
     if cached is not None:
         return cached
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS). Depending on session confs
-        # Spark reads it either as int64 nanos (legacy.parquet.nanosAsLong,
-        # honored only when set before the first parquet read) or natively
-        # as TIMESTAMP_NTZ with nanos truncated to micros. Both paths below
-        # end at a plain TIMESTAMP truncated exactly like DuckDB's
-        # TIMESTAMP_NS -> TIMESTAMP coercion. The int64 `div` stays in
-        # int64 — a double cast would lose precision above 2^53.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        sch = df.schema
-        if any(f.name == "ts" and f.dataType.typeName() == "long"
-               for f in sch.fields):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        out = _normalize_ntz(df, sch)
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        out = _normalize_ntz(df, df.schema)
-    per_session[key] = out
+    df = read_stored(spark, sf_dir, name)
+    out = per_session[key] = normalize(df, name, df.schema)
     return out
-

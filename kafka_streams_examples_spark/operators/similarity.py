@@ -197,8 +197,7 @@ def semantic_prune(corpus: DataFrame, k: int = 3, eps: float = 0.35,
 
 def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
                      vec_col: str = "embedding",
-                     label_col: str = "label",
-                     cents: DataFrame | None = None) -> DataFrame:
+                     label_col: str = "label") -> DataFrame:
     """Per-vector label-noise score (the cleanlab-style centroid
     silhouette a curation pipeline runs before trusting labels): cosine
     to the OWN label centroid vs the best FOREIGN centroid; a negative
@@ -216,14 +215,8 @@ def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
     work is bounded and SF-independent). Per-centroid cosines quantize
     at 6 decimals BEFORE the max/argmax so the oracle's tie-break on
     (score, label) is exact on both engines.
-
-    ``cents`` overrides the internal centroids_from_labels call with a
-    precomputed (centroid_id, centroid) table — identical output by
-    construction; used by tools/silhouette_split.py to time the
-    centroid-build and scoring stages separately.
     """
-    if cents is None:
-        cents = centroids_from_labels(corpus, id_col, vec_col, label_col)
+    cents = centroids_from_labels(corpus, id_col, vec_col, label_col)
     cents = cents.withColumn("cent_norm", l2_norm(F.col("centroid")))
     carr = F.broadcast(cents.agg(F.array_sort(F.collect_list(
         F.struct(F.col("centroid_id").alias("lb"), "centroid",

@@ -40,15 +40,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _with_root(pythonpath: str, root: str) -> str:
+    """``pythonpath`` with ``root`` first, unless it is already one of its
+    entries. Membership is per entry: ``<root>_old`` or ``<root>/tools``
+    on the path does not make ``root`` importable."""
+    if root in pythonpath.split(os.pathsep):
+        return pythonpath
+    return (root + os.pathsep + pythonpath).rstrip(os.pathsep)
+
+
 def get_spark(app_name: str = "kafka-streams-examples-spark",
               cpus: int | None = None) -> SparkSession:
     # make this package importable by python workers (closures that reference
     # package-level functions pickle by reference); must happen before the
     # JVM launches so forked workers inherit it
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo_root not in os.environ.get("PYTHONPATH", ""):
-        os.environ["PYTHONPATH"] = (
-            repo_root + os.pathsep + os.environ.get("PYTHONPATH", "")).rstrip(os.pathsep)
+    os.environ["PYTHONPATH"] = _with_root(os.environ.get("PYTHONPATH", ""),
+                                          repo_root)
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     builder = (

@@ -9,29 +9,24 @@ equivalent (SURVEY §5.1).
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..catalog import TABLES
+from ..catalog import normalize, read_stored
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Replay a testdata table as a file-source stream.
 
-    Schema comes from a batch read of the same file (file streams require
-    an explicit schema). events.ts nanos handling mirrors catalog.table.
+    File streams require an explicit schema: it comes from the catalog's
+    batch scan of the same file, and the catalog's ``normalize`` gives the
+    stream the column types ``catalog.table`` gives the batch scan.
     """
-    if name not in TABLES:
-        raise KeyError(name)
-    import os
-
+    stored = read_stored(spark, sf_dir, name)
+    reader = spark.readStream.schema(stored.schema)
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
     if os.path.isdir(path):
         # multi-file table (the sf1 scale fixture): the directory itself
         # is the stream basePath; with no maxFilesPerTrigger every file
@@ -42,15 +37,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # needs a directory basePath, so stream the parent dir filtered to
         # this file
         df = (reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Spark 4 may surface parquet timestamps as TIMESTAMP_NTZ (and ignore a
-    # runtime nanosAsLong), which withWatermark rejects; normalize like
-    # catalog.table — value-exact in the engine's UTC sessions.
-    for c, t in df.dtypes:
-        if t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    return normalize(df, name, stored.schema)
 
 
 def run_to_memory(df: DataFrame, mode: str = "append",
@@ -58,10 +45,9 @@ def run_to_memory(df: DataFrame, mode: str = "append",
     """Start a memory-sink query, process everything available, return
     (table_name, query). Caller stops the query.
 
-    wait=False skips processAllAvailable — required for queries using
-    ProcessingTimeTimeout state: Spark schedules continuous empty
-    micro-batches to evaluate timeouts, so "all available" never drains.
-    Use await_rows to poll those instead.
+    wait=False skips processAllAvailable and returns at once, for a
+    caller that feeds the running query more input and polls the sink
+    with await_rows.
     """
     name = f"mem_{uuid.uuid4().hex[:8]}"
     q = (df.writeStream.outputMode(mode).format("memory").queryName(name).start())
@@ -74,8 +60,7 @@ def await_rows(spark: SparkSession, name: str, predicate,
                timeout: float = 60.0, poll: float = 0.5):
     """Poll memory-sink table `name` until predicate(rows) is truthy or
     timeout; returns the rows. The TopologyTestDriver-style synchronous
-    read for timeout-driven queries where processAllAvailable can't
-    terminate."""
+    read for a query started with ``run_to_memory(..., wait=False)``."""
     import time as _time
     deadline = _time.time() + timeout
     rows = spark.table(name).collect()

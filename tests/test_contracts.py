@@ -321,3 +321,17 @@ def test_catalog_memo_scoped_per_session(spark, sf_dir):
     assert sorted(map(tuple, df1.collect())) == \
            sorted(map(tuple, df2.collect()))
     assert isinstance(catalog._TABLE_CACHE, WeakKeyDictionary)
+
+
+def test_pythonpath_export_matches_whole_entries():
+    # get_spark exports the repo root for Python workers; a path that only
+    # starts with the root (a sibling checkout, a subdirectory) must not
+    # count as the root itself
+    import os
+
+    from kafka_streams_examples_spark.session import _with_root
+    root = "/srv/repo"
+    near = os.pathsep.join([root + "_old", root + "/tools"])
+    assert _with_root(near, root) == os.pathsep.join([root, near])
+    assert _with_root("", root) == root
+    assert _with_root(near + os.pathsep + root, root) == near + os.pathsep + root

@@ -18,12 +18,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_streams_examples_spark.streaming.core import (
-    await_rows, run_to_memory, stream_table,
+    run_to_memory, stream_table,
 )
 from kafka_streams_examples_spark.streaming.dedup import dedup_stream
 from kafka_streams_examples_spark.streaming.pipelines import session_counts
 from kafka_streams_examples_spark.streaming.stateful import (
-    fraud_check, running_counts, running_counts_v2,
+    fraud_check, running_counts,
 )
 
 _KEY = "spark.sql.streaming.stateStore.providerClass"
@@ -55,7 +55,7 @@ def test_running_counts_on_rocksdb(rocks, tmp_path):
     spark.createDataFrame([("a",), ("a",), ("b",)], "word string") \
          .coalesce(1).write.mode("append").parquet(str(src))
     stream = spark.readStream.schema("word string").parquet(str(src))
-    name, q = run_to_memory(running_counts(stream, "word"), mode="update")
+    name, q = run_to_memory(running_counts(stream), mode="update")
     try:
         # provider actually engaged? the progress report names it
         provider = q.lastProgress["stateOperators"][0][
@@ -72,32 +72,6 @@ def test_running_counts_on_rocksdb(rocks, tmp_path):
     assert latest == {"a": 3, "b": 1}
     # RocksDB-only metrics prove the provider swap took effect
     assert any(k.startswith("rocksdb") for k in provider), provider
-
-
-def test_transform_with_state_v2_matches_v1(rocks, tmp_path):
-    """T1 on the Spark-4 transformWithState API (named state variables on
-    a handle; RocksDB-only) accumulates across batches exactly like the
-    applyInPandasWithState form. Skips where google.protobuf (required by
-    the transformWithState driver worker) is absent — this sandbox."""
-    pytest.importorskip("google.protobuf.descriptor",
-                        reason="transformWithState driver worker needs protobuf")
-    spark = rocks
-    src = tmp_path / "src"
-    spark.createDataFrame([("a",), ("a",), ("b",)], "word string") \
-         .coalesce(1).write.mode("append").parquet(str(src))
-    stream = spark.readStream.schema("word string").parquet(str(src))
-    name, q = run_to_memory(running_counts_v2(stream, "word"), mode="update")
-    try:
-        spark.createDataFrame([("a",), ("c",)], "word string") \
-             .coalesce(1).write.mode("append").parquet(str(src))
-        q.processAllAvailable()
-        rows = spark.table(name).collect()
-    finally:
-        q.stop()
-    latest = {}
-    for r in rows:
-        latest[r["word"]] = max(latest.get(r["word"], 0), r["count"])
-    assert latest == {"a": 3, "b": 1, "c": 1}
 
 
 def test_fraud_check_on_rocksdb(rocks, tmp_path):

@@ -43,7 +43,7 @@ def test_running_counts_accumulate_across_batches(spark, tmp_path):
     spark.createDataFrame([("a",), ("a",), ("b",)], "word string") \
          .coalesce(1).write.mode("append").parquet(str(src))
     stream = spark.readStream.schema("word string").parquet(str(src))
-    name, q = run_to_memory(running_counts(stream, "word"), mode="update")
+    name, q = run_to_memory(running_counts(stream), mode="update")
     try:
         spark.createDataFrame([("a",)], "word string") \
              .coalesce(1).write.mode("append").parquet(str(src))
@@ -97,24 +97,26 @@ def test_reservations_sequential_capacity(spark, tmp_path):
 
 def test_join_wait_immediate_and_buffered(spark, tmp_path):
     s_dir, t_dir = tmp_path / "s", tmp_path / "t"
+    sch_s = "key string, value double, ts timestamp"
+    sch_t = "key string, value long, ts timestamp"
     # batch 1: table value for k1 arrives; stream rows for k1 (joinable now)
-    # and k2 (no table side yet -> buffered)
-    spark.createDataFrame([("k1", 1.5), ("k2", 2.5)], "key string, value double") \
+    # and k2 (no table side yet -> buffered). Every record is inside the
+    # 300 event-second wait, so nothing times out.
+    spark.createDataFrame([("k1", 1.5, ts("2024-01-01 10:00:00")),
+                           ("k2", 2.5, ts("2024-01-01 10:00:00"))], sch_s) \
          .coalesce(1).write.mode("append").parquet(str(s_dir))
-    spark.createDataFrame([("k1", 10)], "key string, value long") \
+    spark.createDataFrame([("k1", 10, ts("2024-01-01 10:00:00"))], sch_t) \
          .coalesce(1).write.mode("append").parquet(str(t_dir))
-    s = spark.readStream.schema("key string, value double").parquet(str(s_dir))
-    t = spark.readStream.schema("key string, value long").parquet(str(t_dir))
-    # wait=False: ProcessingTimeTimeout queries never drain "all available"
-    # (continuous empty batches evaluate timeouts) — poll the sink instead
-    name, q = run_to_memory(join_wait(s, t, wait_seconds=300), mode="update",
-                            wait=False)
+    s = spark.readStream.schema(sch_s).parquet(str(s_dir))
+    t = spark.readStream.schema(sch_t).parquet(str(t_dir))
+    name, q = run_to_memory(join_wait(s, t, wait_seconds=300), mode="update")
     try:
-        await_rows(spark, name, lambda rs: len(rs) >= 1)
+        assert {r["key"] for r in spark.table(name).collect()} == {"k1"}
         # batch 2: k2's table side arrives -> buffered row flushes with value
-        spark.createDataFrame([("k2", 20)], "key string, value long") \
+        spark.createDataFrame([("k2", 20, ts("2024-01-01 10:00:10"))], sch_t) \
              .coalesce(1).write.mode("append").parquet(str(t_dir))
-        rows = await_rows(spark, name, lambda rs: len(rs) >= 2)
+        q.processAllAvailable()
+        rows = spark.table(name).collect()
     finally:
         q.stop()
     got = {(r["key"], r["stream_value"]): r["table_value"] for r in rows}
@@ -127,34 +129,30 @@ def test_join_wait_multi_table_run_flushes_with_first_value(spark, tmp_path):
     # records for a key with buffered stream records must flush the waiters
     # with the FIRST arriving table value of the run (per-row arrival
     # semantics), while later stream records see the LAST (latest) value.
+    # Every record is inside the 300 event-second wait, so nothing times out.
     s_dir, t_dir = tmp_path / "s", tmp_path / "t"
     t_dir.mkdir()          # table side starts empty — but the dir must exist
-    spark.createDataFrame([("k1", 1.0), ("k1", 2.0)],
-                          "key string, value double") \
+    sch_s = "key string, value double, ts timestamp"
+    sch_t = "key string, value long, ts timestamp"
+    spark.createDataFrame([("k1", 1.0, ts("2024-01-01 10:00:00")),
+                           ("k1", 2.0, ts("2024-01-01 10:00:00"))], sch_s) \
          .coalesce(1).write.mode("append").parquet(str(s_dir))
-    s = spark.readStream.schema("key string, value double").parquet(str(s_dir))
-    t = spark.readStream.schema("key string, value long").parquet(str(t_dir))
-    name, q = run_to_memory(join_wait(s, t, wait_seconds=300), mode="update",
-                            wait=False)
+    s = spark.readStream.schema(sch_s).parquet(str(s_dir))
+    t = spark.readStream.schema(sch_t).parquet(str(t_dir))
+    # batch 1 buffers both stream rows (no table side yet)
+    name, q = run_to_memory(join_wait(s, t, wait_seconds=300), mode="update")
     try:
-        # batch 1 buffers both stream rows (no table side yet); wait until
-        # the query has actually consumed them so the T run is a later batch
-        import time as _t
-        deadline = _t.time() + 60
-        while sum(p["numInputRows"] for p in q.recentProgress) < 2:
-            if _t.time() > deadline:
-                raise TimeoutError("stream batch never consumed")
-            _t.sleep(0.3)
         # batch 2: two table records for k1 in ONE file (one source
         # partition -> arrival order preserved): 10 then 20
-        spark.createDataFrame([("k1", 10), ("k1", 20)],
-                              "key string, value long") \
+        spark.createDataFrame([("k1", 10, ts("2024-01-01 10:00:10")),
+                               ("k1", 20, ts("2024-01-01 10:00:20"))], sch_t) \
              .coalesce(1).write.mode("append").parquet(str(t_dir))
-        rows = await_rows(spark, name, lambda rs: len(rs) >= 2)
+        q.processAllAvailable()
         # batch 3: a fresh stream record joins against the cached LAST value
-        spark.createDataFrame([("k1", 3.0)], "key string, value double") \
+        spark.createDataFrame([("k1", 3.0, ts("2024-01-01 10:00:30"))], sch_s) \
              .coalesce(1).write.mode("append").parquet(str(s_dir))
-        rows = await_rows(spark, name, lambda rs: len(rs) >= 3)
+        q.processAllAvailable()
+        rows = spark.table(name).collect()
     finally:
         q.stop()
     got = {r["stream_value"]: r["table_value"] for r in rows}
@@ -162,7 +160,7 @@ def test_join_wait_multi_table_run_flushes_with_first_value(spark, tmp_path):
 
 
 def test_join_wait_event_time_matrix(spark, tmp_path):
-    """Event-time mode (the reference transformer's actual punctuation
+    """join_wait on event time (the reference transformer's punctuation
     clock — STREAM_TIME, CustomStreamTableJoinIntegrationTest.java:285-338):
     immediate join, buffered-then-matched, and timeout driven by the
     WATERMARK — a stalled wall clock still flushes when event time
@@ -182,7 +180,7 @@ def test_join_wait_event_time_matrix(spark, tmp_path):
         .coalesce(1).write.mode("append").parquet(str(t_dir))
     s = spark.readStream.schema(sch_s).parquet(str(s_dir))
     t = spark.readStream.schema(sch_t).parquet(str(t_dir))
-    out = join_wait(s, t, wait_seconds=60, time_mode="event")
+    out = join_wait(s, t, wait_seconds=60)
     name, q = run_to_memory(out, mode="update", wait=False)
     try:
         rows = await_rows(spark, name, lambda rs: len(rs) >= 1)
@@ -219,7 +217,7 @@ def test_join_wait_event_time_late_record_is_dropped(spark, tmp_path):
     """A stream record older than the watermark never reaches the
     processor — Spark's late-event filter drops it before the stateful
     operator (the W7 grace contract; Kafka Streams likewise drops
-    records past the grace period). Pinned so the event-time mode's
+    records past the grace period). Pinned so join_wait's
     late-data story is explicit: drop, not flush-unmatched."""
     s_dir, t_dir = tmp_path / "s", tmp_path / "t"
     t_dir.mkdir()
@@ -231,7 +229,7 @@ def test_join_wait_event_time_late_record_is_dropped(spark, tmp_path):
     s = spark.readStream.schema(sch_s).parquet(str(s_dir))
     t = spark.readStream.schema(
         "key string, value long, ts timestamp").parquet(str(t_dir))
-    out = join_wait(s, t, wait_seconds=60, time_mode="event")
+    out = join_wait(s, t, wait_seconds=60)
     name, q = run_to_memory(out, mode="update", wait=False)
     try:
         import time as _t

@@ -25,6 +25,29 @@ def ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
 
 
+@pytest.mark.parametrize("name", ["events", "documents"])
+def test_stream_table_types_match_catalog_table(spark, sf_dir, name):
+    # batch and stream read a table through the catalog's one normalizer,
+    # so a streaming query sees the column types a batch query sees
+    assert stream_table(spark, sf_dir, name).schema == \
+        table(spark, sf_dir, name).schema
+
+
+def test_stream_table_reads_nanosecond_event_time(spark, tmp_path):
+    # events.ts stored as parquet TIMESTAMP(NANOS) reads as int64 nanos;
+    # batch and stream both truncate it to the same microsecond TIMESTAMP
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"))
+    batch = table(spark, str(tmp_path), "events")
+    assert stream_table(spark, str(tmp_path), "events").schema == batch.schema
+    assert batch.collect()[0]["ts"] == ts("2023-11-14 22:13:20.123456")
+
+
 def test_streaming_wordcount_matches_batch(spark, sf_dir):
     lines = stream_table(spark, sf_dir, "documents")
     name, q = run_to_memory(streaming_wordcount(lines), mode="complete")
