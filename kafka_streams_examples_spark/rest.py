@@ -18,8 +18,9 @@ A thin stdlib-only HTTP facade over the StateStore query surface
 Design note: the reference needs host discovery + remote forwarding (Q6)
 because state is partitioned across app instances; here every store is a
 Spark table, so any instance can answer any key and Q6 is structurally
-unnecessary. Every store call lists the state files again
-(serving.DiskStateStore reads the live layout), so the long-poll loop sees
+unnecessary. Every store call reads the state layout again
+(serving.DiskStateStore reads the live bucket directories; a point lookup
+reads one of them with pyarrow, without Spark), so the long-poll loop sees
 buckets swapped in by a streaming upsert (KTableMaterializer) mid-poll —
 the reference's outstanding-requests map collapses to polling the
 materialized table.

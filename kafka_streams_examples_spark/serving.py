@@ -10,21 +10,51 @@ reference's REST layer exposes (WordCountInteractiveQueriesRestService.java:83-1
 get / all / range / windowed fetch / session fetch.
 
 DiskStateStore is the one reader over the bucketed layout (state.py). It
-lists the state files again on every call, never at construction, so
-buckets swapped in by an upsert after the store was built are read as
-they are now, not as they were.
+reads the layout again on every call, never at construction, so buckets
+swapped in by an upsert after the store was built are read as they are
+now, not as they were. Its point lookup runs no Spark job: the key is
+hashed in Python and its one bucket directory is read with pyarrow, the
+way the reference answers Q1 from a local RocksDB store; scans and the
+key types the Python hash does not cover go through Spark SQL.
 """
 
 from __future__ import annotations
 
+import re
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # write_buckets/swap_buckets/bucket_of: traced perfbench patches them here (ROADMAP 5)
 from .state import (  # noqa: F401
-    BUCKET_COL, N_BUCKETS, bucket_expr, bucket_of, read_state, swap_buckets,
+    BUCKET_COL, N_BUCKETS, bucket_expr, bucket_id, bucket_keys,
+    bucket_of, read_bucket, read_state, stored_schema, swap_buckets,
     write_buckets,
 )
+
+#: column types whose pyarrow ``to_pylist`` value is the value Spark's
+#: ``collect`` returns (not timestamps, dates, decimals, binary or nested)
+_PLAIN_TYPES = {pa.int8(), pa.int16(), pa.int32(), pa.int64(), pa.string(),
+                pa.float64(), pa.bool_()}
+
+
+def _cast_key(key, t: pa.DataType):
+    """``key`` as ``try_cast`` to a column of type ``t`` gives it, for the
+    forms whose cast is plain: a str to a string column, and to an integer
+    column a Python int or an ASCII ``[+-]?[0-9]+`` string, either within
+    the type's range. None for any other form."""
+    if t == pa.string():
+        return key if isinstance(key, str) else None
+    if isinstance(key, str) and re.fullmatch(r"[+-]?[0-9]+", key):
+        try:
+            key = int(key)
+        except ValueError:  # past Python's int-from-str digit limit
+            return None
+    if type(key) is not int or not pa.types.is_signed_integer(t):
+        return None
+    bound = 1 << (t.bit_width - 1)
+    return key if -bound <= key < bound else None
 
 
 class StateStore:
@@ -55,14 +85,18 @@ class DiskStateStore(StateStore):
 
     The reference's RocksDB store gives O(log n) point lookups; a flat
     parquet table gives O(|state|) scans. This store recovers the lookup
-    asymptotics Spark-natively: ``get`` casts the key to the key column's
-    type and filters on ``bucket_expr`` of that literal, which Catalyst
-    folds into a literal bucket id, so partition pruning reads ONE of
-    ``N_BUCKETS`` directories with no job to compute the bucket. A key
-    that does not cast to the column's type matches nothing. The key
-    filter then prunes row groups within the bucket (files are written
-    key-sorted). ``materialize`` writes any DataFrame into that layout;
-    KTableMaterializer maintains the same layout incrementally.
+    without planning Spark work: ``get`` reads the key column's type from
+    one parquet footer, casts the key to it as ``try_cast`` would, hashes
+    it with ``state.bucket_id`` and reads that ONE of ``N_BUCKETS``
+    directories with pyarrow, filtering on the key (files are written
+    key-sorted, so row-group stats prune within the bucket). A key form or
+    a stored column type outside that path, a layout bucketed on more
+    columns than ``key_col``, and a path with no state yet take the Spark
+    form, ``_pruned``: a filter on ``bucket_expr`` of the cast literal,
+    which Catalyst folds into a literal bucket id. A key that does not cast
+    to the column's type matches nothing. ``materialize`` writes any
+    DataFrame into that layout; KTableMaterializer maintains the same
+    layout incrementally.
     """
 
     def __init__(self, spark: SparkSession, path: str, key_col: str):
@@ -82,15 +116,29 @@ class DiskStateStore(StateStore):
         swap_buckets(path, range(N_BUCKETS))
         return cls(df.sparkSession, path, key_col)
 
+    def _bucketed_on_key(self) -> bool:
+        return bucket_keys(self.path) in (None, [self.key_col])
+
     def _pruned(self, key) -> DataFrame:
         state = read_state(self.spark, self.path)
         k = F.lit(key).try_cast(state.schema[self.key_col].dataType)
-        return (state.filter((F.col(BUCKET_COL) == bucket_expr([k]))
-                             & (F.col(self.key_col) == k))
-                .drop(BUCKET_COL))
+        match = F.col(self.key_col) == k
+        if self._bucketed_on_key():
+            # folds to a literal bucket id: partition pruning reads one dir
+            match = (F.col(BUCKET_COL) == bucket_expr([k])) & match
+        return state.filter(match).drop(BUCKET_COL)
 
-    def get(self, key):  # Q1 — bucket-pruned point lookup
-        return self._pruned(key).collect()
+    def get(self, key):  # Q1 — one bucket read with pyarrow, no Spark job
+        schema = stored_schema(self.path)
+        if (schema is None or self.key_col not in schema.names
+                or not self._bucketed_on_key()
+                or not all(t in _PLAIN_TYPES for t in schema.types)):
+            return self._pruned(key).collect()
+        t = schema.field(self.key_col).type
+        k = _cast_key(key, t)
+        if k is None:
+            return self._pruned(key).collect()
+        return read_bucket(self.path, bucket_id([k], [t]), self.key_col, k)
 
     def fetch_window(self, key, start, end,
                      window_col: str = "window_start") -> DataFrame:  # Q4

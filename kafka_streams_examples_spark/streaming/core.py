@@ -40,35 +40,10 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize(df, name, stored.schema)
 
 
-def run_to_memory(df: DataFrame, mode: str = "append",
-                  wait: bool = True) -> tuple[str, object]:
+def run_to_memory(df: DataFrame, mode: str = "append") -> tuple[str, object]:
     """Start a memory-sink query, process everything available, return
-    (table_name, query). Caller stops the query.
-
-    wait=False skips processAllAvailable and returns at once, for a
-    caller that feeds the running query more input and polls the sink
-    with await_rows.
-    """
+    (table_name, query). Caller stops the query."""
     name = f"mem_{uuid.uuid4().hex[:8]}"
     q = (df.writeStream.outputMode(mode).format("memory").queryName(name).start())
-    if wait:
-        q.processAllAvailable()
+    q.processAllAvailable()
     return name, q
-
-
-def await_rows(spark: SparkSession, name: str, predicate,
-               timeout: float = 60.0, poll: float = 0.5):
-    """Poll memory-sink table `name` until predicate(rows) is truthy or
-    timeout; returns the rows. The TopologyTestDriver-style synchronous
-    read for a query started with ``run_to_memory(..., wait=False)``."""
-    import time as _time
-    deadline = _time.time() + timeout
-    rows = spark.table(name).collect()
-    while not predicate(rows):
-        if _time.time() > deadline:
-            raise TimeoutError(f"await_rows({name}): still unsatisfied after "
-                               f"{timeout}s; have {len(rows)} rows")
-        _time.sleep(poll)
-        rows = spark.table(name).collect()
-    return rows
-

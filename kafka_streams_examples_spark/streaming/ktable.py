@@ -14,8 +14,10 @@ write.
 
 This class only writes. The state table is read through
 ``serving.DiskStateStore``, the one reader over the layout (§2.7): point
-reads prune to one bucket directory (partition pruning) and then to few row
-groups (files are key-sorted); range/scan reads are plain Spark SQL.
+reads hash the key in Python and read one bucket directory with pyarrow,
+then few row groups (files are key-sorted); range/scan reads are plain
+Spark SQL. ``write_buckets`` records ``keys`` in the layout, so a point
+read on one column of a composite key knows to filter every bucket.
 """
 
 from __future__ import annotations

@@ -222,7 +222,8 @@ def music_charts_service(spark, plays: DataFrame, songs: DataFrame,
 
     q = (counts.writeStream.outputMode("update").foreachBatch(sink).start())
 
-    # charts() only scans the store, so the composite key is never looked up
+    # charts() only scans the store; a get(song_id) would filter every
+    # bucket, as the layout is bucketed on (genre, song_id)
     store = DiskStateStore(spark, state_dir, "song_id")
 
     def charts() -> DataFrame:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from kafka_streams_examples_spark.operators.dedup import dedup_within_ttl
 from kafka_streams_examples_spark.operators.topk import top_k_per_group
 from kafka_streams_examples_spark.operators.windows import with_session_id
+from kafka_streams_examples_spark.state import bucket_expr, bucket_id, spark_hash
 
 BASE = datetime(2024, 1, 1)
 
@@ -326,3 +328,38 @@ def test_fraud_fold_matches_per_customer_fold(rows, data):
                  for c, t, total in zip(cs, ts_, tot)}
     assert got == want
     assert got_state == want_state
+
+
+def _ints(bits: int):
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+    return st.none() | st.sampled_from([lo, hi, 0, -1]) | st.integers(lo, hi)
+
+
+hash_rows = st.lists(
+    st.tuples(st.none() | st.sampled_from(["", "\x00", "é", "日本語",
+                                           "😀", "a😀bc"]) | st.text(),
+              _ints(8), _ints(16), _ints(32), _ints(64)),
+    min_size=1, max_size=30)
+
+
+@settings(max_examples=25, deadline=None)
+@given(hash_rows)
+def test_python_bucket_hash_matches_spark(spark, rows):
+    """state.spark_hash / bucket_id equal F.hash / bucket_expr for every
+    key type a point lookup hashes in Python (string, tinyint to bigint),
+    alone and chained as a composite key with nulls."""
+    cols = ["s", "b", "h", "i", "l"]
+    types = [pa.string(), pa.int8(), pa.int16(), pa.int32(), pa.int64()]
+    df = spark.createDataFrame(
+        rows, "s string, b tinyint, h smallint, i int, l bigint")
+    got = df.select(*cols, *(F.hash(c).alias(f"h_{c}") for c in cols),
+                    F.hash("s", "l").alias("h_sl"),
+                    bucket_expr(["s", "l"]).alias("b_sl"),
+                    bucket_expr(["i"]).alias("b_i")).collect()
+    sl = [pa.string(), pa.int64()]
+    for r in got:
+        for c, t in zip(cols, types):
+            assert spark_hash([r[c]], [t]) == r[f"h_{c}"], (c, r[c])
+        assert spark_hash([r["s"], r["l"]], sl) == r["h_sl"], r
+        assert bucket_id([r["s"], r["l"]], sl) == r["b_sl"], r
+        assert bucket_id([r["i"]], [pa.int32()]) == r["b_i"], r

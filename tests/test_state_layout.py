@@ -14,6 +14,9 @@ import re
 import urllib.request
 from datetime import datetime
 
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from kafka_streams_examples_spark.serving import DiskStateStore
@@ -133,10 +136,12 @@ def _has_literal_bucket_filter(plan: str) -> bool:
 
 
 def test_point_lookup_prunes_to_one_bucket(spark, tmp_path, sf_dir):
-    """Q1 get(key): the scan must carry a PartitionFilter on the bucket
-    column holding a literal bucket id (reads 1 of N_BUCKETS dirs, with no
-    job to compute the bucket) and a PushedFilter on the key (row-group
-    pruning inside the bucket — files are key-sorted)."""
+    """Q1 get(key), and its Spark form ``_pruned`` (taken for the keys and
+    types the Python hash does not cover): the scan must carry a
+    PartitionFilter on the bucket column holding a literal bucket id
+    (reads 1 of N_BUCKETS dirs, with no job to compute the bucket) and a
+    PushedFilter on the key (row-group pruning inside the bucket — files
+    are key-sorted)."""
     from kafka_streams_examples_spark.catalog import table
     from kafka_streams_examples_spark.rest import InteractiveQueryService
 
@@ -264,6 +269,11 @@ def test_composite_key_upsert_and_lookup(spark, tmp_path):
     # same user, different region -> independent rows
     got = {(r["region"], r["user"]): r["v"] for r in store.all().collect()}
     assert got == {("eu", "u1"): 9.0, ("us", "u1"): 2.0, ("eu", "u2"): 3.0}
+    # a lookup on one column of the composite key finds the rows of every
+    # bucket it is in, not only those of hash(user)'s bucket
+    assert sorted((r["region"], r["v"]) for r in store.get("u1")) == \
+        [("eu", 9.0), ("us", 2.0)]
+    assert [r["region"] for r in store.get("u2")] == ["eu"]
 
 
 def test_disk_store_range_and_all(spark, tmp_path, sf_dir):
@@ -277,6 +287,94 @@ def test_disk_store_range_and_all(spark, tmp_path, sf_dir):
     lo, hi = 10, 50
     want = counts.filter(F.col("user_id").between(lo, hi)).count()
     assert store.range(lo, hi).count() == want
+
+
+#: key forms whose try_cast is not a plain Python cast, so get() takes Spark
+ODD_KEYS = ["7_000", "\uff11", " 7", "7.0", "+7", "-0", "abc", "", None,
+            str(2**63), "0" * 5000 + "7", True, 7.0]
+
+
+def test_point_lookup_equals_spark_lookup(spark, tmp_path):
+    """get(k) is _pruned(k).collect() for every key form and store kind:
+    hits, misses, keys whose bucket directory tombstones removed, and key
+    forms only Spark casts; a layout without its recorded bucket key, a
+    store with a timestamp column (read only through Spark) and a path
+    with no state yet."""
+    keyed = str(tmp_path / "kv")
+    mat = KTableMaterializer(spark, keyed, ["k"], ts_col="seq",
+                             tombstone_col="v")
+    schema = "k string, v double, n int, ok boolean, seq long"
+    mat(spark.createDataFrame(
+        [(f"k{i}", i / 2, i, i % 2 == 0, 0) for i in range(40)]
+        + [(s, 1.0, 1, True, 0) for s in ("", "7", "日本", "😀")], schema), 0)
+    by_bucket: dict[int, list[str]] = {}
+    for i in range(40):
+        by_bucket.setdefault(bucket_of(spark, [f"k{i}"]), []).append(f"k{i}")
+    gone_bucket, gone = next(iter(by_bucket.items()))
+    mat(spark.createDataFrame([(k, None, 0, True, 1) for k in gone],
+                              schema), 1)
+    assert not os.path.exists(os.path.join(keyed, f"{BUCKET_COL}={gone_bucket}"))
+    kv = DiskStateStore(spark, keyed, "k")
+
+    songs = spark.range(50).select(F.col("id").alias("song_id"),
+                                   (F.col("id") * 10).alias("plays"))
+    big = DiskStateStore.materialize(songs, str(tmp_path / "big"), "song_id")
+    small = DiskStateStore.materialize(
+        songs.select(F.col("song_id").cast("int").alias("id"),
+                     F.col("song_id").cast("tinyint").alias("b")),
+        str(tmp_path / "int"), "id")
+    # a layout written before the bucket key was recorded reads as keyed
+    # on the store's key column
+    os.remove(tmp_path / "int" / "_keys")
+    at = DiskStateStore.materialize(
+        spark.createDataFrame([(f"k{i}", ts("2024-01-01 10:00:00"))
+                               for i in range(10)], "k string, at timestamp"),
+        str(tmp_path / "at"), "k")
+
+    cases = [(kv, k) for k in ["k1", "k39", "zz", "7", "", "日本", "😀", 7,
+                               *gone, *ODD_KEYS]]
+    cases += [(st, k) for st in (big, small)
+              for k in [0, 7, 49, 50, -1, "7", "0049", "-1", 2**31, -2**63,
+                        2**63 - 1, str(-2**63), *ODD_KEYS]]
+    cases += [(at, k) for k in ["k3", "zz", 3]]
+    for store, k in cases:
+        want = store._pruned(k).collect()
+        assert store.get(k) == want, (store.path, k)
+        assert [r.asDict() for r in store.get(k)] == \
+            [r.asDict() for r in want], (store.path, k)
+    assert kv.get("k1") == [Row(k="k1", v=0.5, n=1, ok=False, seq=0)]
+    assert big.get("7") == [Row(song_id=7, plays=70)]
+    assert small.get("-0") == [Row(id=0, b=0)]
+
+    empty = DiskStateStore(spark, str(tmp_path / "none"), "k")
+    for k in ("k1", 7):
+        with pytest.raises(AnalysisException):
+            empty._pruned(k).collect()
+        with pytest.raises(AnalysisException):
+            empty.get(k)
+
+
+def test_point_lookup_runs_no_spark_job(spark, tmp_path):
+    """A string-key and a bigint-key get() read their bucket without Spark:
+    no job runs under the lookup's job group."""
+    users = DiskStateStore.materialize(
+        spark.createDataFrame([(f"u{i}", i) for i in range(20)],
+                              "user string, n long"),
+        str(tmp_path / "users"), "user")
+    songs = DiskStateStore.materialize(
+        spark.range(20).select(F.col("id").alias("song_id"),
+                               (F.col("id") * 10).alias("plays")),
+        str(tmp_path / "songs"), "song_id")
+    sc = spark.sparkContext
+    sc.setJobGroup("lookup", "point lookups")
+    try:
+        got = [users.get("u3"), users.get("nope"), songs.get(7),
+               songs.get("12")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("lookup") == []
+    assert got == [[Row(user="u3", n=3)], [], [Row(song_id=7, plays=70)],
+                   [Row(song_id=12, plays=120)]]
 
 
 def test_layout_calls_go_through_module_globals(spark, tmp_path, monkeypatch):

@@ -9,7 +9,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
-from kafka_streams_examples_spark.streaming.core import await_rows, run_to_memory
+from kafka_streams_examples_spark.streaming.core import run_to_memory
 from kafka_streams_examples_spark.streaming.stateful import (
     join_wait, ordered_concat, reservations, running_counts,
 )
@@ -180,21 +180,18 @@ def test_join_wait_event_time_matrix(spark, tmp_path):
         .coalesce(1).write.mode("append").parquet(str(t_dir))
     s = spark.readStream.schema(sch_s).parquet(str(s_dir))
     t = spark.readStream.schema(sch_t).parquet(str(t_dir))
-    out = join_wait(s, t, wait_seconds=60)
-    name, q = run_to_memory(out, mode="update", wait=False)
+    name, q = run_to_memory(join_wait(s, t, wait_seconds=60), mode="update")
     try:
-        rows = await_rows(spark, name, lambda rs: len(rs) >= 1)
         # batch 2: k2's table side arrives in event time -> matched flush
         spark.createDataFrame(
             [("k2", 20, ts("2024-01-01 10:00:30"))], sch_t) \
             .coalesce(1).write.mode("append").parquet(str(t_dir))
-        rows = await_rows(spark, name, lambda rs: len(rs) >= 2
-                          and ("k2", 2.5) in {(r["key"], r["stream_value"])
-                                              for r in rs})
+        q.processAllAvailable()
         # batch 3: stream k3 buffers at 10:01:00 (deadline 10:02:00)
         spark.createDataFrame(
             [("k3", 3.5, ts("2024-01-01 10:01:00"))], sch_s) \
             .coalesce(1).write.mode("append").parquet(str(s_dir))
+        q.processAllAvailable()
         # batch 4: stream k4 at 10:03:00 advances the watermark past k3's
         # deadline -> k3 flushes UNMATCHED on event time alone (wall
         # elapsed here is ~seconds, not 60); k4 (deadline 10:04:00) must
@@ -202,8 +199,8 @@ def test_join_wait_event_time_matrix(spark, tmp_path):
         spark.createDataFrame(
             [("k4", 4.5, ts("2024-01-01 10:03:00"))], sch_s) \
             .coalesce(1).write.mode("append").parquet(str(s_dir))
-        rows = await_rows(spark, name, lambda rs: len(rs) >= 3
-                          and "k3" in {r["key"] for r in rs})
+        q.processAllAvailable()
+        rows = spark.table(name).collect()
     finally:
         q.stop()
     got = {(r["key"], r["stream_value"]): r["table_value"] for r in rows}
@@ -229,15 +226,9 @@ def test_join_wait_event_time_late_record_is_dropped(spark, tmp_path):
     s = spark.readStream.schema(sch_s).parquet(str(s_dir))
     t = spark.readStream.schema(
         "key string, value long, ts timestamp").parquet(str(t_dir))
-    out = join_wait(s, t, wait_seconds=60)
-    name, q = run_to_memory(out, mode="update", wait=False)
+    name, q = run_to_memory(join_wait(s, t, wait_seconds=60), mode="update")
     try:
-        import time as _t
-        deadline = _t.time() + 60
-        while sum(p["numInputRows"] for p in q.recentProgress) < 1:
-            if _t.time() > deadline:
-                raise TimeoutError("stream batch never consumed")
-            _t.sleep(0.3)
+        assert sum(p["numInputRows"] for p in q.recentProgress) == 1
         # batch 2: a LATE record (09:00 << watermark 10:10) and a live
         # one advancing the watermark past w's deadline (10:11:00) so a
         # flush cycle provably ran after the late row was offered
@@ -245,8 +236,8 @@ def test_join_wait_event_time_late_record_is_dropped(spark, tmp_path):
             [("late", 9.5, ts("2024-01-01 09:00:00")),
              ("live", 1.5, ts("2024-01-01 10:20:00"))], sch_s) \
             .coalesce(1).write.mode("append").parquet(str(s_dir))
-        rows = await_rows(spark, name, lambda rs:
-                          "w" in {r["key"] for r in rs})
+        q.processAllAvailable()
+        rows = spark.table(name).collect()
     finally:
         q.stop()
     keys = {r["key"] for r in rows}
