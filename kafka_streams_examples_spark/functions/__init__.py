@@ -118,18 +118,3 @@ def l2_norm(a: Column) -> Column:
     """Euclidean norm of an array<numeric> column, in double."""
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x.cast("double") * x.cast("double")),
                               F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine_similarity(a: Column, b: Column,
-                      norm_a: Column | None = None,
-                      norm_b: Column | None = None) -> Column:
-    """Cosine similarity of two array<numeric> columns, computed in double.
-
-    Pass precomputed norms when comparing many pairs: norms are O(n) per
-    VECTOR while pairs are O(n^2), so recomputing norms inside the pair
-    loop triples the flops. The callers in operators/similarity.py compute
-    each side's norm once and join it alongside the vector.
-    """
-    na = l2_norm(a) if norm_a is None else norm_a
-    nb = l2_norm(b) if norm_b is None else norm_b
-    return dot_product(a, b) / (na * nb)

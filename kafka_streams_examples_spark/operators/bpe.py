@@ -82,8 +82,7 @@ def _apply_merge(seq, lhs, rhs) -> F.Column:
     return F.trim(F.replace(F.replace(padded, pat, rep), pat, rep))
 
 
-def _train(docs: DataFrame, merges: int,
-           text_col: str) -> tuple[list[DataFrame], DataFrame]:
+def _train(docs: DataFrame, merges: int) -> tuple[list[DataFrame], DataFrame]:
     """Shared trainer: returns ([best_1..best_K], final vocab).
 
     Each best_i is the 1-row (merge_rank, lhs, rhs, merged, cnt) winner
@@ -94,7 +93,7 @@ def _train(docs: DataFrame, merges: int,
     fewer than K rows) — the python-reference `break` semantics, on both
     engines identically (hypothesis-caught: the earlier inner join
     emptied the vocabulary on single-symbol corpora)."""
-    vocab = (word_counts(docs, text_col)
+    vocab = (word_counts(docs)
              .select("word", _char_seq(F.col("word")).alias("seq"), "cnt")
              .localCheckpoint(eager=False))
     bests: list[DataFrame] = []
@@ -115,11 +114,10 @@ def _train(docs: DataFrame, merges: int,
     return bests, vocab
 
 
-def bpe_train(docs: DataFrame, merges: int = 6,
-              text_col: str = "text") -> DataFrame:
+def bpe_train(docs: DataFrame, merges: int = 6) -> DataFrame:
     """The learned merge table: (merge_rank, lhs, rhs, merged, cnt),
     one row per iteration in training order; typed-empty for merges=0."""
-    bests, _ = _train(docs, merges, text_col)
+    bests, _ = _train(docs, merges)
     if not bests:
         return docs.sparkSession.createDataFrame(
             [], "merge_rank int, lhs string, rhs string, "
@@ -127,10 +125,9 @@ def bpe_train(docs: DataFrame, merges: int = 6,
     return reduce(DataFrame.unionAll, bests)
 
 
-def bpe_vocab(docs: DataFrame, merges: int = 6,
-              text_col: str = "text") -> DataFrame:
+def bpe_vocab(docs: DataFrame, merges: int = 6) -> DataFrame:
     """Final segmentation table after K merges: (word, seq, cnt)."""
-    _, vocab = _train(docs, merges, text_col)
+    _, vocab = _train(docs, merges)
     return vocab
 
 
@@ -142,15 +139,14 @@ def bpe_vocab(docs: DataFrame, merges: int = 6,
 WORD_SEP = "\x01"
 
 
-def bpe_codec(docs: DataFrame, merges: int = 6,
-              text_col: str = "text") -> DataFrame:
+def bpe_codec(docs: DataFrame, merges: int = 6) -> DataFrame:
     """Train on `docs` and return the 1-row broadcastable CODEC table:
     (__merges: array<struct<merge_rank,lhs,rhs>> in training order,
     __ids: map<symbol,int> — dense lexicographic ids over the post-merge
     symbol set). This is the learned state :func:`apply_bpe` attaches to
     any corpus or stream; both columns are built from vocabulary-scale
     tables, never the corpus."""
-    bests, vocab = _train(docs, merges, text_col)
+    bests, vocab = _train(docs, merges)
     return _codec_from_train(bests, vocab)
 
 
@@ -203,9 +199,7 @@ def _codec_from_train(bests: list[DataFrame], vocab: DataFrame) -> DataFrame:
 WORD_BROADCAST_LIMIT = 500_000
 
 
-def encode_with_word_table(docs: DataFrame, per_word: DataFrame,
-                           text_col: str = "text",
-                           id_col: str = "doc_id") -> DataFrame:
+def encode_with_word_table(docs: DataFrame, per_word: DataFrame) -> DataFrame:
     """Corpus-scale application of a memoized per-distinct-word encode
     table ``(word, n, ids)`` via a word-keyed equi-join — the
     scale path when the distinct-word table exceeds
@@ -221,21 +215,21 @@ def encode_with_word_table(docs: DataFrame, per_word: DataFrame,
     through a doc-keyed left join with the same (0, 0, '') fallbacks as
     the broadcast form — output byte-identical by the crossover tests.
     """
-    toks = F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
+    toks = F.filter(tokens(F.coalesce(F.col("text"), F.lit(""))),
                     lambda x: x != "")
-    ex = docs.select(F.col(id_col),
+    ex = docs.select(F.col("doc_id"),
                      F.posexplode(toks).alias("__pos", "word"))
     agg = (ex.join(per_word.hint("shuffle_hash"), "word")
-             .groupBy(id_col)
+             .groupBy("doc_id")
              .agg(F.count("*").cast("long").alias("n_words"),
                   F.sum("n").cast("long").alias("n_tokens"),
                   F.array_join(F.transform(
                       F.array_sort(F.collect_list(
                           F.struct("__pos", "ids"))),
                       lambda s: s["ids"]), ",").alias("token_ids")))
-    return (docs.select(F.col(id_col))
-                .join(agg, id_col, "left")
-                .select(F.col(id_col),
+    return (docs.select(F.col("doc_id"))
+                .join(agg, "doc_id", "left")
+                .select(F.col("doc_id"),
                         F.coalesce("n_words", F.lit(0).cast("long"))
                          .alias("n_words"),
                         F.coalesce("n_tokens", F.lit(0).cast("long"))
@@ -266,9 +260,7 @@ def vocab_word_table(vocab: DataFrame, codec: DataFrame) -> DataFrame:
             ",").alias("ids"))
 
 
-def encode_with_word_map(docs: DataFrame, per_word: DataFrame,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def encode_with_word_map(docs: DataFrame, per_word: DataFrame) -> DataFrame:
     """Corpus-scale application of a memoized (word, n, ids) table via
     a 1-row broadcast map — the :func:`operators.unigram.apply_unigram`
     "broadcast" shape: zero corpus shuffles, one scan applying the map
@@ -288,15 +280,15 @@ def encode_with_word_map(docs: DataFrame, per_word: DataFrame,
     sf0.1 encode pass."""
     wmap = per_word.agg(F.map_from_entries(F.collect_list(
         F.struct("word", F.struct("n", "ids").alias("v")))).alias("__w"))
-    toks = F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
+    toks = F.filter(tokens(F.coalesce(F.col("text"), F.lit(""))),
                     lambda x: x != "")
-    enc = (docs.select(id_col, F.col(text_col))
+    enc = (docs.select("doc_id", F.col("text"))
                .join(F.broadcast(wmap), F.lit(True), "left")
                .withColumn("__toks", toks))
     looked = F.transform(F.col("__toks"),
                          lambda w: F.element_at(F.col("__w"), w))
     return enc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__toks").cast("long").alias("n_words"),
         F.aggregate(looked, F.lit(0).cast("long"),
                     lambda a, v: a + v["n"]).alias("n_tokens"),
@@ -304,15 +296,14 @@ def encode_with_word_map(docs: DataFrame, per_word: DataFrame,
                      ",").alias("token_ids"))
 
 
-def bpe_word_table(docs: DataFrame, codec: DataFrame,
-                   text_col: str = "text") -> DataFrame:
+def bpe_word_table(docs: DataFrame, codec: DataFrame) -> DataFrame:
     """The memoized encode table (word, n, ids) — every DISTINCT corpus
     word segmented ONCE under the trained codec (segmentation is a pure
     function of the word: the merge fold re-derives it exactly as
     :func:`apply_bpe`'s whole-document form, since merges cannot cross
     the word separator). Stays a TABLE for :func:`encode_with_word_table`;
     never folded into a driver-visible structure."""
-    w = (word_counts(docs, text_col).select("word")
+    w = (word_counts(docs).select("word")
              .join(F.broadcast(codec), F.lit(True), "left")
              .withColumn("__enc", F.aggregate(
                  "__merges", _char_seq(F.col("word")),
@@ -328,8 +319,7 @@ def bpe_word_table(docs: DataFrame, codec: DataFrame,
             ",").alias("ids"))
 
 
-def apply_bpe(docs: DataFrame, codec: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id", strategy: str = "broadcast",
+def apply_bpe(docs: DataFrame, codec: DataFrame, strategy: str = "broadcast",
               word_limit: int = WORD_BROADCAST_LIMIT) -> DataFrame:
     """Scan-side encode of `docs` with a trained :func:`bpe_codec` —
     stateless Column expressions after a broadcast nested-loop join of
@@ -353,16 +343,16 @@ def apply_bpe(docs: DataFrame, codec: DataFrame, text_col: str = "text",
     0 (dense ranks start at 1). Without the explicit fallback,
     ``array_join`` would silently drop null ids and under-count."""
     if strategy == "auto":
-        n = word_counts(docs, text_col).count()
+        n = word_counts(docs).count()
         strategy = "broadcast" if n <= word_limit else "join"
     if strategy == "join":
         return encode_with_word_table(
-            docs, bpe_word_table(docs, codec, text_col), text_col, id_col)
+            docs, bpe_word_table(docs, codec))
     if strategy != "broadcast":
         raise ValueError(f"apply_bpe: unknown strategy {strategy!r}")
-    words = F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
+    words = F.filter(tokens(F.coalesce(F.col("text"), F.lit(""))),
                      lambda x: x != "")
-    enc = (docs.select(id_col, F.col(text_col))
+    enc = (docs.select("doc_id", F.col("text"))
                .join(F.broadcast(codec), F.lit(True), "left")
                .withColumn("__words", words)
                .withColumn("__seg", F.array_join(
@@ -374,7 +364,7 @@ def apply_bpe(docs: DataFrame, codec: DataFrame, text_col: str = "text",
                    F.split("__enc", " "),
                    lambda s: (s != WORD_SEP) & (s != ""))))
     return enc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__words").cast("long").alias("n_words"),
         F.size("__toks").cast("long").alias("n_tokens"),
         F.array_join(F.transform(
@@ -383,14 +373,13 @@ def apply_bpe(docs: DataFrame, codec: DataFrame, text_col: str = "text",
                                  .cast("string")), ",").alias("token_ids"))
 
 
-def bpe_encode(docs: DataFrame, merges: int = 6, text_col: str = "text",
-               id_col: str = "doc_id",
+def bpe_encode(docs: DataFrame, merges: int = 6,
                strategy: str = "broadcast") -> DataFrame:
     """Tokenize the corpus with the learned merges: per-document token-id
     sequences — the production step between tokenizer training
     (:func:`bpe_train`) and sequence packing / token counting.
 
-    Returns (id_col, n_words, n_tokens, token_ids) where token_ids is the
+    Returns (doc_id, n_words, n_tokens, token_ids) where token_ids is the
     comma-joined id sequence (the portable hash-verification surface; a
     downstream consumer keeps the int array this stringifies).
 
@@ -411,22 +400,20 @@ def bpe_encode(docs: DataFrame, merges: int = 6, text_col: str = "text",
     (where out-of-vocabulary words exist) remains :func:`apply_bpe`,
     whose merge fold segments OOV words correctly scan-side.
     """
-    bests, vocab = _train(docs, merges, text_col)
+    bests, vocab = _train(docs, merges)
     codec = _codec_from_train(bests, vocab)
     per_word = vocab_word_table(vocab, codec)
     if strategy == "auto":
         n = per_word.count()
         strategy = "broadcast" if n <= WORD_BROADCAST_LIMIT else "join"
     if strategy == "join":
-        return encode_with_word_table(docs, per_word, text_col, id_col)
+        return encode_with_word_table(docs, per_word)
     if strategy != "broadcast":
         raise ValueError(f"bpe_encode: unknown strategy {strategy!r}")
-    return encode_with_word_map(docs, per_word, text_col, id_col)
+    return encode_with_word_map(docs, per_word)
 
 
-def bpe_fertility(docs: DataFrame, merges: int = 6,
-                  text_col: str = "text",
-                  group_col: str = "source") -> DataFrame:
+def bpe_fertility(docs: DataFrame, merges: int = 6) -> DataFrame:
     """Tokenizer fertility (symbols per word) per document group after
     K merges — the standard tokenizer-quality diagnostic (a vocabulary
     that compresses one domain but not another shows up here first).
@@ -438,18 +425,18 @@ def bpe_fertility(docs: DataFrame, merges: int = 6,
     (group, n_words, n_symbols, fertility) with fertility = symbols /
     words rounded at 4 (exact-integer doubles in, portable rounding
     out)."""
-    vocab = bpe_vocab(docs, merges, text_col)
-    per_gw = (docs.select(F.col(group_col).alias("grp"),
-                          F.explode(tokens(text_col)).alias("word"))
+    vocab = bpe_vocab(docs, merges)
+    per_gw = (docs.select(F.col("source").alias("grp"),
+                          F.explode(tokens("text")).alias("word"))
                   .filter(F.col("word") != "")
                   .groupBy("grp", "word").agg(F.count("*").alias("c")))
     n_sym = F.size(F.split("seq", " "))
     joined = per_gw.join(vocab, "word").select(
         "grp", "c", (F.col("c") * n_sym).alias("syms"))
-    return (joined.groupBy(F.col("grp").alias(group_col))
+    return (joined.groupBy(F.col("grp").alias("source"))
                   .agg(F.sum("c").alias("n_words"),
                        F.sum("syms").alias("n_symbols"))
-                  .select(group_col, "n_words", "n_symbols",
+                  .select("source", "n_words", "n_symbols",
                           stable_round(F.col("n_symbols")
                                        / F.col("n_words"), 4)
                           .alias("fertility")))

@@ -11,8 +11,8 @@ Two families:
    never all-pairs, which is the only formulation that survives 100 TB.
 
 Hashing note: operators that are oracle-verified use an md5-derived hash
-(portable to DuckDB); xxhash64 variants would be ~4x faster JVM-side and
-can be swapped in via the `hash_fn` hook once parity is proven.
+(portable to DuckDB); xxhash64 would be ~4x faster JVM-side but has no
+DuckDB twin.
 """
 
 from __future__ import annotations
@@ -41,31 +41,28 @@ def dedup_within_ttl(df: DataFrame, keys: Sequence[str], ttl_seconds: int,
     return df.withColumn("__keep", keep).filter(F.col("__keep")).drop("__keep")
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: group identical texts by md5, keep the smallest id.
 
     Hash-groupBy — map-side partial aggregation makes this one light
     shuffle of (hash, id) pairs regardless of document size; project the
     hash BEFORE the shuffle so full text never moves.
     """
-    return (docs.select(F.md5(F.col(text_col)).alias("text_md5"), F.col(id_col))
+    return (docs.select(F.md5(F.col("text")).alias("text_md5"), F.col("doc_id"))
                 .groupBy("text_md5")
-                .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_dupes")))
+                .agg(F.min("doc_id").alias("keeper"), F.count("*").alias("n_dupes")))
 
 
-def doc_shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct n-word shingles per doc: (doc_id, shingle)."""
     return (docs
-            .select(F.col(id_col), tokens(text_col).alias("toks"))
+            .select(F.col("doc_id"), tokens("text").alias("toks"))
             .filter(F.size("toks") >= n)
-            .select(id_col, F.explode(word_shingles(F.col("toks"), n)).alias("shingle"))
+            .select("doc_id", F.explode(word_shingles(F.col("toks"), n)).alias("shingle"))
             .distinct())
 
 
-def doc_shingle_hashes(docs: DataFrame, n: int = 3, text_col: str = "text",
-                       id_col: str = "doc_id",
+def doc_shingle_hashes(docs: DataFrame, n: int = 3,
                        toks_col: str | None = None) -> DataFrame:
     """Distinct 64-bit shingle hashes per doc: (doc_id, shingle long).
 
@@ -91,12 +88,12 @@ def doc_shingle_hashes(docs: DataFrame, n: int = 3, text_col: str = "text",
     one corpus); use that column instead of re-parsing text. Same token
     array, same downstream values.
     """
-    tk = F.col(toks_col) if toks_col is not None else tokens(text_col)
+    tk = F.col(toks_col) if toks_col is not None else tokens("text")
     return (docs
-            .select(F.col(id_col), tk.alias("toks"))
+            .select(F.col("doc_id"), tk.alias("toks"))
             .filter(F.size("toks") >= n)
-            .select(id_col, F.explode(word_shingles(F.col("toks"), n)).alias("s"))
-            .select(id_col, F.xxhash64("s").alias("shingle"))
+            .select("doc_id", F.explode(word_shingles(F.col("toks"), n)).alias("s"))
+            .select("doc_id", F.xxhash64("s").alias("shingle"))
             .distinct())
 
 
@@ -109,12 +106,13 @@ MINHASH_M = 1_073_741_824          # 2^30: base-hash range
 MINHASH_A = [1000000007, 1000000021, 998244353, 754974721,
              167772161, 469762049, 1073741827, 1999999973]
 MINHASH_B = [17, 101, 1009, 10007, 100003, 1000003, 1234577, 7654321]
+#: the one shape of `minhash_doc_profile`: the corpus index that
+#: streaming/dedup.py's `near_dup_index` builds and the profile that
+#: `stream_near_dup` probes it with must agree on all three
+PROFILE_HASHES, PROFILE_BANDS, PROFILE_N = 8, 4, 3
 
 
-def minhash_shingle_hashes(docs: DataFrame, n: int = 3,
-                           text_col: str = "text",
-                           id_col: str = "doc_id",
-                           distinct: bool = True,
+def minhash_shingle_hashes(docs: DataFrame, distinct: bool = True,
                            toks_col: str | None = None) -> DataFrame:
     """md5-derived shingle hashes h < 2^30 per doc: (doc_id, h).
 
@@ -125,18 +123,17 @@ def minhash_shingle_hashes(docs: DataFrame, n: int = 3,
     extra full shuffle just to dedup. ``toks_col``: use a caller-supplied
     token-array column instead of re-tokenizing (see doc_shingle_hashes).
     """
-    tk = F.col(toks_col) if toks_col is not None else tokens(text_col)
+    tk = F.col(toks_col) if toks_col is not None else tokens("text")
     out = (docs
-           .select(F.col(id_col), tk.alias("toks"))
-           .filter(F.size("toks") >= n)
-           .select(id_col, F.explode(word_shingles(F.col("toks"), n)).alias("s"))
-           .select(id_col, (md5_hash64(F.col("s")) % MINHASH_M).alias("h")))
+           .select(F.col("doc_id"), tk.alias("toks"))
+           .filter(F.size("toks") >= 3)
+           .select("doc_id", F.explode(word_shingles(F.col("toks"), 3)).alias("s"))
+           .select("doc_id", (md5_hash64(F.col("s")) % MINHASH_M).alias("h")))
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 8, n: int = 3,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       shingle_hashes: DataFrame | None = None) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
+                       n: int = 3) -> DataFrame:
     """MinHash signature per document (portable md5+affine permutations).
 
     One md5 per shingle reduced to h < 2^30, then num_hashes affine
@@ -145,51 +142,32 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 8, n: int = 3,
     and the identical arithmetic runs in DuckDB, which is what makes this
     oracle-verifiable.
 
-    Two physical forms, same values (min over the same multiset):
-    standalone (shingle_hashes=None) computes per-row array minima — ZERO
-    exchanges, signatures at scan speed; with a caller-supplied exploded
-    relation it aggregates that instead (min is duplicate-insensitive, so
-    the raw multiset needs no dedup shuffle), which is what
-    minhash_lsh_pairs uses to share one tokenize/hash pipeline between
-    signatures and the Jaccard verify.
+    ZERO shuffles: one array fold per row carries all num_hashes running
+    minima, so signatures are scan-side — each shingle is md5'd once and
+    the doc never leaves its input partition. Values are bit-identical to
+    the explode+groupBy form minhash_lsh_pairs uses to share its
+    tokenize/hash pipeline with the Jaccard verify (min over the same
+    multiset).
     """
     if num_hashes > len(MINHASH_A):
         raise ValueError(f"num_hashes > {len(MINHASH_A)} needs more constants")
-    if shingle_hashes is None:
-        # standalone path: ZERO shuffles. One array fold per row carries
-        # all num_hashes running minima (aggregate + zip_with/least), so
-        # signatures are scan-side — each shingle is md5'd once and the
-        # doc never leaves its input partition. Values are bit-identical
-        # to the explode+groupBy form (min over the same multiset); that
-        # form remains below for callers sharing the exploded relation
-        # (minhash_lsh_pairs reuses it for the Jaccard verify).
-        toks = tokens(text_col)
-        d = (docs.select(F.col(id_col), toks.alias("__toks"))
-                 .filter(F.size("__toks") >= n)
-                 .select(F.col(id_col),
-                         F.transform(word_shingles(F.col("__toks"), n),
-                                     lambda s: md5_hash64(s) % MINHASH_M)
-                          .alias("__hs")))
-        return d.select(id_col, *[
-            F.array_min(F.transform(
-                "__hs",
-                lambda x: (F.lit(MINHASH_A[i]) * x + F.lit(MINHASH_B[i]))
-                          % MINHASH_P)).alias(f"mh{i}")
-            for i in range(num_hashes)])
-    # shared-relation path: MIN over permutations is duplicate-insensitive
-    # -> raw multiset input, no dedup shuffle; the only exchange is the
-    # groupBy itself
-    aggs = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i])) % MINHASH_P)
-         .alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return shingle_hashes.groupBy(id_col).agg(*aggs)
+    toks = tokens("text")
+    d = (docs.select(F.col("doc_id"), toks.alias("__toks"))
+             .filter(F.size("__toks") >= n)
+             .select(F.col("doc_id"),
+                     F.transform(word_shingles(F.col("__toks"), n),
+                                 lambda s: md5_hash64(s) % MINHASH_M)
+                      .alias("__hs")))
+    return d.select("doc_id", *[
+        F.array_min(F.transform(
+            "__hs",
+            lambda x: (F.lit(MINHASH_A[i]) * x + F.lit(MINHASH_B[i]))
+                      % MINHASH_P)).alias(f"mh{i}")
+        for i in range(num_hashes)])
 
 
 def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
-                      n: int = 3, jaccard_threshold: float = 0.5,
-                      text_col: str = "text", id_col: str = "doc_id",
+                      jaccard_threshold: float = 0.5,
                       toks_col: str | None = None) -> DataFrame:
     """Near-duplicate candidate pairs via LSH banding + exact Jaccard verify.
 
@@ -208,9 +186,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
     # raw (non-distinct) shingle hashes: MIN permutations are duplicate-
     # insensitive and the set size dedups inside the aggregate, so the
     # whole base relation is scan-only — no dedup shuffle anywhere
-    sh_h = minhash_shingle_hashes(docs, n=n, text_col=text_col,
-                                  id_col=id_col, distinct=False,
-                                  toks_col=toks_col)
+    sh_h = minhash_shingle_hashes(docs, distinct=False, toks_col=toks_col)
     # signatures keep only the MIN permutations on the critical path
     # (sigs -> banding -> candidates); the per-doc DISTINCT set size —
     # a pricier two-level aggregate — lives on its own branch, consumed
@@ -221,29 +197,29 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
          .alias(f"mh{i}")
         for i in range(num_hashes)
     ]
-    sigs = sh_h.groupBy(id_col).agg(*aggs)
-    sizes = sh_h.groupBy(id_col).agg(F.count_distinct("h").alias("sz"))
+    sigs = sh_h.groupBy("doc_id").agg(*aggs)
+    sizes = sh_h.groupBy("doc_id").agg(F.count_distinct("h").alias("sz"))
     band_cols = [
         F.md5(F.concat_ws("|", *[F.col(f"mh{b * rows + r}") for r in range(rows)])).alias("band_val")
         for b in range(bands)
     ]
     banded = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.array(*band_cols)).alias("band_id", "band_val"),
     )
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
                    & (F.col("a.band_val") == F.col("b.band_val"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+             .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
              .distinct())
     # exact-Jaccard verify driven BY the candidate pairs: attach d1's
     # shingle hashes, keep rows where d2 shares the hash, count. Work is
     # |cand| x avg set size — no inverted-index self-join at all, and AQE
     # broadcasts whichever side is small at runtime.
-    e1 = sh_h.select(F.col(id_col).alias("d1"), "h")
-    e2 = sh_h.select(F.col(id_col).alias("d2"), "h")
+    e1 = sh_h.select(F.col("doc_id").alias("d1"), "h")
+    e2 = sh_h.select(F.col("doc_id").alias("d2"), "h")
     # count_distinct: both sides are raw multisets, so a shared hash seen
     # j×k times collapses back to one intersection element
     inter = (cand.join(e1, "d1")
@@ -251,9 +227,9 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
                  .groupBy("d1", "d2")
                  .agg(F.count_distinct("h").alias("inter")))
     return (inter
-            .join(sizes.select(F.col(id_col).alias("d1"),
+            .join(sizes.select(F.col("doc_id").alias("d1"),
                                F.col("sz").alias("sz1")), "d1")
-            .join(sizes.select(F.col(id_col).alias("d2"),
+            .join(sizes.select(F.col("doc_id").alias("d2"),
                                F.col("sz").alias("sz2")), "d2")
             .select("d1", "d2",
                     stable_round(F.col("inter")
@@ -263,46 +239,41 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
             .filter(F.col("jac") >= jaccard_threshold))
 
 
-def minhash_doc_profile(docs: DataFrame, num_hashes: int = 8,
-                        bands: int = 4, n: int = 3,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def minhash_doc_profile(docs: DataFrame) -> DataFrame:
     """Per-document minhash profile as ONE stateless projection —
-    (id, __hs distinct shingle hashes, __bands band values) — the
+    (doc_id, __hs distinct shingle hashes, __bands band values) — the
     streaming-safe form of the signature pipeline: every column is a
     scan-side array fold (tokens → shingles → md5+mod → per-permutation
     array minima → banded md5), so it runs identically on a batch
     DataFrame and on a readStream with NO shuffle and NO state. Band
     values are bit-identical to `minhash_lsh_pairs`' (same affine
     constants, same '|' concat), which is what lets a streaming consumer
-    join a batch-built index."""
-    if num_hashes > len(MINHASH_A):
-        raise ValueError(f"num_hashes > {len(MINHASH_A)} needs more constants")
-    rows = num_hashes // bands
-    toks = tokens(text_col)
+    join a batch-built index. Its shape is ``PROFILE_HASHES`` permutations
+    in ``PROFILE_BANDS`` bands over ``PROFILE_N``-word shingles, one shape
+    for the index and the probe."""
+    rows = PROFILE_HASHES // PROFILE_BANDS
+    toks = tokens("text")
     d = (docs.select("*", toks.alias("__toks"))
-             .filter(F.size("__toks") >= n)
+             .filter(F.size("__toks") >= PROFILE_N)
              .withColumn("__hs", F.array_distinct(
-                 F.transform(word_shingles(F.col("__toks"), n),
+                 F.transform(word_shingles(F.col("__toks"), PROFILE_N),
                              lambda s: md5_hash64(s) % MINHASH_M))))
     mh = [F.array_min(F.transform(
              "__hs",
              lambda x: (F.lit(MINHASH_A[i]) * x + F.lit(MINHASH_B[i]))
                        % MINHASH_P)).alias(f"__mh{i}")
-          for i in range(num_hashes)]
-    d = d.select(F.col(id_col), "__hs", *mh)
+          for i in range(PROFILE_HASHES)]
+    d = d.select(F.col("doc_id"), "__hs", *mh)
     band_cols = [
         F.md5(F.concat_ws("|", *[F.col(f"__mh{b * rows + r}")
                                  for r in range(rows)]))
-        for b in range(bands)]
-    return d.select(id_col, "__hs", F.array(*band_cols).alias("__bands"))
+        for b in range(PROFILE_BANDS)]
+    return d.select("doc_id", "__hs", F.array(*band_cols).alias("__bands"))
 
 
 def incremental_minhash_pairs(new_docs: DataFrame, corpus: DataFrame,
-                              num_hashes: int = 8, bands: int = 4, n: int = 3,
-                              jaccard_threshold: float = 0.5,
-                              text_col: str = "text",
-                              id_col: str = "doc_id") -> DataFrame:
+                              num_hashes: int = 8, bands: int = 4,
+                              jaccard_threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs of a NEW batch against an EXISTING corpus — the
     day-over-day shape 100 TB dedup actually runs in: the corpus's band
     signatures are a precomputed index (at scale: written once,
@@ -332,15 +303,14 @@ def incremental_minhash_pairs(new_docs: DataFrame, corpus: DataFrame,
     ]
 
     def index(docs_df: DataFrame, out_id: str):
-        sh = minhash_shingle_hashes(docs_df, n=n, text_col=text_col,
-                                    id_col=id_col, distinct=False)
-        sigs = sh.groupBy(id_col).agg(*aggs)
+        sh = minhash_shingle_hashes(docs_df, distinct=False)
+        sigs = sh.groupBy("doc_id").agg(*aggs)
         banded = sigs.select(
-            F.col(id_col).alias(out_id),
+            F.col("doc_id").alias(out_id),
             F.posexplode(F.array(*band_cols)).alias("band_id", "band_val"))
-        sizes = sh.groupBy(id_col).agg(F.count_distinct("h").alias("sz")) \
-                  .select(F.col(id_col).alias(out_id), "sz")
-        hashes = sh.select(F.col(id_col).alias(out_id), "h")
+        sizes = sh.groupBy("doc_id").agg(F.count_distinct("h").alias("sz")) \
+                  .select(F.col("doc_id").alias(out_id), "sz")
+        hashes = sh.select(F.col("doc_id").alias(out_id), "h")
         return banded, sizes, hashes
 
     nb, nsz, nh = index(new_docs, "new_id")
@@ -368,8 +338,6 @@ def incremental_minhash_pairs(new_docs: DataFrame, corpus: DataFrame,
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        candidates: DataFrame | None = None,
                         max_df: int | None = None,
                         toks_col: str | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity for doc pairs sharing >= 1 shingle.
@@ -382,32 +350,19 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
     which changes reported sizes/similarities only for pairs dominated by
     boilerplate. The LSH variant is the primary scale path.
     """
-    sh = doc_shingle_hashes(docs, n=n, text_col=text_col, id_col=id_col,
-                            toks_col=toks_col)
+    sh = doc_shingle_hashes(docs, n=n, toks_col=toks_col)
     if max_df is not None:
         from .skew import drop_hot_keys
         sh = drop_hot_keys(sh, ["shingle"], max_df)
-    if candidates is not None:
-        # the expensive self-join must only see docs that appear in some
-        # candidate pair — this is what makes LSH-verify cheaper than the
-        # exact path (the final pair semi-join alone would still pay the
-        # full inverted-index join). Per-doc set sizes stay exact: whole
-        # docs are kept or dropped, never partial shingle sets.
-        involved = (candidates.select(F.col("d1").alias(id_col))
-                    .union(candidates.select(F.col("d2").alias(id_col)))
-                    .distinct())
-        sh = sh.join(involved, id_col, "left_semi")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-              .groupBy(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")))
+              .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
               .agg(F.count("*").alias("inter")))
-    if candidates is not None:
-        inter = inter.join(candidates, ["d1", "d2"], "left_semi")
     out = (inter
-           .join(sizes.withColumnRenamed(id_col, "d1").withColumnRenamed("sz", "sz1"), "d1")
-           .join(sizes.withColumnRenamed(id_col, "d2").withColumnRenamed("sz", "sz2"), "d2")
+           .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("sz", "sz1"), "d1")
+           .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("sz", "sz2"), "d2")
            .select("d1", "d2",
                    stable_round(F.col("inter")
                                 / (F.col("sz1") + F.col("sz2")
@@ -416,8 +371,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
     return out.filter(F.col("jac") >= threshold)
 
 
-def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text",
-            id_col: str = "doc_id",
+def simhash(docs: DataFrame, bits: int = 16,
             toks_col: str | None = None) -> DataFrame:
     """SimHash fingerprint over token multiset (portable md5-derived bits).
 
@@ -425,25 +379,24 @@ def simhash(docs: DataFrame, bits: int = 16, text_col: str = "text",
     Expressed as `bits` conditional-sum aggregates over the exploded
     tokens — all JVM-side, one shuffle keyed by doc id.
     """
-    tk = F.col(toks_col) if toks_col is not None else tokens(text_col)
-    toks = (docs.select(F.col(id_col), F.explode(tk).alias("word"))
+    tk = F.col(toks_col) if toks_col is not None else tokens("text")
+    toks = (docs.select(F.col("doc_id"), F.explode(tk).alias("word"))
                 .filter(F.col("word") != "")
                 .withColumn("h", md5_hash64(F.col("word"))))
     aggs = [
         F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(1) == 1, 1).otherwise(-1)).alias(f"s{j}")
         for j in range(bits)
     ]
-    per_doc = toks.groupBy(id_col).agg(*aggs)
+    per_doc = toks.groupBy("doc_id").agg(*aggs)
     fp = None
     for j in range(bits):
         term = F.when(F.col(f"s{j}") >= 0, 2 ** j).otherwise(0)
         fp = term if fp is None else fp + term
-    return per_doc.select(F.col(id_col), fp.cast("long").alias("simhash"))
+    return per_doc.select(F.col("doc_id"), fp.cast("long").alias("simhash"))
 
 
 def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
-                          max_hamming: int = 3, text_col: str = "text",
-                          id_col: str = "doc_id",
+                          max_hamming: int = 3,
                           toks_col: str | None = None) -> DataFrame:
     """SimHash near-duplicate pairs via bit-band LSH + exact Hamming verify.
 
@@ -467,23 +420,22 @@ def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
         raise ValueError("pigeonhole guarantee needs max_hamming <= bands - 1")
     width = bits // bands
     mask = (1 << width) - 1
-    sh = simhash(docs, bits=bits, text_col=text_col, id_col=id_col,
-                 toks_col=toks_col)
+    sh = simhash(docs, bits=bits, toks_col=toks_col)
     banded = sh.select(
-        id_col, "simhash",
+        "doc_id", "simhash",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band_id"),
                      F.shiftright(F.col("simhash"), b * width)
                       .bitwiseAND(F.lit(mask)).alias("band_val"))
             for b in range(bands)
         ])).alias("band"),
-    ).select(id_col, "simhash", "band.band_id", "band.band_val")
+    ).select("doc_id", "simhash", "band.band_id", "band.band_val")
     a, b = banded.alias("a"), banded.alias("b")
     cand = (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
                    & (F.col("a.band_val") == F.col("b.band_val"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("d1"),
-                     F.col(f"b.{id_col}").alias("d2"),
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+             .select(F.col("a.doc_id").alias("d1"),
+                     F.col("b.doc_id").alias("d2"),
                      F.col("a.simhash").alias("h1"),
                      F.col("b.simhash").alias("h2"))
              .distinct())
@@ -492,9 +444,7 @@ def simhash_hamming_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
                 .filter(F.col("hamming") <= max_hamming))
 
 
-def winnow_fingerprints(docs: DataFrame, w: int = 4, n: int = 3,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, w: int = 4, n: int = 3) -> DataFrame:
     """Winnowing fingerprints: distinct minima of each sliding window of
     `w` consecutive shingle hashes (MOSS-style local fingerprinting).
 
@@ -506,15 +456,15 @@ def winnow_fingerprints(docs: DataFrame, w: int = 4, n: int = 3,
     rather than dropped; both engines clip identically so the contract
     stays deterministic.
     """
-    sh = (docs.select(F.col(id_col), tokens(text_col).alias("toks"))
+    sh = (docs.select(F.col("doc_id"), tokens("text").alias("toks"))
               .filter(F.size("toks") >= n)
-              .select(id_col,
+              .select("doc_id",
                       F.posexplode(word_shingles(F.col("toks"), n))
                        .alias("pos", "s"))
-              .select(id_col, "pos", md5_hash64(F.col("s")).alias("h")))
-    win = (Window.partitionBy(id_col).orderBy("pos")
+              .select("doc_id", "pos", md5_hash64(F.col("s")).alias("h")))
+    win = (Window.partitionBy("doc_id").orderBy("pos")
                  .rowsBetween(Window.currentRow, w - 1))
-    return (sh.select(F.col(id_col), F.min("h").over(win).alias("fp"))
+    return (sh.select(F.col("doc_id"), F.min("h").over(win).alias("fp"))
               .distinct())
 
 
@@ -610,8 +560,6 @@ def signlsh_bits_from_dots(dots, planes: int):
 
 def embedding_signlsh_pairs(emb: DataFrame, planes: int = 8, dim: int = 64,
                             threshold: float = 0.25,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding",
                             salt: str = "slsh") -> DataFrame:
     """Embedding near-dup pairs via sign-LSH (random hyperplane) bucketing.
 
@@ -633,13 +581,13 @@ def embedding_signlsh_pairs(emb: DataFrame, planes: int = 8, dim: int = 64,
     across engines.
     """
     from ..functions import dot_product, l2_norm
-    v = F.col(vec_col)
-    tagged = emb.select(F.col(id_col), v.alias("__v"),
+    v = F.col("embedding")
+    tagged = emb.select(F.col("vec_id"), v.alias("__v"),
                         signlsh_bucket_bits(v, planes, dim, salt).alias("__bk"),
                         l2_norm(v).alias("__n"))
-    a = tagged.select(F.col(id_col).alias("d1"), F.col("__v").alias("v1"),
+    a = tagged.select(F.col("vec_id").alias("d1"), F.col("__v").alias("v1"),
                       F.col("__bk").alias("bk"), F.col("__n").alias("n1"))
-    b = tagged.select(F.col(id_col).alias("d2"), F.col("__v").alias("v2"),
+    b = tagged.select(F.col("vec_id").alias("d2"), F.col("__v").alias("v2"),
                       F.col("__bk").alias("bk"), F.col("__n").alias("n2"))
     from ..functions import stable_round as _sr
     sim = dot_product(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2"))
@@ -836,8 +784,6 @@ ALL_PAIRS_ROW_LIMIT = 20_000
 
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              bucket_col: str | None = "label",
                              allow_all_pairs: bool = False) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within blocking buckets.
@@ -860,11 +806,11 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                 f"(O(n^2)); input has {n} rows > {ALL_PAIRS_ROW_LIMIT}. "
                 f"Pass a bucket_col (kmeans/LSH assignment) or, for a "
                 f"deliberate small-input exact run, allow_all_pairs=True.")
-    a = emb.select(F.col(id_col).alias("d1"), F.col(vec_col).alias("v1"),
-                   l2_norm(F.col(vec_col)).alias("n1"),
+    a = emb.select(F.col("vec_id").alias("d1"), F.col("embedding").alias("v1"),
+                   l2_norm(F.col("embedding")).alias("n1"),
                    *( [F.col(bucket_col).alias("bk")] if bucket_col else [] ))
-    b = emb.select(F.col(id_col).alias("d2"), F.col(vec_col).alias("v2"),
-                   l2_norm(F.col(vec_col)).alias("n2"),
+    b = emb.select(F.col("vec_id").alias("d2"), F.col("embedding").alias("v2"),
+                   l2_norm(F.col("embedding")).alias("n2"),
                    *( [F.col(bucket_col).alias("bk")] if bucket_col else [] ))
     on = (F.col("d1") < F.col("d2"))
     if bucket_col:
@@ -877,20 +823,19 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                  .filter(F.col("cos_sim") >= threshold))
 
 
-def _dup_spans(docs: DataFrame, l: int, text_col: str,
-               id_col: str) -> DataFrame:
+def _dup_spans(docs: DataFrame, l: int) -> DataFrame:
     """Shared span finder for the exact-substring family: per document,
     the merged maximal token intervals [s, e) duplicated from an
     earlier (lower-id) document — fixed-L gram hash marking + winner
     table + gaps-and-islands merge (see exact_substring_dedup_stats'
     docstring for the suffix-array equivalence argument)."""
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    base = docs.select(F.col(id_col), toks.alias("ws"))
+    toks = F.filter(tokens("text"), lambda x: x != "")
+    base = docs.select(F.col("doc_id"), toks.alias("ws"))
     g = (base.filter(F.size("ws") >= l)
-             .select(id_col,
+             .select("doc_id",
                      F.posexplode(word_shingles(F.col("ws"), l))
                       .alias("pos", "gm"))
-             .select(id_col, "pos", md5_hash64(F.col("gm")).alias("h")))
+             .select("doc_id", "pos", md5_hash64(F.col("gm")).alias("h")))
     # winner-marking as a window-min over the gram hash, not
     # groupBy+self-join: the join form consumed g TWICE (no exchange
     # reuse: the aggregate side partial-aggs before its shuffle), so the
@@ -900,11 +845,11 @@ def _dup_spans(docs: DataFrame, l: int, text_col: str,
     # (id, pos, h) relation — measured 3.0s -> 1.65s warm at sf0.1 for
     # the span pipeline, identical rows. Hash-skew exposure is the same
     # as the join form's (h was the join key).
-    wmin = F.min(id_col).over(Window.partitionBy("h"))
+    wmin = F.min("doc_id").over(Window.partitionBy("h"))
     dup = (g.withColumn("__w", wmin)
-            .filter(F.col(id_col) > F.col("__w"))
-            .select(id_col, "pos", (F.col("pos") + l).alias("end")))
-    wo = Window.partitionBy(id_col).orderBy("pos")
+            .filter(F.col("doc_id") > F.col("__w"))
+            .select("doc_id", "pos", (F.col("pos") + l).alias("end")))
+    wo = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = F.max("end").over(
         wo.rowsBetween(Window.unboundedPreceding, -1))
     new_island = F.when(prev_end.isNull()
@@ -912,13 +857,11 @@ def _dup_spans(docs: DataFrame, l: int, text_col: str,
     isl = F.sum(new_island).over(
         wo.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (dup.withColumn("__i", isl)
-               .groupBy(id_col, "__i")
+               .groupBy("doc_id", "__i")
                .agg(F.min("pos").alias("s"), F.max("end").alias("e")))
 
 
-def max_dup_spans(docs: DataFrame, l: int = 4, min_len: int = 6,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def max_dup_spans(docs: DataFrame, l: int = 4, min_len: int = 6) -> DataFrame:
     """Maximal duplicated-span BOUNDARIES with the Lee et al. (ACL'22)
     minimum-length threshold — the suffix-array production form reports
     maximal duplicated runs of at least N tokens (50 in the paper; the
@@ -935,18 +878,16 @@ def max_dup_spans(docs: DataFrame, l: int = 4, min_len: int = 6,
     window runs only over duplicate positions, and the threshold is a
     post-merge filter (a span shorter than min_len can never extend a
     longer one, so filtering after the merge is exact)."""
-    spans = _dup_spans(docs, l, text_col, id_col)
+    spans = _dup_spans(docs, l)
     return (spans.filter((F.col("e") - F.col("s")) >= min_len)
-                 .select(F.col(id_col),
+                 .select(F.col("doc_id"),
                          F.col("s").cast("long").alias("span_start"),
                          F.col("e").cast("long").alias("span_end"),
                          (F.col("e") - F.col("s")).cast("long")
                           .alias("span_len")))
 
 
-def exact_substring_dedup_apply(docs: DataFrame, l: int = 4,
-                                text_col: str = "text",
-                                id_col: str = "doc_id") -> DataFrame:
+def exact_substring_dedup_apply(docs: DataFrame, l: int = 4) -> DataFrame:
     """The REMOVAL half of Lee et al. ACL'22 exact-substring dedup — the
     step that actually produces the cleaned corpus the stats op only
     describes: every token span duplicated from an earlier document is
@@ -964,31 +905,29 @@ def exact_substring_dedup_apply(docs: DataFrame, l: int = 4,
     into a per-doc array (few per doc by construction) and the cut is a
     scan-side indexed filter — no new shuffle shapes beyond one equi
     join of (doc, spans)."""
-    spans = _dup_spans(docs, l, text_col, id_col)
-    sarr = spans.groupBy(id_col).agg(
+    spans = _dup_spans(docs, l)
+    sarr = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("__spans"))
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    base = docs.select(F.col(id_col), toks.alias("__ws"))
+    toks = F.filter(tokens("text"), lambda x: x != "")
+    base = docs.select(F.col("doc_id"), toks.alias("__ws"))
     indexed = F.transform(F.col("__ws"),
                           lambda x, i: F.struct(i.alias("i"), x.alias("t")))
     in_span = lambda p: F.exists(  # noqa: E731
         F.col("__sp"), lambda sp: (p["i"] >= sp["s"]) & (p["i"] < sp["e"]))
     kept = F.filter(indexed, lambda p: ~in_span(p))
-    return (base.join(sarr, id_col, "left")
+    return (base.join(sarr, "doc_id", "left")
                 .withColumn("__sp", F.coalesce(
                     F.col("__spans"),
                     F.array().cast("array<struct<s:int,e:int>>")))
                 .withColumn("__kept", kept)
-                .select(F.col(id_col),
+                .select(F.col("doc_id"),
                         F.size("__kept").cast("long").alias("n_tokens_kept"),
                         F.array_join(F.transform(
                             "__kept", lambda p: p["t"]), " ")
                          .alias("clean_text")))
 
 
-def exact_substring_dedup_stats(docs: DataFrame, l: int = 4,
-                                text_col: str = "text",
-                                id_col: str = "doc_id") -> DataFrame:
+def exact_substring_dedup_stats(docs: DataFrame, l: int = 4) -> DataFrame:
     """Exact-substring deduplication stats (Lee et al., ACL'22
     "Deduplicating Training Data Makes Language Models Better",
     cross-document variant): find every token span that also appears in
@@ -1014,15 +953,15 @@ def exact_substring_dedup_stats(docs: DataFrame, l: int = 4,
     Output per document: (doc_id, n_tokens, n_dup_spans,
     tokens_removed, n_tokens_kept).
     """
-    spans = _dup_spans(docs, l, text_col, id_col)
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    stats = (spans.select(id_col, (F.col("e") - F.col("s")).alias("__len"))
-                  .groupBy(id_col)
+    spans = _dup_spans(docs, l)
+    toks = F.filter(tokens("text"), lambda x: x != "")
+    stats = (spans.select("doc_id", (F.col("e") - F.col("s")).alias("__len"))
+                  .groupBy("doc_id")
                   .agg(F.count("*").cast("long").alias("n_dup_spans"),
                        F.sum("__len").cast("long").alias("tokens_removed")))
-    nt = docs.select(F.col(id_col), F.size(toks).cast("long").alias("n_tokens"))
-    return (nt.join(stats, id_col, "left")
-              .select(id_col, "n_tokens",
+    nt = docs.select(F.col("doc_id"), F.size(toks).cast("long").alias("n_tokens"))
+    return (nt.join(stats, "doc_id", "left")
+              .select("doc_id", "n_tokens",
                       F.coalesce("n_dup_spans", F.lit(0)).cast("long")
                        .alias("n_dup_spans"),
                       F.coalesce("tokens_removed", F.lit(0)).cast("long")
@@ -1033,8 +972,7 @@ def exact_substring_dedup_stats(docs: DataFrame, l: int = 4,
 
 
 def soft_dedup(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
-               jaccard_threshold: float = 0.2,
-               id_col: str = "doc_id") -> DataFrame:
+               jaccard_threshold: float = 0.2) -> DataFrame:
     """Soft deduplication — keep each duplicate-cluster member with
     probability 1/cluster_size instead of hard-keeping exactly one (the
     SlimPajama/RefinedWeb-style soft-dedup policy): hard dedup deletes
@@ -1055,15 +993,14 @@ def soft_dedup(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
 
     Output: (doc_id, cluster_id, cluster_size, keep_bucket, kept)."""
     pairs = minhash_lsh_pairs(docs, num_hashes=num_hashes, bands=bands,
-                              jaccard_threshold=jaccard_threshold,
-                              id_col=id_col)
-    cc = connected_components(pairs, docs.select(id_col), id_col=id_col)
+                              jaccard_threshold=jaccard_threshold)
+    cc = connected_components(pairs, docs.select("doc_id"))
     sizes = cc.groupBy("cluster_id").agg(
         F.count("*").cast("long").alias("cluster_size"))
     j = cc.join(F.broadcast(sizes), "cluster_id")
     bucket = md5_hash64(
-        F.concat(F.lit("soft|"), F.col(id_col).cast("string"))) % 1_000_000
-    return (j.select(F.col(id_col),
+        F.concat(F.lit("soft|"), F.col("doc_id").cast("string"))) % 1_000_000
+    return (j.select(F.col("doc_id"),
                      F.col("cluster_id").cast("long").alias("cluster_id"),
                      "cluster_size")
              .withColumn("keep_bucket", bucket)

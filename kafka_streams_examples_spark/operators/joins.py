@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 
 
 def interval_join(left: DataFrame, right: DataFrame, key: str,
-                  lower_seconds: float, upper_seconds: float,
-                  how: str = "inner") -> DataFrame:
+                  lower_seconds: float, upper_seconds: float) -> DataFrame:
     """Stream-stream windowed join: match rows within a time interval.
 
     Reference: JoinWindows.ofTimeDifference (J3/J4,
@@ -31,7 +30,7 @@ def interval_join(left: DataFrame, right: DataFrame, key: str,
     cond = ((left[key] == right[key])
             & (right["r_ts"] >= left["l_ts"] + F.expr(f"INTERVAL {lower_seconds} SECONDS"))
             & (right["r_ts"] <= left["l_ts"] + F.expr(f"INTERVAL {upper_seconds} SECONDS")))
-    return left.join(right, cond, how)
+    return left.join(right, cond)
 
 
 def asof_join(stream: DataFrame, table: DataFrame, key: str,

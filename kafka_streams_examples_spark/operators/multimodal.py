@@ -55,9 +55,8 @@ def _default_decode(payload: bytes, meta: dict) -> list[float]:
         "decode_fn (tests use a deterministic fake)")
 
 
-def bound_partition_bytes(media: DataFrame, target_bytes: int = 256 << 20,
-                          payload_col: str = "payload",
-                          total_bytes: int | None = None) -> DataFrame:
+def bound_partition_bytes(media: DataFrame,
+                          target_bytes: int = 256 << 20) -> DataFrame:
     """Repartition so each task's AVERAGE payload bytes ~ target_bytes.
 
     This bounds the expected per-task input, not a hard worst case: a
@@ -68,15 +67,12 @@ def bound_partition_bytes(media: DataFrame, target_bytes: int = 256 << 20,
     below the executor budget) and cap maxRecordsPerBatch so decoded
     batches stay small.
 
-    total_bytes: pass the known payload volume (e.g. from source-file
-    metadata — at 100 TB the right source of truth) to skip the measuring
-    pass; when omitted, one scalar aggregate over payload lengths runs
-    first (a full scan of the length column, acceptable at test scale).
+    The payload volume is measured first by one scalar aggregate over
+    payload lengths (a full scan of the length column).
     """
     from pyspark.sql import functions as F
-    if total_bytes is None:
-        total_bytes = media.agg(
-            F.sum(F.coalesce(F.length(payload_col), F.lit(0)))).first()[0] or 0
+    total_bytes = media.agg(
+        F.sum(F.coalesce(F.length("payload"), F.lit(0)))).first()[0] or 0
     parts = max(1, int(total_bytes / target_bytes) + 1)
     return media.repartition(parts)
 
@@ -132,17 +128,15 @@ def frame_sample(media: DataFrame, every_n: int = 10,
     return media.mapInPandas(run, schema=out_schema)
 
 
-def media_from_documents(docs: DataFrame,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def media_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from the documents fixture: the
     utf-8 bytes of the text stand in for an opaque payload, with a typed
     metadata struct alongside — the real pipeline shape (binary + metadata)
     without needing codec libraries or binary fixtures."""
-    modality = F.when(F.col(id_col) % 2 == 0, "image").otherwise("audio")
+    modality = F.when(F.col("doc_id") % 2 == 0, "image").otherwise("audio")
     return docs.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             modality.alias("modality"),
             F.lit("application/octet-stream").alias("mime"),

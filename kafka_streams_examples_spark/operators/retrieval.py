@@ -60,14 +60,13 @@ K1 = 1.2
 B = 0.75
 
 
-def _doc_tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return (docs.select(F.col(id_col).alias("doc_id"),
-                        F.explode(tokens(text_col)).alias("word"))
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    return (docs.select(F.col("doc_id").alias("doc_id"),
+                        F.explode(tokens("text")).alias("word"))
                 .filter(F.col("word") != ""))
 
 
-def postings(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def postings(docs: DataFrame) -> DataFrame:
     """The scored inverted index: (word, doc_id, tf, w6) where ``w6``
     is the document's integer micro-nat BM25 impact for the term.
 
@@ -76,7 +75,7 @@ def postings(docs: DataFrame, text_col: str = "text",
     write-once table a production deployment persists bucketed by
     ``word`` (the incremental_dedup band-index precedent).
     """
-    tk = _doc_tokens(docs, text_col, id_col)
+    tk = _doc_tokens(docs)
     tf = tk.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
@@ -110,13 +109,11 @@ def postings(docs: DataFrame, text_col: str = "text",
                   f"+ 0.5D) AS BIGINT) AS w6"))
 
 
-def query_terms(docs: DataFrame, n_queries: int, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def query_terms(docs: DataFrame, n_queries: int) -> DataFrame:
     """Distinct (q_id, word) for the bounded query-document set (the
     knn_cosine convention: the ``n_queries`` smallest ids). The id
     filter pushes to the parquet scan."""
-    return (_doc_tokens(docs.filter(F.col(id_col) < n_queries),
-                        text_col, id_col)
+    return (_doc_tokens(docs.filter(F.col("doc_id") < n_queries))
             .distinct()
             .withColumnRenamed("doc_id", "q_id"))
 
@@ -134,13 +131,12 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
                           F.col("rnk").cast("long").alias("rnk")))
 
 
-def bm25_topk(docs: DataFrame, k: int = 5, n_queries: int = 20,
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bm25_topk(docs: DataFrame, k: int = 5, n_queries: int = 20) -> DataFrame:
     """Exact BM25 top-k: (q_id, c_id, score, rnk). Query documents are
     excluded from their own result lists (the ANN exclude_self
     contract)."""
-    post = postings(docs, text_col, id_col)
-    qt = query_terms(docs, n_queries, text_col, id_col)
+    post = postings(docs)
+    qt = query_terms(docs, n_queries)
     scored = (qt.join(post, "word")
                 .filter(F.col("doc_id") != F.col("q_id"))
                 .groupBy("q_id", F.col("doc_id").alias("c_id"))
@@ -198,17 +194,16 @@ def adaptive_r(post: DataFrame, r_floor: int = 32,
 
 
 def bm25_pruned(docs: DataFrame, k: int = 5, n_queries: int = 20,
-                r_floor: int = 32, keep_denom: int = 5,
-                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+                r_floor: int = 32, keep_denom: int = 5) -> DataFrame:
     """Pruned-index BM25: candidates come ONLY from the top-``r_eff``
     impact-ordered postings of each query term (:func:`adaptive_r`; at
     most r_eff * |terms| documents per query), then those candidates
     are exactly reranked against the full postings table via
     (doc, word)-keyed equi-joins — the IVF probe-then-rerank shape.
     Same output schema as :func:`bm25_topk`."""
-    post = postings(docs, text_col, id_col)
+    post = postings(docs)
     pruned = pruned_postings(post, r_floor, keep_denom)
-    qt = query_terms(docs, n_queries, text_col, id_col)
+    qt = query_terms(docs, n_queries)
     cands = (qt.join(pruned, "word")
                .filter(F.col("doc_id") != F.col("q_id"))
                .select("q_id", F.col("doc_id").alias("c_id"))
@@ -223,16 +218,14 @@ def bm25_pruned(docs: DataFrame, k: int = 5, n_queries: int = 20,
 
 
 def bm25_recall(docs: DataFrame, k: int = 5, n_queries: int = 20,
-                r_floor: int = 32, keep_denom: int = 5,
-                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+                r_floor: int = 32) -> DataFrame:
     """Recall@k of the pruned tier against the exact baseline, per
     query plus a built-in 'exact'=1.0 control row family — the
     knn_recall grading pattern, so the pruned index's quality can never
     drift unmeasured."""
-    exact = bm25_topk(docs, k, n_queries, text_col, id_col) \
+    exact = bm25_topk(docs, k, n_queries) \
         .select("q_id", "c_id")
-    pruned = bm25_pruned(docs, k, n_queries, r_floor, keep_denom,
-                         text_col, id_col) \
+    pruned = bm25_pruned(docs, k, n_queries, r_floor) \
         .select("q_id", F.col("c_id").alias("p_id"),
                 F.lit(1).alias("__hit"))
     hits = (exact.join(pruned,
@@ -262,8 +255,7 @@ def _wb(word) -> "F.Column":
 
 
 def build_bm25_index(docs: DataFrame, path: str, r_floor: int = 32,
-                     keep_denom: int = 5, text_col: str = "text",
-                     id_col: str = "doc_id") -> None:
+                     keep_denom: int = 5) -> None:
     """Score and PERSIST the write-once BM25 index:
     ``{path}/postings`` (word, doc_id, tf, w6 — the full scored
     inverted index, parquet-partitioned by the word-hash bucket ``wb``)
@@ -272,14 +264,13 @@ def build_bm25_index(docs: DataFrame, path: str, r_floor: int = 32,
     :func:`similarity.build_ivf_index`: one full-corpus pass at build
     time, then every later query batch is served from these two tables
     without touching a byte of corpus text."""
-    post = postings(docs, text_col, id_col).withColumn("wb", _wb(F.col("word")))
+    post = postings(docs).withColumn("wb", _wb(F.col("word")))
     post.write.mode("overwrite").partitionBy("wb").parquet(f"{path}/postings")
     pruned = pruned_postings(post, r_floor, keep_denom)
     pruned.write.mode("overwrite").partitionBy("wb").parquet(f"{path}/pruned")
 
 
 def query_bm25_index(spark, path: str, queries: DataFrame, k: int = 5,
-                     text_col: str = "text", id_col: str = "doc_id",
                      exclude_self: bool = True) -> DataFrame:
     """Serve a NEW query batch from a :func:`build_bm25_index` index:
     candidates from the pruned serving index, exact rerank against the
@@ -291,7 +282,7 @@ def query_bm25_index(spark, path: str, queries: DataFrame, k: int = 5,
     corpus text bytes (inputFiles-tested)."""
     post = spark.read.parquet(f"{path}/postings")
     pruned = spark.read.parquet(f"{path}/pruned")
-    qt = (_doc_tokens(queries, text_col, id_col)
+    qt = (_doc_tokens(queries)
           .distinct()
           .withColumnRenamed("doc_id", "q_id")
           .withColumn("wb", _wb(F.col("word"))))
@@ -310,25 +301,24 @@ def query_bm25_index(spark, path: str, queries: DataFrame, k: int = 5,
 
 # --- hybrid dense + sparse fusion -----------------------------------------
 
-def hybrid_rrf(dense: DataFrame, sparse: DataFrame, k: int = 5,
-               kconst: int = 60) -> DataFrame:
+def hybrid_rrf(dense: DataFrame, sparse: DataFrame, k: int = 5) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. SIGIR'09, the standard
     hybrid-retrieval combiner): fused score = sum over tiers of
-    1 / (kconst + rank), taking each tier's ranked list as-is — no
-    score calibration across heterogeneous scales (cosine vs BM25
-    micro-nats) needed, which is exactly why RRF is the production
-    default for dense+sparse curation.
+    1 / (60 + rank), 60 being the paper's constant, taking each tier's
+    ranked list as-is — no score calibration across heterogeneous scales
+    (cosine vs BM25 micro-nats) needed, which is exactly why RRF is the
+    production default for dense+sparse curation.
 
     Inputs are the tiers' ranked outputs (q_id, c_id, ..., rnk). Each
     contribution quantizes to integer micro-units BEFORE the sum
-    (floor(1e6/(kconst + rnk) + 0.5)), so fused scores are exact
+    (floor(1e6/(60 + rnk) + 0.5)), so fused scores are exact
     integer sums and ties break on (fused desc, c_id) — engine-exact.
     A candidate missing from one tier contributes 0 from it. One
     (q_id, c_id)-keyed full-outer join of two k-row-per-query lists —
     cost is query-batch-bounded, corpus-size independent."""
     def contrib(col: str):
         return F.floor(F.lit(1e6)
-                       / (F.lit(float(kconst)) + F.col(col).cast("double"))
+                       / (F.lit(60.0) + F.col(col).cast("double"))
                        + F.lit(0.5)).cast("long")
 
     d = dense.select("q_id", "c_id", contrib("rnk").alias("__d6"))
@@ -349,8 +339,7 @@ def hybrid_rrf(dense: DataFrame, sparse: DataFrame, k: int = 5,
 # --- ingest-time retrieval gate -------------------------------------------
 
 def bm25_gate_index(docs: DataFrame, r_floor: int = 32,
-                    keep_denom: int | None = 5, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    keep_denom: int | None = 5) -> DataFrame:
     """The stream-probe form of the pruned index: (word, c_id, c_map)
     where ``c_map`` is the candidate document's word->impact map over
     its PRUNED postings. Carrying the map on every posting row trades
@@ -363,8 +352,7 @@ def bm25_gate_index(docs: DataFrame, r_floor: int = 32,
     day-over-day batch), pass ``keep_denom=None`` so the per-term
     candidate bound is the fixed ``r_floor`` — corpus-size-independent
     gate work (see :func:`pruned_postings`)."""
-    pruned = bm25_gate_postings(docs, r_floor, keep_denom,
-                                text_col, id_col) \
+    pruned = bm25_gate_postings(docs, r_floor, keep_denom) \
         .withColumnRenamed("c_id", "doc_id")
     perdoc = (pruned.groupBy("doc_id")
                     .agg(F.map_from_entries(F.collect_list(
@@ -374,8 +362,7 @@ def bm25_gate_index(docs: DataFrame, r_floor: int = 32,
 
 
 def bm25_gate_postings(docs: DataFrame, r_floor: int = 32,
-                       keep_denom: int | None = 5, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+                       keep_denom: int | None = 5) -> DataFrame:
     """The BATCH-probe form of the pruned gate index: the narrow
     (word, c_id, w6) pruned postings themselves, no carried map. r15:
     :func:`bm25_gate_batch` only ever reads a joined row's OWN impact
@@ -387,13 +374,13 @@ def bm25_gate_postings(docs: DataFrame, r_floor: int = 32,
     :func:`bm25_gate_index`'s map form (its statelessness depends on
     the carried map); both index shapes score identically through
     :func:`bm25_gate_batch`."""
-    post = postings(docs, text_col, id_col)
+    post = postings(docs)
     return (pruned_postings(post, r_floor, keep_denom)
             .select("word", F.col("doc_id").alias("c_id"), "w6"))
 
 
 def bm25_gate(new_docs: DataFrame, index: DataFrame, tau: float = 3.0,
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+              text_col: str = "text") -> DataFrame:
     """Retrieval gate AT INGEST: each arriving document probes a
     batch-built :func:`bm25_gate_index` and emits (new_id, c_id,
     score) for every indexed document whose pruned-index BM25 score
@@ -421,7 +408,7 @@ def bm25_gate(new_docs: DataFrame, index: DataFrame, tau: float = 3.0,
     terms = F.array_sort(F.array_distinct(
         F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
                  lambda x: x != "")))
-    new = (new_docs.select(F.col(id_col).alias("new_id"),
+    new = (new_docs.select(F.col("doc_id").alias("new_id"),
                            terms.alias("__terms"))
                    .withColumn("word", F.explode("__terms")))
     joined = (new.join(index, "word")
@@ -442,9 +429,8 @@ def bm25_gate(new_docs: DataFrame, index: DataFrame, tau: float = 3.0,
                            / F.lit(1e4)).alias("score")))
 
 
-def bm25_gate_batch(new_docs: DataFrame, index: DataFrame,
-                    tau: float = 3.0, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def bm25_gate_batch(new_docs: DataFrame, index: DataFrame, tau: float = 3.0,
+                    text_col: str = "text") -> DataFrame:
     """:func:`bm25_gate` for BATCH callers — row-identical output
     (pinned by test_bm25_gate_batch_equals_stream), different physical
     plan. The stream form is shaped by append-mode statelessness: it
@@ -474,7 +460,7 @@ def bm25_gate_batch(new_docs: DataFrame, index: DataFrame,
     terms = F.array_distinct(
         F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
                  lambda x: x != ""))
-    newx = (new_docs.select(F.col(id_col).alias("new_id"),
+    newx = (new_docs.select(F.col("doc_id").alias("new_id"),
                             F.explode(terms).alias("word")))
     narrow = (index.select("word", "c_id", "w6")
               if "w6" in index.columns else

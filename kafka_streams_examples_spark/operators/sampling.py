@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from ..functions import md5_hash64, stable_round, tokens
 
 _SCALE = 10_000  # rate resolution 0.01%
+#: the shuffles range-bucket their 60-bit hash by its top BUCKET_BITS bits
+BUCKET_BITS = 10
 
 
 def _keep(key: Column, rate_scaled: Column, salt: str) -> Column:
@@ -60,14 +62,13 @@ def stratified_sample(df: DataFrame, strata_col: str,
 
 def weighted_upsample(df: DataFrame, strata_col: str,
                       weights: Mapping[str, float], default_weight: float,
-                      key_col: str, salt: str = "",
-                      epoch_col: str = "epoch") -> DataFrame:
+                      key_col: str, salt: str = "") -> DataFrame:
     """Deterministic fractional epoch mixing ("2.5 epochs of wiki, 0.3 of
     crawl"): each row is repeated floor(w) times, plus one more iff its
     hash falls under frac(w) — the upsampling dual of stratified_sample,
     with the same scan-side no-coordination properties.
 
-    Output carries `epoch_col` (0-based copy index) so downstream
+    Output carries `epoch` (0-based copy index) so downstream
     shuffles (global_shuffle on (key, epoch)) spread the copies apart
     rather than batching them adjacently. Expected row count per stratum
     is exactly weight * n; re-runs are byte-identical; changing one
@@ -85,31 +86,30 @@ def weighted_upsample(df: DataFrame, strata_col: str,
     n_copies = (whole + extra).alias("__n")
     return (df.withColumn("__n", n_copies)
               .filter(F.col("__n") > 0)
-              .withColumn(epoch_col,
+              .withColumn("epoch",
                           F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
               .drop("__n"))
 
 
-def global_shuffle(df: DataFrame, key_col: str, seed: str = "s0",
-                   bucket_bits: int = 10) -> DataFrame:
+def global_shuffle(df: DataFrame, key_col: str) -> DataFrame:
     """Deterministic dense global shuffle order for training-data batching.
 
-    Every row gets a position 1..N in the total order (hash(seed|key),
+    Every row gets a position 1..N in the total order (hash("s0"|key),
     key) — a reproducible corpus shuffle that any worker can recompute.
 
     Scale path: a single global row_number() would sort on ONE partition.
     Instead the 60-bit portable hash is range-bucketed by its top
-    `bucket_bits` bits (contiguous hash ranges -> bucket-major order IS
+    ``BUCKET_BITS`` bits (contiguous hash ranges -> bucket-major order IS
     global order), rows get a row_number within their bucket, and each
     bucket's global offset comes from a tiny cumulative count table
-    (2^bucket_bits rows) broadcast back — the range-partitioned sort
+    (2^BUCKET_BITS rows) broadcast back — the range-partitioned sort
     pattern, ~uniform buckets by hash construction, no driver collect.
     """
     from pyspark.sql import Window
 
-    h = md5_hash64(F.concat_ws("|", F.lit(seed), F.col(key_col).cast("string")))
+    h = md5_hash64(F.concat_ws("|", F.lit("s0"), F.col(key_col).cast("string")))
     d = df.select(F.col(key_col), h.alias("__h"),
-                  F.shiftright(h, 60 - bucket_bits).alias("__b"))
+                  F.shiftright(h, 60 - BUCKET_BITS).alias("__b"))
     counts = d.groupBy("__b").agg(F.count("*").alias("__c"))
     offsets = counts.select(
         "__b",
@@ -122,7 +122,7 @@ def global_shuffle(df: DataFrame, key_col: str, seed: str = "s0",
 
 
 def staged_order(df: DataFrame, stage_col: str, key_col: str,
-                 seed: str = "cur", bucket_bits: int = 10) -> DataFrame:
+                 seed: str = "cur") -> DataFrame:
     """Dense global training order grouped by an integer STAGE, shuffled
     within each stage: pos = rank in (stage asc, hash(seed|key), key).
     The curriculum-learning dataloader order — stages in sequence, rows
@@ -132,7 +132,7 @@ def staged_order(df: DataFrame, stage_col: str, key_col: str,
     Scale path mirrors global_shuffle's range-bucketed two-phase rank:
     the bucket id prepends the stage to the hash's top bits, so
     bucket-major order IS (stage, hash) order; per-bucket row_number
-    plus a broadcast cumulative-offset table (n_stages * 2^bucket_bits
+    plus a broadcast cumulative-offset table (n_stages * 2^BUCKET_BITS
     rows) yields the dense global position with no single-partition
     sort. Requires stage values to be small non-negative integers (a
     curriculum has a handful)."""
@@ -140,8 +140,8 @@ def staged_order(df: DataFrame, stage_col: str, key_col: str,
 
     h = md5_hash64(F.concat_ws("|", F.lit(seed),
                                F.col(key_col).cast("string")))
-    b = (F.col(stage_col).cast("long") * (1 << bucket_bits)
-         + F.shiftright(h, 60 - bucket_bits))
+    b = (F.col(stage_col).cast("long") * (1 << BUCKET_BITS)
+         + F.shiftright(h, 60 - BUCKET_BITS))
     d = df.select(F.col(key_col), F.col(stage_col), h.alias("__h"),
                   b.alias("__b"))
     counts = d.groupBy("__b").agg(F.count("*").alias("__c"))
@@ -155,9 +155,7 @@ def staged_order(df: DataFrame, stage_col: str, key_col: str,
                      (F.col("__off") + F.col("__rn")).cast("long").alias("pos")))
 
 
-def source_mixture(docs: DataFrame, alpha: float = 0.5,
-                   group_col: str = "source",
-                   text_col: str = "text") -> DataFrame:
+def source_mixture(docs: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Temperature-weighted source-mixing table — the sampling weights a
     multi-source training run draws from (the alpha-smoothed mixture of
     mC4/XLM-R: w_s proportional to tokens_s^alpha, alpha < 1 upweights
@@ -180,37 +178,34 @@ def source_mixture(docs: DataFrame, alpha: float = 0.5,
         raise ValueError(
             "portable contract is fixed at alpha=1/2 (sqrt); other "
             "exponents would need pow(), which is not correctly rounded")
-    tok_cnt = F.size(F.filter(tokens(text_col), lambda x: x != ""))
-    per_src = (docs.select(F.col(group_col), tok_cnt.alias("__t"))
-                   .groupBy(group_col)
+    tok_cnt = F.size(F.filter(tokens("text"), lambda x: x != ""))
+    per_src = (docs.select(F.col("source"), tok_cnt.alias("__t"))
+                   .groupBy("source")
                    .agg(F.count("*").alias("n_docs"),
                         F.sum("__t").cast("long").alias("n_tokens")))
     isq = F.floor(F.sqrt(F.col("n_tokens").cast("double")) * 1e6
                   + F.lit(0.5)).cast("long")
     denom = F.sum(isq).over(Window.partitionBy())
     weight = stable_round(isq.cast("double") / denom.cast("double"), 6)
-    return per_src.select(group_col, "n_docs", "n_tokens",
+    return per_src.select("source", "n_docs", "n_tokens",
                           weight.alias("weight"))
 
 
-def epoch_order_key(key_col: str = "doc_id", epoch_col: str = "epoch",
-                    seed: str = "ord") -> Column:
+def epoch_order_key() -> Column:
     """Deterministic per-(epoch, key) 60-bit shuffle key for multi-epoch
     training order — the `global_shuffle` hash-order pattern
     parameterized by the epoch index, so each epoch gets an independent
     order and copies of the same document land far apart, while any
     worker can recompute any position with no state. Compose with
-    `weighted_upsample` (which emits `epoch_col`) and sort by this key.
+    `weighted_upsample` (which emits `epoch`) and sort by this key.
     """
     return md5_hash64(F.concat(
-        F.lit(seed + "|"), F.col(epoch_col).cast("string"),
-        F.lit("|"), F.col(key_col).cast("string")))
+        F.lit("ord|"), F.col("epoch").cast("string"),
+        F.lit("|"), F.col("doc_id").cast("string")))
 
 
 def cluster_quota_sample(emb: DataFrame, k: int = 8, iters: int = 2,
-                         quota: int = 20, salt: str = "csmp",
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         quota: int = 20) -> DataFrame:
     """Cluster-balanced subsampling: cap each LEARNED stratum at a quota.
 
     The stratified/reservoir samplers above stratify on a given column;
@@ -218,7 +213,7 @@ def cluster_quota_sample(emb: DataFrame, k: int = 8, iters: int = 2,
     instead, so head topics cannot dominate the sample. k-means
     (similarity.kmeans_train — broadcast centroids, corpus never shuffled
     during training) assigns each embedding a cluster, then each cluster
-    keeps its `quota` smallest members under the portable md5(id||salt)
+    keeps its `quota` smallest members under the portable md5(id||'csmp')
     permutation (a uniform within-cluster sample, stable across runs and
     engines), with the cluster's total size attached so downstream
     re-weighting can correct the selection bias.
@@ -233,8 +228,7 @@ def cluster_quota_sample(emb: DataFrame, k: int = 8, iters: int = 2,
 
     from .similarity import kmeans_train
 
-    lab = kmeans_train(emb, k=k, iters=iters, id_col=id_col,
-                       vec_col=vec_col)
+    lab = kmeans_train(emb, k=k, iters=iters)
     # cluster sizes as a groupBy aggregate joined back AFTER the rank
     # filter (the oracle's sz CTE), NOT a count-over-partition window:
     # an extra window below the rank would sit between row_number and
@@ -244,7 +238,7 @@ def cluster_quota_sample(emb: DataFrame, k: int = 8, iters: int = 2,
     # size table broadcasts.
     sizes = lab.groupBy("cluster").agg(
         F.count("*").cast("long").alias("n_in_cluster"))
-    hk = md5_hash64(F.concat(F.col("vec_id").cast("string"), F.lit(salt)))
+    hk = md5_hash64(F.concat(F.col("vec_id").cast("string"), F.lit("csmp")))
     w = Window.partitionBy("cluster").orderBy(hk.asc(), F.col("vec_id").asc())
     return (lab.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") <= quota)

@@ -14,8 +14,8 @@ Beyond-reference operators for training-data pipelines. Two tiers:
   scanned. At 100 TB the corpus would be written partitioned by the
   centroid id so partition pruning skips >90% of the data on disk.
 
-Norms are precomputed once per vector (O(n)) rather than per pair (O(n^2))
-— see functions.cosine_similarity.
+Norms are computed once per vector (O(n)) and joined alongside it, not
+recomputed per pair (O(n^2)).
 """
 
 from __future__ import annotations
@@ -39,32 +39,29 @@ def _rank_topk(scored: DataFrame, k: int,
                           F.col("rnk").cast("long").alias("rnk")))
 
 
-def brute_force_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    exclude_self: bool = True) -> DataFrame:
-    """Exact cosine top-k: (q_id, c_id, cos_sim, rnk)."""
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-                       l2_norm(F.col(vec_col)).alias("q_norm"))
-    c = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"),
-                      l2_norm(F.col(vec_col)).alias("c_norm"))
-    pairs = c.join(F.broadcast(q), F.lit(True))
-    if exclude_self:
-        pairs = pairs.filter(F.col("q_id") != F.col("c_id"))
+def brute_force_knn(queries: DataFrame, corpus: DataFrame,
+                    k: int = 5) -> DataFrame:
+    """Exact cosine top-k: (q_id, c_id, cos_sim, rnk), a query never its
+    own neighbor."""
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"),
+                       l2_norm(F.col("embedding")).alias("q_norm"))
+    c = corpus.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"),
+                      l2_norm(F.col("embedding")).alias("c_norm"))
+    pairs = (c.join(F.broadcast(q), F.lit(True))
+              .filter(F.col("q_id") != F.col("c_id")))
     sim = dot_product(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
     return _rank_topk(pairs.select("q_id", "c_id", stable_round(sim, 6).alias("__sim")), k)
 
 
-def centroids_from_labels(corpus: DataFrame, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          label_col: str = "label") -> DataFrame:
+def centroids_from_labels(corpus: DataFrame) -> DataFrame:
     """Mean vector per label — a deterministic coarse quantizer.
 
     Element-wise sums via posexplode + pivot-free regroup: one shuffle
     keyed by (label, dim), then array reassembly — scales to any dim
     without a per-dimension aggregate expression explosion.
     """
-    parts = corpus.select(F.col(label_col).alias("centroid_id"),
-                          F.posexplode(F.col(vec_col)).alias("dim", "x"))
+    parts = corpus.select(F.col("label").alias("centroid_id"),
+                          F.posexplode(F.col("embedding")).alias("dim", "x"))
     sums = (parts.groupBy("centroid_id", "dim")
                  .agg(F.sum(F.col("x").cast("double")).alias("s"),
                       F.count("*").alias("n")))
@@ -75,15 +72,14 @@ def centroids_from_labels(corpus: DataFrame, id_col: str = "vec_id",
                         F.transform(F.col("__dm"), lambda s: s["m"]).alias("centroid")))
 
 
-def ivf_knn(queries: DataFrame, corpus: DataFrame, k: int = 5, nprobe: int = 2,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            label_col: str = "label", exclude_self: bool = True) -> DataFrame:
+def ivf_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
+            nprobe: int = 2) -> DataFrame:
     """Two-stage ANN: route each query to nprobe nearest centroids, scan only
     those buckets, exact-rerank within the candidates."""
-    cents = centroids_from_labels(corpus, id_col, vec_col, label_col)
+    cents = centroids_from_labels(corpus)
     cents = cents.withColumn("cent_norm", l2_norm(F.col("centroid")))
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-                       l2_norm(F.col(vec_col)).alias("q_norm"))
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"),
+                       l2_norm(F.col("embedding")).alias("q_norm"))
     qc = q.join(F.broadcast(cents), F.lit(True))
     csim = (dot_product(F.col("q_vec"), F.col("centroid"))
             / (F.col("q_norm") * F.col("cent_norm")))
@@ -93,19 +89,16 @@ def ivf_knn(queries: DataFrame, corpus: DataFrame, k: int = 5, nprobe: int = 2,
                 .withColumn("__r", F.row_number().over(wq))
                 .filter(F.col("__r") <= nprobe)
                 .select("q_id", "q_vec", "q_norm",
-                        F.col("centroid_id").alias(label_col)))
-    c = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"),
-                      l2_norm(F.col(vec_col)).alias("c_norm"), label_col)
-    cand = c.join(F.broadcast(routed), [label_col])
-    if exclude_self:
-        cand = cand.filter(F.col("q_id") != F.col("c_id"))
+                        F.col("centroid_id").alias("label")))
+    c = corpus.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"),
+                      l2_norm(F.col("embedding")).alias("c_norm"), "label")
+    cand = (c.join(F.broadcast(routed), ["label"])
+              .filter(F.col("q_id") != F.col("c_id")))
     sim = dot_product(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
     return _rank_topk(cand.select("q_id", "c_id", stable_round(sim, 6).alias("__sim")), k)
 
 
-def knn_graph(corpus: DataFrame, k: int = 3, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              label_col: str = "label") -> DataFrame:
+def knn_graph(corpus: DataFrame, k: int = 3) -> DataFrame:
     """Block-confined kNN GRAPH over the whole corpus — every vector's
     top-k cosine neighbors within its own label block: the input shape
     of graph-based curation (SemDeDup-style cluster pruning, kNN-graph
@@ -124,14 +117,14 @@ def knn_graph(corpus: DataFrame, k: int = 3, id_col: str = "vec_id",
     PLANS.md).
 
     Output: (q_id, c_id, cos_sim, rnk) — one row per graph edge."""
-    a = corpus.select(F.col(label_col).alias("__lb"),
-                      F.col(id_col).alias("q_id"),
-                      F.col(vec_col).alias("q_vec"),
-                      l2_norm(F.col(vec_col)).alias("q_norm"))
-    b = corpus.select(F.col(label_col).alias("__lb"),
-                      F.col(id_col).alias("c_id"),
-                      F.col(vec_col).alias("c_vec"),
-                      l2_norm(F.col(vec_col)).alias("c_norm"))
+    a = corpus.select(F.col("label").alias("__lb"),
+                      F.col("vec_id").alias("q_id"),
+                      F.col("embedding").alias("q_vec"),
+                      l2_norm(F.col("embedding")).alias("q_norm"))
+    b = corpus.select(F.col("label").alias("__lb"),
+                      F.col("vec_id").alias("c_id"),
+                      F.col("embedding").alias("c_vec"),
+                      l2_norm(F.col("embedding")).alias("c_norm"))
     cand = a.join(b, "__lb").filter(F.col("q_id") != F.col("c_id"))
     sim = (dot_product(F.col("q_vec"), F.col("c_vec"))
            / (F.col("q_norm") * F.col("c_norm")))
@@ -139,9 +132,8 @@ def knn_graph(corpus: DataFrame, k: int = 3, id_col: str = "vec_id",
                                   stable_round(sim, 6).alias("__sim")), k)
 
 
-def semantic_prune(corpus: DataFrame, k: int = 3, eps: float = 0.35,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   label_col: str = "label") -> DataFrame:
+def semantic_prune(corpus: DataFrame, k: int = 3,
+                   eps: float = 0.35) -> DataFrame:
     """SemDeDup-style graph pruning (Abbas et al. 2023, arXiv:2303.09540):
     the curation step that CONSUMES :func:`knn_graph` — kNN edges above a
     similarity threshold define semantic-duplicate groups (connected
@@ -166,28 +158,27 @@ def semantic_prune(corpus: DataFrame, k: int = 3, eps: float = 0.35,
     ~0.95+ on real embeddings — the plan is identical at any eps.
     """
     from .dedup import connected_components
-    edges = (knn_graph(corpus, k=k, id_col=id_col, vec_col=vec_col,
-                       label_col=label_col)
+    edges = (knn_graph(corpus, k=k)
              .filter(F.col("cos_sim") >= eps)
              .select("q_id", "c_id"))
-    cc = connected_components(edges, corpus.select(id_col),
+    cc = connected_components(edges, corpus.select("vec_id"),
                               src_col="q_id", dst_col="c_id",
-                              id_col=id_col)
-    cents = centroids_from_labels(corpus, id_col, vec_col, label_col)
+                              id_col="vec_id")
+    cents = centroids_from_labels(corpus)
     cents = cents.withColumn("cent_norm", l2_norm(F.col("centroid")))
-    sim = (dot_product(F.col(vec_col), F.col("centroid"))
-           / (l2_norm(F.col(vec_col)) * F.col("cent_norm")))
-    cs = (corpus.join(cents, corpus[label_col] == cents["centroid_id"])
-                .select(id_col, stable_round(sim, 6).alias("__c6")))
-    j = cc.join(cs, id_col).select(
-        F.col(id_col), F.col("cluster_id").cast("long").alias("cluster_id"),
+    sim = (dot_product(F.col("embedding"), F.col("centroid"))
+           / (l2_norm(F.col("embedding")) * F.col("cent_norm")))
+    cs = (corpus.join(cents, corpus["label"] == cents["centroid_id"])
+                .select("vec_id", stable_round(sim, 6).alias("__c6")))
+    j = cc.join(cs, "vec_id").select(
+        F.col("vec_id"), F.col("cluster_id").cast("long").alias("cluster_id"),
         F.col("__c6"))
     wr = Window.partitionBy("cluster_id").orderBy(F.col("__c6"),
-                                                  F.col(id_col))
+                                                  F.col("vec_id"))
     wn = Window.partitionBy("cluster_id")
     return (j.withColumn("__rn", F.row_number().over(wr))
              .withColumn("n_members", F.count("*").over(wn))
-             .select(F.col(id_col),
+             .select(F.col("vec_id"),
                      "cluster_id",
                      F.col("n_members").cast("long").alias("n_members"),
                      stable_round(F.col("__c6"), 4).alias("cent_sim"),
@@ -195,9 +186,7 @@ def semantic_prune(corpus: DataFrame, k: int = 3, eps: float = 0.35,
                       .cast("int").alias("kept")))
 
 
-def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     label_col: str = "label") -> DataFrame:
+def label_silhouette(corpus: DataFrame) -> DataFrame:
     """Per-vector label-noise score (the cleanlab-style centroid
     silhouette a curation pipeline runs before trusting labels): cosine
     to the OWN label centroid vs the best FOREIGN centroid; a negative
@@ -216,7 +205,7 @@ def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
     at 6 decimals BEFORE the max/argmax so the oracle's tie-break on
     (score, label) is exact on both engines.
     """
-    cents = centroids_from_labels(corpus, id_col, vec_col, label_col)
+    cents = centroids_from_labels(corpus)
     cents = cents.withColumn("cent_norm", l2_norm(F.col("centroid")))
     carr = F.broadcast(cents.agg(F.array_sort(F.collect_list(
         F.struct(F.col("centroid_id").alias("lb"), "centroid",
@@ -225,19 +214,19 @@ def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
         F.col("__cents"),
         lambda c: F.struct(
             c["lb"].alias("lb"),
-            stable_round(dot_product(F.col(vec_col), c["centroid"])
-                         / (l2_norm(F.col(vec_col)) * c["cent_norm"]),
+            stable_round(dot_product(F.col("embedding"), c["centroid"])
+                         / (l2_norm(F.col("embedding")) * c["cent_norm"]),
                          6).alias("s6")))
     own = F.element_at(
         F.filter(F.col("__scored"),
-                 lambda s: s["lb"] == F.col(label_col)), 1)["s6"]
+                 lambda s: s["lb"] == F.col("label")), 1)["s6"]
     foreign = F.filter(F.col("__scored"),
-                       lambda s: s["lb"] != F.col(label_col))
+                       lambda s: s["lb"] != F.col("label"))
     best = F.array_max(F.transform(F.col("__foreign"), lambda s: s["s6"]))
     best_lb = F.array_min(F.transform(
         F.filter(F.col("__foreign"), lambda s: s["s6"] == F.col("__best")),
         lambda s: s["lb"]))
-    return (corpus.select(id_col, label_col, vec_col)
+    return (corpus.select("vec_id", "label", "embedding")
                   .join(carr, F.lit(True), "left")
                   .withColumn("__scored", scored)
                   .withColumn("__own", own)
@@ -248,8 +237,8 @@ def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
                   # A no-op filter on any >=2-label corpus.
                   .filter(F.size(F.col("__foreign")) > 0)
                   .withColumn("__best", best)
-                  .select(F.col(id_col),
-                          F.col(label_col).cast("long").alias("label"),
+                  .select(F.col("vec_id"),
+                          F.col("label").cast("long").alias("label"),
                           stable_round(F.col("__own"), 4).alias("own_sim"),
                           stable_round(F.col("__best"), 4).alias("foreign_sim"),
                           best_lb.cast("long").alias("foreign_label"),
@@ -264,9 +253,7 @@ def label_silhouette(corpus: DataFrame, id_col: str = "vec_id",
 
 
 def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                   nprobe: int = 2, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   label_col: str = "label") -> DataFrame:
+                   nprobe: int = 2) -> DataFrame:
     """Hard-negative mining for embedding-model training (the in-batch /
     ANN-mined negatives step of DPR/contrastive pipelines, Karpukhin
     EMNLP'20 §4.2): for each query vector, the top-k most-similar
@@ -286,12 +273,12 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
     Output: (q_id, c_id, neg_label, cos_sim, rnk) — neg_label kept so
     downstream batch construction can stratify negatives per source
     label."""
-    cents = centroids_from_labels(corpus, id_col, vec_col, label_col)
+    cents = centroids_from_labels(corpus)
     cents = cents.withColumn("cent_norm", l2_norm(F.col("centroid")))
-    q = queries.select(F.col(id_col).alias("q_id"),
-                       F.col(vec_col).alias("q_vec"),
-                       l2_norm(F.col(vec_col)).alias("q_norm"),
-                       F.col(label_col).alias("__q_label"))
+    q = queries.select(F.col("vec_id").alias("q_id"),
+                       F.col("embedding").alias("q_vec"),
+                       l2_norm(F.col("embedding")).alias("q_norm"),
+                       F.col("label").alias("__q_label"))
     qc = (q.join(F.broadcast(cents), F.lit(True))
            .filter(F.col("centroid_id") != F.col("__q_label")))
     csim = (dot_product(F.col("q_vec"), F.col("centroid"))
@@ -303,16 +290,16 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 .withColumn("__r", F.row_number().over(wq))
                 .filter(F.col("__r") <= nprobe)
                 .select("q_id", "q_vec", "q_norm",
-                        F.col("centroid_id").alias(label_col)))
-    c = corpus.select(F.col(id_col).alias("c_id"),
-                      F.col(vec_col).alias("c_vec"),
-                      l2_norm(F.col(vec_col)).alias("c_norm"), label_col)
-    cand = c.join(F.broadcast(routed), [label_col])
+                        F.col("centroid_id").alias("label")))
+    c = corpus.select(F.col("vec_id").alias("c_id"),
+                      F.col("embedding").alias("c_vec"),
+                      l2_norm(F.col("embedding")).alias("c_norm"), "label")
+    cand = c.join(F.broadcast(routed), ["label"])
     sim = (dot_product(F.col("q_vec"), F.col("c_vec"))
            / (F.col("q_norm") * F.col("c_norm")))
     ranked = _rank_topk(
         cand.select("q_id", "c_id",
-                    F.col(label_col).cast("long").alias("neg_label"),
+                    F.col("label").cast("long").alias("neg_label"),
                     stable_round(sim, 6).alias("__sim")),
         k, extra_cols=("neg_label",))
     return ranked
@@ -374,10 +361,7 @@ def _fill_empty_clusters(prev: DataFrame, new: DataFrame) -> DataFrame:
 
 
 def _kmeans_fit(corpus: DataFrame, k: int, iters: int,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                ckpt_each_iter: bool = False,
-                routed: bool = False,
+                ckpt_each_iter: bool = False, routed: bool = False,
                 route_probes: int = 2) -> tuple[DataFrame, DataFrame]:
     """Lloyd's loop shared by `kmeans_train` and `pq_knn`: returns
     (codebook, assignment) where codebook is the final (cid, cent) table
@@ -413,8 +397,8 @@ def _kmeans_fit(corpus: DataFrame, k: int, iters: int,
     this path. Tie-breaks and rounding inside the probed set are
     identical to the exact path."""
     v = corpus.selectExpr(
-        f"{id_col} AS vec_id",
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE)) AS e")
+        "vec_id AS vec_id",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS e")
     seeds = v.orderBy("vec_id").limit(k)
     cents = (seeds
              .withColumn("cid",
@@ -540,7 +524,6 @@ def _kmeans_fit(corpus: DataFrame, k: int, iters: int,
 
 
 def kmeans_train(corpus: DataFrame, k: int = 8, iters: int = 2,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
                  routed: bool = False) -> DataFrame:
     """Lloyd's k-means with deterministic init — trains the coarse
     quantizer that `ivf_knn` routes through (the codebook-building half of
@@ -568,8 +551,7 @@ def kmeans_train(corpus: DataFrame, k: int = 8, iters: int = 2,
     (semantic_dedup) enable it above the exact-path's affordable k;
     oracle-verified scales stay exact.
     """
-    _, final = _kmeans_fit(corpus, k, iters, id_col, vec_col,
-                           routed=routed)
+    _, final = _kmeans_fit(corpus, k, iters, routed=routed)
     return final.select("vec_id",
                         F.col("cid").alias("cluster"),
                         stable_round(F.col("d"), 4).alias("dist"))
@@ -600,17 +582,17 @@ def auto_refine(n: int, topk: int = 5, floor: int = 50) -> int:
 
 
 def _exact_rerank(short: DataFrame, queries: DataFrame, corpus: DataFrame,
-                  k: int, id_col: str, vec_col: str) -> DataFrame:
+                  k: int) -> DataFrame:
     """FAISS-style refine tail shared by pq_knn and ivfpq_knn: exactly
     re-rank a (q_id, c_id) shortlist by cosine on the true vectors —
     R·|queries| vector reads, independent of corpus size. Output matches
     the exact tiers: (q_id, c_id, cos_sim, rnk)."""
-    cv = corpus.selectExpr(f"{id_col} AS c_id",
-                           f"{vec_col} AS c_vec",
-                           f"{l2_norm_sql(vec_col)} AS c_norm")
-    qn = queries.selectExpr(f"{id_col} AS q_id",
-                            f"{vec_col} AS q_vec",
-                            f"{l2_norm_sql(vec_col)} AS q_norm")
+    cv = corpus.selectExpr("vec_id AS c_id",
+                           "embedding AS c_vec",
+                           f"{l2_norm_sql('embedding')} AS c_norm")
+    qn = queries.selectExpr("vec_id AS q_id",
+                            "embedding AS q_vec",
+                            f"{l2_norm_sql('embedding')} AS q_norm")
     pairs = short.join(cv, "c_id").join(F.broadcast(qn), "q_id")
     sim = (f"{dot_product_sql('q_vec', 'c_vec')}"
            f" / (q_norm * c_norm)")
@@ -619,11 +601,9 @@ def _exact_rerank(short: DataFrame, queries: DataFrame, corpus: DataFrame,
                          f"{stable_round_sql(sim, 6)} AS __sim"), k)
 
 
-def pq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
-           m: int = 4, codebook: int = 16, iters: int = 1, dim: int = 64,
-           id_col: str = "vec_id", vec_col: str = "embedding",
-           exclude_self: bool = True, normalize: bool = True,
-           refine: int | None = None) -> DataFrame:
+def pq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5, m: int = 4,
+           codebook: int = 16, iters: int = 1, dim: int = 64,
+           normalize: bool = True, refine: int | None = None) -> DataFrame:
     """Product-quantization ANN (Jégou et al., TPAMI'11): the
     memory-bound scale tier — each corpus vector compresses to m small
     codes, and query scoring never touches the original vectors.
@@ -653,27 +633,25 @@ def pq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
     top-R per query is exactly re-ranked by cosine on the true vectors
     (`_exact_rerank`, R·|queries| vector reads, corpus-size
     independent). With refine the output is (q_id, c_id, cos_sim, rnk)
-    like the exact tiers.
+    like the exact tiers. ``normalize=True`` (default): both sides
+    L2-normalize first (see `_unit`). A query is never its own neighbor.
     """
     if normalize:
-        corpus = _unit(corpus, id_col, vec_col)
-        queries = _unit(queries, id_col, vec_col)
-    codes, cents_list = _pq_fit_encode(corpus, m, codebook, iters, dim,
-                                       id_col, vec_col)
+        corpus = _unit(corpus, "vec_id", "embedding")
+        queries = _unit(queries, "vec_id", "embedding")
+    codes, cents_list = _pq_fit_encode(corpus, m, codebook, iters, dim)
     qdf = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qe"))
+        F.col("vec_id").alias("q_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("qe"))
     pds = _pq_query_dists(qdf, cents_list, dim // m)
     if refine is None:
-        return _adc_topk(codes, pds, m, k, exclude_self)
-    short = (_adc_topk(codes, pds, m, refine, exclude_self)
-             .select("q_id", "c_id"))
-    return _exact_rerank(short, queries, corpus, k, id_col, vec_col)
+        return _adc_topk(codes, pds, m, k)
+    short = _adc_topk(codes, pds, m, refine).select("q_id", "c_id")
+    return _exact_rerank(short, queries, corpus, k)
 
 
 def _pq_fit_encode(corpus: DataFrame, m: int, codebook: int, iters: int,
-                   dim: int, id_col: str, vec_col: str
-                   ) -> tuple[DataFrame, list[DataFrame]]:
+                   dim: int) -> tuple[DataFrame, list[DataFrame]]:
     """PQ train/encode half: split the corpus vector into m contiguous
     subvectors, fit a `codebook`-centroid k-means per subspace
     (`_kmeans_fit` contract), and return (codes, [cents_0..cents_{m-1}])
@@ -699,10 +677,10 @@ def _pq_fit_encode(corpus: DataFrame, m: int, codebook: int, iters: int,
     # One selectExpr parse (r15) instead of ~3m py4j HOF/struct calls.
     parts = ", ".join(
         f"named_struct('s', CAST({s} AS INT), 'e', "
-        f"transform(slice({vec_col}, {s * w + 1}, {w}), "
+        f"transform(slice(embedding, {s * w + 1}, {w}), "
         f"x -> CAST(x AS DOUBLE)))"
         for s in range(m))
-    v = (corpus.selectExpr(f"{id_col} AS vec_id",
+    v = (corpus.selectExpr("vec_id AS vec_id",
                            f"explode(array({parts})) AS __sv")
                .selectExpr("vec_id", "__sv.s AS s", "__sv.e AS e"))
     sw = Window.partitionBy("s").orderBy("vec_id")
@@ -773,19 +751,18 @@ def _pq_query_dists(qdf: DataFrame, cents_list: list[DataFrame], w: int,
 
 
 def _adc_topk(cand: DataFrame, pds: list[DataFrame], m: int, k: int,
-              exclude_self: bool,
               key_cols: tuple[str, ...] = ("q_id",)) -> DataFrame:
     """ADC scoring tail shared by pq_knn and ivfpq_knn: join the m
     partial-distance tables onto the (possibly bucket-restricted)
-    candidate codes, sum left-to-right, rank-prune per query. Join keys
+    candidate codes, drop each query's own row, sum left-to-right,
+    rank-prune per query. Join keys
     are the code column plus whichever of `key_cols` the candidate set
     already carries (pq's first join has no q_id yet; the residual
     IVFADC candidates carry q_id AND the probed cell)."""
     for s, pd_s in enumerate(pds):
         on = [f"k{s}"] + [c for c in key_cols if c in cand.columns]
         cand = cand.join(F.broadcast(pd_s), on)
-    if exclude_self:
-        cand = cand.filter(F.col("q_id") != F.col("vec_id"))
+    cand = cand.filter(F.col("q_id") != F.col("vec_id"))
     ad = F.col("d0")
     for s in range(1, m):
         ad = ad + F.col(f"d{s}")
@@ -801,11 +778,7 @@ def _adc_topk(cand: DataFrame, pds: list[DataFrame], m: int, k: int,
 
 def ivfpq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
               nprobe: int = 2, coarse_k: int = 8, coarse_iters: int = 2,
-              m: int = 4, codebook: int = 16, pq_iters: int = 1,
-              dim: int = 64, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              exclude_self: bool = True,
-              normalize: bool = True,
+              m: int = 4, codebook: int = 16, pq_iters: int = 1, dim: int = 64,
               refine: int | None = None) -> DataFrame:
     """IVFADC (Jégou et al., TPAMI'11 §IV, the FAISS-shaped index): a
     trained coarse quantizer routes each query to its nprobe nearest
@@ -830,22 +803,22 @@ def ivfpq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
     checkpointed serving-side tables; all joins are equi-joins after the
     broadcast training lookups.
 
-    ``normalize=True`` (default): both sides L2-normalize first (see
-    `_unit`) so the L2 index ranks in the cosine metric the ladder
-    grades against. ``refine=R`` adds the FAISS-style refine stage: the
-    ADC top-R shortlist per query is exactly re-ranked by cosine on the
+    Both sides L2-normalize first (see `_unit`) so the L2 index ranks in
+    the cosine metric the ladder grades against. ``refine=R`` adds the
+    FAISS-style refine stage: the ADC top-R shortlist per query is
+    exactly re-ranked by cosine on the
     true vectors — R·|queries| vector reads, independent of corpus
     size, lifting clustered-fixture recall@5 from 0.38 (pure 16-bit
     ADC, which cannot rank iid within-cell noise) to 0.79/0.90 at
     R=25/50. With refine the output is (q_id, c_id, cos_sim, rnk) like
-    the exact tiers; without it, (q_id, c_id, adc_dist, rnk).
+    the exact tiers; without it, (q_id, c_id, adc_dist, rnk). A query is
+    never its own neighbor.
     """
     assert dim % m == 0, "dim must split evenly into m subspaces"
-    if normalize:
-        corpus = _unit(corpus, id_col, vec_col)
-        queries = _unit(queries, id_col, vec_col)
+    corpus = _unit(corpus, "vec_id", "embedding")
+    queries = _unit(queries, "vec_id", "embedding")
     cents, assigned = _kmeans_fit(corpus, coarse_k, coarse_iters,
-                                  id_col, vec_col, ckpt_each_iter=True)
+                                  ckpt_each_iter=True)
     # cents comes back already checkpointed (ckpt_each_iter materializes
     # the last iteration's codebook); re-checkpointing it was a pure
     # extra copy job. The cell label and the residual both derive from
@@ -859,13 +832,13 @@ def ivfpq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                   F.col("cid") == F.col("__ccid"))
             .selectExpr("vec_id", "cid AS __cell",
                         f"zip_with(e, cent, (x, y) -> {resid})"
-                        f" AS {vec_col}")
+                        " AS embedding")
             .localCheckpoint(eager=False))
     lab = base.select("vec_id", "__cell")
-    resc = base.select("vec_id", vec_col)
+    resc = base.select("vec_id", "embedding")
     qv = queries.selectExpr(
-        f"{id_col} AS q_id",
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE)) AS qe")
+        "vec_id AS q_id",
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS qe")
     qc = qv.join(F.broadcast(cents), F.lit(True))
     rd = stable_round_sql(sq_dist_sql("qe", "cent"), 6)
     rw = Window.partitionBy("q_id").orderBy("__rd", "__cell")
@@ -874,8 +847,7 @@ def ivfpq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 .withColumn("__r", F.row_number().over(rw))
                 .filter(F.col("__r") <= nprobe)
                 .select("q_id", "qe", "__cell"))
-    codes, cents_list = _pq_fit_encode(resc, m, codebook, pq_iters, dim,
-                                       "vec_id", vec_col)
+    codes, cents_list = _pq_fit_encode(resc, m, codebook, pq_iters, dim)
     # query residual PER PROBED CELL: the ADC tables become
     # (q_id, __cell, k_s, d_s) — asymmetric distance against the
     # re-centered query, matching how the corpus side was encoded
@@ -889,19 +861,15 @@ def ivfpq_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                  .join(F.broadcast(routed.select("q_id", "__cell")),
                        "__cell"))
     if refine is None:
-        return _adc_topk(cand, pds, m, k, exclude_self,
-                         key_cols=("q_id", "__cell"))
-    short = _adc_topk(cand, pds, m, refine, exclude_self,
+        return _adc_topk(cand, pds, m, k, key_cols=("q_id", "__cell"))
+    short = _adc_topk(cand, pds, m, refine,
                       key_cols=("q_id", "__cell")).select("q_id", "c_id")
-    return _exact_rerank(short, queries, corpus, k, id_col, vec_col)
+    return _exact_rerank(short, queries, corpus, k)
 
 
 def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                            planes: int = 8, dim: int = 64, probes: int = 3,
-                           id_col: str = "vec_id", vec_col: str = "embedding",
-                           salt: str = "slsh", tables: int = 1,
-                           max_flip: int = 1,
-                           exclude_self: bool = True) -> DataFrame:
+                           tables: int = 1, max_flip: int = 1) -> DataFrame:
     """Multi-probe sign-LSH kNN (Lv et al., VLDB'07 multi-probe idea on
     Charikar hyperplane LSH): the third ANN tier, needing neither a label
     (embedding_near_dup) nor a trained codebook (knn_ivf) — just the
@@ -930,8 +898,9 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
     fixture's cosine top-5: 0.17 → 0.33 at T=2) at linear cost — per
     extra table, one more scan-side bucket expression and one more
     bucket equi-join; the rerank reads each distinct candidate once.
-    Table t>0 salts as ``{salt}-t{t}``, so tables=1 is bit-identical to
-    the historical single-table operator.
+    Table t>0 salts as ``slsh-t{t}``, so tables=1 is bit-identical to
+    the historical single-table operator. A query is never its own
+    neighbor.
     """
     from .dedup import (signlsh_bits_from_dots, signlsh_bucket_bits,
                         signlsh_dots)
@@ -941,7 +910,7 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
     assert 1 <= probes <= max_perts + 1
     assert tables >= 1
     assert max_flip in (1, 2)
-    v = F.col(vec_col)
+    v = F.col("embedding")
 
     def table_probes(tsalt: str, t: int) -> DataFrame:
         # the query side needs both the bucket AND the per-plane margins:
@@ -964,7 +933,7 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                                       s["p"].alias("p"),
                                       s["mask"].alias("mask")))
             q0 = queries.select(
-                F.col(id_col).alias("q_id"),
+                F.col("vec_id").alias("q_id"),
                 signlsh_bits_from_dots(dots, planes).alias("q_bk"),
                 F.slice(F.array_sort(margins), 1,
                         probes - 1).alias("__flips"))
@@ -979,7 +948,7 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
             # expressions reference it instead of re-inlining the
             # hyperplane fold per struct (CollapseProject would not
             # merge, but expression TREES would still duplicate).
-            qd = queries.select(F.col(id_col).alias("q_id"),
+            qd = queries.select(F.col("vec_id").alias("q_id"),
                                 dots.alias("__dots"))
             dcol = F.col("__dots")
             # ties: score, then lower mask (for singles that IS the
@@ -1010,7 +979,7 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
         return q0.select("q_id", F.lit(t).cast("int").alias("__t"),
                          F.explode(probe_buckets).alias("bk"))
 
-    salts = [salt if t == 0 else f"{salt}-t{t}" for t in range(tables)]
+    salts = ["slsh" if t == 0 else f"slsh-t{t}" for t in range(tables)]
     # Corpus side: ONE scan computes EVERY table's bucket id (r9 —
     # previously each table re-scanned the corpus for its own bucket
     # join, so T tables cost T parquet passes; the per-vector hashing
@@ -1023,7 +992,7 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
         F.struct(F.lit(t).cast("int").alias("__t"),
                  signlsh_bucket_bits(v, planes, dim, s).alias("bk"))
         for t, s in enumerate(salts)])
-    c_all = (corpus.select(F.col(id_col).alias("c_id"),
+    c_all = (corpus.select(F.col("vec_id").alias("c_id"),
                            F.explode(tb).alias("__e"))
                    .select("c_id", F.col("__e.__t").alias("__t"),
                            F.col("__e.bk").alias("bk")))
@@ -1035,12 +1004,11 @@ def multiprobe_signlsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                      .select("q_id", "c_id"))
     # a candidate found by several tables (or several probes across
     # tables) reranks once
-    cand_ids = cand_ids.dropDuplicates(["q_id", "c_id"])
-    if exclude_self:
-        cand_ids = cand_ids.filter(F.col("q_id") != F.col("c_id"))
-    cv = corpus.select(F.col(id_col).alias("c_id"), v.alias("c_vec"),
+    cand_ids = (cand_ids.dropDuplicates(["q_id", "c_id"])
+                        .filter(F.col("q_id") != F.col("c_id")))
+    cv = corpus.select(F.col("vec_id").alias("c_id"), v.alias("c_vec"),
                        l2_norm(v).alias("c_norm"))
-    qv = queries.select(F.col(id_col).alias("q_id"), v.alias("q_vec"),
+    qv = queries.select(F.col("vec_id").alias("q_id"), v.alias("q_vec"),
                         l2_norm(v).alias("q_norm"))
     cand = cand_ids.join(cv, "c_id").join(F.broadcast(qv), "q_id")
     sim = dot_product(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
@@ -1075,15 +1043,15 @@ def _route_to_codebook(queries: DataFrame, cents: DataFrame,
              .select("q_id", "q_vec", "q_norm", "cid"))
 
 
-def _rerank_in_buckets(routed: DataFrame, vectors: DataFrame, k: int,
-                       id_col: str, vec_col: str) -> DataFrame:
+def _rerank_in_buckets(routed: DataFrame, vectors: DataFrame,
+                       k: int) -> DataFrame:
     """Exact cosine rerank confined to the probed buckets: the bucket
     table joins the broadcast routed set on cid, so only probed
     partitions are read (partition pruning when `vectors` is a
     cid-partitioned parquet index)."""
-    c = vectors.select(F.col(id_col).alias("c_id"),
-                       F.col(vec_col).alias("c_vec"),
-                       l2_norm(F.col(vec_col)).alias("c_norm"), "cid")
+    c = vectors.select(F.col("vec_id").alias("c_id"),
+                       F.col("embedding").alias("c_vec"),
+                       l2_norm(F.col("embedding")).alias("c_norm"), "cid")
     cand = c.join(F.broadcast(routed), "cid")
     sim = (dot_product(F.col("q_vec"), F.col("c_vec"))
            / (F.col("q_norm") * F.col("c_norm")))
@@ -1112,17 +1080,17 @@ def use_routed_assign(n: int, k: int) -> bool:
     return n * k > ROUTED_FOLD_GATE
 
 
-def auto_kclusters_from_count(n: int, floor: int = 8) -> int:
+def auto_kclusters_from_count(n: int) -> int:
     """The √n codebook-sizing formula shared by every auto-k caller
     (:func:`auto_kclusters`, :func:`build_ivf_index`,
     :func:`incremental_knn`) — single-sourced so a revision of the
     k ≈ √n convention cannot drift between the builders (ADVICE r13)."""
     import math
-    return max(floor, int(round(math.sqrt(n))))
+    return max(8, int(round(math.sqrt(n))))
 
 
-def auto_kclusters(corpus: DataFrame, floor: int = 8) -> int:
-    """Corpus-scaled codebook size: ``max(floor, round(sqrt(n)))`` —
+def auto_kclusters(corpus: DataFrame) -> int:
+    """Corpus-scaled codebook size: ``max(8, round(sqrt(n)))`` —
     the FAISS sizing convention (k ≈ √n keeps both the codebook scan
     and the mean bucket size at √n, so per-query probe cost grows as
     √n per 10x data instead of linearly). One counting job at build
@@ -1130,13 +1098,11 @@ def auto_kclusters(corpus: DataFrame, floor: int = 8) -> int:
     that is never re-sized as the corpus grows 10x/decade silently
     degrades to linear bucket scans — the default must be the
     scale-safe composition."""
-    return auto_kclusters_from_count(corpus.count(), floor)
+    return auto_kclusters_from_count(corpus.count())
 
 
-def build_ivf_index(corpus: DataFrame, path: str,
-                    kclusters: int | None = None,
-                    iters: int = 2, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> None:
+def build_ivf_index(corpus: DataFrame, path: str, kclusters: int | None = None,
+                    iters: int = 2) -> None:
     """Train and PERSIST the write-once IVF index: ``{path}/codebook``
     (the k-row (cid, cent) table) and ``{path}/vectors`` (the corpus
     vectors parquet-partitioned by cid — the on-disk layout that lets
@@ -1161,32 +1127,29 @@ def build_ivf_index(corpus: DataFrame, path: str,
         n = corpus.count()
         kclusters = auto_kclusters_from_count(n)
         routed = use_routed_assign(n, kclusters)
-    cents, asg = _kmeans_fit(corpus, kclusters, iters, id_col, vec_col,
-                             ckpt_each_iter=True, routed=routed)
+    cents, asg = _kmeans_fit(corpus, kclusters, iters, ckpt_each_iter=True,
+                             routed=routed)
     cents.write.mode("overwrite").parquet(f"{path}/codebook")
-    (asg.select(F.col("vec_id").alias(id_col),
-                F.col("e").alias(vec_col), "cid")
+    (asg.select("vec_id", F.col("e").alias("embedding"), "cid")
         .write.mode("overwrite").partitionBy("cid")
         .parquet(f"{path}/vectors"))
 
 
 def query_ivf_index(spark, path: str, queries: DataFrame, k: int = 5,
-                    nprobe: int = 2, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    nprobe: int = 2) -> DataFrame:
     """Search a :func:`build_ivf_index` index with a NEW query batch:
     route against the stored codebook (k rows — zero corpus bytes),
     then exact-rerank inside the probed cid partitions only. Output
     (q_id, c_id, cos_sim, rnk), the ANN-ladder shape."""
     cents = spark.read.parquet(f"{path}/codebook")
     vectors = spark.read.parquet(f"{path}/vectors")
-    routed = _route_to_codebook(queries, cents, nprobe, id_col, vec_col)
-    return _rerank_in_buckets(routed, vectors, k, id_col, vec_col)
+    routed = _route_to_codebook(queries, cents, nprobe, "vec_id", "embedding")
+    return _rerank_in_buckets(routed, vectors, k)
 
 
 def incremental_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
                     nprobe: int = 2, kclusters: int | None = None,
-                    iters: int = 2, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    iters: int = 2) -> DataFrame:
     """The day-over-day ANN shape as one composed plan (the registry /
     oracle surface for the persisted-index path): train the codebook on
     the EXISTING corpus only, assign its rows once (the write-once
@@ -1214,10 +1177,9 @@ def incremental_knn(queries: DataFrame, corpus: DataFrame, k: int = 5,
         n = corpus.count()
         kclusters = auto_kclusters_from_count(n)
         routed = use_routed_assign(n, kclusters)
-    cents, asg = _kmeans_fit(corpus, kclusters, iters, id_col, vec_col,
-                             ckpt_each_iter=True, routed=routed)
-    index = (asg.select(F.col("vec_id").alias(id_col),
-                        F.col("e").alias(vec_col), "cid")
+    cents, asg = _kmeans_fit(corpus, kclusters, iters, ckpt_each_iter=True,
+                             routed=routed)
+    index = (asg.select("vec_id", F.col("e").alias("embedding"), "cid")
                 .localCheckpoint(eager=False))
-    routed = _route_to_codebook(queries, cents, nprobe, id_col, vec_col)
-    return _rerank_in_buckets(routed, index, k, id_col, vec_col)
+    routed = _route_to_codebook(queries, cents, nprobe, "vec_id", "embedding")
+    return _rerank_in_buckets(routed, index, k)

@@ -121,9 +121,7 @@ def cms_lookup(sketch: DataFrame, keys: DataFrame, key_col: str,
                   .agg(F.min("cnt").alias("est")))
 
 
-def quantile_sketch(events: DataFrame, rate: int = 16,
-                    key_col: str = "event_id", val_col: str = "value",
-                    type_col: str = "event_type") -> DataFrame:
+def quantile_sketch(events: DataFrame, rate: int = 16) -> DataFrame:
     """Bounded-memory quantile estimation via a DETERMINISTIC uniform
     sample — the approximate tier value_percentiles' doc promises for
     100 TB ("swap in an approximation with a documented error budget"),
@@ -152,28 +150,28 @@ def quantile_sketch(events: DataFrame, rate: int = 16,
     it); at the fixture's per-type volumes (m ~ n/16 >> 1) that never
     happens — lower ``rate`` for small types.
     """
-    h = md5_hash64(F.concat(F.col(key_col).cast("string"), F.lit("qsk")))
+    h = md5_hash64(F.concat(F.col("event_id").cast("string"), F.lit("qsk")))
     s = events.filter(h % rate == 0)
-    est = (s.groupBy(type_col)
+    est = (s.groupBy("event_type")
             .agg(F.count("*").alias("m"),
-                 F.percentile(val_col, F.array(F.lit(0.5), F.lit(0.9)))
+                 F.percentile("value", F.array(F.lit(0.5), F.lit(0.9)))
                   .alias("__q"))
-            .select(type_col, "m",
+            .select("event_type", "m",
                     F.get("__q", 0).alias("__p50"),
                     F.get("__q", 1).alias("__p90")))
-    joined = events.join(F.broadcast(est), type_col)
-    agg = (joined.groupBy(type_col, "m", "__p50", "__p90")
+    joined = events.join(F.broadcast(est), "event_type")
+    agg = (joined.groupBy("event_type", "m", "__p50", "__p90")
                  .agg(F.count("*").alias("n"),
-                      F.sum(F.when(F.col(val_col) <= F.col("__p50"), 1)
+                      F.sum(F.when(F.col("value") <= F.col("__p50"), 1)
                              .otherwise(0)).alias("__le50"),
-                      F.sum(F.when(F.col(val_col) <= F.col("__p90"), 1)
+                      F.sum(F.when(F.col("value") <= F.col("__p90"), 1)
                              .otherwise(0)).alias("__le90")))
     err = lambda le, p: stable_round(
         F.abs(F.col(le).cast("double") / F.col("n").cast("double")
               - F.lit(p)), 6)
     bound = stable_round(F.lit(3.0) / F.sqrt(F.col("m").cast("double")), 6)
     out = agg.select(
-        type_col, F.col("n").cast("long").alias("n"),
+        "event_type", F.col("n").cast("long").alias("n"),
         F.col("m").cast("long").alias("m"),
         stable_round(F.col("__p50"), 4).alias("p50_est"),
         stable_round(F.col("__p90"), 4).alias("p90_est"),

@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 
 def salted_join(big: DataFrame, small: DataFrame, keys: Sequence[str],
-                how: str = "inner", salt: int = 16,
-                seed: int = 42) -> DataFrame:
+                how: str = "inner", salt: int = 16) -> DataFrame:
     """Equi-join with the big side's hot keys spread across `salt` buckets.
 
     Row-identical to big.join(small, keys, how) for "inner" and "left".
@@ -44,7 +43,7 @@ def salted_join(big: DataFrame, small: DataFrame, keys: Sequence[str],
         raise ValueError("salted_join supports inner/left (small side is "
                          "replicated; right/outer would duplicate nulls)")
     keys = list(keys)
-    big_s = big.withColumn("__salt", (F.rand(seed) * salt).cast("int"))
+    big_s = big.withColumn("__salt", (F.rand(42) * salt).cast("int"))
     small_s = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
     return big_s.join(small_s, keys + ["__salt"], how).drop("__salt")

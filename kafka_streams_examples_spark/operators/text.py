@@ -28,14 +28,23 @@ STOPWORDS = {
 
 EN_STOPWORDS = STOPWORDS["en"]
 
+#: the document gate of `corpus_prep`, which the streaming
+#: `streaming_corpus_filter` must apply identically
+MIN_TOKENS, MAX_NONALNUM_RATIO = 10, 0.4
+#: tokens per derived line: the line geometry the Gopher, line-dedup,
+#: boilerplate and ingest operators (and their SQL oracles) share
+WORDS_PER_LINE = 12
+#: absolute discount of the Kneser-Ney surprisal operators and oracles
+KN_DISCOUNT = 0.75
+
 
 def _count_in(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: x.isin(*words)))
 
 
-def with_lang_pred(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_pred(docs: DataFrame) -> DataFrame:
     """Heuristic language id: argmax of stopword hits, 'en' on ties/zero."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     d = docs.withColumn("__toks", toks)
     for lang, words in STOPWORDS.items():
         d = d.withColumn(f"__sc_{lang}", _count_in(F.col("__toks"), words))
@@ -50,10 +59,10 @@ def with_lang_pred(docs: DataFrame, text_col: str = "text") -> DataFrame:
              .drop("__toks", *[f"__sc_{l}" for l in STOPWORDS]))
 
 
-def with_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality(docs: DataFrame) -> DataFrame:
     """Quality scoring: token count, mean token length, stopword ratio,
     non-alphanumeric ratio, combined into a bounded score."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     d = (docs.withColumn("__toks", toks)
              .withColumn("n_tokens", F.size("__toks").cast("long"))
              .withColumn("__sw", _count_in(F.col("__toks"), EN_STOPWORDS)))
@@ -61,8 +70,8 @@ def with_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
                             F.lit(0), lambda acc, x: acc + x).cast("double")
                 / F.col("n_tokens"))
     sw_ratio = F.col("__sw") / F.col("n_tokens")
-    nonalnum = (F.length(F.regexp_replace(F.lower(F.col(text_col)), "[a-z0-9 ]", ""))
-                / F.length(F.col(text_col)))
+    nonalnum = (F.length(F.regexp_replace(F.lower(F.col("text")), "[a-z0-9 ]", ""))
+                / F.length(F.col("text")))
     score = (F.least(F.col("n_tokens") / F.lit(100.0), F.lit(1.0)) * 0.4
              + sw_ratio * 0.3
              + (1.0 - nonalnum) * 0.3)
@@ -80,23 +89,20 @@ def with_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_SPLIT_RE = r"[a-z0-9]+|[^a-z0-9\s]"
 
 
-def token_counts(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count, a BPE-ish regex subword count (alnum runs +
     punctuation marks), and the chars/4 heuristic — the three standard
     token-budget estimators for training-data accounting."""
     return docs.select(
-        F.col(id_col),
-        F.size(tokens(text_col)).cast("long").alias("n_tokens"),
-        F.regexp_count(F.lower(F.col(text_col)), F.lit(BPE_SPLIT_RE))
+        F.col("doc_id"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
+        F.regexp_count(F.lower(F.col("text")), F.lit(BPE_SPLIT_RE))
          .cast("long").alias("n_tokens_bpe"),
-        F.ceil(F.length(F.col(text_col)) / 4).cast("long").alias("n_tokens_chars4"),
+        F.ceil(F.length(F.col("text")) / 4).cast("long").alias("n_tokens_chars4"),
     )
 
 
-def corpus_prep(docs: DataFrame, min_tokens: int = 10,
-                max_nonalnum_ratio: float = 0.4,
-                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def corpus_prep(docs: DataFrame, min_tokens: int = MIN_TOKENS) -> DataFrame:
     """The canonical training-data prep composition in ONE pass: quality
     gate (token floor + non-alphanumeric ceiling) then exact dedup keeping
     the smallest id per fingerprint.
@@ -106,24 +112,23 @@ def corpus_prep(docs: DataFrame, min_tokens: int = 10,
     (id, fp, n_tokens) ever shuffles — never document text — so the
     pipeline is scan-bound at 100 TB exactly like exact_dedup_groups.
     """
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    bad_ratio = (F.length(F.regexp_replace(F.lower(F.col(text_col)),
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    bad_ratio = (F.length(F.regexp_replace(F.lower(F.col("text")),
                                            "[a-z0-9 ]", ""))
-                 / F.length(F.col(text_col)))
+                 / F.length(F.col("text")))
     scored = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(norm).alias("fp"),
-        F.size(tokens(text_col)).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
         bad_ratio.alias("__bad"))
     kept = (scored.filter((F.col("n_tokens") >= min_tokens)
-                          & (F.col("__bad") <= max_nonalnum_ratio))
+                          & (F.col("__bad") <= MAX_NONALNUM_RATIO))
                   .drop("__bad"))
-    keepers = kept.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return kept.join(keepers, ["fp", id_col]).select(id_col, "fp", "n_tokens")
+    keepers = kept.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
+    return kept.join(keepers, ["fp", "doc_id"]).select("doc_id", "fp", "n_tokens")
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF.
 
     tf from one tokenize+groupBy; df from a count_distinct over the same
@@ -134,25 +139,43 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
     compiles to WindowGroupLimit: partial top-k runs map-side, so the
     final sort shuffles at most k rows per document.
     """
-    toks = (docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("word"))
+    toks = (docs.select(F.col("doc_id"), F.explode(tokens("text")).alias("word"))
                 .filter(F.col("word") != ""))
-    tf = toks.groupBy(id_col, "word").agg(F.count("*").alias("tf"))
-    df_ = toks.groupBy("word").agg(F.count_distinct(id_col).alias("df"))
+    tf = toks.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    df_ = toks.groupBy("word").agg(F.count_distinct("doc_id").alias("df"))
     n = docs.select(F.count("*").alias("n_docs"))
     scored = (tf.join(df_, "word").crossJoin(F.broadcast(n))
-                .select(F.col(id_col), "word",
+                .select(F.col("doc_id"), "word",
                         F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 4)
                          .alias("tfidf")))
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("word"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("word"))
     return (scored.withColumn("rn", F.row_number().over(w))
                   .filter(F.col("rn") <= k)
-                  .select(id_col, "word", "tfidf", F.col("rn").cast("long").alias("rn")))
+                  .select("doc_id", "word", "tfidf", F.col("rn").cast("long").alias("rn")))
 
 
-def decontaminate(docs: DataFrame, contaminants: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  src_col: str = "src_id", frag_col: str = "frag",
-                  w: int = 4, n: int = 3) -> DataFrame:
+#: winnowing window and shingle width of the decontamination family;
+#: `decontaminate_bloom` must return exactly `decontaminate`'s rows
+DECON_W, DECON_N = 4, 3
+
+
+def _decon_fingerprints(docs: DataFrame,
+                        contaminants: DataFrame) -> tuple[DataFrame,
+                                                          DataFrame]:
+    """(doc_id, fp) of the corpus and (src_id, fp) of the fragments: the
+    winnowing fingerprints both decontamination forms join on."""
+    from .dedup import winnow_fingerprints
+
+    doc_fp = winnow_fingerprints(docs, w=DECON_W, n=DECON_N)
+    frag_fp = (winnow_fingerprints(
+                   contaminants.select(F.col("src_id").alias("doc_id"),
+                                       F.col("frag").alias("text")),
+                   w=DECON_W, n=DECON_N)
+               .withColumnRenamed("doc_id", "src_id"))
+    return doc_fp, frag_fp
+
+
+def decontaminate(docs: DataFrame, contaminants: DataFrame) -> DataFrame:
     """Benchmark decontamination: find every document containing any
     benchmark fragment as a token-aligned contiguous run.
 
@@ -161,54 +184,43 @@ def decontaminate(docs: DataFrame, contaminants: DataFrame,
     scan per fragment. The scale path here is candidate-driven:
 
     1. winnowing fingerprints (MOSS) of corpus and fragments with shared
-       (w, n): any token-aligned match of >= w+n-1 tokens is GUARANTEED a
+       (w, n) = (``DECON_W``, ``DECON_N``): any token-aligned match of
+       >= w+n-1 tokens is GUARANTEED a
        shared selected fingerprint, so the fp equi-join produces a
        candidate superset — int64 hashes shuffle, never text;
     2. candidates verify exactly with a space-padded `contains` on the
        whitespace-normalized text (padding anchors token boundaries), the
        fragment side broadcast.
 
-    `contaminants` is (src_col, frag_col); fragments must be >= w+n-1
-    tokens or the completeness guarantee does not cover them. Output:
-    (id_col, src_col), one row per (document, fragment-source) hit —
-    including a fragment's own source document, a built-in sanity row.
+    `docs` is (doc_id, text) and `contaminants` is (src_id, frag);
+    fragments must be >= w+n-1 tokens or the completeness guarantee does
+    not cover them. Output: (doc_id, src_id), one row per (document,
+    fragment-source) hit — including a fragment's own source document, a
+    built-in sanity row.
     """
-    from .dedup import winnow_fingerprints
-
-    doc_fp = winnow_fingerprints(docs, w=w, n=n,
-                                 text_col=text_col, id_col=id_col)
-    frag_fp = (winnow_fingerprints(
-                   contaminants.select(F.col(src_col).alias(id_col),
-                                       F.col(frag_col).alias(text_col)),
-                   w=w, n=n, text_col=text_col, id_col=id_col)
-               .withColumnRenamed(id_col, src_col))
-    cand = doc_fp.join(frag_fp, "fp").select(id_col, src_col).distinct()
-    return _verify_contains(docs, contaminants, cand,
-                            id_col, text_col, src_col, frag_col)
+    doc_fp, frag_fp = _decon_fingerprints(docs, contaminants)
+    cand = doc_fp.join(frag_fp, "fp").select("doc_id", "src_id").distinct()
+    return _verify_contains(docs, contaminants, cand)
 
 
 def _verify_contains(docs: DataFrame, contaminants: DataFrame,
-                     cand: DataFrame, id_col: str, text_col: str,
-                     src_col: str, frag_col: str) -> DataFrame:
+                     cand: DataFrame) -> DataFrame:
     """Shared exact-verify tail of the decontamination family: candidate
     (doc, src) pairs re-check with a space-padded token-aligned contains
     on the whitespace-normalized text, the fragment side broadcast."""
     ntext = F.concat_ws(
-        " ", F.filter(tokens(text_col), lambda x: x != ""))
-    norm = docs.select(F.col(id_col), ntext.alias("__ntext"))
-    return (cand.join(norm, id_col)
-                .join(F.broadcast(contaminants.select(src_col, frag_col)),
-                      src_col)
+        " ", F.filter(tokens("text"), lambda x: x != ""))
+    norm = docs.select(F.col("doc_id"), ntext.alias("__ntext"))
+    return (cand.join(norm, "doc_id")
+                .join(F.broadcast(contaminants.select("src_id", "frag")),
+                      "src_id")
                 .filter(F.contains(
                     F.concat(F.lit(" "), F.col("__ntext"), F.lit(" ")),
-                    F.concat(F.lit(" "), F.col(frag_col), F.lit(" "))))
-                .select(id_col, src_col))
+                    F.concat(F.lit(" "), F.col("frag"), F.lit(" "))))
+                .select("doc_id", "src_id"))
 
 
 def decontaminate_bloom(docs: DataFrame, contaminants: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        src_col: str = "src_id", frag_col: str = "frag",
-                        w: int = 4, n: int = 3,
                         m_bits: int = 1 << 16,
                         probes: int = 2) -> DataFrame:
     """`decontaminate` with a broadcast Bloom-bitmap prefilter on the
@@ -246,15 +258,7 @@ def decontaminate_bloom(docs: DataFrame, contaminants: DataFrame,
     (~1e3 fps) keeps the false-positive rate ~1e-3; production sizing
     follows the standard m = -n*ln(p)/ln(2)^2.
     """
-    from .dedup import winnow_fingerprints
-
-    doc_fp = winnow_fingerprints(docs, w=w, n=n,
-                                 text_col=text_col, id_col=id_col)
-    frag_fp = (winnow_fingerprints(
-                   contaminants.select(F.col(src_col).alias(id_col),
-                                       F.col(frag_col).alias(text_col)),
-                   w=w, n=n, text_col=text_col, id_col=id_col)
-               .withColumnRenamed(id_col, src_col))
+    doc_fp, frag_fp = _decon_fingerprints(docs, contaminants)
 
     def _positions(fp: Column) -> list[Column]:
         return [F.pmod(F.xxhash64(fp, F.lit(i)), F.lit(m_bits))
@@ -291,18 +295,14 @@ def decontaminate_bloom(docs: DataFrame, contaminants: DataFrame,
                  .bitwiseAND(F.lit(1).cast("long")) == F.lit(1))
         hit = test if hit is None else (hit & test)
     cand_fp = (doc_fp.crossJoin(bm).filter(hit)
-                     .select(id_col, "fp"))
+                     .select("doc_id", "fp"))
 
     # (3) exact join kills Bloom false positives; result == decontaminate
-    cand = cand_fp.join(frag_fp, "fp").select(id_col, src_col).distinct()
-    return _verify_contains(docs, contaminants, cand,
-                            id_col, text_col, src_col, frag_col)
+    cand = cand_fp.join(frag_fp, "fp").select("doc_id", "src_id").distinct()
+    return _verify_contains(docs, contaminants, cand)
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     dup_token_max: float = 0.5,
-                     top_bigram_max: float = 0.2) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Within-document repetition signals (the Gopher-rules quality
     filter family): duplicate-token fraction and top-bigram share, plus
     the combined `repetitive` flag at the given thresholds.
@@ -316,12 +316,12 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
     the operator streams at corpus scale (the O(n^2)-per-row pure-expr
     alternative would not).
     """
-    toks = F.filter(tokens(text_col), lambda x: x != "")
+    toks = F.filter(tokens("text"), lambda x: x != "")
     base = docs.select(
-        F.col(id_col), toks.alias("__toks"),
+        F.col("doc_id"), toks.alias("__toks"),
         F.size(toks).cast("bigint").alias("n_tokens"))
     stats = base.select(
-        id_col, "n_tokens",
+        "doc_id", "n_tokens",
         stable_round(
             F.when(F.col("n_tokens") > 0,
                    1.0 - F.size(F.array_distinct("__toks"))
@@ -329,37 +329,35 @@ def repetition_stats(docs: DataFrame, text_col: str = "text",
              .otherwise(0.0), 4).alias("dup_token_frac"),
         F.col("__toks").alias("__toks"))
     bg = (stats.filter(F.col("n_tokens") >= 2)
-               .select(id_col,
+               .select("doc_id",
                        F.explode(word_shingles(F.col("__toks"), 2)).alias("bg"))
-               .groupBy(id_col, "bg").agg(F.count("*").alias("c"))
-               .groupBy(id_col)
+               .groupBy("doc_id", "bg").agg(F.count("*").alias("c"))
+               .groupBy("doc_id")
                .agg(stable_round(F.max("c") / F.sum("c").cast("double"), 4)
                     .alias("top_bigram_share")))
     return (stats.drop("__toks")
-                 .join(bg, id_col, "left")
-                 .select(id_col, "n_tokens", "dup_token_frac",
+                 .join(bg, "doc_id", "left")
+                 .select("doc_id", "n_tokens", "dup_token_frac",
                          F.coalesce("top_bigram_share", F.lit(0.0))
                           .alias("top_bigram_share"))
                  .withColumn("repetitive",
-                             (F.col("dup_token_frac") > dup_token_max)
-                             | (F.col("top_bigram_share") > top_bigram_max)))
+                             (F.col("dup_token_frac") > 0.5)
+                             | (F.col("top_bigram_share") > 0.2)))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over whitespace-normalized lower-cased text.
 
     Whole-document identity. The rolling-window counterpart (hashes over
     sliding n-gram windows, winnowing-style) is the shingle-hash pipeline in
     operators/dedup.py: doc_shingle_hashes = per-window fingerprints,
     minhash_signatures = the bounded sketch over them."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    return docs.select(F.col(id_col), F.md5(norm).alias("fp"))
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    return docs.select(F.col("doc_id"), F.md5(norm).alias("fp"))
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
-                    stride: int = 48, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    stride: int = 48) -> DataFrame:
     """Context-window packing: overlapping fixed-size token chunks.
 
     The training-data step between cleaning and batching: every document
@@ -369,14 +367,14 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
     scan speed, no Python; output size is a fixed ~chunk/stride multiple
     of the input, so the operator streams at 100 TB without state.
     """
-    toks = tokens(text_col)
-    d = docs.select(F.col(id_col), toks.alias("__toks"),
+    toks = tokens("text")
+    d = docs.select(F.col("doc_id"), toks.alias("__toks"),
                     F.size(toks).alias("__n"))
     starts = F.sequence(F.lit(0), F.greatest(F.col("__n") - 1, F.lit(0)),
                         F.lit(stride))
-    return (d.select(F.col(id_col), F.col("__toks"), F.col("__n"),
+    return (d.select(F.col("doc_id"), F.col("__toks"), F.col("__n"),
                      F.posexplode(starts).alias("chunk_id", "__start"))
-             .select(F.col(id_col),
+             .select(F.col("doc_id"),
                      F.col("chunk_id").cast("long").alias("chunk_id"),
                      F.concat_ws(" ", F.slice("__toks", F.col("__start") + 1,
                                               chunk_tokens))
@@ -385,8 +383,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
                       .cast("long").alias("n_chunk_tokens")))
 
 
-def bigram_doc_stats(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def bigram_doc_stats(docs: DataFrame) -> DataFrame:
     """Corpus-frequency novelty signal per document.
 
     Builds the corpus bigram document-frequency table once (tokenize scan
@@ -398,22 +395,22 @@ def bigram_doc_stats(docs: DataFrame, text_col: str = "text",
     Shuffles carry (bigram, doc_id) pairs and the df table joins on the
     bigram key — no all-pairs stage, same shape as the TF-IDF operator.
     """
-    toks = tokens(text_col)
-    bg = (docs.select(F.col(id_col), toks.alias("__toks"))
+    toks = tokens("text")
+    bg = (docs.select(F.col("doc_id"), toks.alias("__toks"))
               .filter(F.size("__toks") >= 2)
-              .select(F.col(id_col),
+              .select(F.col("doc_id"),
                       F.explode(word_shingles(F.col("__toks"), 2)).alias("b"))
               .distinct())
-    dfreq = bg.groupBy("b").agg(F.count_distinct(id_col).alias("df"))
+    dfreq = bg.groupBy("b").agg(F.count_distinct("doc_id").alias("df"))
     per = (bg.join(dfreq, "b")
-             .groupBy(id_col)
+             .groupBy("doc_id")
              .agg(F.count("*").cast("long").alias("n_bigrams"),
                   F.sum(F.when(F.col("df") == 1, 1).otherwise(0))
                    .cast("long").alias("n_singleton"),
                   stable_round(F.avg("df"), 4).alias("avg_df")))
-    return (docs.select(F.col(id_col))
-                .join(per, id_col, "left")
-                .select(F.col(id_col),
+    return (docs.select(F.col("doc_id"))
+                .join(per, "doc_id", "left")
+                .select(F.col("doc_id"),
                         F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
                         F.coalesce("n_singleton", F.lit(0)).alias("n_singleton"),
                         F.coalesce("avg_df", F.lit(0.0)).alias("avg_df")))
@@ -433,8 +430,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII redaction for training corpora: mask emails, IPv4 addresses and
     phone-shaped digit runs, reporting per-document match counts.
 
@@ -444,8 +440,8 @@ def pii_redact(docs: DataFrame, text_col: str = "text",
     parquet scan exactly like the anonymizer (P12,
     MixAndMatchLambdaIntegrationTest.java:58-91) it generalizes.
     """
-    exprs: list = [F.col(id_col)]
-    cur = F.col(text_col)
+    exprs: list = [F.col("doc_id")]
+    cur = F.col("text")
     for name, pat, repl in PII_PATTERNS:
         exprs.append(F.regexp_count(cur, F.lit(pat)).cast("long")
                       .alias(f"n_{name}"))
@@ -454,8 +450,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text",
     return docs.select(*exprs)
 
 
-def unigram_surprisal(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def unigram_surprisal(docs: DataFrame) -> DataFrame:
     """Corpus-LM surprisal per document — the perplexity-filter family
     (CCNet-style): score each document by the mean negative log
     probability of its tokens under the corpus's own unigram model.
@@ -478,23 +473,22 @@ def unigram_surprisal(docs: DataFrame, text_col: str = "text",
     in the bigram sibling). The mean is one double division of two
     exact integers, then portable rounding at 4.
     """
-    tk = (docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("word"))
+    tk = (docs.select(F.col("doc_id"), F.explode(tokens("text")).alias("word"))
               .filter(F.col("word") != ""))
     cnt = tk.groupBy("word").agg(F.count("*").alias("c"))
     tot = cnt.agg(F.sum("c").alias("t"))
     sc = (tk.join(cnt, "word")
             .join(F.broadcast(tot), F.lit(True))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.floor(-F.log(F.col("c") / F.col("t")) * 1e6 + F.lit(0.5))
                      .cast("long").alias("s6")))
-    return sc.groupBy(id_col).agg(
+    return sc.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         stable_round(F.sum("s6").cast("double") / (F.count("*") * 1e6), 4)
             .alias("surprisal"))
 
 
 def pack_sequences(docs: DataFrame, budget: int = 256,
-                   text_col: str = "text", id_col: str = "doc_id",
                    id_bits: int = 10) -> DataFrame:
     """Cross-document token packing into fixed-budget training sequences
     — the LM dataloader step after cleaning: concatenate the corpus in
@@ -514,15 +508,14 @@ def pack_sequences(docs: DataFrame, budget: int = 256,
     (skewed ids stay correct, only less parallel). Token-less documents
     contribute nothing and are omitted from the output.
     """
-    n = F.size(F.filter(tokens(text_col), lambda x: x != ""))
-    return pack_counts(docs.select(F.col(id_col),
+    n = F.size(F.filter(tokens("text"), lambda x: x != ""))
+    return pack_counts(docs.select(F.col("doc_id"),
                                    n.cast("long").alias("__cnt")),
-                       budget=budget, id_col=id_col, n_col="__cnt",
+                       budget=budget, n_col="__cnt",
                        id_bits=id_bits)
 
 
-def pack_counts(counts: DataFrame, budget: int = 256,
-                id_col: str = "doc_id", n_col: str = "n_tokens",
+def pack_counts(counts: DataFrame, budget: int = 256, n_col: str = "n_tokens",
                 id_bits: int = 10) -> DataFrame:
     """The packer core over PRECOMPUTED per-document token counts —
     tokenizer-agnostic: `pack_sequences` feeds it whitespace counts,
@@ -531,17 +524,17 @@ def pack_counts(counts: DataFrame, budget: int = 256,
     from the scan, so counting costs the encode's expressions only).
     Same contract and range-bucketed two-phase prefix sum as
     :func:`pack_sequences` (docstring above)."""
-    d = counts.select(F.col(id_col), F.col(n_col).cast("long").alias("__n"),
-                      F.shiftright(F.col(id_col), id_bits).alias("__b"))
+    d = counts.select(F.col("doc_id"), F.col(n_col).cast("long").alias("__n"),
+                      F.shiftright(F.col("doc_id"), id_bits).alias("__b"))
     sums = d.groupBy("__b").agg(F.sum("__n").alias("__t"))
     offs = sums.select(
         "__b",
         (F.sum("__t").over(Window.orderBy("__b")) - F.col("__t")).alias("__boff"))
-    win = (Window.partitionBy("__b").orderBy(id_col)
+    win = (Window.partitionBy("__b").orderBy("doc_id")
                  .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     s = (d.withColumn("__woff", F.sum("__n").over(win) - F.col("__n"))
           .join(F.broadcast(offs), "__b")
-          .select(F.col(id_col), "__n",
+          .select(F.col("doc_id"), "__n",
                   (F.col("__boff") + F.col("__woff")).alias("__s"))
           .filter(F.col("__n") > 0))
     # integral DIV, not double division: at extreme offsets (> 2^52
@@ -552,18 +545,16 @@ def pack_counts(counts: DataFrame, budget: int = 256,
     seq_start = F.col("seq_id") * budget
     clip_lo = F.greatest(F.col("__s"), seq_start)
     clip_hi = F.least(F.col("__s") + F.col("__n"), seq_start + budget)
-    return (s.select(F.col(id_col), "__n", "__s",
+    return (s.select(F.col("doc_id"), "__n", "__s",
                      F.explode(F.sequence(first_seq, last_seq)).alias("seq_id"))
-             .select(F.col(id_col),
+             .select(F.col("doc_id"),
                      F.col("seq_id").cast("long").alias("seq_id"),
                      (clip_lo - seq_start).cast("long").alias("seq_off"),
                      (clip_lo - F.col("__s")).cast("long").alias("tok_from"),
                      (clip_hi - F.col("__s")).cast("long").alias("tok_to")))
 
 
-def bigram_surprisal(docs: DataFrame, lam: float = 0.7,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def bigram_surprisal(docs: DataFrame, lam: float = 0.7) -> DataFrame:
     """Interpolated bigram-LM surprisal per document — the step up from
     `unigram_surprisal` that actually models word ORDER: score = mean
     -ln( lam * c(w1,w2)/c(w1) + (1-lam) * c(w2)/T ) over the document's
@@ -581,19 +572,19 @@ def bigram_surprisal(docs: DataFrame, lam: float = 0.7,
     1/5000-row run-to-run flip was observed). Documents with fewer than
     two tokens report (0, 0.0).
     """
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    tk = docs.select(F.col(id_col), toks.alias("ws"))
+    toks = F.filter(tokens("text"), lambda x: x != "")
+    tk = docs.select(F.col("doc_id"), toks.alias("ws"))
     uni = (tk.select(F.explode("ws").alias("w"))
              .groupBy("w").agg(F.count("*").alias("c")))
     tot = uni.agg(F.sum("c").alias("t"))
     bg = (tk.filter(F.size("ws") >= 2)
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.explode(F.transform(
                         F.sequence(F.lit(0), F.size("ws") - 2),
                         lambda i: F.struct(F.get("ws", i).alias("w1"),
                                            F.get("ws", i + 1).alias("w2"))))
                      .alias("b"))
-            .select(id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")))
+            .select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")))
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
@@ -601,24 +592,22 @@ def bigram_surprisal(docs: DataFrame, lam: float = 0.7,
          + F.lit(1.0 - lam) * (F.col("c2") / F.col("t")))
     sc = (bg.join(c12, ["w1", "w2"]).join(u1, "w1").join(u2, "w2")
             .join(F.broadcast(tot), F.lit(True))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.floor(-F.log(p) * 1e6 + F.lit(0.5))
                      .cast("long").alias("s6")))
-    agg = sc.groupBy(id_col).agg(
+    agg = sc.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_bigrams"),
         stable_round(F.sum("s6").cast("double") / (F.count("*") * 1e6), 4)
             .alias("surprisal"))
-    return (docs.select(F.col(id_col)).join(agg, id_col, "left")
-                .select(F.col(id_col),
+    return (docs.select(F.col("doc_id")).join(agg, "doc_id", "left")
+                .select(F.col("doc_id"),
                         F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
                         F.coalesce("surprisal", F.lit(0.0)).alias("surprisal")))
 
 
 def dsir_score(docs: DataFrame, target_sources: Sequence[str] = (
                    "src0", "src1", "src2", "src3", "src4"),
-               buckets: int = 4096, text_col: str = "text",
-               id_col: str = "doc_id",
-               group_col: str = "source") -> DataFrame:
+               buckets: int = 4096) -> DataFrame:
     """Data Selection via Importance Resampling score (Xie et al.,
     NeurIPS'23 DSIR): per-document mean log importance ratio of a
     target-domain hashed-bigram LM over the raw-corpus LM. High score =
@@ -652,13 +641,13 @@ def dsir_score(docs: DataFrame, target_sources: Sequence[str] = (
     keyed by bucket id. Nothing shuffles but (bucket, count) and
     (doc, bucket, count) tuples.
     """
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    bg = (docs.select(F.col(id_col), F.col(group_col).alias("__g"),
+    toks = F.filter(tokens("text"), lambda x: x != "")
+    bg = (docs.select(F.col("doc_id"), F.col("source").alias("__g"),
                       toks.alias("__toks"))
               .filter(F.size("__toks") >= 2)
-              .select(F.col(id_col), "__g",
+              .select(F.col("doc_id"), "__g",
                       F.explode(word_shingles(F.col("__toks"), 2)).alias("b"))
-              .select(F.col(id_col), "__g",
+              .select(F.col("doc_id"), "__g",
                       (md5_hash64(F.col("b")) % buckets).alias("__bk")))
     tgt = [str(s) for s in target_sources]
     # ONE corpus pass (r15): the raw bigram fan-out fed two branches
@@ -672,7 +661,7 @@ def dsir_score(docs: DataFrame, target_sources: Sequence[str] = (
     # micro-nat value by __c — order-exact integer sums either way, so
     # every emitted value is bit-identical to the occurrence-stream
     # form.
-    dbk = (bg.groupBy(id_col, "__g", "__bk")
+    dbk = (bg.groupBy("doc_id", "__g", "__bk")
              .agg(F.count("*").alias("__c"))
              .localCheckpoint(eager=False))
     per_bucket = (dbk.groupBy("__bk")
@@ -691,14 +680,14 @@ def dsir_score(docs: DataFrame, target_sources: Sequence[str] = (
                             F.floor(F.log(ratio) * 1e6 + F.lit(0.5))
                              .cast("long").alias("__s6")))
     per_doc = (dbk.join(F.broadcast(lr), "__bk")
-                  .groupBy(id_col)
+                  .groupBy("doc_id")
                   .agg(F.sum("__c").cast("long").alias("n_bigrams"),
                        stable_round(F.sum(F.col("__c") * F.col("__s6"))
                                      .cast("double")
                                     / (F.sum("__c") * 1e6), 4).alias("dsir")))
-    return (docs.select(F.col(id_col))
-                .join(per_doc, id_col, "left")
-                .select(F.col(id_col),
+    return (docs.select(F.col("doc_id"))
+                .join(per_doc, "doc_id", "left")
+                .select(F.col("doc_id"),
                         F.coalesce("n_bigrams", F.lit(0)).cast("long")
                          .alias("n_bigrams"),
                         F.coalesce("dsir", F.lit(0.0)).alias("dsir")))
@@ -710,10 +699,7 @@ def dsir_score(docs: DataFrame, target_sources: Sequence[str] = (
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_rules(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", words_per_line: int = 12,
-                 min_words: int = 50, max_words: int = 100_000,
-                 keep_text: bool = False,
+def gopher_rules(docs: DataFrame, min_words: int = 50, keep_text: bool = False,
                  min_stopwords: int = 2) -> DataFrame:
     """Gopher quality-filter rule battery (Rae et al. 2021, A1.1) — the
     published heuristic gate every large text-corpus build runs before
@@ -730,7 +716,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
     The fixture corpus is single-line prose with no bullets or ellipses,
     so—like pii_redact's deterministic PII injection—the line-level rules
     are exercised against a derived line structure: tokens wrap every
-    ``words_per_line`` words, and line i of document d is prefixed with a
+    ``WORDS_PER_LINE`` words, and line i of document d is prefixed with a
     "- " bullet when (d + i) % 7 == 0 and suffixed with "..." when
     (d + i) % 5 == 0, identically in the oracle. The rule predicates
     themselves (startswith/endswith/regexp-count over the line strings)
@@ -744,8 +730,8 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
     # exact twin of the former Column expression: D-suffixed double
     # literals, same operand order, same type coercions — the resolved
     # plan is identical (oracle-pinned for gopher_rules/ingest_funnel).
-    i, t = f"`{id_col}`", f"`{text_col}`"
-    wpl = int(words_per_line)
+    i, t = "`doc_id`", "`text`"
+    wpl = WORDS_PER_LINE
     d = docs.selectExpr(
         i, t,
         rf"filter(split(lower({t}), '\\s+'), x -> x != '') AS __ws")
@@ -802,7 +788,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
     # rule's threshold inside the hash-checked surface)
     rules = {
         "rule_word_count":
-            f"n_words BETWEEN {int(min_words)} AND {int(max_words)}",
+            f"n_words BETWEEN {int(min_words)} AND 100000",
         "rule_word_len": "mean_word_len BETWEEN 3.0D AND 10.0D",
         "rule_symbols": "symbol_ratio <= 0.1D",
         "rule_bullets": "frac_bullet_lines <= 0.9D",
@@ -816,25 +802,22 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
         f"{kept} AS kept")
 
 
-def derived_lines(ws: Column, words_per_line: int = 12) -> Column:
+def derived_lines(ws: Column) -> Column:
     """The fixture's deterministic line structure (single-line corpus;
-    the gopher_rules precedent): tokens wrap every ``words_per_line``
+    the gopher_rules precedent): tokens wrap every ``WORDS_PER_LINE``
     words. Unlike gopher's decorated variant, lines carry no
     document-dependent prefix, so identical word runs in different
     documents produce identical lines — the property cross-document
     line dedup needs. A real multi-line corpus would split on
     newlines instead; everything downstream is unchanged."""
-    wpl = words_per_line
+    wpl = WORDS_PER_LINE
     n_lines = F.greatest(F.ceil(F.size(ws) / wpl), F.lit(1)).cast("int")
     return F.transform(
         F.sequence(F.lit(0), n_lines - 1),
         lambda i: F.concat_ws(" ", F.slice(ws, i * wpl + 1, wpl)))
 
 
-def apply_line_filter_chained(docs: DataFrame, codec: DataFrame,
-                              words_per_line: int = 12,
-                              text_col: str = "text",
-                              id_col: str = "doc_id") -> DataFrame:
+def apply_line_filter_chained(docs: DataFrame, codec: DataFrame) -> DataFrame:
     """:func:`apply_line_filter` as a CHAINABLE transform: (n_lines,
     n_kept, clean_text) APPENDED to the input row instead of selected
     out, so the ingest chain threads upstream flags through without a
@@ -843,8 +826,8 @@ def apply_line_filter_chained(docs: DataFrame, codec: DataFrame,
     # r15: TWO selectExpr parses (SQL twins of the former Column trees —
     # same duplication of the ws/kept subtrees, same coercions;
     # construction is py4j-round-trip-bound, guide §7.3)
-    wpl = int(words_per_line)
-    ws = (rf"filter(split(lower(coalesce(`{text_col}`, '')), '\\s+'), "
+    wpl = WORDS_PER_LINE
+    ws = (rf"filter(split(lower(coalesce(`text`, '')), '\\s+'), "
           r"x -> x != '')")
     d = (docs.join(F.broadcast(codec), F.lit(True), "left")
              .selectExpr(
@@ -864,9 +847,7 @@ def apply_line_filter_chained(docs: DataFrame, codec: DataFrame,
              .drop("__bl", "__lines"))
 
 
-def line_dedup(docs: DataFrame, min_docs: int = 2,
-               words_per_line: int = 12, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def line_dedup(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Cross-document duplicate-line removal — the RefinedWeb / CCNet
     boilerplate pass (Penedo et al. 2023 §3.2 run it corpus-wide before
     fuzzy dedup): any line appearing in >= ``min_docs`` DISTINCT
@@ -885,9 +866,9 @@ def line_dedup(docs: DataFrame, min_docs: int = 2,
     lines (~n^2/2^61); the same documented trade as the shingle
     pipeline.
     """
-    ws = F.filter(tokens(text_col), lambda x: x != "")
-    ex = (docs.select(F.col(id_col).alias("doc_id"),
-                      F.posexplode(derived_lines(ws, words_per_line))
+    ws = F.filter(tokens("text"), lambda x: x != "")
+    ex = (docs.select(F.col("doc_id"),
+                      F.posexplode(derived_lines(ws))
                        .alias("idx", "line"))
               .withColumn("h", md5_hash64(F.col("line"))))
     dup = (ex.groupBy("h")
@@ -912,9 +893,6 @@ def line_dedup(docs: DataFrame, min_docs: int = 2,
 
 def nb_quality(docs: DataFrame, target_sources: Sequence[str] = (
                    "src0", "src1", "src2", "src3", "src4"),
-               holdout_mod: int = 5, text_col: str = "text",
-               id_col: str = "doc_id",
-               group_col: str = "source",
                n_buckets: int | None = None) -> DataFrame:
     """Model-based quality filter, the fastText/DCLM classifier tier
     (DCLM, Li et al. 2024; FineWeb-Edu is the same shape): train a
@@ -926,7 +904,7 @@ def nb_quality(docs: DataFrame, target_sources: Sequence[str] = (
     multinomial Naive Bayes log-odds over word-BIGRAM counts (the
     dsir_score feature convention — the fixture's dialect axis is word
     order, not unigram choice), trained only on the ~80% split
-    (doc_id % holdout_mod != 0) and scored over EVERY document. Output
+    (doc_id % 5 != 0) and scored over EVERY document. Output
     per document: (doc_id, is_train, is_target, score, pred_target).
 
     Fixture realism: the synthetic corpus draws every source from the
@@ -957,8 +935,7 @@ def nb_quality(docs: DataFrame, target_sources: Sequence[str] = (
     vocabulary-sized model table (persist it; scoring new corpora then
     never touches the train corpus).
     """
-    base, tk = _nb_base_tk(docs, target_sources, holdout_mod,
-                           text_col, id_col, group_col, n_buckets)
+    base, tk = _nb_base_tk(docs, target_sources, n_buckets)
     weights, pri = _nb_weights(base, tk)
     dsum = (tk.join(weights, "word", "left")
               .groupBy("doc_id")
@@ -988,8 +965,6 @@ def nb_bucket(word, n_buckets: int):
 
 
 def _nb_base_tk(docs: DataFrame, target_sources: Sequence[str],
-                holdout_mod: int, text_col: str, id_col: str,
-                group_col: str,
                 n_buckets: int | None = None) -> tuple[DataFrame,
                                                        DataFrame]:
     """Shared labeled-corpus prep: (base doc table with is_train /
@@ -1002,14 +977,14 @@ def _nb_base_tk(docs: DataFrame, target_sources: Sequence[str],
     # r15: built as THREE selectExpr parses (SQL twins of the former
     # Column trees; construction is py4j-round-trip-bound, guide §7.3)
     tgt_sql = ", ".join(f"'{s}'" for s in tgt)
-    base = (docs.selectExpr(f"`{id_col}` AS doc_id",
-                            f"`{text_col}` AS __text",
-                            f"`{group_col}` AS __g")
+    base = (docs.selectExpr("doc_id",
+                            "`text` AS __text",
+                            "`source` AS __g")
                 .selectExpr(
                     "*",
                     r"filter(split(lower(__text), '\\s+'), "
                     r"x -> x != '') AS __ws",
-                    f"(doc_id % {int(holdout_mod)}) != 0 AS is_train",
+                    "(doc_id % 5) != 0 AS is_train",
                     f"__g IN ({tgt_sql}) AS is_target"))
     tk = (base.filter(F.size("__ws") >= 2)
               .selectExpr(
@@ -1058,12 +1033,7 @@ def _nb_weights(base: DataFrame, tk: DataFrame) -> tuple[DataFrame, DataFrame]:
     return weights, pri
 
 
-def nb_model(docs: DataFrame, target_sources: Sequence[str] = (
-                 "src0", "src1", "src2", "src3", "src4"),
-             holdout_mod: int = 5, text_col: str = "text",
-             id_col: str = "doc_id",
-             group_col: str = "source",
-             n_buckets: int | None = None) -> DataFrame:
+def nb_model(docs: DataFrame, n_buckets: int | None = None) -> DataFrame:
     """Train :func:`nb_quality`'s model and fold it into the 1-row
     broadcastable codec (__w: map<bigram, w6>, p6) — the bpe_codec /
     unigram_codec shape. This is the artifact a 100 TB deployment
@@ -1075,16 +1045,12 @@ def nb_model(docs: DataFrame, target_sources: Sequence[str] = (
     the model in TABLE form (:func:`nb_weights_table`) and scores
     through :func:`apply_nb_table`'s feature-keyed join; :func:`score_nb`
     picks per measured model size."""
-    weights, pri = nb_weights_table(docs, target_sources, holdout_mod,
-                                    text_col, id_col, group_col, n_buckets)
+    weights, pri = nb_weights_table(docs, n_buckets=n_buckets)
     return fold_nb_codec(weights, pri)
 
 
 def nb_weights_table(docs: DataFrame, target_sources: Sequence[str] = (
                          "src0", "src1", "src2", "src3", "src4"),
-                     holdout_mod: int = 5, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     group_col: str = "source",
                      n_buckets: int | None = None) -> tuple[DataFrame,
                                                             DataFrame]:
     """Train :func:`nb_quality`'s model and return it in TABLE form:
@@ -1093,8 +1059,7 @@ def nb_weights_table(docs: DataFrame, target_sources: Sequence[str] = (
     (a web-scale bigram vocabulary): keep ``weights`` as a parquet
     table and score through :func:`apply_nb_table`'s feature-keyed
     join instead of folding into :func:`nb_model`'s 1-row map."""
-    base, tk = _nb_base_tk(docs, target_sources, holdout_mod,
-                           text_col, id_col, group_col, n_buckets)
+    base, tk = _nb_base_tk(docs, target_sources, n_buckets)
     return _nb_weights(base, tk)
 
 
@@ -1107,8 +1072,7 @@ def fold_nb_codec(weights: DataFrame, pri: DataFrame) -> DataFrame:
     return wmap.join(F.broadcast(pri), F.lit(True), "left")
 
 
-def apply_nb(docs: DataFrame, model: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id",
+def apply_nb(docs: DataFrame, model: DataFrame,
              n_buckets: int | None = None) -> DataFrame:
     """Score documents under a trained :func:`nb_model`: per document
     (id, score, pred_target) — identical arithmetic to
@@ -1118,14 +1082,12 @@ def apply_nb(docs: DataFrame, model: DataFrame, text_col: str = "text",
     so it runs unmodified on a streaming DataFrame (stateless append).
     Out-of-model bigrams contribute 0, <2-token documents score the
     prior — the nb_quality contracts."""
-    return (apply_nb_chained(docs.select(F.col(id_col), F.col(text_col)),
-                             model, text_col, id_col, n_buckets)
-            .select(F.col(id_col), "score", "pred_target"))
+    return (apply_nb_chained(docs.select(F.col("doc_id"), F.col("text")),
+                             model, n_buckets=n_buckets)
+            .select(F.col("doc_id"), "score", "pred_target"))
 
 
-def apply_nb_chained(docs: DataFrame, model: DataFrame,
-                     text_col: str = "text",
-                     id_col: str = "doc_id",
+def apply_nb_chained(docs: DataFrame, model: DataFrame, text_col: str = "text",
                      n_buckets: int | None = None) -> DataFrame:
     """:func:`apply_nb` as a CHAINABLE transform: same scoring columns
     (score, pred_target) APPENDED to the input row instead of selected
@@ -1161,8 +1123,6 @@ def apply_nb_chained(docs: DataFrame, model: DataFrame,
 
 
 def apply_nb_table(docs: DataFrame, weights: DataFrame, pri: DataFrame,
-                   text_col: str = "text",
-                   id_col: str = "doc_id",
                    n_buckets: int | None = None) -> DataFrame:
     """Score documents under a TABLE-form model
     (:func:`nb_weights_table`): byte-identical output to
@@ -1175,33 +1135,31 @@ def apply_nb_table(docs: DataFrame, weights: DataFrame, pri: DataFrame,
     the broadcast budget. Out-of-model bigrams contribute 0 (left
     join), <2-token documents score the prior — the apply_nb
     contracts."""
-    ws = F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
+    ws = F.filter(tokens(F.coalesce(F.col("text"), F.lit(""))),
                   lambda x: x != "")
-    base = (docs.select(F.col(id_col))
+    base = (docs.select(F.col("doc_id"))
                 .join(F.broadcast(pri), F.lit(True), "left"))
-    tk = (docs.select(F.col(id_col), ws.alias("__ws"))
+    tk = (docs.select(F.col("doc_id"), ws.alias("__ws"))
               .filter(F.size("__ws") >= 2)
-              .select(F.col(id_col),
+              .select(F.col("doc_id"),
                       F.explode(word_shingles(F.col("__ws"), 2))
                        .alias("word")))
     if n_buckets is not None:
         tk = tk.withColumn("word", nb_bucket(F.col("word"), n_buckets))
     dsum = (tk.join(weights.hint("shuffle_hash"), "word", "left")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.sum(F.coalesce(F.col("w6"), F.lit(0))).alias("__sw")))
     s6 = F.coalesce(F.col("__sw"), F.lit(0)) + F.col("p6")
-    return (base.join(dsum, id_col, "left")
-                .select(F.col(id_col),
+    return (base.join(dsum, "doc_id", "left")
+                .select(F.col("doc_id"),
                         (F.floor(s6.cast("double") / F.lit(1e6) * F.lit(1e4)
                                  + F.lit(0.5)) / F.lit(1e4)).alias("score"),
                         (s6 > 0).alias("pred_target")))
 
 
 def score_nb(docs: DataFrame, weights: DataFrame, pri: DataFrame,
-             text_col: str = "text", id_col: str = "doc_id",
              strategy: str = "auto",
-             feature_limit: int | None = None,
-             n_buckets: int | None = None) -> DataFrame:
+             feature_limit: int | None = None) -> DataFrame:
     """Size-thresholded NB scoring dispatcher over a TABLE-form model:
     "broadcast" folds ``weights`` into the 1-row codec and scores
     scan-side (:func:`apply_nb` — zero joins, the streaming-compatible
@@ -1216,17 +1174,13 @@ def score_nb(docs: DataFrame, weights: DataFrame, pri: DataFrame,
             else feature_limit
         strategy = "broadcast" if weights.count() <= limit else "join"
     if strategy == "join":
-        return apply_nb_table(docs, weights, pri, text_col, id_col,
-                              n_buckets)
+        return apply_nb_table(docs, weights, pri)
     if strategy != "broadcast":
         raise ValueError(f"score_nb: unknown strategy {strategy!r}")
-    return apply_nb(docs, fold_nb_codec(weights, pri), text_col, id_col,
-                    n_buckets)
+    return apply_nb(docs, fold_nb_codec(weights, pri))
 
 
-def boiler_codec(docs: DataFrame, min_docs: int = 2,
-                 words_per_line: int = 12, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def boiler_codec(docs: DataFrame) -> DataFrame:
     """Detect boilerplate lines (the :func:`line_dedup` hash-keyed
     count-distinct) and fold the offending line-hash set into a 1-row
     broadcastable codec (__bl: map<hash, true>) — the nb_model /
@@ -1235,11 +1189,11 @@ def boiler_codec(docs: DataFrame, min_docs: int = 2,
     a Bloom filter, the same bounded-state note as nb_model."""
     # r15: ONE selectExpr parse for the explode+hash pipeline (SQL twin
     # of the former Column tree; construction is py4j-bound, guide §7.3)
-    wpl = int(words_per_line)
-    ws = (rf"filter(split(lower(`{text_col}`), '\\s+'), "
+    wpl = WORDS_PER_LINE
+    ws = (rf"filter(split(lower(`text`), '\\s+'), "
           r"x -> x != '')")
     ex = docs.selectExpr(
-        f"`{id_col}` AS doc_id",
+        "doc_id",
         f"explode(transform(sequence(0, CAST(greatest(ceil(size({ws})"
         f" / {wpl}), 1) AS INT) - 1), "
         f"i -> concat_ws(' ', slice({ws}, i * {wpl} + 1, {wpl}))))"
@@ -1249,14 +1203,12 @@ def boiler_codec(docs: DataFrame, min_docs: int = 2,
                     "AS BIGINT) AS h")
     dup = (ex.groupBy("h")
              .agg(F.count_distinct("doc_id").alias("__nd"))
-             .filter(F.col("__nd") >= min_docs))
+             .filter(F.col("__nd") >= 2))
     return dup.agg(F.map_from_entries(F.collect_list(
         F.struct(F.col("h"), F.lit(True)))).alias("__bl"))
 
 
-def apply_line_filter(docs: DataFrame, codec: DataFrame,
-                      words_per_line: int = 12, text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def apply_line_filter(docs: DataFrame, codec: DataFrame) -> DataFrame:
     """Cut known boilerplate lines from documents using a
     :func:`boiler_codec` — same output contract as :func:`line_dedup`
     (doc_id, n_lines, n_kept, clean_text; equality pinned by
@@ -1269,15 +1221,13 @@ def apply_line_filter(docs: DataFrame, codec: DataFrame,
     :func:`apply_line_filter_chained` (this form selects the
     line_dedup contract columns out)."""
     return (apply_line_filter_chained(
-                docs.select(F.col(id_col), F.col(text_col)),
-                codec, words_per_line, text_col, id_col)
-            .select(F.col(id_col).alias("doc_id"),
+                docs.select(F.col("doc_id"), F.col("text")),
+                codec)
+            .select(F.col("doc_id"),
                     "n_lines", "n_kept", "clean_text"))
 
 
-def corpus_report(docs: DataFrame, min_words: int = 50,
-                  words_per_line: int = 12, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def corpus_report(docs: DataFrame) -> DataFrame:
     """The corpus datasheet — the (metric, value) summary every corpus
     release publishes (the Datasheets-for-Datasets / data-card shape)
     and the first sanity gate a 100 TB build re-runs after each
@@ -1297,9 +1247,9 @@ def corpus_report(docs: DataFrame, min_words: int = 50,
     corpus (the per-doc ratios divide by the document count; an empty
     release has no datasheet to publish).
     """
-    ws = F.filter(tokens(text_col), lambda x: x != "")
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    base = (docs.select(F.col(id_col).alias("doc_id"),
+    ws = F.filter(tokens("text"), lambda x: x != "")
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    base = (docs.select(F.col("doc_id").alias("doc_id"),
                         F.col("lang"), F.col("source"),
                         F.md5(norm).alias("__fp"),
                         ws.alias("__ws"))
@@ -1315,15 +1265,14 @@ def corpus_report(docs: DataFrame, min_words: int = 50,
          .alias("mean_doc_tokens"),
         (F.lit(1.0) - F.count_distinct("__fp").cast("double")
          / F.count("*").cast("double")).alias("__rawdup"),
-        frac(F.col("__n") >= min_words).alias("wordgate_pass_rate"),
+        frac(F.col("__n") >= 50).alias("wordgate_pass_rate"),
         F.count_distinct("source").cast("double").alias("n_sources"),
     ).withColumn("exact_dup_rate",
                  stable_round(F.col("__rawdup"), 6)).drop("__rawdup")
     m2 = (base.select(F.explode("__ws").alias("w"))
               .agg(F.count_distinct("w").cast("double")
                     .alias("distinct_words")))
-    ld = (line_dedup(docs, min_docs=2, words_per_line=words_per_line,
-                     text_col=text_col, id_col=id_col)
+    ld = (line_dedup(docs)
           .agg(stable_round(
               F.lit(1.0) - F.sum("n_kept").cast("double")
               / F.sum("n_lines").cast("double"), 6)
@@ -1351,9 +1300,6 @@ def corpus_report(docs: DataFrame, min_words: int = 50,
 
 
 def kn_ngram_surprisal(docs: DataFrame, order: int = 2,
-                       discount: float = 0.75, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       count_alias: str | None = None,
                        prune: int = 0) -> DataFrame:
     """Interpolated Kneser-Ney surprisal per document at ANY n-gram
     ``order`` — the generalized production perplexity-filter tier
@@ -1426,19 +1372,17 @@ def kn_ngram_surprisal(docs: DataFrame, order: int = 2,
     jt = "left" if pruned else "inner"
     n = order
     cols = [f"w{i}" for i in range(1, n + 1)]
-    if count_alias is None:
-        count_alias = {2: "n_bigrams", 3: "n_trigrams"}.get(
-            n, f"n_{n}grams")
-    toks = F.filter(tokens(text_col), lambda x: x != "")
-    tk = docs.select(F.col(id_col), toks.alias("ws"))
+    count_alias = {2: "n_bigrams", 3: "n_trigrams"}.get(n, f"n_{n}grams")
+    toks = F.filter(tokens("text"), lambda x: x != "")
+    tk = docs.select(F.col("doc_id"), toks.alias("ws"))
     tg = (tk.filter(F.size("ws") >= n)
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.explode(F.transform(
                         F.sequence(F.lit(0), F.size("ws") - n),
                         lambda i: F.struct(*[
                             F.get("ws", i + j).alias(cols[j])
                             for j in range(n)]))).alias("g"))
-            .select(id_col, *[F.col(f"g.{c}").alias(c) for c in cols]))
+            .select("doc_id", *[F.col(f"g.{c}").alias(c) for c in cols]))
     # At orders >= 4 the type tables are CORPUS-scale by construction
     # (V^n far exceeds observed n-grams, so |types| ~ |occurrences|)
     # and must never be broadcast — Catalyst's post-aggregate size
@@ -1485,7 +1429,7 @@ def kn_ngram_surprisal(docs: DataFrame, order: int = 2,
                   .join(_scale_side(ctx[m]), gcols[:-1], jt))
     enr = enr.join(_scale_side(bk), cols[-1], jt) \
              .join(F.broadcast(tt), F.lit(True))
-    d = F.lit(discount)
+    d = F.lit(KN_DISCOUNT)
     if pruned:
         p = (F.coalesce(F.col("n1b"), F.lit(1)).cast("double")
              / F.greatest(F.col("t"), F.lit(1)).cast("double"))
@@ -1509,21 +1453,20 @@ def kn_ngram_surprisal(docs: DataFrame, order: int = 2,
     enr = enr.select(*cols, F.floor(-F.log(p) * 1e6 + F.lit(0.5))
                             .cast("long").alias("s6"))
     agg = (tg.join(_scale_side(enr), cols)
-             .groupBy(id_col)
+             .groupBy("doc_id")
              .agg(F.count("*").cast("long").alias(count_alias),
                   stable_round(F.sum("s6").cast("double")
                                / (F.count("*") * 1e6), 4)
                    .alias("surprisal")))
-    return (docs.select(F.col(id_col)).join(agg, id_col, "left")
-                .select(F.col(id_col),
+    return (docs.select(F.col("doc_id")).join(agg, "doc_id", "left")
+                .select(F.col("doc_id"),
                         F.coalesce(count_alias, F.lit(0))
                          .alias(count_alias),
                         F.coalesce("surprisal", F.lit(0.0))
                          .alias("surprisal")))
 
 
-def kn_surprisal(docs: DataFrame, discount: float = 0.75,
-                 text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def kn_surprisal(docs: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney bigram surprisal per document — the
     production perplexity-filter tier (CCNet's filter is a KN-smoothed
     KenLM; :func:`bigram_surprisal` is the plain-MLE-interpolation
@@ -1540,12 +1483,10 @@ def kn_surprisal(docs: DataFrame, discount: float = 0.75,
     raw-frequency smoothing. Order 2 of
     :func:`kn_ngram_surprisal` (r13: the per-order derivation is one
     parameterized step; output byte-identical, parity re-run)."""
-    return kn_ngram_surprisal(docs, 2, discount, text_col, id_col)
+    return kn_ngram_surprisal(docs, 2)
 
 
-def kn3_surprisal(docs: DataFrame, discount: float = 0.75,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def kn3_surprisal(docs: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney TRIGRAM surprisal per document — the
     KenLM-order step above :func:`kn_surprisal` (CCNet's production
     filter is a 5-gram KN model; order 3 exercises the full RECURSIVE
@@ -1574,13 +1515,10 @@ def kn3_surprisal(docs: DataFrame, discount: float = 0.75,
     measured enrich-first probe-once plan note lives there; output
     byte-identical, parity re-run).
     """
-    return kn_ngram_surprisal(docs, 3, discount, text_col, id_col)
+    return kn_ngram_surprisal(docs, 3)
 
 
 def ingest_chain(docs: DataFrame, boiler: DataFrame, model: DataFrame,
-                 words_per_line: int = 12, text_col: str = "text",
-                 id_col: str = "doc_id", min_words: int = 25,
-                 min_stopwords: int = 1,
                  n_buckets: int | None = None) -> DataFrame:
     """The composed stateless half of the ingest path — arrive ->
     Gopher gate -> boilerplate line filter -> NB quality filter — as
@@ -1594,31 +1532,18 @@ def ingest_chain(docs: DataFrame, boiler: DataFrame, model: DataFrame,
     self-joins and zero shuffles and the identical chain runs
     unmodified on a streaming DataFrame
     (streaming/pipelines.py:streaming_ingest_funnel)."""
-    if text_col == "clean_text":
-        # the NB stage is hardcoded to score the line filter's
-        # 'clean_text' output; a source column of that name would be
-        # dropped mid-chain and silently mis-scored (ADVICE r12)
-        raise ValueError("ingest_chain reserves 'clean_text' for the "
-                         "line filter's output; rename the source "
-                         "text column before chaining")
-    g = (gopher_rules(docs, text_col, id_col, words_per_line,
-                      min_words=min_words, keep_text=True,
-                      min_stopwords=min_stopwords)
-         .select(F.col(id_col), F.col(text_col),
+    g = (gopher_rules(docs, min_words=25, keep_text=True, min_stopwords=1)
+         .select(F.col("doc_id"), F.col("text"),
                  F.col("kept").alias("g_gopher")))
-    lf = apply_line_filter_chained(g, boiler, words_per_line,
-                                   text_col, id_col)
-    nb = apply_nb_chained(lf.drop(text_col), model,
-                          text_col="clean_text", id_col=id_col,
+    lf = apply_line_filter_chained(g, boiler)
+    nb = apply_nb_chained(lf.drop("text"), model, text_col="clean_text",
                           n_buckets=n_buckets)
-    return nb.select(F.col(id_col), "g_gopher", "n_lines", "n_kept",
+    return nb.select(F.col("doc_id"), "g_gopher", "n_lines", "n_kept",
                      "clean_text", "score", "pred_target")
 
 
 def ingest_gate_flags(arriving: DataFrame, existing: DataFrame,
-                      tau: float = 3.0, words_per_line: int = 12,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+                      tau: float = 3.0) -> DataFrame:
     """Per-arriving-document verdicts of the FULL ingest path: the
     stateless :func:`ingest_chain` (gopher -> line filter -> NB, all
     artifacts trained offline on the EXISTING corpus) plus the BM25
@@ -1634,9 +1559,8 @@ def ingest_gate_flags(arriving: DataFrame, existing: DataFrame,
     its own derived hit stream, so the streaming form emits hit events
     alongside the chain (streaming_ingest_funnel) and the store-side
     batch does this set difference — exactly this function's shape."""
-    boiler = boiler_codec(existing, words_per_line=words_per_line,
-                          text_col=text_col, id_col=id_col)
-    model = nb_model(existing, text_col=text_col, id_col=id_col)
+    boiler = boiler_codec(existing)
+    model = nb_model(existing)
     # keep_denom=None: the arriving batch scales WITH the corpus, so
     # the gate's per-term candidate bound must be the fixed r_floor —
     # a fractional bound makes gate work O(n^2) (pruned_postings doc;
@@ -1646,17 +1570,12 @@ def ingest_gate_flags(arriving: DataFrame, existing: DataFrame,
     # for stateless streaming and were 8 of this plan's 16 corpus
     # scans (r15; bm25_gate_batch scores both shapes identically).
     from .retrieval import bm25_gate_postings
-    index = bm25_gate_postings(existing, r_floor=128, keep_denom=None,
-                               text_col=text_col, id_col=id_col)
-    return _gate_flags_with(arriving, boiler, model, index, tau,
-                            words_per_line, text_col, id_col)
+    index = bm25_gate_postings(existing, r_floor=128, keep_denom=None)
+    return _gate_flags_with(arriving, boiler, model, index, tau)
 
 
-def _gate_flags_with(arriving: DataFrame, boiler: DataFrame,
-                     model: DataFrame, index: DataFrame,
-                     tau: float = 3.0, words_per_line: int = 12,
-                     text_col: str = "text",
-                     id_col: str = "doc_id",
+def _gate_flags_with(arriving: DataFrame, boiler: DataFrame, model: DataFrame,
+                     index: DataFrame, tau: float = 3.0,
                      n_buckets: int | None = None) -> DataFrame:
     """The gate composition shared by the inline (train-then-gate,
     :func:`ingest_gate_flags`) and persisted (serve-from-disk,
@@ -1677,16 +1596,14 @@ def _gate_flags_with(arriving: DataFrame, boiler: DataFrame,
       otherwise re-run the whole expression battery once per consumer
       (no ReuseExchange point; measured 2x the 1.7s chain cost)."""
     from .retrieval import bm25_gate_batch
-    chain = ingest_chain(arriving, boiler, model, words_per_line,
-                         text_col, id_col, n_buckets=n_buckets) \
+    chain = ingest_chain(arriving, boiler, model, n_buckets=n_buckets) \
         .localCheckpoint(eager=False)
-    hits = (bm25_gate_batch(chain.select(F.col(id_col), "clean_text"),
-                            index, tau, text_col="clean_text",
-                            id_col=id_col)
-            .select(F.col("new_id").alias(id_col)).distinct()
+    hits = (bm25_gate_batch(chain.select(F.col("doc_id"), "clean_text"),
+                            index, tau, text_col="clean_text")
+            .select(F.col("new_id").alias("doc_id")).distinct()
             .withColumn("__hit", F.lit(True)))
-    return (chain.join(hits, id_col, "left")
-                 .select(F.col(id_col),
+    return (chain.join(hits, "doc_id", "left")
+                 .select(F.col("doc_id"),
                          "g_gopher",
                          (F.col("n_kept") > 0).alias("g_line"),
                          F.col("pred_target").alias("g_nb"),
@@ -1694,9 +1611,6 @@ def _gate_flags_with(arriving: DataFrame, boiler: DataFrame,
 
 
 def build_ingest_artifacts(existing: DataFrame, path: str,
-                           words_per_line: int = 12, r_floor: int = 128,
-                           text_col: str = "text",
-                           id_col: str = "doc_id",
                            n_buckets: int | None = None) -> None:
     """Train and PERSIST the ingest path's three offline artifacts
     (the :func:`retrieval.build_bm25_index` write-once precedent,
@@ -1720,23 +1634,18 @@ def build_ingest_artifacts(existing: DataFrame, path: str,
     existing.sparkSession.createDataFrame(
         [(n_buckets,)], "n_buckets int") \
         .write.mode("overwrite").parquet(f"{path}/meta")
-    boiler_codec(existing, words_per_line=words_per_line,
-                 text_col=text_col, id_col=id_col)         .write.mode("overwrite").parquet(f"{path}/boiler")
-    weights, pri = nb_weights_table(existing, text_col=text_col,
-                                    id_col=id_col, n_buckets=n_buckets)
+    boiler_codec(existing).write.mode("overwrite").parquet(f"{path}/boiler")
+    weights, pri = nb_weights_table(existing, n_buckets=n_buckets)
     weights.write.mode("overwrite").parquet(f"{path}/nb_weights")
     pri.write.mode("overwrite").parquet(f"{path}/nb_prior")
-    (bm25_gate_index(existing, r_floor=r_floor, keep_denom=None,
-                     text_col=text_col, id_col=id_col)
+    (bm25_gate_index(existing, r_floor=128, keep_denom=None)
         .withColumn("wb", _wb(F.col("word")))
         .write.mode("overwrite").partitionBy("wb")
         .parquet(f"{path}/gate_index"))
 
 
 def ingest_gate_flags_from(spark, path: str, arriving: DataFrame,
-                           tau: float = 3.0, words_per_line: int = 12,
-                           text_col: str = "text",
-                           id_col: str = "doc_id",
+                           tau: float = 3.0,
                            n_buckets: int | None = None) -> DataFrame:
     """:func:`ingest_gate_flags` served from a persisted
     :func:`build_ingest_artifacts` directory: identical verdicts
@@ -1758,7 +1667,6 @@ def ingest_gate_flags_from(spark, path: str, arriving: DataFrame,
     boiler, model, index, n_buckets = load_ingest_artifacts(
         spark, path, n_buckets=n_buckets)
     return _gate_flags_with(arriving, boiler, model, index, tau,
-                            words_per_line, text_col, id_col,
                             n_buckets=n_buckets)
 
 
@@ -1818,9 +1726,7 @@ def _funnel_agg(flags: DataFrame) -> DataFrame:
 
 
 def ingest_funnel_from(spark, path: str, arriving: DataFrame,
-                       tau: float = 3.0, words_per_line: int = 12,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+                       tau: float = 3.0) -> DataFrame:
     """:func:`ingest_funnel` served from persisted artifacts — the
     per-batch production form (train once per corpus window, serve
     many batches); row-for-row equal to the inline funnel over the
@@ -1829,19 +1735,15 @@ def ingest_funnel_from(spark, path: str, arriving: DataFrame,
     artifact served unhashed would silently report wrong n_nb /
     n_admitted counts)."""
     return _funnel_agg(ingest_gate_flags_from(
-        spark, path, arriving, tau, words_per_line, text_col, id_col))
+        spark, path, arriving, tau))
 
 
 def ingest_funnel(arriving: DataFrame, existing: DataFrame,
-                  tau: float = 3.0, words_per_line: int = 12,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+                  tau: float = 3.0) -> DataFrame:
     """The ingest-path yield report (the pipeline_funnel counting shape
     over the COMPOSED gates): survivor counts through arrive ->
     gopher -> line filter (document not reduced to nothing) -> NB
     filter -> BM25 admission, as one conditional aggregate over
     :func:`ingest_gate_flags`. The first row a 100 TB ingest
     deployment reads after every batch window."""
-    return _funnel_agg(ingest_gate_flags(arriving, existing, tau,
-                                         words_per_line, text_col,
-                                         id_col))
+    return _funnel_agg(ingest_gate_flags(arriving, existing, tau))

@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 def top_k_per_group(df: DataFrame,
                     group_cols: Sequence[str],
                     order_by: Sequence[Column],
-                    k: int,
-                    rank_col: str = "rnk") -> DataFrame:
+                    k: int) -> DataFrame:
     """Keep the top-k rows per group under a total order.
 
     order_by must be a deterministic total order (include a unique
@@ -29,5 +28,5 @@ def top_k_per_group(df: DataFrame,
     (plays desc, then song id asc).
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
-    return (df.withColumn(rank_col, F.row_number().over(w))
-              .filter(F.col(rank_col) <= k))
+    return (df.withColumn("rnk", F.row_number().over(w))
+              .filter(F.col("rnk") <= k))

@@ -93,9 +93,7 @@ def seed_pieces(docs: DataFrame, keep: int = 40, max_len: int = 4,
     return singles.unionAll(multis)
 
 
-def _viterbi_dp(max_len: int,
-                cols: tuple[str, str, str] = ("word", "__cnt", "__tot")
-                ) -> Column:
+def _viterbi_dp(max_len: int) -> Column:
     """The DP table as an array<struct<c:double, bp:int>> column —
     dp[i+1] = (best probability of segmenting word[0:i], backpointer).
     A codegen'd F.aggregate over positions; each step examines at most
@@ -109,11 +107,8 @@ def _viterbi_dp(max_len: int,
     the encode word table). The SQL text mirrors the Column version
     token for token (same candidate duplication inside the CASE chain,
     same literals and casts), so the parsed tree — and therefore every
-    value — is unchanged; ``cols`` names the word/count-map/total
-    columns the expression references (r15: the historical Column
-    arguments were dropped — the SQL form never read them, so a caller
-    passing other columns would have silently computed the DP over
-    ``cols``; now the signature can't invite that).
+    value — is unchanged. The expression reads the columns ``word``,
+    ``__cnt`` and ``__tot`` by name.
 
     The strictly-greater k=max_len..1 when-chain is equivalently the
     lexicographic MAXIMUM over candidate structs (c, k, bp) — equal
@@ -129,7 +124,7 @@ def _viterbi_dp(max_len: int,
     linear in max_len. The DP structs carry the extra ``k`` field —
     dp is an intermediate column dropped before any output, and both
     consumers (.c here, .bp in _backtrack) access fields by name."""
-    w, cm, tt = cols
+    w, cm, tt = "word", "__cnt", "__tot"
     structs = ["named_struct('c', CAST(-1.0 AS DOUBLE), 'k', -1, 'bp', -1)"]
     for k in range(max_len, 0, -1):
         fallback = 1 if k == 1 else 0
@@ -223,11 +218,11 @@ def _em_rounds(docs: DataFrame, keep: int, iters: int, max_len: int,
 
 
 def unigram_train(docs: DataFrame, keep: int = 40, iters: int = 2,
-                  max_len: int = 4, text_col: str = "text") -> DataFrame:
+                  max_len: int = 4) -> DataFrame:
     """The learned piece table: (piece, cnt, prob) after ``iters``
     Viterbi-EM rounds — prob = stable_round(cnt / total, 6), the
     portable hash surface over an exact integer ratio."""
-    pieces, _ = _em_rounds(docs, keep, iters, max_len, text_col)
+    pieces, _ = _em_rounds(docs, keep, iters, max_len, "text")
     tot = pieces.agg(F.sum("cnt").alias("__t"))
     return (pieces.join(F.broadcast(tot), F.lit(True), "left")
                   .select("piece", "cnt",
@@ -237,12 +232,12 @@ def unigram_train(docs: DataFrame, keep: int = 40, iters: int = 2,
 
 
 def unigram_codec(docs: DataFrame, keep: int = 40, iters: int = 2,
-                  max_len: int = 4, text_col: str = "text") -> DataFrame:
+                  max_len: int = 4) -> DataFrame:
     """Train on ``docs`` and return the 1-row broadcastable codec:
     (__cnt: map<piece,bigint>, __tot: bigint, __ids: map<piece,int> —
     dense lexicographic ids starting at 1; :data:`UNK_ID` 0 reserved).
     All three columns come from vocabulary-scale tables."""
-    pieces, _ = _em_rounds(docs, keep, iters, max_len, text_col)
+    pieces, _ = _em_rounds(docs, keep, iters, max_len, "text")
     return _codec_from_pieces(pieces)
 
 
@@ -260,9 +255,7 @@ def _codec_from_pieces(pieces: DataFrame) -> DataFrame:
             F.struct("piece", "__id"))).alias("__ids"))
 
 
-def unigram_word_table(docs: DataFrame, codec: DataFrame,
-                       text_col: str = "text",
-                       max_len: int = 4,
+def unigram_word_table(docs: DataFrame, codec: DataFrame, max_len: int = 4,
                        words: DataFrame | None = None) -> DataFrame:
     """The memoized encode table (word, n, ids): every DISTINCT word of
     the corpus being encoded Viterbi-segmented ONCE under the codec
@@ -274,7 +267,7 @@ def unigram_word_table(docs: DataFrame, codec: DataFrame,
     corpus is not re-tokenized just to recover the identical word set."""
     if words is None:
         words = (docs.select(
-                     F.explode(tokens(F.coalesce(F.col(text_col),
+                     F.explode(tokens(F.coalesce(F.col("text"),
                                                  F.lit("")))).alias("word"))
                      .filter(F.col("word") != "").distinct())
     else:
@@ -291,10 +284,8 @@ def unigram_word_table(docs: DataFrame, codec: DataFrame,
         f", ',') AS ids")
 
 
-def apply_unigram(docs: DataFrame, codec: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  max_len: int = 4, strategy: str = "broadcast",
-                  word_limit: int | None = None,
+def apply_unigram(docs: DataFrame, codec: DataFrame, max_len: int = 4,
+                  strategy: str = "broadcast", word_limit: int | None = None,
                   words: DataFrame | None = None) -> DataFrame:
     """Encode ``docs`` with a trained :func:`unigram_codec`: per
     document (id, n_words, n_tokens, token_ids) — the
@@ -318,13 +309,12 @@ def apply_unigram(docs: DataFrame, codec: DataFrame,
     CHARACTER (the only way a piece can miss the id map, since Viterbi
     re-derives segmentations) encodes as :data:`UNK_ID`."""
     from .bpe import WORD_BROADCAST_LIMIT, encode_with_word_table
-    per_word = unigram_word_table(docs, codec, text_col, max_len,
-                                  words=words)
+    per_word = unigram_word_table(docs, codec, max_len=max_len, words=words)
     if strategy == "auto":
         limit = WORD_BROADCAST_LIMIT if word_limit is None else word_limit
         strategy = "broadcast" if per_word.count() <= limit else "join"
     if strategy == "join":
-        return encode_with_word_table(docs, per_word, text_col, id_col)
+        return encode_with_word_table(docs, per_word)
     if strategy != "broadcast":
         raise ValueError(f"apply_unigram: unknown strategy {strategy!r}")
     wmap = per_word.agg(
@@ -333,15 +323,15 @@ def apply_unigram(docs: DataFrame, codec: DataFrame,
     # r15: TWO selectExpr parses (SQL twins of the former Column trees —
     # same double occurrence of the looked-up transform, same
     # coercions; construction is py4j-round-trip-bound, guide §7.3)
-    enc = (docs.select(id_col, F.col(text_col))
+    enc = (docs.select("doc_id", F.col("text"))
                .join(F.broadcast(wmap), F.lit(True), "left")
                .selectExpr(
                    "*",
-                   rf"filter(split(lower(coalesce(`{text_col}`, '')), "
+                   rf"filter(split(lower(coalesce(`text`, '')), "
                    r"'\\s+'), x -> x != '') AS __toks"))
     looked = "transform(__toks, w -> element_at(__w, w))"
     return enc.selectExpr(
-        f"`{id_col}`",
+        "`doc_id`",
         "CAST(size(__toks) AS BIGINT) AS n_words",
         f"aggregate({looked}, CAST(0 AS BIGINT), "
         f"(a, v) -> a + v.n) AS n_tokens",
@@ -356,16 +346,14 @@ def _codec_pieces(codec: DataFrame) -> DataFrame:
 
 
 def unigram_encode(docs: DataFrame, keep: int = 40, iters: int = 2,
-                   max_len: int = 4, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   strategy: str = "broadcast") -> DataFrame:
+                   max_len: int = 4, strategy: str = "broadcast") -> DataFrame:
     """Train-and-encode convenience: :func:`unigram_codec` on ``docs``
     then :func:`apply_unigram` over the same corpus (the bpe_encode
     registry shape). r14: the trainer's checkpointed vocabulary doubles
     as the encode pass's distinct-word set (identical relation by
     construction — same corpus, same tokenizer), so train-and-encode
     tokenizes the corpus once instead of three times."""
-    pieces, vocab = _em_rounds(docs, keep, iters, max_len, text_col)
+    pieces, vocab = _em_rounds(docs, keep, iters, max_len, "text")
     codec = _codec_from_pieces(pieces)
-    return apply_unigram(docs, codec, text_col, id_col, max_len, strategy,
+    return apply_unigram(docs, codec, max_len=max_len, strategy=strategy,
                          words=vocab)

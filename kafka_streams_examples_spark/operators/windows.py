@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 def with_session_id(df: DataFrame,
                     keys: Sequence[str],
                     gap_seconds: int,
-                    ts_col: str = "ts",
-                    session_col: str = "session_id") -> DataFrame:
+                    ts_col: str = "ts") -> DataFrame:
     """Assign session ids per key with an inactivity gap (batch sessionization).
 
     Reference: SessionWindows.ofInactivityGapAndGrace
@@ -35,7 +34,7 @@ def with_session_id(df: DataFrame,
     gap = F.unix_micros(F.col(ts_col)) - F.lag(F.unix_micros(F.col(ts_col))).over(w)
     new_session = F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0)
     return (df.withColumn("__new", new_session)
-              .withColumn(session_col, F.sum("__new").over(
+              .withColumn("session_id", F.sum("__new").over(
                   w.rowsBetween(Window.unboundedPreceding, 0)))
               .drop("__new"))
 

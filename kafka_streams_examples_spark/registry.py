@@ -5133,9 +5133,10 @@ def q_knn_recall_clustered(spark: SparkSession, sf: str) -> DataFrame:
     return _recall_ladder(_clustered_embeddings(spark, sf))
 
 
-def _gopher_sql(wpl: int = 12) -> str:
+def _gopher_sql() -> str:
     from .operators.text import GOPHER_STOPWORDS
     sw = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
+    wpl = TX.WORDS_PER_LINE
     return rf"""WITH tk AS (SELECT doc_id,
            list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
          FROM documents),
@@ -5198,9 +5199,14 @@ def q_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
     return TX.gopher_rules(table(spark, sf, "documents"))
 
 
-def _cluster_sample_sql(k: int = 8, iters: int = 2, quota: int = 20) -> str:
-    return f"""WITH {_kmeans_ctes(k, iters)},
-    lab AS (SELECT vec_id, cid AS cluster FROM a{iters}),
+#: clusters, k-means iterations and per-cluster quota of cluster_sample,
+#: one set for the Spark query and its oracle
+_CS_K, _CS_ITERS, _CS_QUOTA = 8, 2, 20
+
+
+def _cluster_sample_sql() -> str:
+    return f"""WITH {_kmeans_ctes(_CS_K, _CS_ITERS)},
+    lab AS (SELECT vec_id, cid AS cluster FROM a{_CS_ITERS}),
     sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_in_cluster
            FROM lab GROUP BY cluster),
     r AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY cluster
@@ -5208,7 +5214,7 @@ def _cluster_sample_sql(k: int = 8, iters: int = 2, quota: int = 20) -> str:
                      vec_id) AS rn
           FROM lab)
     SELECT r.vec_id, r.cluster, sz.n_in_cluster, CAST(rn AS BIGINT) AS rn
-    FROM r JOIN sz USING (cluster) WHERE rn <= {quota}"""
+    FROM r JOIN sz USING (cluster) WHERE rn <= {_CS_QUOTA}"""
 
 
 @query(
@@ -5232,7 +5238,8 @@ def _cluster_sample_sql(k: int = 8, iters: int = 2, quota: int = 20) -> str:
 )
 def q_cluster_sample(spark: SparkSession, sf: str) -> DataFrame:
     return SAMP.cluster_quota_sample(table(spark, sf, "embeddings"),
-                                     k=8, iters=2, quota=20)
+                                     k=_CS_K, iters=_CS_ITERS,
+                                     quota=_CS_QUOTA)
 
 
 # ---------------------------------------------------------------------------
@@ -5989,8 +5996,7 @@ def q_kn3_surprisal(spark: SparkSession, sf: str) -> DataFrame:
     return TX.kn3_surprisal(table(spark, sf, "documents"))
 
 
-def _kn_sql(order: int, discount: float = 0.75,
-            count_alias: str | None = None, prune: int = 0) -> str:
+def _kn_sql(order: int, prune: int = 0) -> str:
     """Oracle generator for kn_ngram_surprisal at ANY order — emits the
     generalized CTE ladder (raw n-gram type table, the per-order
     continuation/context tables, base distribution from the level-2
@@ -6018,10 +6024,8 @@ def _kn_sql(order: int, discount: float = 0.75,
     1/greatest(T,1) <unk> floor (coalesce(n1b, 1))."""
     n = order
     cols = [f"w{i}" for i in range(1, n + 1)]
-    if count_alias is None:
-        count_alias = {2: "n_bigrams", 3: "n_trigrams"}.get(
-            n, f"n_{n}grams")
-    d = repr(float(discount))
+    count_alias = {2: "n_bigrams", 3: "n_trigrams"}.get(n, f"n_{n}grams")
+    d = repr(float(TX.KN_DISCOUNT))
     pruned = prune > 0
     if pruned and n < 3:
         raise ValueError("prune applies to levels > 2 — needs order >= 3")

@@ -26,7 +26,9 @@ the reference's outstanding-requests map collapses to polling the
 materialized table.
 
 Malformed input is the caller's error: a path too short for its route is a
-404 and a non-integer ``k`` or ``timeout`` is a 400.
+404 and a non-integer ``k`` or ``timeout`` is a 400. A key or range bound
+that does not cast to its column's type (``a`` against a bigint key) matches
+nothing, so the route answers 200 with ``[]``, as for a key that is absent.
 
 No third-party web framework: ThreadingHTTPServer + JSON, test-driven the
 same way the reference drives its REST service in

@@ -23,7 +23,7 @@ from __future__ import annotations
 import re
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # write_buckets/swap_buckets/bucket_of: traced perfbench patches them here (ROADMAP 5)
@@ -58,26 +58,44 @@ def _cast_key(key, t: pa.DataType):
 
 
 class StateStore:
+    """The store API over one DataFrame. Every key and bound is cast to
+    its column's type with ``try_cast``, so one that does not cast (``"a"``
+    against a bigint key) matches nothing instead of failing the query."""
+
     def __init__(self, df: DataFrame, key_col: str):
         self.df = df
         self.key_col = key_col
 
+    @staticmethod
+    def _cast(df: DataFrame, col: str, value) -> Column:
+        """``value`` as a literal of the type of ``df[col]``; null (which
+        matches nothing) when it does not cast."""
+        return F.lit(value).try_cast(df.schema[col].dataType)
+
+    def _keyed(self, df: DataFrame, key) -> DataFrame:
+        return df.filter(F.col(self.key_col) == self._cast(df, self.key_col, key))
+
     def get(self, key):  # Q1 store.get(key)
-        return self.df.filter(F.col(self.key_col) == key).collect()
+        return self._keyed(self.df, key).collect()
 
     def all(self) -> DataFrame:  # Q2 store.all()
         return self.df
 
     def range(self, lo, hi) -> DataFrame:  # Q3 store.range(from,to)
-        return self.df.filter(F.col(self.key_col).between(lo, hi))
+        df = self.df
+        return df.filter(F.col(self.key_col).between(
+            self._cast(df, self.key_col, lo), self._cast(df, self.key_col, hi)))
 
-    def fetch_window(self, key, start, end,
-                     window_col: str = "window_start") -> DataFrame:  # Q4
-        return self.df.filter((F.col(self.key_col) == key)
-                              & F.col(window_col).between(start, end))
+    def fetch_window(self, key, start, end) -> DataFrame:  # Q4
+        return self._windowed(self._keyed(self.df, key), start, end)
+
+    def _windowed(self, df: DataFrame, start, end) -> DataFrame:
+        return df.filter(F.col("window_start").between(
+            self._cast(df, "window_start", start),
+            self._cast(df, "window_start", end)))
 
     def fetch_sessions(self, key) -> DataFrame:  # Q5 session fetch per key
-        return self.df.filter(F.col(self.key_col) == key)
+        return self._keyed(self.df, key)
 
 
 class DiskStateStore(StateStore):
@@ -121,7 +139,7 @@ class DiskStateStore(StateStore):
 
     def _pruned(self, key) -> DataFrame:
         state = read_state(self.spark, self.path)
-        k = F.lit(key).try_cast(state.schema[self.key_col].dataType)
+        k = self._cast(state, self.key_col, key)
         match = F.col(self.key_col) == k
         if self._bucketed_on_key():
             # folds to a literal bucket id: partition pruning reads one dir
@@ -140,9 +158,8 @@ class DiskStateStore(StateStore):
             return self._pruned(key).collect()
         return read_bucket(self.path, bucket_id([k], [t]), self.key_col, k)
 
-    def fetch_window(self, key, start, end,
-                     window_col: str = "window_start") -> DataFrame:  # Q4
-        return self._pruned(key).filter(F.col(window_col).between(start, end))
+    def fetch_window(self, key, start, end) -> DataFrame:  # Q4
+        return self._windowed(self._pruned(key), start, end)
 
     def fetch_sessions(self, key) -> DataFrame:  # Q5
         return self._pruned(key)

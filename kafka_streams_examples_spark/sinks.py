@@ -16,25 +16,19 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, name: str, keys: Sequence[str],
-                   buckets: int = 32, path: str | None = None,
-                   sort: bool = True) -> None:
+                   buckets: int = 32, path: str | None = None) -> None:
     """Write df as a bucketed (and per-file sorted) catalog table.
 
     Sorting within buckets lets the sort-merge join skip its sort too —
     the join degenerates to a zip of pre-sorted co-located files.
     """
     keys = list(keys)
-    w = df.write.mode("overwrite").bucketBy(buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
+    w = df.write.mode("overwrite").bucketBy(buckets, *keys).sortBy(*keys)
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(name)
 
-
-def read_table(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)

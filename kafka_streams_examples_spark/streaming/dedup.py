@@ -15,15 +15,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
-def dedup_stream(events: DataFrame, keys: Sequence[str], ttl: str = "10 minutes",
-                 ts_col: str = "ts") -> DataFrame:
-    return (events.withWatermark(ts_col, ttl)
+def dedup_stream(events: DataFrame, keys: Sequence[str],
+                 ttl: str = "10 minutes") -> DataFrame:
+    return (events.withWatermark("ts", ttl)
                   .dropDuplicatesWithinWatermark(list(keys)))
 
 
-def near_dup_index(corpus: DataFrame, num_hashes: int = 8, bands: int = 4,
-                   n: int = 3, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def near_dup_index(corpus: DataFrame) -> DataFrame:
     """Batch half of streaming near-dup: the corpus's DOC-LEVEL profile —
     (corpus_id, c_hs distinct shingle-hash set, c_bands band array,
     c_sz set size), one row per document. r15 (guide §8: decide with
@@ -46,19 +44,15 @@ def near_dup_index(corpus: DataFrame, num_hashes: int = 8, bands: int = 4,
 
     from ..operators.dedup import minhash_doc_profile
 
-    prof = minhash_doc_profile(corpus, num_hashes, bands, n,
-                               text_col, id_col)
-    return prof.select(
-        F.col(id_col).alias("corpus_id"),
+    return minhash_doc_profile(corpus).select(
+        F.col("doc_id").alias("corpus_id"),
         F.col("__hs").alias("c_hs"),
         F.col("__bands").alias("c_bands"),
         F.size("__hs").alias("c_sz"))
 
 
 def stream_near_dup(new_docs: DataFrame, index: DataFrame,
-                    num_hashes: int = 8, bands: int = 4, n: int = 3,
-                    threshold: float = 0.2, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    threshold: float = 0.2) -> DataFrame:
     """Streaming incremental near-dup: arriving documents LSH-probe a
     batch-built corpus index — the streaming half of
     `incremental_minhash_pairs`, and the 100 TB continuous-ingest shape
@@ -93,16 +87,15 @@ def stream_near_dup(new_docs: DataFrame, index: DataFrame,
     from pyspark.sql import functions as F
 
     from ..functions import stable_round
-    from ..operators.dedup import minhash_doc_profile
+    from ..operators.dedup import PROFILE_BANDS, minhash_doc_profile
 
-    prof = (minhash_doc_profile(new_docs, num_hashes, bands, n,
-                                text_col, id_col)
-            .select(F.col(id_col).alias("new_id"),
+    prof = (minhash_doc_profile(new_docs)
+            .select(F.col("doc_id").alias("new_id"),
                     F.col("__hs").alias("n_hs"),
                     F.col("__bands").alias("n_bands"),
                     F.size("__hs").alias("n_sz"))
             .withColumn("band_id",
-                        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))))
+                        F.explode(F.sequence(F.lit(0), F.lit(PROFILE_BANDS - 1))))
             .withColumn("band_val", F.col("n_bands")[F.col("band_id")]))
     # narrow banded projection: ids + band values (and the small band
     # array for the first-shared-band rule); the heavy c_hs set stays
@@ -114,7 +107,7 @@ def stream_near_dup(new_docs: DataFrame, index: DataFrame,
     # first band the two docs share == this band → emit once per pair:
     # positions where the band arrays agree, keep only the minimum
     match_positions = F.filter(
-        F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.transform(F.sequence(F.lit(0), F.lit(PROFILE_BANDS - 1)),
                     lambda i: F.when(F.col("n_bands")[i]
                                      == F.col("c_bands")[i], i)
                                .otherwise(F.lit(-1))),

@@ -24,16 +24,15 @@ class GlobalStoreEnricher:
     state AS OF that batch, append results to a parquet sink."""
 
     def __init__(self, spark: SparkSession, dim_path: str,
-                 join_keys: Sequence[str], out_path: str, how: str = "left"):
+                 join_keys: Sequence[str], out_path: str):
         self.spark = spark
         self.dim_path = dim_path
         self.join_keys = list(join_keys)
         self.out_path = out_path
-        self.how = how
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         # fresh read per batch = the updater's refresh; the dim is
         # broadcast so lookups are map-side, no shuffle of the stream
         dim = self.spark.read.parquet(self.dim_path)
-        (batch.join(F.broadcast(dim), self.join_keys, self.how)
+        (batch.join(F.broadcast(dim), self.join_keys, "left")
               .write.mode("append").parquet(self.out_path))

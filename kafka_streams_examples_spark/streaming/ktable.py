@@ -39,13 +39,11 @@ class KTableMaterializer:
     """foreachBatch sink maintaining latest-per-key state in bucketed parquet."""
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str],
-                 ts_col: str = "ts", tiebreak: Sequence[str] = (),
-                 tombstone_col: str | None = None):
+                 ts_col: str = "ts", tombstone_col: str | None = None):
         self.spark = spark
         self.path = path
         self.keys = list(keys)
         self.ts_col = ts_col
-        self.tiebreak = list(tiebreak)
         self.tombstone_col = tombstone_col
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
@@ -62,6 +60,6 @@ class KTableMaterializer:
         # once (staged), then promote them with directory renames; untouched
         # buckets are never read or written
         write_buckets(latest_per_key(batch, self.keys, self.ts_col,
-                                     self.tiebreak, self.tombstone_col),
+                                     tombstone_col=self.tombstone_col),
                       self.path, self.keys)
         swap_buckets(self.path, touched)

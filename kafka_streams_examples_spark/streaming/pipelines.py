@@ -15,17 +15,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import tokens
+from ..operators.text import MAX_NONALNUM_RATIO, MIN_TOKENS
+
+#: the event-time watermark (the reference's grace period) of every
+#: streaming topology here that does not take one from its caller
+WATERMARK = "2 hours"
 
 
-def streaming_wordcount(lines: DataFrame, text_col: str = "text") -> DataFrame:
+def streaming_wordcount(lines: DataFrame) -> DataFrame:
     """WordCountLambdaExample.java:185-208 — running counts, update mode."""
-    return (lines.select(F.explode(tokens(text_col)).alias("word"))
+    return (lines.select(F.explode(tokens("text")).alias("word"))
                  .filter(F.col("word") != "")
                  .groupBy("word").count())
 
 
 def windowed_counts(events: DataFrame, size: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
+                    watermark: str = WATERMARK) -> DataFrame:
     """W1 tumbling counts with grace period = watermark (late rows beyond
     the watermark are dropped — TimeWindows grace semantics)."""
     return (events.withWatermark("ts", watermark)
@@ -35,21 +40,20 @@ def windowed_counts(events: DataFrame, size: str = "1 hour",
                           "event_type", "n"))
 
 
-def session_counts(events: DataFrame, gap: str = "30 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """W3 session windows with inactivity gap; append mode emits only the
     final merged session per key (SessionWindowsExample.java:163-171 —
     Spark's native merge behavior matches the reference's session merging)."""
-    return (events.withWatermark("ts", watermark)
-                  .groupBy(F.session_window("ts", gap), F.col("user_id"))
+    return (events.withWatermark("ts", WATERMARK)
+                  .groupBy(F.session_window("ts", "30 minutes"),
+                           F.col("user_id"))
                   .agg(F.count("*").alias("n_events"),
                        F.round(F.sum("value"), 2).alias("session_value"))
                   .select(F.col("session_window.start").alias("session_start"),
                           "user_id", "n_events", "session_value"))
 
 
-def streaming_music_charts(plays: DataFrame, songs: DataFrame,
-                           min_quantity: float = 5.0) -> DataFrame:
+def streaming_music_charts(plays: DataFrame, songs: DataFrame) -> DataFrame:
     """Flagship 1, streaming half (KafkaMusicExample.java:281-378): filter
     short plays, enrich from the broadcast song catalog (stream-static
     join = GlobalKTable), maintain play counts per (genre, song) in update
@@ -61,7 +65,7 @@ def streaming_music_charts(plays: DataFrame, songs: DataFrame,
     a `song_id` column.
     """
     from pyspark.sql.functions import broadcast
-    return (plays.filter(F.col("quantity") >= min_quantity)
+    return (plays.filter(F.col("quantity") >= 5.0)
                  .join(broadcast(songs), "song_id")
                  .groupBy("genre", "song_id", "song_name")
                  .agg(F.count("*").alias("plays")))
@@ -84,14 +88,14 @@ def top5_from_counts(counts: DataFrame) -> DataFrame:
                       "song_id", "song_name", "plays")
 
 
-def streaming_pageview_region(views: DataFrame, uregion: DataFrame,
-                              watermark: str = "2 hours") -> DataFrame:
+def streaming_pageview_region(views: DataFrame,
+                              uregion: DataFrame) -> DataFrame:
     """Flagship 2, streaming half (PageViewRegionLambdaExample.java:139-196):
     stream-static leftJoin onto the user-region dimension (refreshed per
     micro-batch in production), UNKNOWN default, hopping-window counts.
     Append mode emits each window once, when the watermark closes it."""
     from pyspark.sql.functions import broadcast
-    return (views.withWatermark("ts", watermark)
+    return (views.withWatermark("ts", WATERMARK)
                  .join(broadcast(uregion), "user_id", "left")
                  .withColumn("region", F.coalesce("region", F.lit("UNKNOWN")))
                  .groupBy("region", F.window("ts", "1 day", "6 hours"))
@@ -101,8 +105,7 @@ def streaming_pageview_region(views: DataFrame, uregion: DataFrame,
 
 
 def interval_join_stream(left: DataFrame, right: DataFrame,
-                         key: str, delta: str = "1 hour",
-                         watermark: str = "2 hours") -> DataFrame:
+                         key: str) -> DataFrame:
     """J3 stream-stream windowed inner join with watermarks both sides.
 
     Column convention: the left side carries ``l_{key}``/``l_ts``, the
@@ -113,17 +116,15 @@ def interval_join_stream(left: DataFrame, right: DataFrame,
     newer than (max event time - watermark) — identical to the reference's
     JoinWindows retention.
     """
-    l = left.withWatermark("l_ts", watermark)
-    r = right.withWatermark("r_ts", watermark)
+    l = left.withWatermark("l_ts", WATERMARK)
+    r = right.withWatermark("r_ts", WATERMARK)
     cond = ((l[f"l_{key}"] == r[f"r_{key}"])
             & (r["r_ts"] >= l["l_ts"])
-            & (r["r_ts"] <= l["l_ts"] + F.expr(f"INTERVAL {delta}")))
+            & (r["r_ts"] <= l["l_ts"] + F.expr("INTERVAL 1 hour")))
     return l.join(r, cond, "inner")
 
 
-def streaming_order_validation(orders: DataFrame, qty: DataFrame,
-                               fraud_limit: float = 400000.0,
-                               session_gap_seconds: int = 86400) -> DataFrame:
+def streaming_order_validation(orders: DataFrame, qty: DataFrame) -> DataFrame:
     """Flagship 3, streaming half — the microservices choreography
     (SURVEY §3.3): three validators consume the SAME order stream in
     parallel and their verdicts merge onto one validation stream
@@ -152,18 +153,13 @@ def streaming_order_validation(orders: DataFrame, qty: DataFrame,
                .select("order_id", F.lit("inventory").alias("validator"),
                        F.when(F.coalesce("q", F.lit(0.0)) <= 250, "PASS")
                         .otherwise("FAIL").alias("verdict")))
-    fraud = (fraud_check(base, limit=fraud_limit,
-                         session_gap_seconds=session_gap_seconds)
+    fraud = (fraud_check(base, limit=400000.0, session_gap_seconds=86400)
              .select("order_id", F.lit("fraud").alias("validator"),
                      F.col("verdict")))
     return details.unionByName(inv).unionByName(fraud)
 
 
-def streaming_corpus_filter(docs: DataFrame, min_tokens: int = 10,
-                            max_nonalnum_ratio: float = 0.4,
-                            ttl: str = "10 minutes",
-                            text_col: str = "text", id_col: str = "doc_id",
-                            ts_col: str = "ts") -> DataFrame:
+def streaming_corpus_filter(docs: DataFrame) -> DataFrame:
     """Streaming analog of operators.text.corpus_prep: the same one-pass
     quality gate (token floor + non-alphanumeric ceiling), then content
     dedup as first-ARRIVAL-wins per fingerprint within the watermark TTL
@@ -176,25 +172,25 @@ def streaming_corpus_filter(docs: DataFrame, min_tokens: int = 10,
     id may differ. State is one fp per distinct surviving document,
     evicted by the watermark.
     """
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
-    bad_ratio = (F.length(F.regexp_replace(F.lower(F.col(text_col)),
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    bad_ratio = (F.length(F.regexp_replace(F.lower(F.col("text")),
                                            "[a-z0-9 ]", ""))
-                 / F.length(F.col(text_col)))
+                 / F.length(F.col("text")))
     scored = docs.select(
-        F.col(id_col), F.col(ts_col),
+        F.col("doc_id"), F.col("ts"),
         F.md5(norm).alias("fp"),
-        F.size(tokens(text_col)).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
         bad_ratio.alias("__bad"))
-    kept = (scored.filter((F.col("n_tokens") >= min_tokens)
-                          & (F.col("__bad") <= max_nonalnum_ratio))
+    kept = (scored.filter((F.col("n_tokens") >= MIN_TOKENS)
+                          & (F.col("__bad") <= MAX_NONALNUM_RATIO))
                   .drop("__bad"))
-    return (kept.withWatermark(ts_col, ttl)
+    return (kept.withWatermark("ts", "10 minutes")
                 .dropDuplicatesWithinWatermark(["fp"])
-                .select(id_col, "fp", "n_tokens"))
+                .select("doc_id", "fp", "n_tokens"))
 
 
 def music_charts_service(spark, plays: DataFrame, songs: DataFrame,
-                         state_dir: str, min_quantity: float = 5.0):
+                         state_dir: str):
     """Flagship 1 composed end-to-end (KafkaMusicExample.java:281-378 +
     335-375 TopFiveSongs): the streaming play-count half (update mode)
     feeds the bucketed KTable materializer, and the two-level top-5
@@ -211,7 +207,7 @@ def music_charts_service(spark, plays: DataFrame, songs: DataFrame,
     from ..serving import DiskStateStore
     from .ktable import KTableMaterializer
 
-    counts = streaming_music_charts(plays, songs, min_quantity)
+    counts = streaming_music_charts(plays, songs)
     mat = KTableMaterializer(spark, state_dir, ["genre", "song_id"],
                              ts_col="__v")
 
@@ -303,9 +299,7 @@ def streaming_line_filter(docs: DataFrame, codec: DataFrame) -> DataFrame:
 
 def streaming_ingest_funnel(docs: DataFrame, boiler: DataFrame,
                             model: DataFrame, index: DataFrame,
-                            tau: float = 5.5, words_per_line: int = 12,
-                            min_words: int = 25,
-                            min_stopwords: int = 1,
+                            tau: float = 5.5,
                             n_buckets: int | None = None) -> DataFrame:
     """The FULL ingest path composed as ONE streaming pipeline: arrive
     -> Gopher battery -> boilerplate line filter -> NB filter (scored
@@ -332,9 +326,7 @@ def streaming_ingest_funnel(docs: DataFrame, boiler: DataFrame,
     from ..operators.retrieval import bm25_gate
     from ..operators.text import ingest_chain
 
-    chain = ingest_chain(docs, boiler, model, words_per_line,
-                         min_words=min_words, min_stopwords=min_stopwords,
-                         n_buckets=n_buckets)
+    chain = ingest_chain(docs, boiler, model, n_buckets=n_buckets)
     flags = chain.select(
         F.col("doc_id"), F.lit("doc").alias("kind"),
         "g_gopher", (F.col("n_kept") > 0).alias("g_line"),
@@ -353,10 +345,7 @@ def streaming_ingest_funnel(docs: DataFrame, boiler: DataFrame,
 
 
 def streaming_ingest_funnel_from(spark, path: str, docs: DataFrame,
-                                 tau: float = 5.5,
-                                 words_per_line: int = 12,
-                                 min_words: int = 25,
-                                 min_stopwords: int = 1) -> DataFrame:
+                                 tau: float = 5.5) -> DataFrame:
     """:func:`streaming_ingest_funnel` served from a persisted
     ``operators.text.build_ingest_artifacts`` directory (VERDICT r13
     item 4) — the production wiring: the offline trainer writes the
@@ -377,5 +366,4 @@ def streaming_ingest_funnel_from(spark, path: str, docs: DataFrame,
 
     boiler, model, index, n_buckets = load_ingest_artifacts(spark, path)
     return streaming_ingest_funnel(docs, boiler, model, index, tau,
-                                   words_per_line, min_words,
-                                   min_stopwords, n_buckets=n_buckets)
+                                   n_buckets=n_buckets)

@@ -335,3 +335,63 @@ def test_pythonpath_export_matches_whole_entries():
     assert _with_root(near, root) == os.pathsep.join([root, near])
     assert _with_root("", root) == root
     assert _with_root(near + os.pathsep + root, root) == near + os.pathsep + root
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """Every defaulted parameter of the engine is set by some call in the
+    repo — by keyword, by its positional slot, or by a ``*``/``**`` call
+    of that name. A default nothing overrides is a configuration no test,
+    oracle or benchmark runs: it belongs in the body as a constant.
+    Callees are matched by name only, which can only count a parameter as
+    set when it is not, so the check never fails spuriously. Exempt: the
+    Kafka/Avro connectors (external wire formats) and the REST service's
+    bind address."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "kafka_streams_examples_spark"
+    files = [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py"),
+             *(root / "perfbench").rglob("*.py"), *(root / "tools").rglob("*.py"),
+             root / "bench.py", root / "__spark_entry__.py"]
+    trees = {p: ast.parse(p.read_text()) for p in files}
+    keywords, positional, starred = defaultdict(set), defaultdict(int), set()
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if isinstance(call, ast.Call):
+                f = call.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                if (any(isinstance(a, ast.Starred) for a in call.args)
+                        or any(k.arg is None for k in call.keywords)):
+                    starred.add(name)
+                keywords[name] |= {k.arg for k in call.keywords}
+                positional[name] = max(positional[name], len(call.args))
+    allowed = {("InteractiveQueryService", "host"),
+               ("InteractiveQueryService", "port")}
+    unset = []
+    for path, tree in trees.items():
+        if pkg not in path.parents or pkg / "sources" in path.parents:
+            continue
+        owner = {fn: c for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
+                 for fn in c.body}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            cls = owner.get(fn)
+            name = cls.name if cls and fn.name == "__init__" else fn.name
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            slots = [(i, x.arg) for i, x in enumerate(pos)
+                     if i >= len(pos) - len(a.defaults)]
+            slots += [(None, x.arg) for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                      if d is not None]
+            for i, arg in slots:
+                # a method's positional slots count `self`
+                if (name in starred or arg in keywords[name]
+                        or (i is not None and i < positional[name] + bool(cls))
+                        or (name, arg) in allowed):
+                    continue
+                unset.append(f"{path.relative_to(root)}:{fn.lineno} "
+                             f"{fn.name}({arg}=)")
+    assert unset == [], f"{len(unset)} defaulted parameters no call sets: {unset}"

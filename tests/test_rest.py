@@ -140,3 +140,59 @@ def test_rest_search_over_persisted_bm25_index(spark, tmp_path):
         assert ei.value.code == 404
     finally:
         svc.stop()
+
+
+@pytest.fixture()
+def bigint_service(spark, tmp_path):
+    """A bigint-keyed windowed table served twice: as a DiskStateStore
+    over the bucketed layout and as a plain StateStore."""
+    from kafka_streams_examples_spark.serving import DiskStateStore
+
+    df = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", 3), (1, "2024-01-01 01:00:00", 4),
+         (2, "2024-01-01 00:00:00", 5)],
+        "user_id long, window_start string, n long").selectExpr(
+            "user_id", "CAST(window_start AS TIMESTAMP) AS window_start", "n")
+    disk = DiskStateStore.materialize(df, str(tmp_path / "win"), "user_id")
+    svc = InteractiveQueryService()
+    svc.register("disk", disk)
+    svc.register("mem", StateStore(df, "user_id"))
+    svc.start()
+    yield svc
+    svc.stop()
+
+
+def test_rest_range_bounds_that_do_not_cast_match_nothing(bigint_service):
+    """Range bounds that do not cast to the bigint key (``a``, ``z``)
+    match nothing, as an absent point key does: 200 with [], not a 500
+    from an ANSI cast failure."""
+    port = bigint_service.port
+    for store in ("disk", "mem"):
+        assert _get(port, f"/state/keyvalues/{store}/range/a/z") == (200, [])
+        assert _get(port, f"/state/keyvalue/{store}/abc") == (200, [])
+        status, rows = _get(port, f"/state/keyvalues/{store}/range/0/1")
+        assert status == 200 and {r["n"] for r in rows} == {3, 4}, store
+
+
+def test_rest_windowed_fetch(bigint_service):
+    """Q4, GET /state/windowed/{store}/{key}/{from}/{to}: the key's
+    windows starting within [from, to]; bounds that do not parse as a
+    timestamp match nothing (200 with [])."""
+    port = bigint_service.port
+    for store in ("disk", "mem"):
+        status, rows = _get(
+            port, f"/state/windowed/{store}/1/2024-01-01T00:30:00/2024-01-02")
+        assert status == 200 and rows == [
+            {"user_id": 1, "window_start": "2024-01-01 01:00:00", "n": 4}]
+        assert _get(port, f"/state/windowed/{store}/1/x/y") == (200, [])
+        assert _get(port, f"/state/windowed/{store}/a/2024-01-01/2024-01-02") \
+            == (200, [])
+
+
+def test_fetch_sessions_hit_and_uncastable_key(bigint_service):
+    """Q5 ``fetch_sessions`` returns every row of the key, and nothing
+    for a key that does not cast to the bigint key column."""
+    for store in bigint_service.stores.values():
+        assert sorted(r["n"] for r in store.fetch_sessions(1).collect()) \
+            == [3, 4]
+        assert store.fetch_sessions("a").collect() == []
