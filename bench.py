@@ -1,33 +1,12 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+JSON line: {"metric": "headline", "value": total_sec, "unit": "sec",
+"queries": {name: sec}, "streaming": {pipeline: rows_per_sec}, "sf": ...}.
 
-Artifact-durability contract (BENCH_r06 postmortem): the driver captures
-only a bounded tail of stdout, and r6's enriched line outgrew it — the
-artifact recorded a mid-line fragment (`parsed: null`) and the headline
-total was unrecoverable. Two defenses now:
-  (a) the FULL payload is always json.dump'ed to BENCH_SELF_r{N}.json at
-      the repo root (N from $SPARK_GRAFT_ROUND or max CORRECTNESS_r* + 1),
-      so the repo itself carries the durable copy;
-  (b) the printed line is the COMPACT form (per-pipeline streaming detail
-      replaced by a {name: rows_per_sec} map; everything else identical)
-      and tests/test_contracts.py gates its serialized length under the
-      observed capture budget.
-
-Each query is executed once with a count-style action so the full plan runs
-but collection overhead stays constant. A warmup query first absorbs JVM/
-codegen startup so per-query numbers reflect steady-state throughput.
-
-The JSON also carries a "streaming" section (rows/sec for the file-stream
-replay pipelines) so round-over-round streaming regressions are visible in
-BENCH_r{N}.json alongside the batch numbers.
-
-Methodology note (wordcount r01->r03 "regression" investigated in r4): the
-tokenizer and plan are unchanged since r01 (1 shuffle, map-side partial
-agg); warm-run spread for sub-second queries is ~±0.2s on an idle box and
-far larger under concurrent load, so round-over-round deltas below ~0.3s
-are machine-load noise. min-of-2 (below) bounds but cannot eliminate it.
+Each query runs to the noop sink, min-of-2, after a warm-up that absorbs JVM/
+codegen startup. The "streaming" section times the file-stream replay
+pipelines. Totals swing with host load, so speed is measured with
+`perfbench/`, which imports `disk_probe` from here.
 """
 
 from __future__ import annotations
@@ -175,11 +154,7 @@ STREAMING_PIPELINES = ("wordcount", "windowed_counts", "session_counts",
 
 def stream_cases(spark, sf_dir: str) -> dict:
     """Build the streaming-bench pipeline table:
-    {name: (build_fn, output_mode, rows_in)}.
-
-    Shared by stream_bench (in-harness numbers in BENCH_SELF_r{N}.json)
-    and tools/stream_ab.py (isolated numbers in STREAM_AB_r{N}.json) so
-    the two artifacts always time IDENTICAL pipelines."""
+    {name: (build_fn, output_mode, rows_in)}, timed by stream_bench."""
     from pyspark.sql import functions as F
 
     from kafka_streams_examples_spark.catalog import table
@@ -327,8 +302,8 @@ def stream_bench(spark, sf_dir: str, only: list[str] | None = None,
         best = min(samples)
         # all three samples recorded: BENCH r8 caught one process where
         # the applyInPandasWithState pipelines ran 3x slow on EVERY
-        # sample (BENCH_SELF_r08_run6.json) while an isolated rerun was
-        # normal — with only the min recorded, a reader can't tell
+        # sample (`git show 2faeba1:BENCH_SELF_r08_run6.json`) while an
+        # isolated rerun was normal — with only the min recorded, a reader can't tell
         # "one slow sample" from "the whole process was degraded"
         out[name] = {"wall_sec": best,
                      "rows_per_sec": round(rows_in / best, 1),
@@ -392,314 +367,35 @@ def disk_probe(size_mb: int = 256, passes: int = 2,
             "best_mb_s": max(rates)}
 
 
-def wait_for_idle(threshold: float = 2.0, timeout: float = 900.0,
-                  poll: float = 10.0) -> float:
-    """Block until the 1-min loadavg drops below `threshold` (or timeout).
-
-    Two of the last three driver BENCH artifacts were load-noise (r5
-    loadavg ~8, r7 loadavg 10.9 → uniform 1.2-1.3× inflation across
-    untouched queries); the r6/r7 telemetry *diagnoses* that after the
-    fact but doesn't prevent it. This gate spends bounded wall time to
-    buy a clean signal; the wait (and whether the gate gave up) is
-    recorded in the payload so a timed-out run is self-evidently dirty.
-    Override: SPARK_GRAFT_NO_IDLE_GATE=1 skips (returns 0.0)."""
-    if os.environ.get("SPARK_GRAFT_NO_IDLE_GATE"):
-        return 0.0
-    t0 = time.time()
-    while os.getloadavg()[0] >= threshold:
-        if time.time() - t0 > timeout:
-            break
-        time.sleep(poll)
-    return round(time.time() - t0, 1)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-
-    # Idle-gate BEFORE the session spins up: the gate reads host load, and
-    # a JVM launch itself perturbs the 1-min average.
-    idle_wait = wait_for_idle()
-
-    # storage regime at run start, before the JVM can contend for the
-    # volume (and again at run end, below) — see disk_probe
-    disk_start = disk_probe()
-
     spark = get_spark("bench", cpus=cpus)
 
-    # Load-honesty telemetry (BENCH_r05 postmortem: a loaded box inflated
-    # recorded numbers 1.2-2.3x and read as a phantom regression). Three
-    # independent signals let a reader without a Spark session tell load
-    # from plan change: (a) 1/5/15-min loadavg at start and end, (b) a
-    # fixed canary (tpch_q1, the most stable sub-second plan) timed
-    # FIRST and LAST — its spread bounds the run's own noise floor, and
-    # (c) min-of-3 for sub-second queries, where load spikes dominate.
-    load_start = os.getloadavg()
-
     # warmup: JVM + codegen + parquet footer caches + the noop-write
-    # committer path. FOUR noop runs, not one: every recorded round
-    # r5-r8 shows canary_first 1.5-2.9x canary_last even on an idle box
-    # — the C2 JIT keeps compiling scan/agg hot paths through the first
-    # few plan executions, so a single-warmup first canary times JIT
-    # residue, not load, and poisons the spread signal the canary
-    # exists to provide
+    # committer path. FOUR noop runs, not one: the C2 JIT keeps compiling
+    # scan/agg hot paths through the first few plan executions
     QUERIES["tpch_q1"].spark(spark, sf_dir).count()
     for _ in range(4):
         _run_once("tpch_q1", spark, sf_dir)
-    # min-of-2 canary samples, same methodology as the queries they
-    # calibrate — the spread must reflect load, not scheduler jitter
-    canary_first = min(_run_once("tpch_q1", spark, sf_dir) for _ in range(2))
 
-    def batch_pass() -> dict[str, float]:
-        t: dict[str, float] = {}
-        for name in HEADLINE:
-            # min-of-2 (warm caches + strip one load spike); a third run
-            # for sub-second queries, whose relative spread is the widest
-            best = min(_run_once(name, spark, sf_dir) for _ in range(2))
-            if best < 1.0:
-                best = min(best, _run_once(name, spark, sf_dir))
-            t[name] = round(best, 3)
-        return t
-
-    timings = batch_pass()
-    # co-tenant noise retry (r8: two gauge-flagged runs at loadavg 0.3-0.9
-    # starts — the idle-gate cannot see another tenant's load): if this
-    # run's own gauge says the batch is inflated, re-run the batch ONCE
-    # (everything is warm) and keep the per-query min; the gauge in the
-    # payload is recomputed from the kept timings, and batch_retries
-    # records that the retry happened so the artifact stays honest.
-    batch_retries = 0
-    g = noise_gauge(timings)
-    # retry at a TIGHTER threshold than the read-side inflated verdict
-    # (1.15): a validation run with median 1.065 still summed 19% over
-    # the clean artifact — concentration in a few queries hides from
-    # the median, and a second pass costs ~2 min for a strictly-better
-    # per-query min
-    first_pass: dict[str, float] | None = None
-    if g and g["median_ratio"] > 1.05:
-        # keep the discarded first pass verbatim so a reader can
-        # reconstruct the min-of-2 figure a clean (retry-free) round
-        # would have reported — retried rounds otherwise report
-        # min-of-4 and round-over-round ratios stop being
-        # methodologically comparable (ADVICE r8)
-        first_pass = dict(timings)
-        retry = batch_pass()
-        timings = {n: min(timings[n], retry[n]) for n in timings}
-        batch_retries = 1
-
-    canary_last = min(_run_once("tpch_q1", spark, sf_dir) for _ in range(2))
+    # min-of-2: warm caches + strip one load spike
+    timings = {name: min(_run_once(name, spark, sf_dir) for _ in range(2))
+               for name in HEADLINE}
     streaming = stream_bench(spark, sf_dir)
-    load_end = os.getloadavg()
-    disk_end = disk_probe()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    full = payload(
-        timings, streaming,
-        float(sf) if sf.replace(".", "").isdigit() else sf,
-        load_start, load_end, canary_first, canary_last,
-        idle_wait_sec=idle_wait,
-        disk={"start": disk_start, "end": disk_end})
-    full["batch_retries"] = batch_retries
-    if first_pass is not None:
-        full["first_pass_queries"] = first_pass
-        full["first_pass_total_sec"] = round(sum(first_pass.values()), 3)
-    self_path = self_artifact_path(
-        os.path.dirname(os.path.abspath(__file__)), round_number())
-    with open(self_path, "w") as f:
-        json.dump(full, f, indent=1)
-    # compact separators: ~135 chars saved across 60 dict entries, all
-    # margin against the driver's stdout tail-capture budget
-    print(json.dumps(printed_line(full), separators=(",", ":")))
-
-
-def self_artifact_path(directory: str, round_no: int) -> str:
-    """Where this run's full payload lands. Normally
-    BENCH_SELF_r{N}.json — but once that file is COMMITTED (the
-    round's canonical snapshot), later runs in the same round write
-    BENCH_SELF_r{N}_post.json instead, so a driver-initiated (or any
-    post-commit) re-run can never dirty the canonical artifact in
-    place (VERDICT r13 what's-wrong item 1: the r13 driver re-run
-    overwrote the committed 114.52s run with 117.62s and left the
-    tree dirty at round close). Uncommitted/untracked files keep the
-    old overwrite-freely behavior — that's the iterate-then-commit
-    loop working as intended."""
-    base = os.path.join(directory, f"BENCH_SELF_r{round_no:02d}.json")
-    if not os.path.exists(base):
-        return base
-    import subprocess
-    try:
-        tracked = subprocess.run(
-            ["git", "ls-files", "--error-unmatch", base],
-            capture_output=True, cwd=directory, timeout=10)
-        dirty = subprocess.run(
-            ["git", "status", "--porcelain", "--", base],
-            capture_output=True, text=True, cwd=directory, timeout=10)
-        if (tracked.returncode == 0 and dirty.returncode == 0
-                and not dirty.stdout.strip()):
-            return os.path.join(directory,
-                                f"BENCH_SELF_r{round_no:02d}_post.json")
-    except Exception:
-        pass
-    return base
-
-
-def round_number() -> int:
-    """Current build round: $SPARK_GRAFT_ROUND if set, else one past the
-    newest COMPLETED round at the repo root.
-
-    A round is complete only when BOTH its driver artifacts exist
-    (CORRECTNESS_r{N}.json and BENCH_r{N}.json). Using CORRECTNESS alone
-    mis-numbered r7: the driver writes CORRECTNESS first and runs bench
-    second, so the driver's own bench invocation saw CORRECTNESS_r07
-    already on disk and stamped its payload r08 (ADVICE r7). min() over
-    the two families is correct in every phase: mid-round-N build both
-    maxes are N-1; in the driver's verify window, whichever artifact
-    lands first leaves the other at N-1 until the round truly ends."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    import glob
-    import re
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    def newest(pattern: str) -> int:
-        rounds = [int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-                  for p in glob.glob(os.path.join(here, pattern))]
-        return max(rounds, default=0)
-
-    done = min(newest("CORRECTNESS_r*.json"), newest("BENCH_r*.json"))
-    return done + 1
-
-
-def printed_line(full: dict) -> dict:
-    """Compact form of the bench payload for the ONE printed JSON line.
-
-    Identical to the full payload except the streaming section: the
-    per-pipeline {wall_sec, rows_per_sec, rows_in} dicts collapse to a
-    {name: rows_per_sec} map (round-over-round streaming visibility stays
-    in the artifact; the detail lives in BENCH_SELF_r{N}.json). The
-    serialized length is contract-tested under the driver's observed
-    stdout-capture budget so the artifact can never again truncate."""
-    out = dict(full)
-    out["streaming"] = {name: int(round(row["rows_per_sec"]))
-                        for name, row in full["streaming"].items()}
-    # 2-decimal query seconds on the wire (r8: the 54-query HEADLINE +
-    # 9th pipeline pushed the worst-case line past the budget) — ±5 ms
-    # printed resolution is below run noise; full 3-decimal timings stay
-    # in BENCH_SELF_r{N}.json
-    out["queries"] = {n: round(v, 2) for n, v in full["queries"].items()}
-    # loadavg detail and idle wait likewise live only in the self file;
-    # the wire keeps the one actionable number (1-min loadavg at start)
-    out.pop("idle_wait_sec", None)
-    out.pop("loadavg", None)
-    out["load1"] = full["loadavg"]["start"][0]
-    # the gauge and the canary collapse to their one actionable number
-    # on the wire (full detail stays in BENCH_SELF_r{N}.json) — r8: the
-    # 56-query HEADLINE pushed the worst case past the budget again
-    gauge = out.pop("noise_gauge", None)
-    if gauge:
-        out["noise"] = gauge["median_ratio"]
-    if isinstance(out.get("canary"), dict):
-        out["canary"] = out["canary"]["spread"]
-    # the storage probe collapses to ONE int MB/s on the wire — the
-    # MIN of the start/end bests, i.e. the binding regime for the
-    # run's disk-heavy rows (start/end/per-pass detail stays in the
-    # self artifact); dropped entirely when the probe was skipped.
-    # r14 wire budget: the two-number form pushed the worst case 14
-    # chars over, so metric also sheds its redundant "_total" below.
-    dp = out.pop("disk_mb_s", None)
-    if isinstance(dp, dict) and dp.get("start") and dp.get("end"):
-        out["disk"] = int(min(dp["start"]["best_mb_s"],
-                              dp["end"]["best_mb_s"]))
-    # first-pass detail (retried rounds) lives only in the self
-    # artifact — r9: the 57-query HEADLINE pushed the worst case past
-    # the budget with both scalars on the wire, so the total moved to
-    # the self file too (batch_retries stays as the wire-visible flag)
-    out.pop("first_pass_queries", None)
-    out.pop("first_pass_total_sec", None)
-    # r9 (10th pipeline + 59-query HEADLINE): the round number and the
-    # retry flag live in the self artifact (which also carries the full
-    # first-pass detail) — the driver names BENCH_r{N}.json itself and a
-    # reader auditing a retry opens the self file anyway; the metric
-    # label sheds its redundant "queries_" (the queries dict is right
-    # there); scalars print at 2dp. Net: worst case back under budget.
-    out.pop("round", None)
-    out.pop("batch_retries", None)
-    out["metric"] = "headline"
-    for k in ("noise", "canary", "value"):
-        if isinstance(out.get(k), float):
-            out[k] = round(out[k], 2)
-    # loadavg below 0.1 resolution is scheduler noise — 1dp on the wire
-    if isinstance(out.get("load1"), float):
-        out["load1"] = round(out["load1"], 1)
-    return out
-
-
-def noise_gauge(timings: dict) -> dict | None:
-    """Estimate this run's co-tenant inflation by comparing its
-    multi-second queries against the newest SCALE artifact's min-of-2
-    rows at the same SF. loadavg only sees OUR host's runnable queue —
-    r8 measured full-bench totals of 52.7-66.1s on identical code at
-    loadavg-0.1 starts, with untouched queries inflated uniformly (the
-    noisy-neighbor signature). A median bench/scale ratio near 1 says
-    the run is clean; >~1.15 says every multi-second number is inflated
-    and round-over-round deltas of that size are machine, not code."""
-    import glob
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = sorted(glob.glob(os.path.join(here, "SCALE_r*.json")))
-    if not paths:
-        return None
-    try:
-        with open(paths[-1]) as f:
-            rows = json.load(f).get("queries", {})
-    except (OSError, json.JSONDecodeError):
-        return None
-    ratios = sorted(
-        timings[q] / rows[q]["sec_sf0.1"]
-        for q in timings
-        if q in rows and rows[q].get("sec_sf0.1", 0) >= 1.0)
-    if len(ratios) < 5:
-        return None
-    med = ratios[len(ratios) // 2]
-    return {"vs": os.path.basename(paths[-1]),
-            "median_ratio": round(med, 3),
-            "n_queries": len(ratios),
-            "inflated": med > 1.15}
-
-
-def payload(timings, streaming, sf, load_start, load_end,
-            canary_first: float, canary_last: float,
-            idle_wait_sec: float = 0.0, disk: dict | None = None) -> dict:
-    """Assemble the one-line BENCH JSON. The load-honesty fields
-    (loadavg, canary.spread, idle_wait_sec, noise_gauge, disk_mb_s)
-    are contract-tested — a judge reading BENCH_r{N}.json with no Spark
-    session must be able to distinguish machine load from plan
-    regression, and (r14) storage-volume regime from both. `round` is
-    embedded so a mis-globbed filename can never again mislabel a
-    payload's provenance (ADVICE r7: the r7 self-bench landed as
-    BENCH_SELF_r08)."""
-    cs = max(canary_first, canary_last) / min(canary_first, canary_last)
-    return {
-        # fsync'd-write probe at both ends (disk_probe): the volume's
-        # regime for this run's disk-heavy rows — None when skipped
-        "disk_mb_s": disk,
-        # gauge rows are keyed sec_sf0.1, so only comparable at sf 0.1
-        "noise_gauge": noise_gauge(timings) if sf == 0.1 else None,
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
+    # compact separators and 2-decimal seconds: the line must fit the
+    # ~2000-char stdout tail its reader keeps (tests/test_contracts.py)
+    print(json.dumps({
+        "metric": "headline",
+        "value": round(sum(timings.values()), 2),
         "unit": "sec",
-        "round": round_number(),
-        "queries": timings,
-        "streaming": streaming,
-        "sf": sf,
-        "loadavg": {"start": [round(x, 2) for x in load_start],
-                    "end": [round(x, 2) for x in load_end]},
-        "idle_wait_sec": idle_wait_sec,
-        "canary": {"query": "tpch_q1",
-                   "first_sec": round(canary_first, 3),
-                   "last_sec": round(canary_last, 3),
-                   "spread": round(cs, 3)},
-    }
+        "queries": {n: round(t, 2) for n, t in timings.items()},
+        "streaming": {n: int(round(row["rows_per_sec"]))
+                      for n, row in streaming.items()},
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+    }, separators=(",", ":")))
 
 
 if __name__ == "__main__":

@@ -661,6 +661,9 @@ def connected_components_star(edges: DataFrame, nodes: DataFrame,
             canon = ss
             break
         canon, n_prev = ss, n_new
+    else:
+        raise RuntimeError(f"star components did not converge within "
+                           f"max_iterations={max_iterations} rounds")
     lbl = canon.groupBy("hi").agg(F.min("lo").alias("__cl"))
     return (nodes.select(F.col(id_col))
                  .join(lbl, nodes[id_col] == lbl["hi"], "left")
@@ -694,6 +697,9 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     O(component diameter) rounds. Convergence is detected by the monotone
     invariant sum(labels): labels only ever decrease, so an unchanged sum
     IS the fixpoint (one scalar aggregate per round, no comparison join).
+    Both variants raise RuntimeError when ``max_iterations`` rounds pass
+    without a fixpoint, rather than return unconverged labels, which split
+    components.
 
     100 TB design: near-dup components are clique-ish (diameter 2-3), so
     propagation converges in a handful of rounds; the edge relation is
@@ -773,6 +779,9 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        raise RuntimeError(f"label propagation did not converge within "
+                           f"max_iterations={max_iterations} rounds")
     return (nodes.select(F.col(id_col))
                  .join(labels, nodes[id_col] == labels["node"], "left")
                  .select(F.col(id_col),
@@ -989,7 +998,7 @@ def soft_dedup(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
     bucket-confined) -> connected components -> one broadcast-joined
     size table -> a scan-side keep expression; nothing beyond the
     already-audited dedup_clusters plan shuffles, so the 100-TB story
-    is the pair stage's (linear, LEAKSPLIT_r09.json).
+    is the pair stage's (linear, `git show 2faeba1:LEAKSPLIT_r09.json`).
 
     Output: (doc_id, cluster_id, cluster_size, keep_bucket, kept)."""
     pairs = minhash_lsh_pairs(docs, num_hashes=num_hashes, bands=bands,

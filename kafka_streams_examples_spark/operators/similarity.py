@@ -1064,9 +1064,9 @@ def _rerank_in_buckets(routed: DataFrame, vectors: DataFrame,
 #: routed path's fixed overhead (mini-trainer jobs + collects +
 #: checkpoints, ~8s measured at sf1) outweighs the saved folds —
 #: measured exact 15.3s vs routed 23.6s at n*k=1.6M, and exact 452s vs
-#: routed ~41-88s at n*k=160M (SCALE10_r08). Every oracle-verified SF
-#: sits far below the gate, so hash parity always runs the exact
-#: bit-identical assign.
+#: routed ~41-88s at n*k=160M (`git show 2faeba1:SCALE10_r08.json`).
+#: Every oracle-verified SF sits far below the gate, so hash parity
+#: always runs the exact bit-identical assign.
 ROUTED_FOLD_GATE = 50_000_000
 
 

@@ -154,25 +154,9 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
                   .select("doc_id", "word", "tfidf", F.col("rn").cast("long").alias("rn")))
 
 
-#: winnowing window and shingle width of the decontamination family;
-#: `decontaminate_bloom` must return exactly `decontaminate`'s rows
+#: winnowing window and shingle width; corpus and fragment fingerprints
+#: must share them for the completeness guarantee to hold
 DECON_W, DECON_N = 4, 3
-
-
-def _decon_fingerprints(docs: DataFrame,
-                        contaminants: DataFrame) -> tuple[DataFrame,
-                                                          DataFrame]:
-    """(doc_id, fp) of the corpus and (src_id, fp) of the fragments: the
-    winnowing fingerprints both decontamination forms join on."""
-    from .dedup import winnow_fingerprints
-
-    doc_fp = winnow_fingerprints(docs, w=DECON_W, n=DECON_N)
-    frag_fp = (winnow_fingerprints(
-                   contaminants.select(F.col("src_id").alias("doc_id"),
-                                       F.col("frag").alias("text")),
-                   w=DECON_W, n=DECON_N)
-               .withColumnRenamed("doc_id", "src_id"))
-    return doc_fp, frag_fp
 
 
 def decontaminate(docs: DataFrame, contaminants: DataFrame) -> DataFrame:
@@ -198,16 +182,15 @@ def decontaminate(docs: DataFrame, contaminants: DataFrame) -> DataFrame:
     fragment-source) hit — including a fragment's own source document, a
     built-in sanity row.
     """
-    doc_fp, frag_fp = _decon_fingerprints(docs, contaminants)
+    from .dedup import winnow_fingerprints
+
+    doc_fp = winnow_fingerprints(docs, w=DECON_W, n=DECON_N)
+    frag_fp = (winnow_fingerprints(
+                   contaminants.select(F.col("src_id").alias("doc_id"),
+                                       F.col("frag").alias("text")),
+                   w=DECON_W, n=DECON_N)
+               .withColumnRenamed("doc_id", "src_id"))
     cand = doc_fp.join(frag_fp, "fp").select("doc_id", "src_id").distinct()
-    return _verify_contains(docs, contaminants, cand)
-
-
-def _verify_contains(docs: DataFrame, contaminants: DataFrame,
-                     cand: DataFrame) -> DataFrame:
-    """Shared exact-verify tail of the decontamination family: candidate
-    (doc, src) pairs re-check with a space-padded token-aligned contains
-    on the whitespace-normalized text, the fragment side broadcast."""
     ntext = F.concat_ws(
         " ", F.filter(tokens("text"), lambda x: x != ""))
     norm = docs.select(F.col("doc_id"), ntext.alias("__ntext"))
@@ -218,88 +201,6 @@ def _verify_contains(docs: DataFrame, contaminants: DataFrame,
                     F.concat(F.lit(" "), F.col("__ntext"), F.lit(" ")),
                     F.concat(F.lit(" "), F.col("frag"), F.lit(" "))))
                 .select("doc_id", "src_id"))
-
-
-def decontaminate_bloom(docs: DataFrame, contaminants: DataFrame,
-                        m_bits: int = 1 << 16,
-                        probes: int = 2) -> DataFrame:
-    """`decontaminate` with a broadcast Bloom-bitmap prefilter on the
-    fingerprint join — the 100 TB shape when the benchmark set itself is
-    too large to broadcast.
-
-    Plain `decontaminate` equi-joins corpus fingerprints against fragment
-    fingerprints. When the benchmark side is small Catalyst broadcasts it
-    and the corpus never shuffles; but a production contamination sweep
-    carries the n-grams of EVERY eval suite — tens of millions of
-    fragments whose fingerprint table is GBs. Past the broadcast
-    threshold that join shuffles the full corpus fingerprint set, which
-    at 100 TB is the dominant cost. A Bloom filter (Bloom 1970; the
-    standard big-data semi-join prefilter) collapses the fragment side to
-    a fixed m-bit bitmap — size set by the chosen false-positive rate,
-    NOT by the benchmark size — that always broadcasts:
-
-    1. fragment fingerprints set `probes` bits each (positions
-       pmod(xxhash64(fp, i), m)); the bitmap aggregates map-side as
-       bit_or over int64 words and ships to the driver as <= m/64 rows
-       (bounded by the constant m, never by data — the codebook-load
-       convention) and re-attaches as a ONE-ROW broadcast array<long>;
-    2. corpus fingerprints probe the bitmap scan-side — pure
-       shiftright/bitwiseAND Column arithmetic inside whole-stage
-       codegen, so the non-candidate >99% of the corpus dies before
-       ANY shuffle;
-    3. survivors take the ordinary exact fingerprint equi-join (now
-       against a tiny surviving-corpus side), which kills Bloom false
-       positives, then the shared `_verify_contains` tail.
-
-    Bloom filters have NO false negatives — every fragment fingerprint
-    sets exactly the bits its equal corpus fingerprint probes — so the
-    result is row-identical to `decontaminate`; the same oracle covers
-    both. At the default m=2^16/probes=2 a fixture-scale fragment set
-    (~1e3 fps) keeps the false-positive rate ~1e-3; production sizing
-    follows the standard m = -n*ln(p)/ln(2)^2.
-    """
-    doc_fp, frag_fp = _decon_fingerprints(docs, contaminants)
-
-    def _positions(fp: Column) -> list[Column]:
-        return [F.pmod(F.xxhash64(fp, F.lit(i)), F.lit(m_bits))
-                for i in range(probes)]
-
-    # (1) bitmap words aggregate Spark-side; the driver sees <= m/64
-    # (word_idx, bits) rows — a constant-bounded collect, independent of
-    # corpus and benchmark size.
-    pos = frag_fp.select(
-        F.explode(F.array(*_positions(F.col("fp")))).alias("p"))
-    # variable shift amounts need call_function: the python wrappers for
-    # shiftleft/shiftright only take int literals, the SQL exprs take cols
-    words = (pos.select(F.shiftright("p", 6).alias("w"),
-                        F.call_function(
-                            "shiftleft", F.lit(1).cast("long"),
-                            F.col("p").bitwiseAND(F.lit(63))
-                             .cast("int")).alias("b"))
-                .groupBy("w").agg(F.bit_or("b").alias("bits"))
-                .collect())
-    bitmap = [0] * (m_bits // 64)
-    for r in words:
-        bitmap[r["w"]] = r["bits"]
-    bm = F.broadcast(docs.sparkSession.createDataFrame(
-        [(bitmap,)], "__bm array<bigint>"))
-
-    # (2) scan-side probe: every position's bit must be set
-    hit = None
-    for p in _positions(F.col("fp")):
-        test = (F.call_function(
-                    "shiftright",
-                    F.element_at(F.col("__bm"),
-                                 F.shiftright(p, 6).cast("int") + F.lit(1)),
-                    p.bitwiseAND(F.lit(63)).cast("int"))
-                 .bitwiseAND(F.lit(1).cast("long")) == F.lit(1))
-        hit = test if hit is None else (hit & test)
-    cand_fp = (doc_fp.crossJoin(bm).filter(hit)
-                     .select("doc_id", "fp"))
-
-    # (3) exact join kills Bloom false positives; result == decontaminate
-    cand = cand_fp.join(frag_fp, "fp").select("doc_id", "src_id").distinct()
-    return _verify_contains(docs, contaminants, cand)
 
 
 def repetition_stats(docs: DataFrame) -> DataFrame:

@@ -1933,8 +1933,8 @@ def _semantic_dedup_sql(iters: int = 2, threshold: float = 0.25) -> str:
     "the assign passes switch to coarse-cell routing (kmeans_train "
     "routed=True — the FAISS quantizer-as-index practice), cutting the "
     "per-pass cost from n*k to ~n*2*sqrt(2k): the sf10 decade measured "
-    "452s exact vs 68.8s routed (SCALE10_r08). End-to-end: the modern "
-    "embedding-space dedup a 100 TB text corpus gets, composed from "
+    "452s exact vs 68.8s routed (`git show 2faeba1:SCALE10_r08.json`). "
+    "End-to-end: the modern embedding-space dedup a 100 TB text corpus gets, composed from "
     "kmeans_train + embedding_near_dup_pairs + connected_components, "
     "with the training output materialized once (lazy localCheckpoint). "
     "Oracle composes the unrolled Lloyd's CTEs, the pair join and the "
@@ -2079,38 +2079,6 @@ def _benchmark_frags(docs: DataFrame) -> DataFrame:
 def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     docs = table(spark, sf, "documents")
     return TX.decontaminate(docs, _benchmark_frags(docs))
-
-
-@query(
-    "decontaminate_bloom",
-    r"""WITH tk AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
-         FROM documents),
-    norm AS (SELECT doc_id, array_to_string(ws, ' ') AS ntext FROM tk),
-    cont AS (SELECT doc_id AS src_id, array_to_string(list_slice(ws, 11, 40), ' ') AS frag
-             FROM tk WHERE doc_id % 97 = 0 AND len(ws) >= 40)
-    SELECT n.doc_id, c.src_id
-    FROM norm n, cont c
-    WHERE contains(' ' || n.ntext || ' ', ' ' || c.frag || ' ')""",
-    "Bloom-prefiltered decontamination — row-identical to `decontaminate` "
-    "(Bloom filters have no false negatives and the exact fingerprint "
-    "join kills the false positives, so the SAME oracle covers both; the "
-    "driver verifies that identity every round). The variant exists for "
-    "the 100 TB case the plain form cannot broadcast: a full eval-suite "
-    "benchmark set whose fingerprint table is GBs. Its fragment "
-    "fingerprints collapse to a fixed m-bit bitmap (m=2^16 here; sized "
-    "by target false-positive rate, NOT benchmark size) that attaches as "
-    "a ONE-ROW broadcast array<long>, and corpus fingerprints probe it "
-    "with shiftright/AND arithmetic inside whole-stage codegen — the "
-    "non-candidate bulk of the corpus is discarded at scan time, before "
-    "any shuffle. The bitmap build itself aggregates map-side (bit_or "
-    "over int64 words) and ships <= m/64 rows to the driver — bounded "
-    "by the constant m, never by data.",
-)
-def q_decontaminate_bloom(spark: SparkSession, sf: str) -> DataFrame:
-    docs = table(spark, sf, "documents")
-    return TX.decontaminate_bloom(docs, _benchmark_frags(docs),
-                                  m_bits=1 << 16, probes=2)
 
 
 @query(

@@ -25,8 +25,9 @@ buckets swapped in by a streaming upsert (KTableMaterializer) mid-poll —
 the reference's outstanding-requests map collapses to polling the
 materialized table.
 
-Malformed input is the caller's error: a path too short for its route is a
-404 and a non-integer ``k`` or ``timeout`` is a 400. A key or range bound
+Malformed input is the caller's error: a path too short for its route or
+an unknown store is a 404 (a long-poll does not wait for one) and a
+non-integer ``k`` or ``timeout`` is a 400. A key or range bound
 that does not cast to its column's type (``a`` against a bigint key) matches
 nothing, so the route answers 200 with ``[]``, as for a key that is absent.
 
@@ -137,10 +138,12 @@ class InteractiveQueryService:
 
     def _long_poll(self, store_name: str, key: str,
                    timeout_ms: int) -> tuple[int, bytes]:    # Q7
+        if store_name not in self.stores:
+            return 404, b'{"error": "no such store"}'
         deadline = time.time() + timeout_ms / 1000.0
         while True:
-            store = self.stores.get(store_name)
-            rows = store.get(key) if store is not None else []
+            # re-read each poll: an upsert may register a new store object
+            rows = self.stores[store_name].get(key)
             if rows:
                 return 200, _rows_json(rows)
             if time.time() >= deadline:

@@ -120,68 +120,6 @@ def test_scale_artifacts_show_no_superlinear_step():
         assert slow == {}, f"super-linear streaming state machinery: {slow}"
 
 
-def test_bench_payload_carries_load_honesty_fields():
-    # BENCH_r05 was recorded on a loaded box and read as a phantom 1.17x
-    # regression. The payload must carry enough telemetry for a reader
-    # WITHOUT a Spark session to separate machine load from plan change:
-    # loadavg at both ends and a first/last canary whose spread bounds
-    # the run's noise floor.
-    import bench
-    p = bench.payload({"q": 1.0}, {}, 0.1,
-                      (1.0, 2.0, 3.0), (4.0, 5.0, 6.0), 0.30, 0.45,
-                      idle_wait_sec=12.5)
-    assert p["loadavg"] == {"start": [1.0, 2.0, 3.0], "end": [4.0, 5.0, 6.0]}
-    assert p["canary"]["query"] == "tpch_q1"
-    assert p["canary"]["spread"] == 1.5
-    assert p["canary"]["first_sec"] == 0.3 and p["canary"]["last_sec"] == 0.45
-    # r8 additions: the idle-gate wait is recorded (a run that timed out
-    # waiting is self-evidently dirty) and the payload self-identifies
-    # its round so a mis-globbed filename can't mislabel provenance
-    # (ADVICE r7: the r7 self-bench landed as BENCH_SELF_r08.json)
-    assert p["idle_wait_sec"] == 12.5
-    assert p["round"] == bench.round_number()
-    # spread is symmetric: a slow FIRST canary (warm-up residue) must not
-    # report < 1.0
-    assert bench.payload({}, {}, 0.1, (0,) * 3, (0,) * 3,
-                         0.45, 0.30)["canary"]["spread"] == 1.5
-    # r14 (VERDICT r13 item 2): the storage regime rides the payload —
-    # the block volume's fsync'd write throughput swings 121-628 MB/s
-    # invisibly to loadavg, and disk-heavy rows swing with it
-    probe = {"size_mb": 256, "passes_mb_s": [400.0, 500.0],
-             "best_mb_s": 500.0}
-    p2 = bench.payload({"q": 1.0}, {}, 0.1, (0,) * 3, (0,) * 3, 1, 1,
-                       disk={"start": probe, "end": probe})
-    assert p2["disk_mb_s"]["start"]["best_mb_s"] == 500.0
-    assert p["disk_mb_s"] is None          # skipped probe stays honest
-
-
-def test_bench_self_artifact_snapshot_policy(tmp_path):
-    # VERDICT r13 what's-wrong 1: a post-commit re-run (driver or
-    # otherwise) must never dirty the round's committed canonical
-    # BENCH_SELF in place — it diverts to the _post slot. Uncommitted
-    # files keep the overwrite-freely iterate loop.
-    import os
-    import subprocess
-
-    import bench
-    d = str(tmp_path)
-    subprocess.run(["git", "init", "-q"], cwd=d, check=True)
-    assert bench.self_artifact_path(d, 14).endswith("BENCH_SELF_r14.json")
-    f = os.path.join(d, "BENCH_SELF_r14.json")
-    open(f, "w").write("{}")
-    # untracked: same slot (iterate loop)
-    assert bench.self_artifact_path(d, 14) == f
-    subprocess.run(["git", "add", "BENCH_SELF_r14.json"], cwd=d, check=True)
-    subprocess.run(["git", "-c", "user.email=t@t", "-c", "user.name=t",
-                    "commit", "-qm", "snap"], cwd=d, check=True)
-    # committed canonical: divert
-    assert bench.self_artifact_path(d, 14).endswith(
-        "BENCH_SELF_r14_post.json")
-    # locally modified again: the canonical is already dirty, overwrite
-    open(f, "a").write(" ")
-    assert bench.self_artifact_path(d, 14) == f
-
-
 def test_disk_probe_measures_and_skips():
     # the probe itself: returns per-pass MB/s + best at a tiny size
     # (1 MiB here — the test must not burn real I/O), and the env
@@ -213,91 +151,38 @@ def test_headline_cap():
     assert set(bench.HEADLINE) <= set(QUERIES)
 
 
-def test_bench_printed_line_fits_capture_budget():
-    # BENCH_r06 postmortem: the driver keeps only the LAST ~2000 chars of
-    # stdout (shared with trailing Spark-shutdown WARN lines), and r6's
-    # enriched line outgrew it — the artifact recorded a mid-line
-    # fragment (`parsed: null`). The printed line is now the compact form
-    # (printed_line(): streaming collapses to {name: int rows_per_sec});
-    # gate its worst-case serialized length with margin for ~300 chars of
-    # post-print log spam. The FULL payload is durable regardless via
-    # BENCH_SELF_r{N}.json.
+def test_bench_printed_line_fits_capture_budget(monkeypatch, capsys):
+    # the bench line's reader keeps only the LAST ~2000 chars of stdout
+    # (shared with trailing Spark-shutdown WARN lines); a line that
+    # outgrows it is recorded as a mid-line fragment. Run main() with
+    # Spark stubbed out and worst-case widths, and gate the one printed
+    # line with margin for ~300 chars of post-print log spam.
     import json
+    from types import SimpleNamespace
 
     import bench
+    warm = SimpleNamespace(spark=lambda spark, sf_dir: SimpleNamespace(
+        count=lambda: 0))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(bench, "QUERIES", {"tpch_q1": warm})
+    monkeypatch.setattr(bench, "_run_once", lambda *a: 99.999)
     # worst plausible pipeline throughput is ~1M rows/s (observed max
-    # 534k, wordcount r8) — the old 10M-width assumption burned 10
-    # budget chars on an impossible case
-    streaming = {n: {"wall_sec": 99.999, "rows_per_sec": 999999.9,
-                     "rows_in": 99999999} for n in bench.STREAMING_PIPELINES}
-    timings = {n: 99.999 for n in bench.HEADLINE}  # worst-case widths
-    worst_probe = {"size_mb": 256, "passes_mb_s": [9999.9, 9999.9],
-                   "best_mb_s": 9999.9}
-    full = bench.payload(timings, streaming, 0.1,
-                         (99.99,) * 3, (99.99,) * 3, 9.999, 9.999,
-                         disk={"start": worst_probe, "end": worst_probe})
-    full["batch_retries"] = 1   # main() adds it; worst-case width
-    # retried rounds also carry the first pass (ADVICE r8) — per-query
-    # detail must stay OFF the wire, the scalar total on it
-    full["first_pass_queries"] = dict(timings)
-    full["first_pass_total_sec"] = 9999.999
-    line = json.dumps(bench.printed_line(full), separators=(",", ":"))
-    assert "first_pass_queries" not in json.loads(line)
+    # 534k, wordcount r8)
+    monkeypatch.setattr(bench, "stream_bench", lambda spark, sf_dir: {
+        n: {"rows_per_sec": 999999.9} for n in bench.STREAMING_PIPELINES})
+    bench.main()
+    out = capsys.readouterr().out
+    assert out.count("\n") == 1
+    line = out.strip()
     assert len(line) <= 1700, (
         f"printed bench line is {len(line)} chars — would risk the "
-        "driver's ~2000-char stdout tail capture; shrink printed_line()")
-    # the compact form must still satisfy the driver's parse contract
+        "~2000-char stdout tail capture")
     parsed = json.loads(line)
     assert {"metric", "value", "unit", "queries", "sf"} <= set(parsed)
-    assert set(parsed["queries"]) == set(bench.HEADLINE)
-    # and the full payload keeps the per-pipeline detail the compact
-    # form drops (wall_sec + rows_in live only in the self file)
-    assert full["streaming"]["wordcount"]["rows_in"] == 99999999
-
-
-def test_bench_round_number_tracks_artifacts(monkeypatch):
-    import bench
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "12")
-    assert bench.round_number() == 12
-    monkeypatch.delenv("SPARK_GRAFT_ROUND")
-    # repo has CORRECTNESS_r01..r06 committed -> current round is 7+
-    assert bench.round_number() >= 7
-
-
-def test_noise_gauge_flags_uniform_inflation():
-    """The gauge compares multi-second bench timings against the newest
-    SCALE artifact: clean run -> median_ratio ~1 / inflated False; a
-    uniformly 1.3x-inflated run -> inflated True. (r8: co-tenant noise is
-    invisible to loadavg — full-bench totals swung 52.7-66.1s on
-    identical code at loadavg-0.1 starts.)"""
-    import glob
-    import json as _json
-    import os as _os
-
-    import bench
-    paths = sorted(glob.glob(_os.path.join(
-        _os.path.dirname(_os.path.abspath(bench.__file__)), "SCALE_r*.json")))
-    assert paths, "scale artifact expected in repo root"
-    with open(paths[-1]) as f:
-        rows = _json.load(f).get("queries", {})
-    base = {q: r["sec_sf0.1"] for q, r in rows.items()
-            if r.get("sec_sf0.1", 0) >= 1.0}
-    assert len(base) >= 5
-    clean = bench.noise_gauge(dict(base))
-    assert clean is not None and not clean["inflated"]
-    assert 0.99 <= clean["median_ratio"] <= 1.01
-    noisy = bench.noise_gauge({q: v * 1.3 for q, v in base.items()})
-    assert noisy["inflated"] and noisy["median_ratio"] > 1.25
-    # sub-second-only timings -> no verdict rather than a noisy one
-    assert bench.noise_gauge({"tpch_q1": 0.3}) is None
-    # the gauge rides the payload only at sf 0.1
-    streaming = {n: {"wall_sec": 1.0, "rows_per_sec": 1.0, "rows_in": 1}
-                 for n in bench.STREAMING_PIPELINES}
-    t = {n: 9.9 for n in bench.HEADLINE}
-    assert bench.payload(t, streaming, 0.1, (0,)*3, (0,)*3, 1, 1)[
-        "noise_gauge"] is not None
-    assert bench.payload(t, streaming, 0.01, (0,)*3, (0,)*3, 1, 1)[
-        "noise_gauge"] is None
+    assert list(parsed["queries"]) == bench.HEADLINE
+    assert set(parsed["streaming"]) == set(bench.STREAMING_PIPELINES)
+    assert parsed["sf"] == 0.1
 
 
 def test_catalog_memo_scoped_per_session(spark, sf_dir):

@@ -238,50 +238,6 @@ def test_decontaminate_token_aligned_containment(spark):
     assert got == {(1, 100), (4, 100)}
 
 
-def test_decontaminate_bloom_equals_exact(spark):
-    """The Bloom-prefiltered variant is row-identical to exact
-    decontamination — including at a deliberately tiny bitmap (m=64)
-    where nearly every probe collides: Bloom false positives must die in
-    the exact fingerprint join, and false negatives cannot exist (every
-    fragment fingerprint sets the very bits its equal corpus fingerprint
-    probes). Also pins the hit/miss semantics of the shared verify tail
-    (token-aligned only, whitespace-normalized)."""
-    from kafka_streams_examples_spark.operators.text import (
-        decontaminate, decontaminate_bloom)
-
-    frag = "alpha beta gamma delta epsilon zeta eta theta"
-    frag2 = "one two three four five six seven eight nine"
-    docs = spark.createDataFrame(
-        [(1, f"intro words here {frag} trailing tail words"),
-         (2, f"intro x{frag} trailing"),          # token-misaligned: miss
-         (3, "totally unrelated content about something else entirely"),
-         (4, f"padded   {frag.replace(' ', '  ')}   end"),
-         (5, f"leading {frag2} and then {frag} both planted here")],
-        "doc_id long, text string")
-    cont = spark.createDataFrame([(100, frag), (200, frag2)],
-                                 "src_id long, frag string")
-    exact = {(r["doc_id"], r["src_id"])
-             for r in decontaminate(docs, cont).collect()}
-    assert exact == {(1, 100), (4, 100), (5, 100), (5, 200)}
-    for m_bits, probes in ((1 << 16, 2), (64, 1)):
-        bloom = {(r["doc_id"], r["src_id"])
-                 for r in decontaminate_bloom(
-                     docs, cont, m_bits=m_bits, probes=probes).collect()}
-        assert bloom == exact, (m_bits, probes)
-
-
-def test_decontaminate_bloom_empty_benchmark(spark):
-    """An empty benchmark set yields an all-zero bitmap and an empty
-    result — no div-by-zero, no probe passes."""
-    from kafka_streams_examples_spark.operators.text import decontaminate_bloom
-
-    docs = spark.createDataFrame([(1, "some ordinary text with words "
-                                      "that go on for a while here")],
-                                 "doc_id long, text string")
-    cont = spark.createDataFrame([], "src_id long, frag string")
-    assert decontaminate_bloom(docs, cont).collect() == []
-
-
 def test_repetition_stats_flags_loops(spark):
     """Gopher-style repetition: a token loop and a phrase loop flag, while
     varied text does not; empty text yields zeroed signals."""

@@ -136,12 +136,6 @@ BNLJ_BY_DESIGN = {
     # the arriving scan (the apply_line_filter/apply_nb shapes) plus
     # bm25_gate's allowlisted stats/r_eff broadcasts
     "ingest_funnel",
-    # the Bloom bitmap is a ONE-ROW array<long> of fixed length m/64
-    # (constant-sized by construction, independent of corpus and
-    # benchmark size) cross-joined onto the corpus fingerprint scan —
-    # the tfidf_top_terms 1-row-broadcast shape; all other joins are
-    # the exact fingerprint/verify equi-joins shared with decontaminate
-    "decontaminate_bloom",
 }
 # semantic_dedup embeds the kmeans assignment step, but its training
 # branch is materialized (localCheckpoint) before the CC loop runs, so

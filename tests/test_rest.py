@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 import urllib.request
 
 import pytest
@@ -107,6 +108,18 @@ def test_rest_long_poll_timeout(service):
     with pytest.raises(urllib.error.HTTPError) as ei:
         _get(service.port, "/orders/word-count/never?timeout=300")
     assert ei.value.code == 404
+
+
+def test_rest_long_poll_unknown_store_answers_at_once(service):
+    """A long-poll on a store that is not registered is the caller's
+    error, answered at once like the state routes, not after the
+    timeout."""
+    t0 = time.time()
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _get(service.port, "/orders/nope/k?timeout=5000")
+    assert time.time() - t0 < 1.0
+    assert ei.value.code == 404
+    assert json.loads(ei.value.read()) == {"error": "no such store"}
 
 
 def test_rest_search_over_persisted_bm25_index(spark, tmp_path):

@@ -190,7 +190,7 @@ def test_star_cc_path_graph_log_rounds(spark):
     diameter 10k, so min-label propagation needs ~10k rounds — the star
     variant must finish (correctly) within 16 alternations, the O(log n)
     bound. max_iterations=16 makes the round budget part of the assertion:
-    an unconverged run returns wrong labels."""
+    an unconverged run raises."""
     from kafka_streams_examples_spark.operators.dedup import (
         connected_components,
     )
@@ -204,6 +204,23 @@ def test_star_cc_path_graph_log_rounds(spark):
            .groupBy("cluster_id").count().collect())
     assert len(got) == 1
     assert got[0]["cluster_id"] == 0 and got[0]["count"] == n
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """A 20-node path needs 20 propagation rounds; after 3 the labels
+    still split the path, so propagation raises instead of returning
+    them. The star variant needs O(log n) rounds (6 here) and returns the
+    one cluster."""
+    n = 20
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "d1 long, d2 long")
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    with pytest.raises(RuntimeError, match="max_iterations=3"):
+        connected_components(edges, nodes, max_iterations=3)
+    got = (connected_components(edges, nodes, max_iterations=8,
+                                algorithm="star")
+           .groupBy("cluster_id").count().collect())
+    assert [(r["cluster_id"], r["count"]) for r in got] == [(0, n)]
 
 
 def test_connected_components_rejects_unknown_algorithm(spark):

@@ -43,10 +43,6 @@ CURVE = [
     # codes-not-vectors ADC serving; composed coarse-route + ADC)
     "bpe_train", "bpe_fertility", "source_mixture", "pq_knn", "knn_ivfpq",
     "exact_substring_dedup", "dsir_score",
-    # r14 addition (Bloom-bitmap prefilter twin of decontaminate: the
-    # scan-side probe must keep the row at-most-linear while the
-    # fragment side stays a constant-size one-row broadcast)
-    "decontaminate_bloom",
     # r6 additions (composed recall gauge over all ANN tiers; composed
     # score -> threshold -> manifest pipeline)
     "knn_recall", "dsir_resample",
@@ -75,8 +71,8 @@ CURVE = [
     # incremental_knn row measures the DEFAULT auto-k composition
     # (OVERRIDES below) — the registry query pins k=8 for its oracle,
     # and a pinned codebook under 10x data growth re-measures the
-    # fixture, not the plan (SCALE10_r12's 31x row vs DECADECTRL_r12's
-    # 6.8x default; VERDICT r12 item 5)
+    # fixture, not the plan (the 31x row of `git show 2faeba1:SCALE10_r12.json`
+    # vs the 6.8x default of `git show 2faeba1:DECADECTRL_r12.json`; VERDICT r12 item 5)
     "unigram_lm_train", "unigram_encode", "incremental_knn_auto",
     # r11 second wave (inverted-index BM25 on the worst-case uniform
     # vocabulary — postings volume is linear in corpus size, so the
@@ -196,8 +192,7 @@ def main(out_path: str = "SCALE_r05.json", only: list[str] | None = None,
     operator's curve lands without re-running the whole family."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     import bench
-    idle_wait = bench.wait_for_idle()   # same gate as bench.py (r8)
-    disk_start = bench.disk_probe()     # storage regime (r14, same as bench.py)
+    disk_start = bench.disk_probe()     # storage regime (r14)
     spark = get_spark("scale-curve", cpus=cpus)
     QUERIES["tpch_q1"].spark(spark, sfs[0][1]).count()          # warmup
     # warm the canary's own noop-write path too: r10's canaries read
@@ -210,7 +205,7 @@ def main(out_path: str = "SCALE_r05.json", only: list[str] | None = None,
         QUERIES["tpch_q1"].spark(spark, SFS[1][1]) \
             .write.format("noop").mode("overwrite").save()
 
-    # Load-honesty telemetry, same scheme as bench.py: SCALE_r06 recorded
+    # Load-honesty telemetry: SCALE_r06 (`git show 2faeba1:SCALE_r06.json`) recorded
     # dedup_clusters at a 7.29x sf1 step that did not reproduce (2.2x on
     # an idle box, same code + fixture) and carried nothing to show the
     # run was loaded. loadavg at both ends + a first/last canary let a
@@ -238,7 +233,7 @@ def main(out_path: str = "SCALE_r05.json", only: list[str] | None = None,
         # streaming replay from tools/stream_bench.py --scale): an
         # `only` re-measure of a few queries must not clobber them —
         # r8 bug, SCALE_r08's streaming section was silently dropped
-        # and had to be restored from git
+        # and had to be restored from git (`git show 2faeba1:SCALE_r08.json`)
         extra_sections = {k: v for k, v in prior.items()
                           if k not in ("method", "cpus", "loadavg",
                                        "idle_wait_sec", "canary",
@@ -256,7 +251,7 @@ def main(out_path: str = "SCALE_r05.json", only: list[str] | None = None,
                 best = min(best, time.time() - t0)
             row[f"sec_sf{sf}"] = round(best, 3)
             print(f"{name} sf{sf}: {best:.2f}s", flush=True)
-        if sfs is SFS:   # historical key names (SCALE_r05..r07 continuity)
+        if sfs is SFS:   # historical key names (`git show 2faeba1:SCALE_r05.json` on)
             row["r_01_to_1"] = round(row["sec_sf0.1"] / row["sec_sf0.01"], 2)
             row["r_1_to_10"] = round(row["sec_sf1"] / row["sec_sf0.1"], 2)
         else:            # sf10 decade: each key names its 10x step
@@ -276,7 +271,6 @@ def main(out_path: str = "SCALE_r05.json", only: list[str] | None = None,
         "cpus": cpus,
         "loadavg": {"start": [round(x, 2) for x in load_start],
                     "end": [round(x, 2) for x in load_end]},
-        "idle_wait_sec": idle_wait,
         "disk_mb_s": {"start": disk_start, "end": disk_end},
         "canary": {"query": "tpch_q1", "sf": "0.1",
                    "first_sec": round(canary_first, 3),
